@@ -57,7 +57,8 @@ _CHANGED_THIS_ROUND = [
     "a27_spearman",
     # MODIFIED (round-5 sf0.1 sweep finding): rev4*10^6 overflowed
     # BIGINT at sf0.1 — chained quotient/remainder ppm + div-form
-    # threshold on both engines.
+    # threshold on both engines; the whole-quotient term (share of a
+    # type holding all the revenue) restored on both engines.
     "q11_revenue_share",
     # --- ROUND 4 ---
     # MODIFIED this round (NULL-lang audit): scope/shard keys

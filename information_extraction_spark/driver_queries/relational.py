@@ -1946,8 +1946,10 @@ SELECT pt.p_type, pt.rev4,
        -- overflowed BIGINT at sf0.1 (rev4 ~1e13 after the 10^4 cent
        -- quantization); exact while total4 <= 2^63/1000 (~9.2e15,
        -- ~sf40 at this quantization — beyond that the quantized
-       -- revenue itself needs DECIMAL)
-       ((pt.rev4 % t.total4) * 1000 // t.total4) * 1000
+       -- revenue itself needs DECIMAL). The whole-quotient term is
+       -- 1 when one type holds all the revenue.
+       (pt.rev4 // t.total4) * 1000000
+       + ((pt.rev4 % t.total4) * 1000 // t.total4) * 1000
        + (((pt.rev4 % t.total4) * 1000 % t.total4) * 1000 // t.total4)
          AS share_ppm
 FROM pt, t
@@ -1982,9 +1984,11 @@ def q11_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rev4",
             # chained quotient/remainder ppm — rev4*10^6 overflowed
             # at sf0.1 (found by the round-5 full sf0.1 sweep; ANSI
-            # Spark threw where non-ANSI would have wrapped silently)
+            # Spark threw where non-ANSI would have wrapped silently);
+            # the whole-quotient term is 1 when one type holds it all
             F.expr(
-                "((rev4 % total4) * 1000 div total4) * 1000"
+                "(rev4 div total4) * 1000000"
+                " + ((rev4 % total4) * 1000 div total4) * 1000"
                 " + (((rev4 % total4) * 1000 % total4) * 1000"
                 "    div total4)"
             ).alias("share_ppm"),

@@ -20,14 +20,24 @@ Semantics reproduced exactly:
 * P = correct/predicted, R = correct/golden, F1 harmonic, all rounded
   to 4 decimals (:211-217).
 
-Scale: both dictionaries are dimensions → broadcast joins; the only
-shuffles are the two per-text dedups and the final global agg (3
-numbers). Alias expansion of a skewed head entity is bounded by the
-broadcast (no shuffle key to skew).
+Scale: ``calc_pr`` is one query and one action, with no cache. Both
+dictionaries are dimensions → broadcast joins (the object-side alias
+map reuses the subject side's broadcast). The shuffles are the
+per-text dedups of gold and pred, the alias map's dedup, the distinct
+golden keys (broadcast back to filter predict_sum), and one
+single-partition exchange per count; the three counts come back as
+the rows of one union. The correct-set dedup adds no shuffle while
+the golden set fits a broadcast: broadcast joins keep pred's
+(key, s, p, o) partitioning. Each branch scans its own input: the
+optimizer infers different not-null filters per branch, so gold is
+read three times and pred twice, which at evaluation sizes costs less
+than caching them. Alias expansion of a skewed head entity is bounded
+by the broadcast (no shuffle key to skew).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -127,21 +137,24 @@ def calc_pr(
     ``predicted`` / ``golden`` carry (key, subject, predicate, object);
     ``alias_df`` / ``loc_df`` carry (canonical, alias).
     """
-    gold = normalized_spo_sets(golden, key=key).cache()
-    pred_all = normalized_spo_sets(predicted, key=key)
-    gold_keys = gold.select("key").distinct()
+    gold = normalized_spo_sets(golden, key=key)
+    pred = normalized_spo_sets(predicted, key=key)
     # Sentences outside the golden dict are ignored (calc_pr.py:199).
-    pred = pred_all.join(F.broadcast(gold_keys), "key", "left_semi").cache()
-
-    # Direct matches.
-    correct = pred.join(gold, ["key", "s", "p", "o"], "left_semi")
+    # Every match join below keys on the sentence, so they can never
+    # match; they only have to leave predict_sum.
+    scored = pred.join(
+        F.broadcast(gold.select("key").distinct()), "key", "left_semi"
+    )
 
     s_map = _alias_map(alias_df, "s", "s_alt")
-    if s_map is not None:
+    if s_map is None:
+        correct = pred.join(gold, ["key", "s", "p", "o"], "left_semi")
+    else:
+        # The expansion also yields every direct match: the maps carry
+        # each key's identity pair and coalesce() keeps unmapped
+        # entities as they are.
         o_map = _alias_map(alias_df, "o", "o_alt")
-        correct = correct.unionByName(
-            alias_expanded_matches(pred, gold, s_map, o_map)
-        )
+        correct = alias_expanded_matches(pred, gold, s_map, o_map)
 
     if loc_df is not None:
         # Golden-object location expansion (calc_pr.py:155-161).
@@ -149,14 +162,20 @@ def calc_pr(
         gold_exp = gold.join(F.broadcast(g_map), "o", "left").select(
             "key", "s", "p", F.coalesce("o_alt", "o").alias("o")
         )
-        loc_correct = pred.join(
-            gold_exp, ["key", "s", "p", "o"], "left_semi"
+        correct = correct.unionByName(
+            pred.join(gold_exp, ["key", "s", "p", "o"], "left_semi")
         )
-        correct = correct.unionByName(loc_correct)
 
-    correct_ct = correct.dropDuplicates(["key", "s", "p", "o"]).count()
-    predict_ct = pred.count()
-    recall_ct = gold.count()
+    # All three counts come from one query and one action, each row
+    # tagged with its position.
+    counts = (
+        correct.dropDuplicates(["key", "s", "p", "o"])
+        .agg(F.lit(0), F.count("*"))
+        .unionAll(scored.agg(F.lit(1), F.count("*")))
+        .unionAll(gold.agg(F.lit(2), F.count("*")))
+        .collect()
+    )
+    correct_ct, predict_ct, recall_ct = (n for _, n in sorted(counts))
     precision = correct_ct / predict_ct if predict_ct else 0.0
     recall = correct_ct / recall_ct if recall_ct else 0.0
     f1 = (
@@ -164,20 +183,20 @@ def calc_pr(
         if precision + recall
         else 0.0
     )
-    spark = predicted.sparkSession
-    gold.unpersist()
-    pred.unpersist()
-    return spark.createDataFrame(
-        [
-            (
-                float(correct_ct),
-                float(predict_ct),
-                float(recall_ct),
-                round(precision, 4),
-                round(recall, 4),
-                round(f1, 4),
-            )
+    # Built from pandas, the row is a local relation: collecting the
+    # result runs no Spark job (a Python list would ship as an RDD).
+    row = pd.DataFrame(
+        [[
+            float(correct_ct),
+            float(predict_ct),
+            float(recall_ct),
+            round(precision, 4),
+            round(recall, 4),
+            round(f1, 4),
+        ]],
+        columns=[
+            "correct_sum", "predict_sum", "recall_sum",
+            "precision", "recall", "f1",
         ],
-        "correct_sum double, predict_sum double, recall_sum double, "
-        "precision double, recall double, f1 double",
     )
+    return predicted.sparkSession.createDataFrame(row)

@@ -2364,7 +2364,7 @@ def _louvain_state_stats(comm, undw, intra, m: int):
     row = sig.agg(
         (
             F.lit(4 * m) * F.coalesce(F.sum("iw"), F.lit(0))
-            - F.sum(F.col("sigma") * F.col("sigma"))
+            - F.coalesce(F.sum(F.col("sigma") * F.col("sigma")), F.lit(0))
         )
         .cast("long")
         .alias("q"),
@@ -2438,6 +2438,18 @@ def louvain_converge(
     import tempfile
 
     canon, m = _louvain_canon(edges)
+    if m == 0:
+        # No edge survives the self-loop drop: no community, Q = 0, and
+        # the one executed level is the converged no-move level.
+        membership = (
+            canon.select(F.col("a").alias("entity"), F.col("a").alias("community"))
+            if track_membership
+            else None
+        )
+        return [
+            dict(lvl=1, n_moved=0, n_communities=0, q_before=0, q_after=0,
+                 q_cert=1, n_fallback=0)
+        ], membership
     scratch = tempfile.mkdtemp(prefix="ie_louvain_state_")
     undw = _stats_cut(
         canon.select(F.col("a").alias("c"), F.col("b").alias("d"))

@@ -38,6 +38,12 @@ def alias_edges(alias_df: DataFrame) -> DataFrame:
     )
 
 
+def _unpersist_checkpoint(df: DataFrame) -> None:
+    """Release the RDD a ``localCheckpoint()`` DataFrame keeps
+    persisted (``DataFrame.unpersist`` does not reach it)."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
+
+
 def connected_components(
     edges: DataFrame, max_iter: int = 25, driver_threshold: int = 100_000
 ) -> DataFrame:
@@ -115,6 +121,9 @@ def connected_components(
             .filter(F.col("n.component") != F.col("o.component"))
             .count()
         )
+        # new_labels is materialized and cut from its lineage, so the
+        # superseded labels' blocks can go: only the result stays.
+        _unpersist_checkpoint(labels)
         labels = new_labels
         if changed == 0:
             break

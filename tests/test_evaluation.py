@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from information_extraction_spark import schemas as S
@@ -18,7 +20,9 @@ from information_extraction_spark.plans.pipeline import extract_triples
 # ---------------------------------------------------------------------------
 
 
-def _norm(e: str) -> str:
+def _norm(e: str | None) -> str | None:
+    if e is None:
+        return None
     e = e.lower()
     if e.startswith("《") and e.endswith("》") and len(e) >= 2:
         e = e[1:-1]
@@ -32,7 +36,8 @@ def _load(rows):
     return d
 
 
-def oracle_calc_pr(pred_rows, gold_rows, alias=None, loc=None):
+def oracle_counts(pred_rows, gold_rows, alias=None, loc=None):
+    """(correct, predicted, golden) triple counts."""
     alias = alias or {}
     loc = loc or {}
     gold = _load(gold_rows)
@@ -43,6 +48,8 @@ def oracle_calc_pr(pred_rows, gold_rows, alias=None, loc=None):
         rsum += len(gset)
         psum += len(pset)
         for s, p, o in pset:
+            if s is None or o is None:
+                continue  # a NULL entity equals nothing (SQL join keys)
             ok = (s, p, o) in gset
             if not ok:
                 for sa in alias.get(s, set()) | {s}:
@@ -55,6 +62,11 @@ def oracle_calc_pr(pred_rows, gold_rows, alias=None, loc=None):
                         ok = True
             if ok:
                 correct += 1
+    return correct, psum, rsum
+
+
+def oracle_calc_pr(pred_rows, gold_rows, alias=None, loc=None):
+    correct, psum, rsum = oracle_counts(pred_rows, gold_rows, alias, loc)
     precision = correct / psum if psum else 0.0
     recall = correct / rsum if rsum else 0.0
     f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
@@ -140,6 +152,102 @@ def test_duplicate_text_sentences_collapse(spark):
     pred = [("dup", "a1", "p", "b1")]
     got = calc_pr(_df(spark, pred), _df(spark, gold)).collect()[0]
     assert got["recall_sum"] == 1.0 and got["recall"] == 1.0
+
+
+# ---------------------------------------------------------------------------
+# Random small inputs against the oracle
+# ---------------------------------------------------------------------------
+
+_WORDS = ["a", "b", "head", "h1", "h2", "h3"]
+# An entity as rows carry it: a word as-is, upper-cased or 《》-wrapped
+# (all three normalize to the word), the bare 《》 (normalizes to ""),
+# or NULL.
+_entity = st.one_of(
+    st.sampled_from(_WORDS),
+    st.sampled_from(_WORDS).map(str.upper),
+    st.sampled_from(_WORDS).map(lambda w: f"《{w}》"),
+    st.just("《》"),
+    st.none(),
+)
+
+
+def _triples(keys):
+    return st.lists(
+        st.tuples(st.sampled_from(keys), _entity, st.sampled_from(["p", "q"]), _entity),
+        max_size=8,
+    )
+
+
+_word_dict = st.dictionaries(
+    st.sampled_from(_WORDS),
+    st.sets(st.sampled_from(_WORDS), min_size=1, max_size=3),
+    max_size=3,
+)
+_TRIPLE_SCHEMA = "text string, subject string, predicate string, object string"
+_DICT_SCHEMA = "canonical string, alias string"
+_HEAD_ALIASES = {"head": {"a", "b", "h1", "h2", "h3"}}
+
+
+def _rows_df(spark, rows, schema):
+    columns = [field.split()[0] for field in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=columns), schema)
+
+
+@given(
+    pred=_triples(["k1", "k2", "k3", "k4"]),  # k4 is never a golden key
+    gold=_triples(["k1", "k2", "k3"]),
+    alias=st.none() | _word_dict,
+    loc=st.none() | _word_dict,
+)
+@example(pred=[], gold=[("k1", "a", "p", "b")], alias=None, loc=None)
+@example(pred=[("k1", "a", "p", "b")], gold=[], alias=_HEAD_ALIASES, loc=None)
+@example(
+    pred=[
+        # alias on the subject, wrapped object; matches two golden
+        # triples through two aliases and still counts once
+        ("k1", "H1", "p", "《B》"),
+        ("k1", None, "p", "b"),
+        ("k1", "head", "q", None),
+        ("k2", "a", "p", "h2"),  # loc expansion of the golden object
+        ("k4", "a", "p", "b"),  # sentence absent from gold
+    ],
+    gold=[
+        ("k1", "head", "p", "b"),
+        ("k1", "a", "p", "b"),
+        ("k1", None, "p", "b"),
+        ("k2", "A", "p", "《h3》"),
+        ("k3", "a", "q", "b"),
+    ],
+    alias={"h1": {"head", "a"}, **_HEAD_ALIASES},
+    loc={"h3": {"h2"}},
+)
+@settings(max_examples=30, deadline=None)
+def test_calc_pr_matches_oracle_on_random_inputs(spark, pred, gold, alias, loc):
+    """calc_pr equals the oracle's counts and scores on random small
+    inputs, and leaves no RDD persisted behind it. The examples pin
+    empty pred, empty gold, and one input that has every rule at once."""
+
+    def dict_df(d):
+        if d is None:
+            return None
+        rows = [(k, a) for k, al in d.items() for a in sorted(al)]
+        return _rows_df(spark, rows, _DICT_SCHEMA)
+
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    got = calc_pr(
+        _rows_df(spark, pred, _TRIPLE_SCHEMA),
+        _rows_df(spark, gold, _TRIPLE_SCHEMA),
+        alias_df=dict_df(alias),
+        loc_df=dict_df(loc),
+    ).collect()[0]
+    correct, predicted, golden = oracle_counts(pred, gold, alias, loc)
+    assert (got["correct_sum"], got["predict_sum"], got["recall_sum"]) == (
+        correct, predicted, golden
+    )
+    assert (got["precision"], got["recall"], got["f1"]) == oracle_calc_pr(
+        pred, gold, alias, loc
+    )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
 
 @pytest.fixture(scope="module")

@@ -1635,3 +1635,24 @@ def test_louvain_converge_q_monotone_on_seeded_graph(spark):
     assert rows[-1]["n_moved"] == 0
     qs = [rows[0]["q_before"]] + [r["q_after"] for r in rows]
     assert qs == sorted(qs)
+
+
+@pytest.mark.parametrize(
+    "pairs", [[], [("a", "a"), ("b", "b")]], ids=["empty", "self_loops_only"]
+)
+def test_louvain_converge_without_edges(spark, pairs):
+    """With no edge left after dropping self-loops (m = 0) the result
+    is one converged no-move level at Q = 0 and an empty membership."""
+    from information_extraction_spark.operators.graph import (
+        louvain_converge,
+    )
+
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    rows, memb = louvain_converge(edges)
+    assert rows == [
+        dict(lvl=1, n_moved=0, n_communities=0, q_before=0, q_after=0,
+             q_cert=1, n_fallback=0)
+    ]
+    assert memb.columns == ["entity", "community"]
+    assert memb.count() == 0
+    assert louvain_converge(edges, track_membership=False)[1] is None

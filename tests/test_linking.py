@@ -116,6 +116,22 @@ def test_cc_driver_and_distributed_paths_agree(spark):
     assert fast == dist and len(fast) > 0
 
 
+def test_distributed_cc_keeps_only_result_persisted(spark):
+    """The hash-min loop checkpoints its labels every iteration; each
+    superseded one is released, so at most the returned labels stay
+    persisted, and they equal the driver path's labels."""
+    pairs = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(8)]
+    e = _edges(spark, pairs)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    dist = connected_components(e, driver_threshold=0)
+    got = {(r["node"], r["component"]) for r in dist.collect()}
+    assert persisted().size() - before <= 1
+    assert got == {
+        (r["node"], r["component"]) for r in connected_components(e).collect()
+    }
+
+
 # --- er_candidates ----------------------------------------------------------
 
 

@@ -1181,6 +1181,62 @@ def test_q11_threshold_is_strict_and_exact(spark, tmp_path):
     assert out["TYPE_B"]["share_ppm"] == 5000  # floor(10001e6/2000000)
 
 
+@pytest.mark.parametrize(
+    "prices, pinned",
+    [
+        ([5.0], [1_000_000]),
+        ([1.0, 1.0, 1.0], [333_333] * 3),
+        ([3.0, 1.0, 2.5], None),
+    ],
+    ids=["single_type", "thirds", "uneven"],
+)
+def test_q11_share_ppm_matches_fraction(spark, tmp_path, prices, pinned):
+    """share_ppm is floor(10^6 * rev4 / total4), here computed with
+    Fraction rather than the chained decomposition both the engine and
+    the oracle use: a type holding all the revenue has 1,000,000, and
+    three equal types have 333,333 each."""
+    import math
+    from fractions import Fraction
+
+    import duckdb
+
+    import information_extraction_spark.driver_queries.relational as R
+
+    d = str(tmp_path / "q11")
+    types = [f"TYPE_{i}" for i in range(len(prices))]
+    spark.createDataFrame(
+        [(i, "p", "B", t, 1, 1.0) for i, t in enumerate(types)],
+        "p_partkey long, p_name string, p_brand string, p_type string,"
+        " p_size int, p_retailprice double",
+    ).write.parquet(f"{d}/part.parquet")
+    day = dt.datetime(1996, 1, 1)
+    spark.createDataFrame(
+        [
+            (100 + i, i, 1, 1, 1.0, price, 0.0, 0.0, "N", "O", day)
+            for i, price in enumerate(prices)
+        ],
+        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
+        " l_quantity double, l_extendedprice double, l_discount double,"
+        " l_tax double, l_returnflag string, l_linestatus string,"
+        " l_shipdate timestamp",
+    ).write.parquet(f"{d}/lineitem.parquet")
+    rev4 = {t: round(price * 10000) for t, price in zip(types, prices)}
+    total4 = sum(rev4.values())
+    want = {t: math.floor(Fraction(r, total4) * 1_000_000) for t, r in rev4.items()}
+    if pinned is not None:
+        assert [want[t] for t in types] == pinned
+
+    engine = {
+        r["p_type"]: r["share_ppm"] for r in R.q11_revenue_share(spark, d).collect()
+    }
+    con = duckdb.connect()
+    for t in ("part", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet/*.parquet')")
+    oracle = {p_type: share for p_type, _, share in con.execute(R._Q11_ORACLE).fetchall()}
+    assert engine == want
+    assert oracle == want
+
+
 def test_q21_semi_and_anti_legs(spark, tmp_path):
     """A late supplier counts an order only when ANOTHER supplier is
     on it (semi leg) and NO other supplier is late on it (anti leg);

@@ -38,6 +38,10 @@ for mod in _MODULES:
 # stale green row from a prior round is not evidence for code that
 # changed since (VERDICT r03 #1). Update this list each round.
 _CHANGED_THIS_ROUND = [
+    # MODIFIED: partitioned graph sink consumed via a pruned single-
+    # predicate read; the table's metadata file (schema + bucket
+    # count) is both the write-once marker and the read's schema.
+    "kg_graph_pred_scan",
     # --- ROUND 5 ---
     # NEW: Louvain to convergence (guarded-star contraction, exact
     # per-level modularity certificate, unrolled 8-level oracle).
@@ -680,9 +684,6 @@ _CHANGED_THIS_ROUND = [
     "kg_type_infer",
     # Incremental ER: batch probed against the persisted slot index.
     "kg_incremental_er",
-    # Partitioned graph sink consumed via a pruned single-predicate
-    # read (write_graph -> read_graph_predicate, driver-visible).
-    "kg_graph_pred_scan",
     # KG post-extraction ops added this round: per-triple support
     # aggregation and insert-only incremental MERGE into the base
     # graph; plus train/eval 8-gram decontamination and unigram-LM

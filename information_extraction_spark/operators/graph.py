@@ -35,7 +35,12 @@ only rescales ranks and does not change the ordering.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pathlib
+import tempfile
+import uuid
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -2327,6 +2332,28 @@ def louvain_levels(edges: DataFrame) -> DataFrame:
     )
 
 
+@contextmanager
+def _scratch_dir(spark: SparkSession, prefix: str):
+    """A fresh directory for a loop's spilled state, deleted on exit,
+    exception or not. It sits under the SparkContext's checkpoint
+    directory when one is set — Spark's own setting for lineage-cut
+    storage that every executor can reach — and otherwise in the
+    driver's temp dir, which only a local-mode session shares with its
+    executors."""
+    root = spark.sparkContext.getCheckpointDir()
+    if root is None:
+        path = pathlib.Path(tempfile.mkdtemp(prefix=prefix)).as_uri()
+    else:
+        path = f"{root.rstrip('/')}/{prefix}{uuid.uuid4().hex}"
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    try:
+        yield path
+    finally:
+        jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(
+            jpath, True
+        )
+
+
 def _stats_cut(df: DataFrame, path: str) -> DataFrame:
     """Materialize ``df`` to parquet and re-read it: truncates lineage
     like localCheckpoint AND resets the leaf's size estimate to the
@@ -2435,8 +2462,6 @@ def louvain_converge(
     certificate-only caller like kg_louvain_full skips the per-level
     membership join + checkpoint, ~2 fewer actions per level).
     """
-    import tempfile
-
     canon, m = _louvain_canon(edges)
     if m == 0:
         # No edge survives the self-loop drop: no community, Q = 0, and
@@ -2450,7 +2475,19 @@ def louvain_converge(
             dict(lvl=1, n_moved=0, n_communities=0, q_before=0, q_after=0,
                  q_cert=1, n_fallback=0)
         ], membership
-    scratch = tempfile.mkdtemp(prefix="ie_louvain_state_")
+    with _scratch_dir(edges.sparkSession, "ie_louvain_state_") as scratch:
+        return _louvain_levels(
+            canon, m, scratch, max_levels, track_membership
+        )
+
+
+def _louvain_levels(
+    canon: DataFrame, m: int, scratch: str, max_levels: int,
+    track_membership: bool,
+):
+    """louvain_converge's level loop over the canonical edges
+    (``m`` > 0 of them); level-crossing state spills under ``scratch``,
+    which the caller owns."""
     undw = _stats_cut(
         canon.select(F.col("a").alias("c"), F.col("b").alias("d"))
         .unionAll(canon.select(F.col("b").alias("c"), F.col("a").alias("d")))
@@ -2679,9 +2716,6 @@ def louvain_converge(
         )
         _n_last = n_comms
         q = q_after
-    import shutil
-
     # membership/summary are eagerly materialized (localCheckpoint /
-    # collected dicts); the parquet scratch is no longer referenced.
-    shutil.rmtree(scratch, ignore_errors=True)
+    # collected dicts), so the caller may drop the parquet scratch.
     return rows, membership

@@ -1,18 +1,30 @@
 """Sources and sinks.
 
 The reference reads JSON-lines + TSV dicts + pickle checkpoints
-(SURVEY.md §2.1 S1-S8); here every table is Parquet with an explicit
-schema. An Iceberg catalog would slot in by swapping
-``read.parquet``/``write.parquet`` for ``read.table``/``writeTo`` —
-the runtime jar is not in this image, so the writer keeps a plain
-partitioned-Parquet layout with the same partition spec the Iceberg
-table would use (Spark-first fallback noted in SURVEY §7.4).
+(SURVEY.md §2.1 S1-S8); here every table is Parquet. Input tables are
+read as written and cast to their canonical schema (``_read_as``).
+
+The graph sink is a ``pred_bucket``-partitioned Parquet directory plus
+one metadata file, ``_graph_meta.json`` (``GRAPH_META``). The file
+stands in for the table metadata an Iceberg or Delta catalog would
+hold: the read-back schema and the partition spec (the predicate
+bucket count). ``write_graph`` writes it after the data;
+``read_graph_predicate`` takes both from it, so a lookup neither runs
+Spark's schema-inference job nor trusts its caller to know how the
+table was bucketed. Both go through the session's Hadoop
+``FileSystem``, so the file lives wherever the Parquet does, and the
+leading underscore keeps it out of Spark's file listing. The Iceberg
+runtime jar is not in this image (Spark-first fallback noted in SURVEY
+§7.4); with it, ``read.table``/``writeTo`` would replace the file.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from information_extraction_spark import schemas as S
 
@@ -76,6 +88,37 @@ def read_alias_tsv(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+GRAPH_META = "_graph_meta.json"
+
+
+def _meta_file(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) of the graph table's metadata file."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path, GRAPH_META)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def read_graph_meta(spark: SparkSession, path: str) -> dict:
+    """The metadata ``write_graph`` stored with the table at ``path``:
+    ``{"predicate_buckets": int, "schema": StructType JSON}``. Raises
+    FileNotFoundError when the file is absent — the directory was not
+    written by ``write_graph`` (or its write did not finish), and there
+    is no fallback to inferring the layout from the data."""
+    fs, jpath = _meta_file(spark, path)
+    if not fs.exists(jpath):
+        raise FileNotFoundError(
+            f"{path} has no {GRAPH_META}: not a graph table written by "
+            "write_graph (or its write did not complete)"
+        )
+    stream = fs.open(jpath)
+    try:
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+    return json.loads(text)
+
+
 def write_graph(
     triples: DataFrame,
     path: str,
@@ -84,12 +127,22 @@ def write_graph(
     num_tasks: int | None = None,
 ) -> None:
     """Materialize the triples graph table, partitioned by a stable
-    predicate bucket (north-rule "partitioned Iceberg graph tables").
+    predicate bucket (north-rule "partitioned Iceberg graph tables"),
+    then record its metadata in ``GRAPH_META``.
 
     Hash-bucketing the predicate instead of partitioning by raw
     predicate bounds the partition count at 100 TB (50 predicates here,
     but open-world predicates in general) while still pruning scans
     for single-predicate queries via bucket = hash(pred) % n.
+
+    The metadata file holds what a table catalog would: the schema a
+    reader gets back (the written columns, all nullable, then
+    ``pred_bucket int``) and ``predicate_buckets``. It is written after
+    the data, so its presence marks a completed write. ``mode`` is
+    ``"overwrite"`` or ``"append"``; an append into an existing table
+    must match its bucket count and schema, and a mismatch raises
+    before any file is written (rows bucketed by a different modulus
+    would be invisible to every pruned read).
 
     The shuffle before the write hashes on (pred_bucket, subject
     salt), not pred_bucket alone: hash-on-bucket caps the writers at
@@ -103,34 +156,65 @@ def write_graph(
     its sampler re-executes the upstream DAG — measured 1.6x slower
     end-to-end here with the extraction kernels upstream.
     """
-    (
-        graph_write_layout(triples, predicate_buckets, num_tasks)
-        .write.mode(mode)
-        .partitionBy("pred_bucket")
-        .parquet(path)
+    if mode not in ("overwrite", "append"):
+        raise ValueError(
+            f"write_graph mode must be overwrite or append, got {mode!r}"
+        )
+    spark = triples.sparkSession
+    layout = graph_write_layout(triples, predicate_buckets, num_tasks)
+    # Parquet hands every column back nullable, partition columns last.
+    schema = StructType(
+        [
+            StructField(f.name, f.dataType, True, f.metadata)
+            for f in layout.schema.fields
+            if f.name != "pred_bucket"
+        ]
+        + [StructField("pred_bucket", IntegerType(), True)]
     )
+    meta = {"predicate_buckets": predicate_buckets, "schema": schema.jsonValue()}
+    fs, jpath = _meta_file(spark, path)
+    if mode == "append" and fs.exists(jpath.getParent()):
+        have = read_graph_meta(spark, path)
+        if have != meta:
+            raise ValueError(
+                f"cannot append to graph table {path}: it has "
+                f"{have['predicate_buckets']} predicate buckets and schema "
+                f"{StructType.fromJson(have['schema']).simpleString()}, the "
+                f"new rows {predicate_buckets} and {schema.simpleString()}"
+            )
+    layout.write.mode(mode).partitionBy("pred_bucket").parquet(path)
+    out = fs.create(jpath, True)
+    try:
+        out.write(json.dumps(meta).encode("utf-8"))
+    finally:
+        out.close()
 
 
 def read_graph_predicate(
-    spark: SparkSession,
-    path: str,
-    predicate: str,
-    predicate_buckets: int = 16,
+    spark: SparkSession, path: str, predicate: str
 ) -> DataFrame:
     """Single-predicate read of a ``write_graph`` table that PRUNES at
     the source: the bucket equality is a foldable expression over the
     partition column (Catalyst constant-folds ``pmod(xxhash64(lit),
-    n)``), so it reaches the FileScan as a PartitionFilter — 1 of
-    ``predicate_buckets`` directories read; the predicate equality
-    pushes into the parquet row groups of that bucket (the files are
-    sorted by predicate, so min/max stats skip non-matching groups).
+    n)``), so it reaches the FileScan as a PartitionFilter — 1 of the
+    table's bucket directories read; the predicate equality pushes
+    into the parquet row groups of that bucket (the files are sorted
+    by predicate, so min/max stats skip non-matching groups).
     This is the consumer half of write_graph's partitioning story.
+
+    Schema and bucket count come from the table's metadata file, as a
+    reader of a catalog table gets them from the catalog: the scan
+    runs no schema-inference job (one Spark job per collected lookup,
+    not two), and a table written with any ``predicate_buckets`` is
+    read with its own modulus. A directory without the file raises.
     """
-    return spark.read.parquet(path).filter(
+    meta = read_graph_meta(spark, path)
+    schema = StructType.fromJson(meta["schema"])
+    return spark.read.schema(schema).parquet(path).filter(
         (
             F.col("pred_bucket")
             == F.pmod(
-                F.xxhash64(F.lit(predicate)), F.lit(predicate_buckets)
+                F.xxhash64(F.lit(predicate)), F.lit(meta["predicate_buckets"])
             ).cast("int")
         )
         & (F.col("predicate") == predicate)
@@ -150,10 +234,7 @@ def graph_write_layout(
         F.pmod(F.xxhash64("predicate"), F.lit(predicate_buckets)).cast("int"),
     )
     if num_tasks is None:
-        num_tasks = max(
-            triples.sparkSession.sparkContext.defaultParallelism,
-            predicate_buckets,
-        )
+        num_tasks = triples.sparkSession.sparkContext.defaultParallelism
     splits = max(1, -(-num_tasks // predicate_buckets))
     return (
         bucketed.withColumn(

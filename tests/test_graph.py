@@ -3,6 +3,8 @@ Python power iteration, plus structural invariants."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1656,3 +1658,52 @@ def test_louvain_converge_without_edges(spark, pairs):
     assert memb.columns == ["entity", "community"]
     assert memb.count() == 0
     assert louvain_converge(edges, track_membership=False)[1] is None
+
+
+@pytest.mark.parametrize("use_checkpoint_dir", [False, True],
+                         ids=["driver_temp", "checkpoint_dir"])
+def test_louvain_converge_scratch_removed_on_failure(
+    spark, tmp_path, monkeypatch, use_checkpoint_dir
+):
+    """The per-level parquet scratch lives under the SparkContext's
+    checkpoint directory when one is set (else the driver temp dir)
+    and is deleted even when a level raises."""
+    import tempfile
+
+    from information_extraction_spark.operators import graph
+
+    sc = spark.sparkContext
+    if use_checkpoint_dir:
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+        root = sc.getCheckpointDir().split(":", 1)[1]
+    else:
+        root = str(tmp_path / "tmp")
+        os.makedirs(root)
+        monkeypatch.setattr(tempfile, "tempdir", root)
+
+    def scratch_dirs():
+        return [d for d in os.listdir(root) if d.startswith("ie_louvain_state_")]
+
+    seen = []
+    real_stats = graph._louvain_state_stats
+
+    def failing_stats(*args):
+        seen.append(scratch_dirs())
+        if len(seen) == 2:  # inside level 1, after its state spilled
+            raise RuntimeError("injected level failure")
+        return real_stats(*args)
+
+    monkeypatch.setattr(graph, "_louvain_state_stats", failing_stats)
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("a", "c"),
+         ("d", "e"), ("e", "f"), ("d", "f"), ("c", "d")],
+        "src string, dst string",
+    )
+    try:
+        with pytest.raises(RuntimeError, match="injected level failure"):
+            graph.louvain_converge(edges)
+    finally:
+        if use_checkpoint_dir:
+            sc.setCheckpointDir(None)
+    assert len(seen) == 2 and len(seen[1]) == 1  # scratch was under root
+    assert scratch_dirs() == []

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from information_extraction_spark import schemas as S
@@ -205,3 +206,143 @@ def test_corrupt_quarantine_keeps_raw_line_for_replay(spark, tmp_path):
     assert rows[1]["lang"] == "en" and rows[1]["_corrupt_record"] is None
     assert None in rows and rows[None]["_corrupt_record"] == bad
     assert rows[None]["lang"] is None and rows[None]["n_chars"] is None
+
+
+def _toy_graph_triples(spark):
+    return spark.createDataFrame(
+        [
+            ("c", i, f"s{i % 5}", f"rel{i % 7}", f"o{i % 3}")
+            for i in range(200)
+        ],
+        "conv_id string, turn_idx int, subject string, predicate string,"
+        " object string",
+    )
+
+
+def test_graph_meta_schema_is_the_read_back_schema(
+    spark, world, transcripts_pdf, tmp_path
+):
+    """The schema write_graph records equals what Spark infers from
+    the written files, for both graph shapes in use: the canonicalized
+    pipeline graph and the 5-column graph of kg_graph_pred_scan."""
+    from pyspark.sql.types import StructType
+
+    from information_extraction_spark.operators.linking import (
+        canonicalize_triples,
+    )
+    from information_extraction_spark.sources.tables import read_graph_meta
+
+    triples = _triples(spark, world, transcripts_pdf)
+    canonical = canonicalize_triples(
+        triples, spark.createDataFrame(world.alias_dict)
+    )
+    narrow = triples.select(
+        "conv_id", "turn_idx", "subject", "predicate", "object"
+    )
+    for name, df, n_cols in (("wide", canonical, 10), ("narrow", narrow, 5)):
+        out = str(tmp_path / name)
+        write_graph(df, out, predicate_buckets=8)
+        meta = read_graph_meta(spark, out)
+        assert meta["predicate_buckets"] == 8
+        recorded = StructType.fromJson(meta["schema"])
+        assert recorded == spark.read.parquet(out).schema
+        assert len(recorded.fields) == n_cols + 1
+        assert recorded.fields[-1].name == "pred_bucket"
+
+
+def test_read_graph_predicate_uses_the_tables_bucket_count(spark, tmp_path):
+    """A graph bucketed by 8 must be read with modulus 8: every
+    predicate's rows come back, not only those whose bucket happens to
+    agree under the reader's own default."""
+    from information_extraction_spark.sources.tables import (
+        read_graph_predicate,
+    )
+
+    triples = _toy_graph_triples(spark)
+    out = str(tmp_path / "graph8")
+    write_graph(triples, out, predicate_buckets=8)
+    for k in range(7):
+        got = read_graph_predicate(spark, out, f"rel{k}")
+        assert sorted(map(tuple, got.drop("pred_bucket").collect())) == sorted(
+            map(tuple, triples.filter(F.col("predicate") == f"rel{k}").collect())
+        )
+
+
+def test_read_graph_predicate_runs_one_job(spark, tmp_path):
+    """Planning the read runs no schema-inference job: the collected
+    lookup is exactly one Spark job."""
+    from information_extraction_spark.sources.tables import (
+        read_graph_predicate,
+    )
+
+    out = str(tmp_path / "graph")
+    write_graph(_toy_graph_triples(spark), out)
+    sc = spark.sparkContext
+    group = "read-graph-predicate-jobs"
+    sc.setJobGroup(group, "one graph lookup")
+    try:
+        rows = read_graph_predicate(spark, out, "rel3").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 29
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_read_graph_predicate_absent_predicate_is_empty(spark, tmp_path):
+    from information_extraction_spark.sources.tables import (
+        read_graph_predicate,
+    )
+
+    out = str(tmp_path / "graph")
+    write_graph(_toy_graph_triples(spark), out)
+    assert read_graph_predicate(spark, out, "no-such-relation").collect() == []
+
+
+def test_read_graph_predicate_requires_the_meta_file(spark, tmp_path):
+    """A plain partitioned parquet directory is not a graph table: the
+    read raises instead of inferring a schema and guessing buckets."""
+    from information_extraction_spark.sources.tables import (
+        read_graph_predicate,
+    )
+
+    out = str(tmp_path / "plain")
+    _toy_graph_triples(spark).withColumn("pred_bucket", F.lit(0)).write.partitionBy(
+        "pred_bucket"
+    ).parquet(out)
+    with pytest.raises(FileNotFoundError, match="write_graph"):
+        read_graph_predicate(spark, out, "rel3")
+
+
+def test_write_graph_append_must_match_the_table(spark, tmp_path):
+    """An append with another bucket count or schema raises before any
+    file is written; a matching append adds its rows."""
+    from information_extraction_spark.sources.tables import (
+        read_graph_predicate,
+    )
+
+    triples = _toy_graph_triples(spark)
+    out = str(tmp_path / "graph")
+    write_graph(triples, out, predicate_buckets=8)
+
+    def listing():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), out),
+             os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, fs in os.walk(out)
+            for f in fs
+        )
+
+    before = listing()
+    with pytest.raises(ValueError, match="predicate buckets"):
+        write_graph(triples, out, predicate_buckets=16, mode="append")
+    with pytest.raises(ValueError, match="predicate buckets"):
+        write_graph(
+            triples.withColumn("turn_idx", F.col("turn_idx").cast("long")),
+            out,
+            predicate_buckets=8,
+            mode="append",
+        )
+    assert listing() == before
+
+    write_graph(triples, out, predicate_buckets=8, mode="append")
+    assert read_graph_predicate(spark, out, "rel3").count() == 2 * 29

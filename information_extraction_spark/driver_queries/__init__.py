@@ -38,6 +38,15 @@ for mod in _MODULES:
 # stale green row from a prior round is not evidence for code that
 # changed since (VERDICT r03 #1). Update this list each round.
 _CHANGED_THIS_ROUND = [
+    # MODIFIED: extract_triples runs one path — the fused kernel, for
+    # every threshold and with or without a checkpointer — and the
+    # kernel's predicate selection is shared with classify_batch
+    # (kg_classify); kb_from_documents builds its dims from pandas.
+    "kg_extract_triples",
+    "kg_spo_lists",
+    "kg_classify",
+    "a1_alias_eval",
+    "st_extract_triples",
     # MODIFIED: partitioned graph sink consumed via a pruned single-
     # predicate read; the table's metadata file (schema + bucket
     # count) is both the write-once marker and the read's schema.
@@ -713,16 +722,6 @@ _CHANGED_THIS_ROUND = [
     "kg_degree_topk",
     "kg_pred_cooccur",
     "kg_two_hop",
-    # extract_triples' fused path now pre-cleans entities in the
-    # kernel memo (assemble_triples pre_cleaned=True) — every query
-    # running through the pipeline is listed first.
-    "kg_extract_triples",
-    "kg_spo_lists",
-    # classify_batch now collapses duplicate texts before the Arrow
-    # presence matrix — kg_classify exercises that path directly.
-    "kg_classify",
-    "a1_alias_eval",
-    "st_extract_triples",
     "ann_ivf_pruned_probe",
     "dd_minhash_lsh_b4",
     "mm_frames",

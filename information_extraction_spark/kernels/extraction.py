@@ -244,6 +244,11 @@ def decode_bio_tokens(
 # Indexed knowledge base (fast path for the batch kernels)
 # ---------------------------------------------------------------------------
 
+# Bump whenever KnowledgeBase.extract_batch can return different units
+# for the same inputs: it is part of a checkpointed run's identity, so
+# units staged by an older kernel are not resumed.
+KERNEL_VERSION = 1
+
 
 class KnowledgeBase:
     """Entity-prefiltered view of the (predicate, subject, object) KB.
@@ -282,7 +287,7 @@ class KnowledgeBase:
         # memoize per KB instance. Bounded: cleared when oversized.
         self._fallback_cache: dict[tuple[str, int], tuple[list, list]] = {}
         # Same for the fused extract units (see extract_batch).
-        self._extract_cache: dict[tuple[str, int], list] = {}
+        self._extract_cache: dict[tuple, list] = {}
 
     def _fallback(
         self, text: str, fallback_k: int
@@ -310,61 +315,54 @@ class KnowledgeBase:
     def classify(
         self, text: str, threshold: float = 0.5, fallback_k: int = 10
     ) -> tuple[list[str], list[float]]:
-        """Same contract as :func:`classify_predicates` (threshold-0.5
-        prediction + top-k fallback) via the entity prefilter."""
+        """Same contract as :func:`classify_predicates` via the entity
+        prefilter."""
         present = self.entities_present(text)
-        scored: list[tuple[str, float]] = []
-        for predicate in self.predicates:
-            hit = any(
+        fired = [
+            predicate
+            for predicate in self.predicates
+            if any(
                 s in present and o in present
                 for s, o in self._pair_keys[predicate]
             )
-            score = 1.0 if hit else _pseudo_score(text, predicate)
-            scored.append((predicate, score))
-        scored.sort(key=lambda kv: (-kv[1], kv[0]))
-        above = [(p, s) for p, s in scored if s > threshold]
-        if not above:
-            above = scored[:fallback_k]
-        return [p for p, _ in above], [s for _, s in above]
+        ]
+        return self._select(text, fired, threshold, fallback_k)
+
+    def _select(
+        self, text: str, fired: list[str], threshold: float, fallback_k: int
+    ) -> tuple[list[str], list[float]]:
+        """The (predicates, scores) :func:`classify_predicates` predicts
+        for ``text`` whose ``fired`` predicates (sorted) have a KB pair
+        present: fired predicates score 1.0, the others their
+        pseudo-score; keep scores above ``threshold``, else the top
+        ``fallback_k``. For 0.5 <= threshold < 1.0 every fired score
+        passes and no pseudo-score (< 0.5) does, so the choice is the
+        fired list or the memoized pseudo-score top-k."""
+        if 0.5 <= threshold < 1.0:
+            if fired:
+                return fired, [1.0] * len(fired)
+            return self._fallback(text, fallback_k)
+        hit = set(fired)
+        scored = sorted(
+            (
+                (p, 1.0 if p in hit else _pseudo_score(text, p))
+                for p in self.predicates
+            ),
+            key=lambda kv: (-kv[1], kv[0]),
+        )
+        kept = [kv for kv in scored if kv[1] > threshold]
+        kept = kept or scored[:fallback_k]
+        return [p for p, _ in kept], [s for _, s in kept]
 
     def pairs_for(self, predicate: str) -> list[tuple[str, str]]:
         return self.by_predicate.get(predicate, [])
-
-    def bieso_tags_fast(self, text: str, predicate: str) -> list[str]:
-        """Semantically identical to
-        ``bieso_tags(text, self.pairs_for(predicate))`` (parity-tested)
-        but prefilters each pair with a C-speed lowercase substring
-        check before running the regex scans — most pairs of a fired
-        predicate match nothing and skip both finditer calls."""
-        tags = ["O"] * len(text)
-        pairs = self.by_predicate.get(predicate)
-        if not pairs:
-            return tags
-        low = text.lower()
-        for (subject, obj), (sl, ol) in zip(pairs, self._pair_keys[predicate]):
-            s_in = sl in low
-            o_in = ol in low
-            if not s_in and not o_in:
-                continue
-            s_offsets = find_occurrences(subject, text) if s_in else []
-            if subject == obj:
-                o_offsets = [
-                    off for i, off in enumerate(s_offsets) if i % 2 == 1
-                ]
-            else:
-                o_offsets = find_occurrences(obj, text) if o_in else []
-            for off in s_offsets:
-                _mark_span(tags, off, len(subject), "SUB")
-            for off in o_offsets:
-                _mark_span(tags, off, len(obj), "OBJ")
-        return tags
 
     def _presence_and_fired(self, texts):
         """Batch entity-presence matrix (Arrow's C++ substring kernel
         over the lowered batch) and per-row fired predicates (those
         with some pair fully present). Shared by :meth:`classify_batch`
-        and :meth:`extract_batch` so the staged and fused paths cannot
-        drift. Returns (texts_list, present, fired)."""
+        and :meth:`extract_batch` so the two cannot drift. Returns
+        (texts_list, present, fired)."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -408,28 +406,27 @@ class KnowledgeBase:
         plan can then skip re-evaluating the equivalent
         array_distinct/filter/array_sort lambdas per unit row. The
         clean runs once per DISTINCT text (inside the memo), not once
-        per row. Element-wise parity with the staged path
-        ``decode_bieso(bieso_tags_fast(text, p))`` for every predicate
-        ``classify`` would emit, including fallback predicates: a
-        non-fired predicate can still yield triples when one pair
-        matches only its subject and another pair only its object
-        (cross-pair mixing in the shared tag array), so fallback units
-        are tagged too, not skipped.
+        per row. Element-wise parity with
+        ``decode_bieso(bieso_tags(text, pairs))`` for every predicate
+        :func:`classify_predicates` would emit at ``threshold``,
+        including non-fired ones: a non-fired predicate can still yield
+        triples when one pair matches only its subject and another pair
+        only its object (cross-pair mixing in the shared tag array), so
+        fallback units are tagged too, not skipped.
 
-        Fusion wins over classify_stage → explode → tag_decode_stage:
-        one Arrow round-trip instead of two, the batch presence matrix
-        is reused for pair prefiltering instead of per-row substring
-        scans, and entity match offsets are memoized per text across
-        all its predicates (KB entities recur across pairs).
+        The batch presence matrix is reused for pair prefiltering
+        instead of per-row substring scans, and entity match offsets
+        are memoized per text across all its predicates (KB entities
+        recur across pairs).
 
         Duplicate texts are deduped BEFORE the presence pass and their
         units served from a bounded per-KB memo (same rationale as the
         fallback memo: web corpora are duplicate-heavy — that is why
         the engine ships five dedup operators — and the kernel output
-        is a pure function of (text, fallback_k)). On an all-unique
-        batch the cost is one dict probe per row; on a corpus with
-        duplication factor d the presence matrix and span work shrink
-        by ~d. Results are shared references; callers must not mutate.
+        is a pure function of (text, threshold, fallback_k)). On an
+        all-unique batch the cost is one dict probe per row; on a
+        corpus with duplication factor d the presence matrix and span
+        work shrink by ~d. Results are shared references; callers must not mutate.
         """
         texts_list = [t if isinstance(t, str) else (t or "") for t in texts]
         cache = self._extract_cache
@@ -443,7 +440,7 @@ class KnowledgeBase:
         for t in texts_list:
             if t in results or t in todo_seen:
                 continue
-            hit = cache.get((t, fallback_k, min_entity_len))
+            hit = cache.get((t, threshold, fallback_k, min_entity_len))
             if hit is not None:
                 results[t] = hit
             else:
@@ -453,19 +450,22 @@ class KnowledgeBase:
             computed = list(
                 zip(
                     todo,
-                    self._extract_unique(todo, fallback_k, min_entity_len),
+                    self._extract_unique(
+                        todo, threshold, fallback_k, min_entity_len
+                    ),
                 )
             )
             if len(cache) > 50_000:
                 cache.clear()
             for t, units in computed:
-                cache[(t, fallback_k, min_entity_len)] = units
+                cache[(t, threshold, fallback_k, min_entity_len)] = units
                 results[t] = units
         return [results[t] for t in texts_list]
 
     def _extract_unique(
         self,
         texts_list: list[str],
+        threshold: float,
         fallback_k: int,
         min_entity_len: int | None = None,
     ) -> list[list[tuple[str, list[str], list[str]]]]:
@@ -475,9 +475,7 @@ class KnowledgeBase:
         out: list[list[tuple[str, list[str], list[str]]]] = []
         for i in range(n):
             text = texts_list[i] or ""
-            preds = fired[i]
-            if not preds:
-                preds = self._fallback(text, fallback_k)[0]
+            preds = self._select(text, fired[i], threshold, fallback_k)[0]
             offs: dict[str, list[int]] = {}
             per_text: list[tuple[str, list[str], list[str]]] = []
             for predicate in preds:
@@ -564,9 +562,9 @@ class KnowledgeBase:
         Entity presence is computed with Arrow's C++ substring kernel
         over the whole lowered batch (one pass per entity instead of a
         Python loop per row), predicate firing is boolean algebra over
-        the presence matrix, and only fallback rows (nothing fired)
-        drop back to the per-row pseudo-score path. Output is
-        element-wise identical to :meth:`classify` (parity-tested).
+        the presence matrix, and the per-row pseudo-scores run only
+        where :meth:`_select` needs them. Output is element-wise
+        identical to :meth:`classify` (parity-tested).
 
         Duplicate texts are collapsed before the presence pass (same
         rationale as :meth:`extract_batch`'s memo: the result is a
@@ -578,14 +576,10 @@ class KnowledgeBase:
         texts_list = [t if isinstance(t, str) else (t or "") for t in texts]
         uniq = list(dict.fromkeys(texts_list))
         _, _, fired = self._presence_and_fired(uniq)
-        per_text: dict[str, tuple[list[str], list[float]]] = {}
-        for t, f in zip(uniq, fired):
-            # self.predicates is sorted, so fired lists are already in
-            # (-score, predicate) order (all scores 1.0).
-            if f:
-                per_text[t] = (f, [1.0] * len(f))
-            else:
-                per_text[t] = self._fallback(t, fallback_k)
+        per_text = {
+            t: self._select(t, f, threshold, fallback_k)
+            for t, f in zip(uniq, fired)
+        }
         preds_out = [per_text[t][0] for t in texts_list]
         scores_out = [per_text[t][1] for t in texts_list]
         return preds_out, scores_out

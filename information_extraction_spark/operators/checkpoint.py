@@ -10,7 +10,9 @@ write plus manifest rows recording (run_id, stage, snapshot_id,
 partition_id, row_count, params_hash, completed_ts); a stage whose
 completion row exists with a matching params_hash is skipped and read
 back — changing any upstream parameter invalidates the checkpoint via
-the hash, not mtime heuristics.
+the hash, not mtime heuristics. ``for_inputs`` folds the content
+identity of the input DataFrames (``input_identity``) into that hash,
+so a stage built from other inputs is never resumed.
 
 Snapshot semantics (the Iceberg-emulation piece, SURVEY §4 "snapshot
 ids"): every materialization writes a NEW immutable snapshot
@@ -32,9 +34,11 @@ anyway, so resume costs nothing extra beyond the write.
 
 from __future__ import annotations
 
+import copy
 import hashlib
 import json
 import os
+import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +51,46 @@ def params_hash(params: dict[str, Any]) -> str:
     return hashlib.md5(
         json.dumps(params, sort_keys=True, default=str).encode()
     ).hexdigest()[:16]
+
+
+def input_identity(df: DataFrame) -> str | None:
+    """Digest of what determines ``df``'s rows, or None when its plan
+    cannot tell.
+
+    Covers the canonical analyzed plan (expressions, literals, columns;
+    untruncated), the semantic hash of each ``LocalRelation`` leaf
+    (it follows the rows, e.g. of a DataFrame made from pandas), and
+    each input file's URI, size and modification time, read through the
+    session's Hadoop ``FileSystem`` (the plan names files, not their
+    contents). Any other leaf gives None: a DataFrame made from a row
+    list or an RDD is a ``LogicalRDD``, whose hash differs between two
+    DataFrames with identical rows. ``DataFrame.semanticHash()`` itself
+    is no identity here: over a file relation it changes from one
+    Spark process to the next.
+    """
+    spark = df.sparkSession
+    plan = df._jdf.queryExecution().analyzed()
+    # Verbose and untruncated (maxFields = Int.MaxValue).
+    parts = [
+        plan.canonicalized().treeString(True, False, 2**31 - 1, False, False)
+    ]
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LocalRelation":
+            parts.append(str(leaf.semanticHash()))
+        elif kind == "LogicalRelation":
+            if leaf.relation().getClass().getSimpleName() != "HadoopFsRelation":
+                return None
+        elif kind not in ("Range", "OneRowRelation"):
+            return None
+    conf = spark._jsc.hadoopConfiguration()
+    for uri in sorted(df.inputFiles()):
+        path = spark._jvm.org.apache.hadoop.fs.Path(uri)
+        status = path.getFileSystem(conf).getFileStatus(path)
+        parts.append(f"{uri} {status.getLen()} {status.getModificationTime()}")
+    return hashlib.md5("\n".join(parts).encode()).hexdigest()
 
 
 class CheckpointManager:
@@ -62,6 +106,23 @@ class CheckpointManager:
         self.run_id = run_id
         self.params_hash = params_hash(params or {})
         self._manifest_dir = os.path.join(base_dir, "_manifest")
+
+    def for_inputs(
+        self, inputs: dict[str, DataFrame], **settings: Any
+    ) -> CheckpointManager:
+        """This run's manager with a params hash that also covers each
+        input's :func:`input_identity` and ``settings``. When some input
+        has no identity the hash is fresh, so every stage recomputes."""
+        identity = {
+            "params": self.params_hash,
+            "inputs": {k: input_identity(df) for k, df in inputs.items()},
+            "settings": settings,
+        }
+        if None in identity["inputs"].values():
+            identity["fresh"] = uuid.uuid4().hex
+        derived = copy.copy(self)
+        derived.params_hash = params_hash(identity)
+        return derived
 
     def _snapshot_path(self, stage: str, snapshot_id: int) -> str:
         if snapshot_id == 0:

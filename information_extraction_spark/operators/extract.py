@@ -1,5 +1,5 @@
-"""Spark extraction stages: classify → fan out → tag → decode →
-assemble triples.
+"""Spark extraction stages: one fused classify → tag → decode kernel
+(``classify_tag_decode_stage``), then assemble triples.
 
 Replaces the reference's five OS processes communicating through
 line-aligned text files (SURVEY.md §3.1) with one declarative
@@ -10,11 +10,16 @@ a broadcast variable, exactly how model weights would
 (run_predicate_classification.py's estimator held them in the TF
 session; Spark broadcasts serve the same role per executor).
 
-Scale notes (100 TB): classify/tag are narrow maps — no shuffle; the
+Scale notes (100 TB): the kernel is a narrow map — no shuffle; the
 only shuffles in the whole extraction DAG are the input's initial
 repartition and the final write. The schema dimension (50 rows) is
 always broadcast (J1); the per-row fan-out (J6) is two explodes, not
 a join.
+
+``classify_stage``, ``fanout_predicates`` and ``decode_stage`` are the
+stage-by-stage seam the tensor kernels plug into
+(operators/nn_inference.py); ``kg_classify`` runs ``classify_stage``
+alone.
 """
 
 from __future__ import annotations
@@ -116,23 +121,10 @@ def classify_stage(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         kb = _kb_from_broadcast(kb_broadcast)
-        # The batch path assumes fired(1.0) > threshold AND that no
-        # pseudo-score (< 0.5) clears it; outside [0.5, 1.0) fall back
-        # to the exact per-row classify.
-        vectorized = 0.5 <= threshold < 1.0
         for pdf in batches:
-            if vectorized:
-                preds_col, scores_col = kb.classify_batch(
-                    pdf["text"], threshold=threshold, fallback_k=fallback_k
-                )
-            else:
-                preds_col, scores_col = [], []
-                for text in pdf["text"]:
-                    preds, scores = kb.classify(
-                        text, threshold=threshold, fallback_k=fallback_k
-                    )
-                    preds_col.append(preds)
-                    scores_col.append(scores)
+            preds_col, scores_col = kb.classify_batch(
+                pdf["text"], threshold=threshold, fallback_k=fallback_k
+            )
             yield pd.DataFrame(
                 {
                     "conv_id": pdf["conv_id"],
@@ -175,33 +167,6 @@ _TAGGED_FIELDS = T.StructType(
         T.StructField("tags", T.ArrayType(T.StringType())),
     ]
 )
-
-
-def tag_stage(fanned: DataFrame, kb_broadcast) -> DataFrame:
-    """Stage-2 BIESO span tagging per (turn, predicate) work unit
-    (labeling/tagging.py:9-51 semantics via kernels.bieso_tags)."""
-    from information_extraction_spark.kernels.extraction import bieso_tags
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kb = _kb_from_broadcast(kb_broadcast)
-        for pdf in batches:
-            tags_col = [
-                bieso_tags(text, kb.pairs_for(pred))
-                for text, pred in zip(pdf["text"], pdf["predicate"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"],
-                    "turn_idx": pdf["turn_idx"],
-                    "text": pdf["text"],
-                    "predicate": pdf["predicate"],
-                    "tags": tags_col,
-                }
-            )
-
-    return fanned.select(
-        "conv_id", "turn_idx", "text", "predicate"
-    ).mapInPandas(run, schema=_TAGGED_FIELDS)
 
 
 _SPANS_TYPE = T.StructType(
@@ -249,40 +214,6 @@ _DECODED_FIELDS = T.StructType(
 )
 
 
-def tag_decode_stage(fanned: DataFrame, kb_broadcast) -> DataFrame:
-    """Fused stage-2: BIESO tagging + span decode in one Arrow pass.
-
-    Semantically identical to ``decode_stage(tag_stage(...))`` (tested
-    for parity) but avoids materializing the per-character tag arrays
-    through Arrow and avoids Catalyst re-evaluating the decode UDF on
-    both sides of the emptiness filter — one Python round-trip per
-    work unit instead of three.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kb = _kb_from_broadcast(kb_broadcast)
-        for pdf in batches:
-            subs_col, objs_col = [], []
-            for text, pred in zip(pdf["text"], pdf["predicate"]):
-                tags = kb.bieso_tags_fast(text, pred)
-                subs, objs = decode_bieso(tags, text)
-                subs_col.append(subs)
-                objs_col.append(objs)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"],
-                    "turn_idx": pdf["turn_idx"],
-                    "text": pdf["text"],
-                    "predicate": pdf["predicate"],
-                    "subjects": subs_col,
-                    "objects": objs_col,
-                }
-            )
-
-    return fanned.select(
-        "conv_id", "turn_idx", "text", "predicate"
-    ).mapInPandas(run, schema=_DECODED_FIELDS)
-
-
 def classify_tag_decode_stage(
     df: DataFrame,
     kb_broadcast,
@@ -290,20 +221,14 @@ def classify_tag_decode_stage(
     fallback_k: int = FALLBACK_K,
     min_entity_len: int | None = None,
 ) -> DataFrame:
-    """Fully fused stage-1+2 fast path: classify → fan out → tag →
-    decode in ONE mapInPandas pass (KnowledgeBase.extract_batch).
+    """The extraction kernel: classify → fan out → tag → decode in ONE
+    mapInPandas pass (KnowledgeBase.extract_batch), for any threshold.
 
     Emits only work units whose decoded spans are non-empty on both
     sides — the only units that can produce triples; assemble_triples
     re-filters after its dedup/length pass, so
     ``assemble_triples(classify_tag_decode_stage(x))`` is triple-exact
-    with the staged ``classify_stage → fanout_predicates →
-    tag_decode_stage`` path (parity-tested). Only valid for
-    0.5 <= threshold < 1.0 (the kernel's fired/fallback split assumes
-    hit score 1.0 fires and pseudo-scores < 0.5 never do) — the
-    pipeline falls back to the staged path otherwise, and a direct
-    caller outside that regime gets a ValueError rather than silently
-    different predicate sets.
+    with the pure-Python ``reference_extract`` (parity-tested).
 
     ``min_entity_len``: when set, the kernel emits PRE-CLEANED units
     (set-deduped, length-filtered, sorted — assemble_entities run at
@@ -313,12 +238,6 @@ def classify_tag_decode_stage(
     Triple-exact with the uncleaned path (parity-tested) because
     assemble_triples' clean is idempotent.
     """
-    if not (0.5 <= threshold < 1.0):
-        raise ValueError(
-            "classify_tag_decode_stage requires 0.5 <= threshold < 1.0; "
-            f"got {threshold} — use classify_stage + tag_decode_stage"
-        )
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         kb = _kb_from_broadcast(kb_broadcast)
         for pdf in batches:
@@ -359,71 +278,6 @@ def classify_tag_decode_stage(
         F.col("text").isNotNull() & (F.length("text") > 0)
     )
     return pruned.mapInPandas(run, schema=_DECODED_FIELDS)
-
-
-_UNIT_FIELDS = T.StructType(
-    [
-        T.StructField("text", T.StringType()),
-        T.StructField("predicate", T.StringType()),
-        T.StructField("subjects", T.ArrayType(T.StringType())),
-        T.StructField("objects", T.ArrayType(T.StringType())),
-    ]
-)
-
-
-def extract_units_per_text(
-    texts: DataFrame,
-    kb_broadcast,
-    threshold: float = THRESHOLD,
-    fallback_k: int = FALLBACK_K,
-    min_entity_len: int | None = None,
-) -> DataFrame:
-    """The fused classify→tag→decode kernel keyed by TEXT alone:
-    (text, predicate, subjects, objects) per fired work unit, for a
-    DataFrame of DISTINCT texts.
-
-    This is the collapse-duplicates fast path's kernel half
-    (plans/pipeline.py): extraction is a pure function of the text,
-    so a corpus with duplicate turn text — the dominant redundancy in
-    agent transcripts ("ok", tool boilerplate, retried turns) — pays
-    the kernel once per distinct text globally, not once per copy
-    (the per-partition memo in KnowledgeBase.extract_batch only
-    collapses copies that land in the same partition). Same
-    fired/fallback regime restriction as classify_tag_decode_stage;
-    emits PRE-CLEANED units when ``min_entity_len`` is set.
-    """
-    if not (0.5 <= threshold < 1.0):
-        raise ValueError(
-            "extract_units_per_text requires 0.5 <= threshold < 1.0; "
-            f"got {threshold} — use classify_stage + tag_decode_stage"
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kb = _kb_from_broadcast(kb_broadcast)
-        for pdf in batches:
-            per_row = kb.extract_batch(
-                pdf["text"],
-                threshold=threshold,
-                fallback_k=fallback_k,
-                min_entity_len=min_entity_len,
-            )
-            tx, pr, su, ob = [], [], [], []
-            for text, units in zip(pdf["text"], per_row):
-                for predicate, subjects, objects in units:
-                    tx.append(text)
-                    pr.append(predicate)
-                    su.append(subjects)
-                    ob.append(objects)
-            yield pd.DataFrame(
-                {
-                    "text": pd.Series(tx, dtype=object),
-                    "predicate": pd.Series(pr, dtype=object),
-                    "subjects": pd.Series(su, dtype=object),
-                    "objects": pd.Series(ob, dtype=object),
-                }
-            )
-
-    return texts.select("text").mapInPandas(run, schema=_UNIT_FIELDS)
 
 
 def first_listed_schema(schemas_df: DataFrame) -> DataFrame:

@@ -1,16 +1,16 @@
 """Spark stages running the numpy BiLSTM (kernels/nn.py) behind the
-SAME seam as the deterministic KB kernels: identical output schemas to
-operators/extract.classify_stage / tag_stage, weights shipped once per
-executor as a Spark broadcast, inputs built by the P8-P11 tokenizer
-operators (char index + pad, CLS/SEP framing + masks,
-predicate-conditioned segments).
+stage-by-stage seam of operators/extract: ``nn_classify_stage`` has
+``classify_stage``'s output schema and ``nn_tag_stage`` emits BIESO
+tags per (turn, predicate) unit (``_TAGGED_FIELDS``) for the stock
+``decode_stage``. Weights ship once per executor as a Spark broadcast;
+inputs are built by the P8-P11 tokenizer operators (char index + pad,
+CLS/SEP framing + masks, predicate-conditioned segments).
 
 This is the "a fine-tuned model drops in behind the same mapInPandas
-signature" claim made concrete (VERDICT r01 #3): swap
-``classify_stage``/``tag_stage`` for ``nn_classify_stage``/
-``nn_tag_stage`` in plans/pipeline.extract_triples's staged path and
-the DAG is unchanged — narrow Arrow-batched maps, no shuffle, decode/
-assemble downstream operators untouched (tests/test_nn_kernel.py runs
+signature" claim made concrete (VERDICT r01 #3): ``nn_extract_triples``
+composes ordered → nn-classify → ``fanout_predicates`` → nn-tag →
+``decode_stage`` → ``assemble_triples`` — narrow Arrow-batched maps, no
+shuffle, downstream operators untouched (tests/test_nn_kernel.py runs
 exactly that composition end-to-end).
 """
 
@@ -136,9 +136,9 @@ def nn_tag_stage(
     dedup: bool = True,
 ) -> DataFrame:
     """Stage-2 BIESO tagging via the broadcast BiLSTM over
-    predicate-conditioned frames (P11). Output schema identical to
-    extract.tag_stage; tags align 1:1 with text chars so the stock
-    decode_stage consumes them unchanged.
+    predicate-conditioned frames (P11). Output schema
+    extract._TAGGED_FIELDS; tags align 1:1 with text chars so the
+    stock decode_stage consumes them unchanged.
 
     ``dedup`` memoizes per distinct (text, predicate) unit within the
     partition — after the classify fan-out, duplicate turns produce

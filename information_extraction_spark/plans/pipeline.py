@@ -1,8 +1,8 @@
 """The end-to-end KG-construction pipeline.
 
-read transcripts → stable ordering → classify (pandas UDF) →
-explode(predicates) → tag (pandas UDF) → span decode → dedup/filter →
-cartesian SUB×OBJ → broadcast-join schema dim → triples.
+read transcripts → stable ordering → fused classify/tag/decode kernel
+(one pandas UDF pass) → dedup/filter → cartesian SUB×OBJ →
+broadcast-join schema dim → triples.
 
 This is the Spark shape of the reference's six-process legacy
 pipeline (SURVEY.md §3.1); every process boundary that used to be a
@@ -14,22 +14,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql import functions as F
-
+from information_extraction_spark.kernels.extraction import KERNEL_VERSION
 from information_extraction_spark.operators.extract import (
     FALLBACK_K,
     MIN_ENTITY_LEN,
     THRESHOLD,
     assemble_triples,
     broadcast_kb,
-    classify_stage,
     classify_tag_decode_stage,
-    decode_stage,
-    extract_units_per_text,
-    fanout_predicates,
     ordered_transcripts,
-    tag_decode_stage,
-    tag_stage,
 )
 
 
@@ -42,18 +35,19 @@ def extract_triples(
     fallback_k: int = FALLBACK_K,
     checkpointer=None,
     kernel_partitions: int | None = None,
-    collapse_duplicate_texts: bool = False,
 ) -> DataFrame:
     """Run the full extraction DAG; returns the triples DataFrame.
 
-    ``checkpointer`` (operators.checkpoint.CheckpointManager) makes
-    each stage resumable; None fuses everything into one DAG (fastest
-    when no resume is needed — Catalyst pipelines the narrow stages
-    into a single pass over the data).
+    ``checkpointer`` (operators.checkpoint.CheckpointManager) stages the
+    kernel's work units as ``units`` and the result as ``triples``, so a
+    re-run resumes from them. The stages' identity also covers the
+    inputs' contents and the kernel settings
+    (``CheckpointManager.for_inputs``): a changed input or setting
+    recomputes them. None runs everything as one DAG.
 
     ``kernel_partitions``: explicit partition count for the Python
-    kernel stages. The kernels are CPU-bound, so their parallelism
-    must track cores, not bytes — AQE's byte-based coalescing would
+    kernel stage. The kernel is CPU-bound, so its parallelism must
+    track cores, not bytes — AQE's byte-based coalescing would
     otherwise squeeze a small-byte/high-cost stage onto a couple of
     cores (observed: 50k turns coalesced to 2 partitions). Default
     EXACTLY defaultParallelism (one task wave): every extra wave
@@ -67,6 +61,14 @@ def extract_triples(
     the upstream partitioning is already right, e.g. a bucketed
     table).
     """
+    if checkpointer is not None:
+        checkpointer = checkpointer.for_inputs(
+            {"transcripts": transcripts, "kb": kb, "schemas": schemas},
+            threshold=threshold,
+            fallback_k=fallback_k,
+            min_entity_len=MIN_ENTITY_LEN,
+            kernel_version=KERNEL_VERSION,
+        )
     kb_bc = broadcast_kb(spark, kb)
 
     if kernel_partitions is None:
@@ -75,91 +77,24 @@ def extract_triples(
         # Repartition BEFORE the dedup window: the window's
         # partitionBy(conv_id, turn_idx) is satisfied by this exact
         # hash partitioning, so the whole pre-kernel path costs ONE
-        # shuffle and the kernels inherit the explicit (AQE-exempt)
+        # shuffle and the kernel inherits the explicit (AQE-exempt)
         # partition count.
         transcripts = transcripts.repartition(
             kernel_partitions, "conv_id", "turn_idx"
         )
-    ordered = ordered_transcripts(transcripts)
+    # The kernel pre-cleans entities (assemble_entities at memo time,
+    # once per distinct text), so assemble_triples skips its per-unit
+    # array lambdas.
+    units = classify_tag_decode_stage(
+        ordered_transcripts(transcripts),
+        kb_bc,
+        threshold=threshold,
+        fallback_k=fallback_k,
+        min_entity_len=MIN_ENTITY_LEN,
+    )
     if checkpointer is not None:
-        # Resumable variant: materialize each stage separately.
-        classified = checkpointer.stage(
-            classify_stage(
-                ordered, kb_bc, threshold=threshold, fallback_k=fallback_k
-            ),
-            "classified",
-        )
-        fanned = fanout_predicates(classified)
-        tagged = checkpointer.stage(tag_stage(fanned, kb_bc), "tagged")
-        decoded = decode_stage(tagged)
-    elif 0.5 <= threshold < 1.0:
-        # Fully fused fast path: classify+fanout+tag+decode in one
-        # Arrow round-trip (triple-exact with the staged path; the
-        # fused kernel's fired/fallback split assumes the default
-        # threshold regime — see classify_tag_decode_stage). The
-        # kernel also pre-cleans entities (assemble_entities at memo
-        # time, once per distinct text), so assemble_triples skips its
-        # per-unit-row array lambdas (pre_cleaned below).
-        if collapse_duplicate_texts:
-            # OPT-IN for high-duplication corpora: extraction is a
-            # pure function of the text, and real agent transcripts
-            # repeat turn text heavily ("ok", tool boilerplate,
-            # retried turns) — run the kernel once per DISTINCT text
-            # globally, then join the units back to the turns. The
-            # distinct's partial aggregation collapses copies
-            # map-side (so a hyper-hot text never concentrates in one
-            # shuffle partition — skew-safe where partitioning the
-            # kernel input by text hash would not be), and the join
-            # back is AQE's choice: broadcast when the unit table is
-            # small, skew-split SMJ otherwise. Triple-exact with the
-            # uncollapsed path (parity-tested): per distinct text the
-            # unit set is identical for every copy. Default OFF: on a
-            # mostly-unique corpus (the bench corpus is one BY DESIGN
-            # — per-replica marker tokens defeat memoization so the
-            # bench measures kernel work) the distinct + join-back
-            # costs ~40% for no kernel saving. Measured at sf0.1
-            # (198k turns, 32 cores): unique corpus 4.35s -> 6.1s;
-            # byte-identical 8x-dup corpus 4.88s -> 4.46s. Enable
-            # when the dup ratio is high AND the kernel is expensive
-            # relative to a fact-table shuffle (the NN kernels
-            # qualify; the dict kernel only at higher dup ratios).
-            pruned = ordered.select("conv_id", "turn_idx", "text").filter(
-                F.col("text").isNotNull() & (F.length("text") > 0)
-            )
-            texts = pruned.select("text").distinct()
-            if kernel_partitions:
-                # Round-robin, NOT by text hash: the distinct output
-                # is already collapsed, this only sizes the CPU-bound
-                # kernel stage (AQE would coalesce it by bytes).
-                texts = texts.repartition(kernel_partitions)
-            units = extract_units_per_text(
-                texts,
-                kb_bc,
-                threshold=threshold,
-                fallback_k=fallback_k,
-                min_entity_len=MIN_ENTITY_LEN,
-            )
-            decoded = pruned.join(units, "text").select(
-                "conv_id", "turn_idx", "text", "predicate",
-                "subjects", "objects",
-            )
-        else:
-            decoded = classify_tag_decode_stage(
-                ordered,
-                kb_bc,
-                threshold=threshold,
-                fallback_k=fallback_k,
-                min_entity_len=MIN_ENTITY_LEN,
-            )
-        return assemble_triples(decoded, schemas, pre_cleaned=True)
-    else:
-        classified = classify_stage(
-            ordered, kb_bc, threshold=threshold, fallback_k=fallback_k
-        )
-        fanned = fanout_predicates(classified)
-        # Fused tag+decode (one Arrow round-trip).
-        decoded = tag_decode_stage(fanned, kb_bc)
-    triples = assemble_triples(decoded, schemas)
+        units = checkpointer.stage(units, "units")
+    triples = assemble_triples(units, schemas, pre_cleaned=True)
     if checkpointer is not None:
         triples = checkpointer.stage(triples, "triples")
     return triples

@@ -10,6 +10,7 @@ the DuckDB oracle (see queries.py) and scales with the sf directory.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -187,8 +188,17 @@ def kb_from_documents(
             kb_rows.append(
                 (pred, vocab[(7 * k + 3 * i) % v], bigrams[(11 * k + 5 * i + 1) % b])
             )
+    # Built from pandas, so each is a LocalRelation whose plan carries
+    # its rows: a checkpointed extract_triples over them can resume
+    # (operators/checkpoint.input_identity).
     kb = spark.createDataFrame(
-        sorted(set(kb_rows)), schema=S.KNOWLEDGE_BASE
+        pd.DataFrame(
+            sorted(set(kb_rows)), columns=S.KNOWLEDGE_BASE.fieldNames()
+        ),
+        schema=S.KNOWLEDGE_BASE,
     )
-    schemas = spark.createDataFrame(schema_rows, schema=S.RELATION_SCHEMAS)
+    schemas = spark.createDataFrame(
+        pd.DataFrame(schema_rows, columns=S.RELATION_SCHEMAS.fieldNames()),
+        schema=S.RELATION_SCHEMAS,
+    )
     return kb, schemas

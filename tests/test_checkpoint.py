@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
 
@@ -10,6 +11,7 @@ from information_extraction_spark import schemas as S
 from information_extraction_spark.operators.checkpoint import (
     COMPLETION_PARTITION,
     CheckpointManager,
+    input_identity,
 )
 from information_extraction_spark.plans.pipeline import extract_triples
 
@@ -153,6 +155,22 @@ def test_legacy_manifest_upgrade_path(spark, tmp_dir):
     assert mgr2.read_as_of("s", 1).count() == 40
 
 
+KEY = ["conv_id", "turn_idx", "predicate", "subject", "object"]
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.select(KEY).collect()))
+
+
+def _assert_read_back(df, base: str) -> None:
+    """``df`` is a checkpoint read back: no kernel in its plan, and
+    every file it reads sits under the checkpoint dir."""
+    assert "MapInPandas" not in df._jdf.queryExecution().analyzed().toString()
+    files = df.inputFiles()
+    assert files
+    assert all(urlparse(f).path.startswith(base + "/") for f in files)
+
+
 def test_pipeline_with_checkpoints_matches_unchecked(
     spark, world, transcripts_pdf, tmp_dir
 ):
@@ -162,65 +180,141 @@ def test_pipeline_with_checkpoints_matches_unchecked(
     sch = spark.createDataFrame(world.schemas, schema=S.RELATION_SCHEMAS)
     mgr = CheckpointManager(spark, base, run_id="p1", params={"kb": "clean"})
     with_ckpt = extract_triples(spark, tdf, kb, sch, checkpointer=mgr)
-    plain = extract_triples(spark, tdf, kb, sch)
-    key = ["conv_id", "turn_idx", "predicate", "subject", "object"]
-    a = sorted(map(tuple, with_ckpt.select(key).collect()))
-    b = sorted(map(tuple, plain.select(key).collect()))
-    assert a == b
-    # All three stages recorded complete.
-    for stage in ("classified", "tagged", "triples"):
-        assert mgr.is_complete(stage)
+    a = _rows(with_ckpt)
+    assert a == _rows(extract_triples(spark, tdf, kb, sch))
+    # Both stages recorded one snapshot each.
+    for stage in ("units", "triples"):
+        assert len(mgr.snapshots(stage)) == 1
 
-    # Resume path: a fresh manager replays from the triples checkpoint
-    # without touching the (empty) inputs.
-    empty = spark.createDataFrame([], schema=S.TRANSCRIPTS)
+    # Identical inputs resume: a fresh manager reads the triples
+    # checkpoint back and writes nothing new.
     mgr2 = CheckpointManager(spark, base, run_id="p1", params={"kb": "clean"})
-    resumed = extract_triples(spark, empty, kb, sch, checkpointer=mgr2)
-    assert sorted(map(tuple, resumed.select(key).collect())) == a
+    resumed = extract_triples(spark, tdf, kb, sch, checkpointer=mgr2)
+    _assert_read_back(resumed, base)
+    assert _rows(resumed) == a
+    assert len(mgr2.snapshots("triples")) == 1
+
+    # An empty input is another input: it recomputes, to no triples.
+    empty = spark.createDataFrame([], schema=S.TRANSCRIPTS)
+    mgr3 = CheckpointManager(spark, base, run_id="p1", params={"kb": "clean"})
+    assert extract_triples(spark, empty, kb, sch, checkpointer=mgr3).count() == 0
 
 
 def test_partial_resume_recomputes_only_downstream_stages(
-    spark, world, transcripts_pdf, tmp_dir
+    spark, world, transcripts_pdf, tmp_dir, monkeypatch
 ):
-    """Crash-after-stage-1 shape: only the `classified` checkpoint
-    exists. A re-run against an EMPTY source must still produce the
-    full triple set — proof the pipeline resumed from the checkpoint
-    and recomputed only the downstream stages from it."""
-    from information_extraction_spark.operators import extract as ex
+    """Crash-after-units shape: the kernel's ``units`` were staged, then
+    assembling the triples failed. A re-run on the same inputs must
+    resume from ``units`` and compute only ``triples``."""
+    import pytest
+
+    from information_extraction_spark.plans import pipeline
 
     base = os.path.join(tmp_dir, "ckpt3")
     tdf = spark.createDataFrame(transcripts_pdf, schema=S.TRANSCRIPTS)
     kb = spark.createDataFrame(world.kb_clean, schema=S.KNOWLEDGE_BASE)
     sch = spark.createDataFrame(world.schemas, schema=S.RELATION_SCHEMAS)
-    kb_bc = ex.broadcast_kb(spark, kb)
-    kp = spark.sparkContext.defaultParallelism * 3
 
-    # Materialize ONLY stage 1, exactly as extract_triples would.
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash after units")
+
     mgr = CheckpointManager(spark, base, run_id="pr", params={"v": 1})
-    mgr.stage(
-        ex.classify_stage(
-            ex.ordered_transcripts(
-                tdf.repartition(kp, "conv_id", "turn_idx")
-            ),
-            kb_bc,
-        ),
-        "classified",
-    ).count()
-    assert mgr.is_complete("classified")
-    assert not mgr.is_complete("tagged")
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "assemble_triples", crash)
+        with pytest.raises(RuntimeError, match="crash after units"):
+            extract_triples(spark, tdf, kb, sch, checkpointer=mgr)
+    units = mgr.snapshots("units")
+    assert len(units) == 1 and mgr.snapshots("triples") == []
 
-    empty = spark.createDataFrame([], schema=S.TRANSCRIPTS)
     mgr2 = CheckpointManager(spark, base, run_id="pr", params={"v": 1})
-    resumed = extract_triples(
-        spark, empty, kb, sch, checkpointer=mgr2, kernel_partitions=kp
+    resumed = extract_triples(spark, tdf, kb, sch, checkpointer=mgr2)
+    assert _rows(resumed) == _rows(extract_triples(spark, tdf, kb, sch))
+    assert mgr2.snapshots("units") == units  # the kernel did not re-run
+    assert len(mgr2.snapshots("triples")) == 1
+
+
+def test_changed_inputs_or_threshold_recompute(
+    spark, world, transcripts_pdf, tmp_dir
+):
+    """Resume reuses a stage only when it was built from the same
+    inputs: a changed KB, transcripts rewritten at the same path, or a
+    changed threshold each recompute, and give the unchecked result."""
+    from information_extraction_spark.sources import tables
+
+    base = os.path.join(tmp_dir, "ckpt_inputs")
+    src = os.path.join(tmp_dir, "ckpt_inputs_transcripts.parquet")
+    sch = spark.createDataFrame(world.schemas, schema=S.RELATION_SCHEMAS)
+    kb = spark.createDataFrame(world.kb_clean, schema=S.KNOWLEDGE_BASE)
+
+    def write_transcripts(pdf):
+        spark.createDataFrame(pdf, schema=S.TRANSCRIPTS).write.mode(
+            "overwrite"
+        ).parquet(src)
+
+    def run(kb_df, **kw):
+        """(checkpointed rows, unchecked rows, triples snapshots)."""
+        tdf = tables.read_transcripts(spark, src)
+        mgr = CheckpointManager(spark, base, run_id="in", params={"v": 1})
+        out = extract_triples(spark, tdf, kb_df, sch, checkpointer=mgr, **kw)
+        plain = extract_triples(spark, tdf, kb_df, sch, **kw)
+        return _rows(out), _rows(plain), len(mgr.snapshots("triples"))
+
+    write_transcripts(transcripts_pdf)
+    first, plain, n = run(kb)
+    assert first == plain and n == 1
+    again, _, n = run(kb)
+    assert again == first and n == 1  # same inputs: resumed
+
+    dropped = world.kb_clean.predicate.iloc[0]
+    kb2 = spark.createDataFrame(
+        world.kb_clean[world.kb_clean.predicate != dropped],
+        schema=S.KNOWLEDGE_BASE,
     )
-    key = ["conv_id", "turn_idx", "predicate", "subject", "object"]
-    expect = sorted(
-        map(tuple, extract_triples(spark, tdf, kb, sch).select(key).collect())
+    got, plain, n = run(kb2)
+    assert got == plain != first and n == 2
+
+    convs = sorted(transcripts_pdf.conv_id.unique())[: 20]
+    write_transcripts(transcripts_pdf[transcripts_pdf.conv_id.isin(convs)])
+    got, plain, n = run(kb)
+    assert got == plain != first and n == 3
+
+    got, plain, n = run(kb, threshold=0.3)
+    assert got == plain and n == 4
+
+
+def test_input_identity_follows_content(spark, tmp_dir):
+    """Equal pandas-made DataFrames share an identity and changed rows
+    change it; a rewritten file changes it; a row-list DataFrame has
+    none, so a manager over it never resumes."""
+    import pandas as pd
+
+    rows = [(1, "a"), (2, "b")]
+    pdf = pd.DataFrame(rows, columns=["k", "v"])
+    a = input_identity(spark.createDataFrame(pdf))
+    assert a is not None
+    assert input_identity(spark.createDataFrame(pdf.copy())) == a
+    assert input_identity(spark.createDataFrame(pdf.assign(v=["a", "c"]))) != a
+
+    path = os.path.join(tmp_dir, "identity.parquet")
+    spark.range(5).write.parquet(path)
+    f = input_identity(spark.read.parquet(path))
+    assert f is not None and input_identity(spark.read.parquet(path)) == f
+    spark.range(6).write.mode("overwrite").parquet(path)
+    assert input_identity(spark.read.parquet(path)) != f
+
+    listed = spark.createDataFrame(rows, "k long, v string")
+    assert input_identity(listed) is None
+    mgr = CheckpointManager(spark, os.path.join(tmp_dir, "ckpt_id"), "r")
+    assert (
+        mgr.for_inputs({"x": listed}).params_hash
+        != mgr.for_inputs({"x": listed}).params_hash
     )
-    assert sorted(map(tuple, resumed.select(key).collect())) == expect
-    for stage in ("tagged", "triples"):
-        assert mgr2.is_complete(stage)
+    pandas_made = {"x": spark.createDataFrame(pdf)}
+    assert (
+        mgr.for_inputs(pandas_made, t=1).params_hash
+        == mgr.for_inputs(pandas_made, t=1).params_hash
+        != mgr.for_inputs(pandas_made, t=2).params_hash
+    )
 
 
 def test_time_travel_query_reads_history_not_latest(spark):

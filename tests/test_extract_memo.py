@@ -31,3 +31,32 @@ def test_bounded_clear_never_drops_this_batchs_hits():
     assert out[0] == expected
     # cache was cleared and repopulated with only the fresh compute
     assert len(kb._extract_cache) <= 2
+
+
+def test_memo_keeps_each_thresholds_units():
+    """One KB called at 0.5, then 0.3, then 0.5 on the same texts must
+    return each threshold's own units, not the memo of another."""
+    from information_extraction_spark.kernels.extraction import _pseudo_score
+
+    entries = [
+        ("p1", "alpha", "beta"),
+        ("p2", "alpha", "zeta"),
+        ("p2", "omega", "delta"),
+    ]
+    # p1 fires; p2 does not, but tags alpha/delta across its two pairs,
+    # so it yields a unit exactly when its pseudo-score passes 0.3.
+    text = next(
+        t
+        for t in (f"alpha beta delta {i}" for i in range(100))
+        if _pseudo_score(t, "p2") > 0.3
+    )
+    texts = [text, "nothing relevant", text]
+    kb = KnowledgeBase(entries)
+    for threshold in (0.5, 0.3, 0.5):
+        fresh = KnowledgeBase(entries).extract_batch(texts, threshold=threshold)
+        assert kb.extract_batch(texts, threshold=threshold) == fresh
+    assert [p for p, _, _ in kb.extract_batch([text], threshold=0.3)[0]] == [
+        "p1",
+        "p2",
+    ]
+    assert [p for p, _, _ in kb.extract_batch([text])[0]] == ["p1"]

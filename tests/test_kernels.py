@@ -142,8 +142,24 @@ def test_knowledgebase_parity_with_direct_classifier():
     by_pred: dict[str, list[tuple[str, str]]] = {}
     for p, s, o in entries:
         by_pred.setdefault(p, []).append((s, o))
-    for text in (DUANNAO_TEXT, BEI_TEXT, "no match at all", ""):
+    texts = (DUANNAO_TEXT, BEI_TEXT, "no match at all", "")
+    for text in texts:
         assert kbase.classify(text) == classify_predicates(text, by_pred)
+    # Every threshold regime, per row and batched: below and inside the
+    # pseudo-scores' range, the default, and at or above the fired
+    # score (only the top-k fallback remains).
+    for threshold in (-1.0, 0.0, 0.3, 0.5, 0.99, 1.0, 1.5):
+        preds, scores = kbase.classify_batch(
+            texts, threshold=threshold, fallback_k=2
+        )
+        for i, text in enumerate(texts):
+            expect = classify_predicates(
+                text, by_pred, threshold=threshold, fallback_k=2
+            )
+            assert kbase.classify(
+                text, threshold=threshold, fallback_k=2
+            ) == expect
+            assert (preds[i], scores[i]) == expect, (threshold, i)
 
 
 def test_reference_extract_end_to_end():
@@ -193,22 +209,3 @@ def test_classify_batch_parity_with_loop():
         lp, ls = kbase.classify(t)
         assert bp[i] == lp, f"row {i}"
         assert bs[i] == ls, f"row {i}"
-
-
-def test_bieso_tags_fast_parity():
-    """Prefiltered tagging must equal the reference-semantics tagger
-    for every (text, predicate), including sub==obj and misses."""
-    entries = [
-        ("主演", "端脑", "朱元冰"),
-        ("主演", "端脑", "蒋依依"),
-        ("主演", "不在", "也不在"),
-        ("改编自", "端脑", "端脑"),
-        ("作者", "碑", "维克多·谢阁兰"),
-        ("作者", "碑", "不存在的人"),
-    ]
-    kbase = KnowledgeBase(entries)
-    for text in (DUANNAO_TEXT, BEI_TEXT, "no match", ""):
-        for pred in ("主演", "改编自", "作者", "缺席"):
-            assert kbase.bieso_tags_fast(text, pred) == bieso_tags(
-                text, kbase.pairs_for(pred)
-            ), (text[:10], pred)

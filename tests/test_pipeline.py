@@ -91,76 +91,49 @@ def test_dual_schema_predicate_first_listed_wins(spark, world, transcripts_pdf):
     assert set(dual.subject_type) == {"机构"}
 
 
-def test_fused_path_matches_staged_path(spark, world, transcripts_pdf):
-    """The fully fused classify+tag+decode kernel must be triple-exact
-    with the staged classify → fanout → tag+decode path, including on
-    the NOISY KB (dropped + spurious entries exercise the fallback
-    top-k and cross-pair one-sided-match corners that the clean-KB
-    golden test cannot reach)."""
-    from information_extraction_spark.operators import extract as ex
-
-    for kb_pdf in (world.kb_clean, world.kb_noisy):
-        tdf = spark.createDataFrame(transcripts_pdf, schema=S.TRANSCRIPTS)
-        kb = spark.createDataFrame(kb_pdf, schema=S.KNOWLEDGE_BASE)
-        sch = spark.createDataFrame(world.schemas, schema=S.RELATION_SCHEMAS)
-        kb_bc = ex.broadcast_kb(spark, kb)
-        ordered = ex.ordered_transcripts(tdf)
-        staged = ex.assemble_triples(
-            ex.tag_decode_stage(
-                ex.fanout_predicates(ex.classify_stage(ordered, kb_bc)), kb_bc
-            ),
-            sch,
-        ).toPandas()
-        fused = ex.assemble_triples(
-            ex.classify_tag_decode_stage(ordered, kb_bc), sch
-        ).toPandas()
-        assert _key_set(fused) == _key_set(staged)
-        assert len(fused) == len(staged)
-        # Pre-cleaned fast path (the pipeline default): the kernel
-        # cleans at memo time and assemble skips its array lambdas —
-        # must stay triple-exact with the staged composition.
-        pre = ex.assemble_triples(
-            ex.classify_tag_decode_stage(
-                ordered, kb_bc, min_entity_len=ex.MIN_ENTITY_LEN
-            ),
-            sch,
-            pre_cleaned=True,
-        ).toPandas()
-        assert _key_set(pre) == _key_set(staged)
-        assert len(pre) == len(staged)
-
-
-def test_collapse_duplicate_texts_parity(spark, world, transcripts_pdf):
-    """The collapse-distinct-texts fast path (kernel once per distinct
-    text globally + join-back) must be ROW-exact — not just
-    key-set-exact — with the uncollapsed fused path, on a corpus where
-    the same turn text recurs across conversations (the agent-
-    transcript shape the collapse targets)."""
-    reps = []
-    for i in range(3):
-        r = transcripts_pdf.copy()
-        r["conv_id"] = r["conv_id"] + f"_rep{i}"
-        reps.append(r)
-    corpus = pd.concat(reps, ignore_index=True)
-    tdf = spark.createDataFrame(corpus, schema=S.TRANSCRIPTS)
-    kb = spark.createDataFrame(world.kb_clean, schema=S.KNOWLEDGE_BASE)
-    sch = spark.createDataFrame(world.schemas, schema=S.RELATION_SCHEMAS)
-    on = extract_triples(
-        spark, tdf, kb, sch, collapse_duplicate_texts=True
-    ).toPandas()
-    off = extract_triples(
-        spark, tdf, kb, sch, collapse_duplicate_texts=False
-    ).toPandas()
-    cols = sorted(on.columns)
-    as_rows = lambda p: sorted(  # noqa: E731
-        p[cols].itertuples(index=False, name=None)
+def _reference_keys(world, transcripts_pdf, kb_pdf, threshold):
+    """Triple keys of the dict-KB ``reference_extract``
+    (classify_predicates → bieso_tags → decode_bieso), which shares no
+    code with the KnowledgeBase kernel."""
+    from information_extraction_spark.kernels.extraction import (
+        reference_extract,
     )
-    assert len(on) == len(off) > 0
-    assert as_rows(on) == as_rows(off)
-    # Each replica must carry the full triple set (join-back fan-out
-    # reaches every copy, not just one representative).
-    per_rep = on.groupby(on.conv_id.str[-4:]).size()
-    assert per_rep.nunique() == 1 and len(per_rep) == 3
+
+    kb: dict[str, list[tuple[str, str]]] = {}
+    for p, s, o in kb_pdf[["predicate", "subject", "object"]].itertuples(
+        index=False, name=None
+    ):
+        if (s, o) not in kb.setdefault(p, []):  # a KB is a set of entries
+            kb[p].append((s, o))
+    return {
+        (row.conv_id, row.turn_idx, p, s, o, st, ot)
+        for row in transcripts_pdf.itertuples()
+        if row.text
+        for s, p, o, st, ot in reference_extract(
+            row.text, kb, world.schema_types, threshold=threshold
+        )
+    }
+
+
+def test_fused_path_matches_staged_path(spark, world, transcripts_pdf):
+    """extract_triples must equal the dict-KB reference extractor at
+    every threshold regime — below the pseudo-scores' range (0.0),
+    inside it (0.3), the default (0.5, 0.99) and above the fired score
+    (1.0, where only the top-k fallback remains) — on the clean KB and
+    the NOISY KB (dropped + spurious entries exercise the fallback
+    top-k and cross-pair one-sided-match corners)."""
+    tdf = spark.createDataFrame(transcripts_pdf, schema=S.TRANSCRIPTS)
+    sch = spark.createDataFrame(world.schemas, schema=S.RELATION_SCHEMAS)
+    for kb_pdf in (world.kb_clean, world.kb_noisy):
+        kb = spark.createDataFrame(kb_pdf, schema=S.KNOWLEDGE_BASE)
+        for threshold in (0.0, 0.3, 0.5, 0.99, 1.0):
+            got = extract_triples(
+                spark, tdf, kb, sch, threshold=threshold
+            ).toPandas()
+            assert len(got) == len(got.drop_duplicates(TRIPLE_KEY))
+            assert _key_set(got) == _reference_keys(
+                world, transcripts_pdf, kb_pdf, threshold
+            ), threshold
 
 
 def test_empty_input_yields_empty_triples(spark, world):
@@ -198,17 +171,26 @@ def test_all_miss_batch_yields_empty_not_crash(spark, world):
     assert out.count() == 0
 
 
-def test_fused_stage_rejects_out_of_regime_threshold(spark, world):
-    """Direct misuse must be loud: the fused stage's fired/fallback
-    split is only valid for 0.5 <= threshold < 1.0."""
-    import pytest as _pytest
-
+def test_fused_stage_serves_threshold_below_default(
+    spark, world, transcripts_pdf
+):
+    """The fused stage serves a threshold below 0.5, where non-fired
+    predicates with a pseudo-score above it are predicted too."""
     from information_extraction_spark.operators import extract as ex
 
+    tdf = spark.createDataFrame(transcripts_pdf, schema=S.TRANSCRIPTS)
     kb = spark.createDataFrame(world.kb_clean, schema=S.KNOWLEDGE_BASE)
-    kb_bc = ex.broadcast_kb(spark, kb)
-    tdf = spark.createDataFrame(
-        [("c", 0, "user", "x", None, None)], schema=S.TRANSCRIPTS
+    sch = spark.createDataFrame(world.schemas, schema=S.RELATION_SCHEMAS)
+    got = ex.assemble_triples(
+        ex.classify_tag_decode_stage(
+            ex.ordered_transcripts(tdf),
+            ex.broadcast_kb(spark, kb),
+            threshold=0.3,
+        ),
+        sch,
+    ).toPandas()
+    expect = _reference_keys(world, transcripts_pdf, world.kb_clean, 0.3)
+    assert _key_set(got) == expect
+    assert expect != _reference_keys(
+        world, transcripts_pdf, world.kb_clean, 0.5
     )
-    with _pytest.raises(ValueError, match="threshold"):
-        ex.classify_tag_decode_stage(tdf, kb_bc, threshold=0.3)

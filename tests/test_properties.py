@@ -124,48 +124,82 @@ def test_frame_always_exact_length_and_mask_consistent(tokens, max_len):
 _pred = st.sampled_from(["P1", "P2", "P3"])
 
 
+@st.composite
+def _kb_and_texts(draw):
+    """A random KB and texts; half the texts are concatenations of the
+    KB's own entities, so pairs fire, half-match and overlap often."""
+    kb_rows = draw(
+        st.lists(st.tuples(_pred, entity, entity), min_size=1, max_size=6)
+    )
+    piece = st.one_of(
+        st.sampled_from([e for _, s, o in kb_rows for e in (s, o)]), filler
+    )
+    texts = draw(
+        st.lists(
+            st.one_of(
+                st.text(alphabet=_ALPHA + "、，xyz ", max_size=24),
+                st.lists(piece, max_size=6).map("".join),
+            ),
+            min_size=1,
+            max_size=6,
+        )
+    )
+    return kb_rows, texts
+
+
 @given(
-    st.lists(st.tuples(_pred, entity, entity), min_size=1, max_size=6),
-    st.lists(st.text(alphabet=_ALPHA + "、，xyz ", min_size=0, max_size=24),
-             min_size=1, max_size=6),
+    _kb_and_texts(),
+    st.one_of(
+        st.sampled_from([0.0, 0.5, 1.0]),
+        st.floats(-0.5, 1.5, allow_nan=False),
+    ),
 )
-@settings(max_examples=80, deadline=None)
-def test_extract_batch_matches_staged_kernels(kb_rows, texts):
+@settings(max_examples=300, deadline=None)
+def test_extract_batch_matches_staged_kernels(kb_and_texts, threshold):
     """The fused extract_batch must equal, per (text, predicate), the
-    staged composition classify → bieso_tags_fast → decode_bieso on
-    random KBs and texts — including overlap/overwrite, sub==obj, and
-    fallback cross-pair corners the fixtures can't enumerate."""
+    dict-KB composition classify_predicates → bieso_tags → decode_bieso
+    (the ``reference_extract`` path, which shares no code with the
+    KnowledgeBase kernel) on random KBs, texts and thresholds —
+    including overlap/overwrite, sub==obj, and fallback cross-pair
+    corners the fixtures can't enumerate."""
     from information_extraction_spark.kernels.extraction import (
         KnowledgeBase,
-        decode_bieso,
+        assemble_entities,
+        classify_predicates,
+        reference_extract,
     )
 
+    kb_rows, texts = kb_and_texts
     kb = KnowledgeBase(kb_rows)
-    fused = kb.extract_batch(texts)
-    for text, units in zip(texts, fused):
-        preds, _ = kb.classify(text)
+    by_pred: dict[str, list[tuple[str, str]]] = {}
+    for p, s, o in kb_rows:  # a KB is a set of entries
+        if (s, o) not in by_pred.setdefault(p, []):
+            by_pred[p].append((s, o))
+    fused = kb.extract_batch(texts, threshold=threshold)
+    cleaned = kb.extract_batch(texts, threshold=threshold, min_entity_len=2)
+    for text, units, clean_units in zip(texts, fused, cleaned):
+        preds, _ = classify_predicates(text, by_pred, threshold=threshold)
         expected = []
         for p in preds:
-            tags = kb.bieso_tags_fast(text, p)
-            subs, objs = decode_bieso(tags, text)
+            subs, objs = decode_bieso(bieso_tags(text, by_pred[p]), text)
             if subs and objs:
                 expected.append((p, subs, objs))
         assert units == expected
-    # min_entity_len variant: each unit cleaned (sorted set, len
-    # filter) at memo time, empty-after-clean units dropped — must be
-    # exactly the clean of the raw output.
-    from information_extraction_spark.kernels.extraction import (
-        assemble_entities,
-    )
-
-    cleaned = kb.extract_batch(texts, min_entity_len=2)
-    for raw_units, clean_units in zip(fused, cleaned):
+        # min_entity_len variant: each unit cleaned (sorted set, len
+        # filter) at memo time, empty-after-clean units dropped; its
+        # cartesian product is the reference extractor's triple set.
         expected_clean = []
-        for p, subs, objs in raw_units:
+        for p, subs, objs in expected:
             cs, co = assemble_entities(subs, objs, min_len=2)
             if cs and co:
                 expected_clean.append((p, cs, co))
         assert clean_units == expected_clean
+        assert sorted(
+            (s, p, o, "", "")
+            for p, cs, co in clean_units
+            for s in cs
+            for o in co
+        ) == reference_extract(text, by_pred, {}, threshold=threshold)
 
 
 # --- Round-3 kernels: DP segmentation, media codecs, NN checkpoint ---------

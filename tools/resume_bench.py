@@ -1,7 +1,8 @@
 """Checkpoint/resume evidence: time the checkpointed pipeline cold,
-then again with the same run_id + params — completed stages must be
-skipped via the lineage manifest (params-hash match), making the
-resumed run read-back-only. Writes BENCH/RESUME.md.
+then again with the same run_id, params and inputs — completed stages
+must be skipped via the lineage manifest (params-hash match, the hash
+covering the inputs' content identity), making the resumed run
+read-back-only. Writes BENCH/RESUME.md.
 
 Usage: python tools/resume_bench.py [sf_dir] [replicate]
 """
@@ -56,20 +57,22 @@ def main() -> int:
 
     md = f"""# Checkpoint/resume evidence — tools/resume_bench.py
 
-Checkpointed pipeline (classify / tagged / triples stages each
-materialized to Parquet with lineage-manifest rows) over
+Checkpointed pipeline (the fused kernel's `units` and the `triples`
+stage each materialized to Parquet with lineage-manifest rows) over
 `{sf_dir}` (replicate={replicate}):
 
 | run | seconds | triples |
 |---|---|---|
-| cold (all stages computed + written) | {cold_s:.3f} | {n_cold} |
-| resumed (same run_id + params hash) | {resume_s:.3f} | {n_resume} |
+| cold (both stages computed + written) | {cold_s:.3f} | {n_cold} |
+| resumed (same run_id, params and inputs) | {resume_s:.3f} | {n_resume} |
 
 Speedup {cold_s / resume_s:.1f}x: the resumed run skips every
 completed stage via the manifest's params-hash match and only reads
-the final `triples` checkpoint back. Changing any pipeline parameter
-changes the hash and invalidates the affected checkpoints (tested in
-tests/test_checkpoint.py). Identical triple counts:
+the final `triples` checkpoint back. The hash covers the caller's
+params, the content identity of the transcripts, KB and schemas
+inputs, the threshold, fallback_k, the entity length filter and the
+kernel version, so changing any of them recomputes the stages (tested
+in tests/test_checkpoint.py). Identical triple counts:
 {n_cold == n_resume}.
 """
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -256,7 +256,6 @@ def main() -> int:
         "kg_jaccard_neighbors",
         "ta_repetition",
         "emb_rproj",
-        "kg_cc_largestar",
         "dd_dup_spans",
         "kg_embedding_eval",
         "kg_forget_propagate",

@@ -17,7 +17,8 @@ triple extraction) as an idiomatic Spark DataFrame pipeline:
 * a Spark-native implementation of the official ``calc_pr.py``
   evaluation (alias-aware micro P/R/F1),
 * entity linking + canonicalization via salted broadcast alias joins
-  and an iterative hash-min connected-components merge,
+  and a connected-components merge (driver union-find, or
+  distributed star contraction for large graphs),
 * per-stage Parquet checkpoints with a lineage manifest for resume.
 
 No code is ported from the reference; every operator cites the

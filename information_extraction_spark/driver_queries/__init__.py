@@ -38,6 +38,11 @@ for mod in _MODULES:
 # stale green row from a prior round is not evidence for code that
 # changed since (VERDICT r03 #1). Update this list each round.
 _CHANGED_THIS_ROUND = [
+    # MODIFIED: connected_components' distributed leg is star
+    # contraction run to a settled edge set (was a capped label-
+    # propagation loop); kg_cc_largestar, which ran the same code, is
+    # gone.
+    "kg_entity_linking_distributed",
     # MODIFIED: extract_triples runs one path — the fused kernel, for
     # every threshold and with or without a checkpointer — and the
     # kernel's predicate selection is shared with classify_batch
@@ -424,10 +429,6 @@ _CHANGED_THIS_ROUND = [
     # bounded predicate hierarchy, inference applied to the 50-row
     # per-predicate aggregate (never the raw assertion table).
     "kg_ontology_closure",
-    # Large-star/small-star CC (Kiveris SoCC'14): O(log^2 n) rounds
-    # with a shrinking edge set — third implementation of the
-    # entity-linking labels, same recursive-CTE oracle.
-    "kg_cc_largestar",
     # Key-skew profile: heavy hitters via TakeOrdered + max/mean
     # imbalance ppm over the collapsed per-key count table.
     "w23_skew_profile",

@@ -244,14 +244,22 @@ class CheckpointManager:
         ).withColumn("completed_ts", F.current_timestamp())
         df.coalesce(1).write.mode("append").parquet(self._manifest_dir)
 
+    def resume(self, stage: str) -> DataFrame | None:
+        """The latest snapshot of ``stage`` completed under this
+        params_hash, read back; None when there is none."""
+        latest = self._latest_snapshot(stage)
+        if latest is None:
+            return None
+        return self.spark.read.parquet(self._snapshot_path(stage, latest))
+
     def stage(self, df: DataFrame, stage: str) -> DataFrame:
         """Materialize ``df`` as a new snapshot of this stage (or read
         the latest prior snapshot when the manifest marks one complete
         for the same params_hash). Returns the checkpointed DataFrame
         — downstream lineage restarts from the Parquet scan."""
-        latest = self._latest_snapshot(stage)
-        if latest is not None:
-            return self.spark.read.parquet(self._snapshot_path(stage, latest))
+        resumed = self.resume(stage)
+        if resumed is not None:
+            return resumed
         snapshot_id = self._allocate_snapshot_id()
         path = self._snapshot_path(stage, snapshot_id)
         df.write.mode("overwrite").parquet(path)

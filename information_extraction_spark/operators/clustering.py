@@ -637,7 +637,7 @@ def dbscan_grid(
     - Degree count and border assignment are map-side-combined
       shuffles on the point key; the core-core component step reuses
       connected_components (size-dispatched driver union-find vs
-      hash-min loop) on edges already restricted to core points.
+      star contraction) on edges already restricted to core points.
     - vec_ids serialize as zero-padded strings for CC (lexicographic
       = numeric order, so the component label IS the min vec_id).
     """

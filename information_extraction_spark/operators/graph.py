@@ -18,8 +18,8 @@ Scale shape (the part that must survive 100 TB):
   src key for the contribution join, (b) contributions onto dst for
   the sum. Both shuffles move node/contribution-sized data.
 - Lineage is cut per iteration (``localCheckpoint``), exactly like
-  the hash-min CC loop — without it the plan doubles per iteration
-  and iteration k replays all k-1 predecessors.
+  the connected-components star contraction — without it the plan
+  doubles per iteration and iteration k replays all k-1 predecessors.
 - Iteration count is FIXED (a hyperparameter), not convergence-tested
   per element, so the loop runs a deterministic number of jobs and
   its result is exactly expressible as k chained self-joins — which
@@ -1142,7 +1142,7 @@ def transitive_closure(
     broadcast-sized, the distinct dedups the exploding union each
     round, and the round count is FIXED — deterministic output with
     no driver-side convergence probe. Do NOT point this at an
-    entity-scale graph; use the hash-min connected-components loop
+    entity-scale graph; use connected_components' star contraction
     (operators/linking) there instead.
 
     Input/output columns: (des, anc); output excludes identity pairs

@@ -4,24 +4,23 @@ plus connected-components merge").
 
 The reference's alias dictionary is only consulted at evaluation time
 (calc_pr.py:141-161); our engine promotes it to a first-class linking
-stage: alias rows form an undirected surface-form graph, hash-min
-connected components assign every surface form a canonical id (the
+stage: alias rows form an undirected surface-form graph, connected
+components assign every surface form a canonical id (the
 lexicographically smallest member of its component — covering chains
 a→b→c the flat dict cannot), and triples are canonicalized through a
 broadcast join on both endpoints.
 
 Scale: the alias dim is broadcast (no shuffle on the skewed fact
-side); the CC loop shuffles only the node/edge tables (tiny vs the
-fact table) and cuts lineage with localCheckpoint per iteration.
-Iterations are bounded by the graph diameter, which for alias chains
-is small; ``max_iter`` guards pathological inputs. If the alias dim
-ever outgrows broadcast range, functions.skew.salted_join is the
-drop-in replacement for the two endpoint joins.
+side); a graph past the driver threshold runs star contraction, which
+shuffles only the edge table (tiny vs the fact table), shrinks it
+every round and cuts lineage with localCheckpoint per round. If the
+alias dim ever outgrows broadcast range, functions.skew.salted_join
+is the drop-in replacement for the two endpoint joins.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from information_extraction_spark.operators.evaluation import normalize_entity
@@ -45,28 +44,28 @@ def _unpersist_checkpoint(df: DataFrame) -> None:
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 25, driver_threshold: int = 100_000
+    edges: DataFrame, driver_threshold: int = 100_000
 ) -> DataFrame:
     """Connected components: every node labeled with the minimum node
-    id in its component. Returns (node, component).
+    id in its component. Returns (node, component) for every non-NULL
+    endpoint, self-loop-only nodes included; rows with a NULL
+    endpoint are dropped, and no edges give no rows.
 
-    Size-dispatched: an edge list at or under ``driver_threshold``
-    (the alias dictionary is a broadcast-scale dim by definition)
-    runs union-find on the driver — the distributed loop costs ~2
-    Spark jobs per iteration, pure latency for a graph that fits in
-    one list. Larger graphs take the hash-min DataFrame loop with
-    localCheckpoint per iteration to cut lineage (SURVEY §4: the one
-    genuinely custom iterative operator — no GraphFrames in this
-    environment). Both paths produce identical labels (tested).
+    Two legs, picked by input size. An edge list at or under
+    ``driver_threshold`` (the alias dictionary is a broadcast-scale
+    dim by definition) runs union-find on the driver: the distributed
+    leg costs ~2 Spark jobs per round, pure latency for a graph that
+    fits in one list. Larger graphs run star contraction
+    (``_star_contraction``). Both legs produce identical labels
+    (tested against a BFS oracle).
     """
-    # Null endpoints can never link anything (the distributed path's
-    # join keys would simply not match) — drop them up front so the
-    # driver path agrees and never trips over None ordering.
+    # NULL endpoints link nothing; dropping them up front also keeps
+    # union-find from ordering None against strings.
     edges = edges.filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
     # ONE bounded probe job decides the dispatch AND supplies the
-    # driver-path rows. A count-then-collect split would evaluate the
+    # driver-leg rows. A count-then-collect split would evaluate the
     # (possibly expensive) edges plan twice, and on nondeterministic
     # lineage the second evaluation could exceed what the count
     # promised — unbounding the collect. The cost of this shape is
@@ -75,59 +74,133 @@ def connected_components(
     # safer than re-evaluating the plan.
     probe = edges.select("src", "dst").limit(driver_threshold + 1).collect()
     if len(probe) <= driver_threshold:
-        parent: dict[str, str] = {}
+        return _union_find(edges.sparkSession, probe)
+    return _star_contraction(edges)
 
-        def find(x: str) -> str:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
 
-        edge_rows = probe
-        for r in edge_rows:
-            # Union-by-min: the larger root links under the smaller,
-            # so each component's minimum stays a root and find()
-            # yields exactly the hash-min label.
-            a, b = find(r["src"]), find(r["dst"])
-            if a != b:
-                parent[max(a, b)] = min(a, b)
-        nodes = {n for r in edge_rows for n in (r["src"], r["dst"])}
-        rows = [(n, find(n)) for n in sorted(nodes)]
-        return edges.sparkSession.createDataFrame(
-            rows, "node string, component string"
+def _union_find(spark: SparkSession, edge_rows: list) -> DataFrame:
+    """Driver leg: union-find over the collected (src, dst) rows."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    for r in edge_rows:
+        # Union-by-min: the larger root links under the smaller, so
+        # each component's minimum stays a root and find() yields it.
+        a, b = find(r["src"]), find(r["dst"])
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    nodes = {n for r in edge_rows for n in (r["src"], r["dst"])}
+    rows = [(n, find(n)) for n in sorted(nodes)]
+    return spark.createDataFrame(rows, "node string, component string")
+
+
+# Kiveris et al. bound star contraction by O(log² n) rounds and observe
+# O(log n) in practice (a 40,000-node chain settles in 17 rounds); a
+# graph still changing after this many rounds is a defect, not a large
+# input.
+_MAX_STAR_ROUNDS = 100
+
+
+def _star_contraction(edges: DataFrame) -> DataFrame:
+    """Alternating large-star / small-star contraction (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC'14):
+    O(log² n) rounds where label propagation needs O(diameter), and
+    every round SHRINKS the edge set (each phase rewires nodes toward
+    their neighborhood minimum, collapsing paths into stars), so the
+    per-round shuffle cost decays as components contract.
+
+    * large-star: every node u links its LARGER neighbors (v > u) to
+      min(N(u) ∪ {u}) — cuts long chains in half without ever
+      directing an edge "upward".
+    * small-star: every node u links its smaller-or-equal neighbors
+      and itself to that minimum — flattens the remaining 2-paths.
+
+    Runs until the edge set stops changing; raises if it has not
+    after ``_MAX_STAR_ROUNDS``. Each round's edge set is a
+    localCheckpoint that releases its predecessor, and the edge and
+    node checkpoints go once the labels are materialized, so the
+    returned labels are the only RDD the call leaves persisted.
+    """
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
+    # Canonical (big, small) edges; self loops carry no link.
+    e = (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.greatest("src", "dst").alias("a"),
+            F.least("src", "dst").alias("b"),
         )
-
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).dropDuplicates()
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    labels = nodes.withColumn("component", F.col("node")).localCheckpoint()
-
-    for _ in range(max_iter):
-        neighbor_labels = sym.join(
-            labels, sym.src == labels.node, "inner"
-        ).select(F.col("dst").alias("node"), "component")
-        proposals = labels.select("node", "component").unionByName(
-            neighbor_labels
+        .distinct()
+        .localCheckpoint()
+    )
+    try:
+        for _ in range(_MAX_STAR_ROUNDS):
+            # large-star over the symmetric view: m(u) = min(N(u) ∪
+            # {u}); emit (v, m) for v > u. Output stays canonical (big,
+            # small) because v > u >= m.
+            sym = e.unionByName(
+                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+            )
+            m = sym.groupBy("a").agg(
+                F.least(F.min("b"), F.first("a")).alias("m")
+            )
+            ls = (
+                sym.join(m, "a")
+                .filter(F.col("b") > F.col("a"))
+                .select(F.col("b").alias("a"), F.col("m").alias("b"))
+                .filter(F.col("a") != F.col("b"))
+                .distinct()
+            )
+            # small-star over the downward-directed view: per larger
+            # endpoint a, m = min of its smaller neighbors; emit every
+            # smaller neighbor AND a itself re-linked to m.
+            sm = ls.groupBy("a").agg(F.min("b").alias("m"))
+            ss = (
+                ls.join(sm, "a")
+                .select(F.col("b").alias("a"), F.col("m").alias("b"))
+                .unionByName(sm.select(F.col("a"), F.col("m").alias("b")))
+                .filter(F.col("a") != F.col("b"))
+                .distinct()
+                .localCheckpoint()
+            )
+            changed = ss.subtract(e).unionByName(e.subtract(ss)).count()
+            _unpersist_checkpoint(e)
+            e = ss
+            if changed == 0:
+                break
+        else:
+            raise RuntimeError(
+                "connected_components: edge set still changing after "
+                f"{_MAX_STAR_ROUNDS} star-contraction rounds"
+            )
+        # The settled edge set is a star forest: every non-root node
+        # links directly to its component minimum; roots and
+        # self-loop-only nodes label themselves.
+        roots = e.groupBy(F.col("a").alias("node")).agg(
+            F.min("b").alias("component")
         )
-        new_labels = proposals.groupBy("node").agg(
-            F.min("component").alias("component")
-        ).localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
+        return (
+            nodes.join(roots, "node", "left")
+            .select(
+                "node",
+                F.coalesce("component", "node").alias("component"),
+            )
+            .localCheckpoint()
         )
-        # new_labels is materialized and cut from its lineage, so the
-        # superseded labels' blocks can go: only the result stays.
-        _unpersist_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+    finally:
+        _unpersist_checkpoint(e)
+        _unpersist_checkpoint(nodes)
 
 
 def canonical_mapping(
@@ -135,7 +208,7 @@ def canonical_mapping(
 ) -> DataFrame:
     """(surface, canonical_id): every surface form in the alias graph
     mapped to its component's minimum member. ``driver_threshold=0``
-    forces the distributed hash-min loop (the shape a 100 TB alias
+    forces the distributed star contraction (the shape a 100 TB alias
     graph runs)."""
     comps = connected_components(
         alias_edges(alias_df), driver_threshold=driver_threshold
@@ -341,7 +414,8 @@ def apply_er_merge(
     unmatched subjects canonicalize to themselves via coalesce with
     no second pass. The re-aggregation is one map-side-combined
     shuffle on the rewritten (s, p, o) key. The CC runs over pair
-    edges (bounded as above) with the usual driver/hash-min dispatch.
+    edges (bounded as above) with the usual driver/star-contraction
+    dispatch.
     """
     pairs = er_candidates(triples, tau=tau, max_slot_freq=max_slot_freq)
     comps = connected_components(
@@ -516,96 +590,6 @@ def jaccard_neighbor_pairs(
                 " div (_d1 + _d2 - n_shared) AS BIGINT)"
             ).alias("jaccard_ppm"),
         )
-    )
-
-
-def cc_two_phase(edges: DataFrame, max_iter: int = 15) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contractions (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14) — the shuffle-bounded alternative to the
-    hash-min loop in :func:`connected_components`. Hash-min needs
-    O(diameter) rounds and re-shuffles the FULL edge set each round;
-    the two-phase star contraction converges in O(log^2 n) rounds and
-    every round SHRINKS the edge set (each phase rewires nodes toward
-    their neighborhood minimum, collapsing paths into stars), so the
-    per-round shuffle cost decays as components contract. On a 100 TB
-    alias/ER graph with long chains this is the difference between
-    ~diameter and ~log^2 shuffles.
-
-    * large-star: every node u links its LARGER neighbors (v > u) to
-      min(N(u) ∪ {u}) — cuts long chains in half without ever
-      directing an edge "upward".
-    * small-star: every node u links its smaller-or-equal neighbors
-      and itself to that minimum — flattens the remaining 2-paths.
-
-    Convergence is an edge-set fixpoint (two subtract-counts per
-    round on the already-contracted set); iteration caps at
-    ``max_iter`` as a backstop. Returns (node, component) with
-    component = the minimum node id reachable — byte-identical to
-    :func:`connected_components` (parity-tested).
-    """
-    e = (
-        edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("a"),
-            F.least("src", "dst").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    all_nodes = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    for _ in range(max_iter):
-        # large-star over the symmetric view: m(u) = min(N(u) ∪ {u});
-        # emit (v, m) for v > u. Output stays canonical (big, small)
-        # because v > u >= m.
-        sym = e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        m = sym.groupBy("a").agg(
-            F.least(F.min("b"), F.first("a")).alias("m")
-        )
-        ls = (
-            sym.join(m, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # small-star over the downward-directed view: per larger
-        # endpoint a, m = min of its smaller neighbors; emit every
-        # smaller neighbor AND a itself re-linked to m.
-        sm = ls.groupBy("a").agg(F.min("b").alias("m"))
-        ss = (
-            ls.join(sm, "a")
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .unionByName(sm.select(F.col("a"), F.col("m").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint()
-        )
-        changed = (
-            ss.exceptAll(e).count() + e.exceptAll(ss).count()
-        )
-        e = ss
-        if changed == 0:
-            break
-
-    # Converged edge set is a star forest: every non-root node links
-    # directly to its component minimum; roots appear only on the
-    # small side. min() guards the (capped, non-converged) case.
-    child_root = e.groupBy("a").agg(F.min("b").alias("component"))
-    return all_nodes.join(
-        child_root, all_nodes.node == child_root.a, "left"
-    ).select(
-        "node",
-        F.coalesce(F.col("component"), F.col("node")).alias("component"),
     )
 
 

@@ -69,6 +69,10 @@ def extract_triples(
             min_entity_len=MIN_ENTITY_LEN,
             kernel_version=KERNEL_VERSION,
         )
+        # A resumed run needs no kernel, so it skips the KB broadcast.
+        resumed = checkpointer.resume("triples")
+        if resumed is not None:
+            return resumed
     kb_bc = broadcast_kb(spark, kb)
 
     if kernel_partitions is None:

@@ -172,7 +172,7 @@ def _assert_read_back(df, base: str) -> None:
 
 
 def test_pipeline_with_checkpoints_matches_unchecked(
-    spark, world, transcripts_pdf, tmp_dir
+    spark, world, transcripts_pdf, tmp_dir, monkeypatch
 ):
     base = os.path.join(tmp_dir, "ckpt2")
     tdf = spark.createDataFrame(transcripts_pdf, schema=S.TRANSCRIPTS)
@@ -187,9 +187,16 @@ def test_pipeline_with_checkpoints_matches_unchecked(
         assert len(mgr.snapshots(stage)) == 1
 
     # Identical inputs resume: a fresh manager reads the triples
-    # checkpoint back and writes nothing new.
+    # checkpoint back, writes nothing new and never broadcasts the KB.
+    from information_extraction_spark.plans import pipeline
+
+    def no_broadcast(*args, **kwargs):
+        raise AssertionError("a resumed run broadcast the KB")
+
     mgr2 = CheckpointManager(spark, base, run_id="p1", params={"kb": "clean"})
-    resumed = extract_triples(spark, tdf, kb, sch, checkpointer=mgr2)
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "broadcast_kb", no_broadcast)
+        resumed = extract_triples(spark, tdf, kb, sch, checkpointer=mgr2)
     _assert_read_back(resumed, base)
     assert _rows(resumed) == a
     assert len(mgr2.snapshots("triples")) == 1

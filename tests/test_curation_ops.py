@@ -261,7 +261,9 @@ def test_ta_perplexity_hand_built(spark, tmp_dir):
     assert got[1][1] > got[0][1]
 
 
-def test_length_quantiles_interpolation_matches_sorted_reference(spark):
+def test_length_quantiles_interpolation_matches_sorted_reference(
+    spark, tmp_path
+):
     """The histogram-derived quantiles must equal quantile_cont over
     the raw sorted values, including fractional interpolation
     positions (n chosen so p*(n-1) is non-integral for p90/p99)."""
@@ -276,9 +278,7 @@ def test_length_quantiles_interpolation_matches_sorted_reference(spark):
     sizes = [3, 3, 3, 5, 5, 7, 8, 8, 8, 8, 11, 13, 17, 17, 19, 23, 23,
              29, 31, 37, 41, 43, 47]
     rows = [(i, " ".join(["w"] * k)) for i, k in enumerate(sizes)]
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="ie_lenq_")
+    d = str(tmp_path)
     spark.createDataFrame(rows, "doc_id long, text string").write.mode(
         "overwrite"
     ).parquet(f"{d}/documents.parquet")
@@ -307,13 +307,11 @@ def test_length_quantiles_interpolation_matches_sorted_reference(spark):
     }
 
 
-def test_selfsim_spans_brute_force(spark):
+def test_selfsim_spans_brute_force(spark, tmp_path):
     """ta_selfsim_spans vs a hand-computed corpus: shared 8-gram
     spans across docs count toward n_dup; a doc shorter than 8 words
     has zero grams and ratio 0.0; within-doc repetition of a gram
     does NOT make it 'duplicated' (distinct per doc first)."""
-    import tempfile
-
     from information_extraction_spark.driver_queries.textdata import (
         ta_selfsim_spans,
     )
@@ -325,7 +323,7 @@ def test_selfsim_spans_brute_force(spark):
         (2, "short doc only"),           # < 8 words -> 0 grams
         (3, shared + " " + shared),      # within-doc repeat of [a..h]
     ]
-    d = tempfile.mkdtemp(prefix="ie_selfsim_")
+    d = str(tmp_path)
     spark.createDataFrame(rows, "doc_id long, text string").write.mode(
         "overwrite"
     ).parquet(f"{d}/documents.parquet")

@@ -3,7 +3,10 @@ canonicalization joins, and the salted-join helper."""
 
 from __future__ import annotations
 
+import random
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from information_extraction_spark.functions.skew import salted_count, salted_join
@@ -16,7 +19,7 @@ from information_extraction_spark.operators.linking import (
 
 def _edges(spark, pairs):
     return spark.createDataFrame(
-        pd.DataFrame(pairs, columns=["src", "dst"])
+        pd.DataFrame(pairs, columns=["src", "dst"]), "src string, dst string"
     )
 
 
@@ -32,18 +35,6 @@ def test_connected_components_chain_and_islands(spark):
         "x": "x", "y": "x",
         "m": "m", "m2": "m",
     }
-
-
-def test_connected_components_long_chain_converges(spark):
-    """Forces the DISTRIBUTED hash-min loop (driver_threshold=0): a
-    13-node chain needs multiple propagation iterations to converge —
-    the case the iterative path must get right at >100k-edge scale."""
-    n = 12
-    pairs = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n)]
-    comps = connected_components(_edges(spark, pairs), driver_threshold=0)
-    got = {r["node"]: r["component"] for r in comps.collect()}
-    assert set(got.values()) == {"n00"}
-    assert len(got) == n + 1
 
 
 def test_canonicalize_triples_with_world_aliases(spark, world):
@@ -103,33 +94,82 @@ def test_salted_count_matches_groupby(spark):
     assert got == expected
 
 
-def test_cc_driver_and_distributed_paths_agree(spark):
-    """The size-dispatched union-find must label identically to the
-    distributed hash-min loop (forced via driver_threshold=0)."""
-    pairs = [("b", "a"), ("b", "c"), ("x", "y"), ("m", "m2"),
-             ("c", "d"), ("q", "b")]
-    e = _edges(spark, pairs)
-    fast = {(r["node"], r["component"])
-            for r in connected_components(e).collect()}
-    dist = {(r["node"], r["component"])
-            for r in connected_components(e, driver_threshold=0).collect()}
-    assert fast == dist and len(fast) > 0
+def _chain(n):
+    return [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(n - 1)]
+
+
+def _bfs_components(pairs):
+    """Oracle: each node's label is the minimum node reachable from it
+    by breadth-first search over the undirected, NULL-free edges."""
+    adj: dict[str, set[str]] = {}
+    for a, b in pairs:
+        if a is None or b is None:
+            continue
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    labels = {}
+    for start in adj:
+        seen, frontier = {start}, [start]
+        while frontier:
+            frontier = [v for u in frontier for v in adj[u] if v not in seen]
+            seen.update(frontier)
+        labels[start] = min(seen)
+    return labels
+
+
+def _random_graph(seed, n=18, m=22):
+    rng = random.Random(seed)
+    return [
+        (f"v{rng.randrange(n):02d}", f"v{rng.randrange(n):02d}")
+        for _ in range(m)
+    ]
+
+
+@pytest.mark.parametrize(
+    "driver_threshold", [100_000, 0], ids=["driver", "distributed"]
+)
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        _chain(41),
+        [("z", f"m{i}") for i in range(6)],  # star rooted at the max id
+        [("b", "a"), ("b", "c"), ("x", "y"), ("m", "m2"), ("c", "d"),
+         ("q", "b")],  # islands
+        [("q", "q"), ("r", "r"), ("r", "s"), ("a", "b")],  # self loops
+        [("a", None), (None, "b"), (None, None), ("c", "d"),
+         ("d", "e")],  # NULL endpoints
+        [],
+        _random_graph(7),
+        _random_graph(8),
+        _random_graph(9),
+    ],
+    ids=["chain41", "star", "islands", "self_loops", "nulls", "empty",
+         "random7", "random8", "random9"],
+)
+def test_cc_matches_bfs_oracle(spark, pairs, driver_threshold):
+    """Both legs (driver union-find, and star contraction forced by
+    driver_threshold=0) label every node with the minimum node it
+    reaches, checked against a BFS oracle that shares no formula with
+    either."""
+    comps = connected_components(
+        _edges(spark, pairs), driver_threshold=driver_threshold
+    )
+    got = {r["node"]: r["component"] for r in comps.collect()}
+    assert got == _bfs_components(pairs)
 
 
 def test_distributed_cc_keeps_only_result_persisted(spark):
-    """The hash-min loop checkpoints its labels every iteration; each
-    superseded one is released, so at most the returned labels stay
-    persisted, and they equal the driver path's labels."""
-    pairs = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(8)]
+    """Star contraction checkpoints its edge set every round; each
+    superseded round and the edge and node checkpoints are released,
+    so at most the returned labels stay persisted."""
+    pairs = _chain(41)
     e = _edges(spark, pairs)
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = persisted().size()
     dist = connected_components(e, driver_threshold=0)
-    got = {(r["node"], r["component"]) for r in dist.collect()}
+    got = {r["node"]: r["component"] for r in dist.collect()}
     assert persisted().size() - before <= 1
-    assert got == {
-        (r["node"], r["component"]) for r in connected_components(e).collect()
-    }
+    assert got == _bfs_components(pairs)
 
 
 # --- er_candidates ----------------------------------------------------------
@@ -383,47 +423,6 @@ def test_jaccard_neighbors_consistent_capped_universe(spark):
     }
     assert unc[("s1", "s2")] == (3, 750000)
     assert unc[("s3", "s4")] == (1, 1000000)
-
-
-def test_cc_two_phase_matches_hash_min_on_random_graphs(spark):
-    """Large-star/small-star must produce byte-identical labels to
-    connected_components on adversarial shapes: a long chain (worst
-    case for hash-min), a star rooted at the LARGEST id, islands, and
-    seeded random graphs with dup/self edges."""
-    import random
-
-    from information_extraction_spark.operators.linking import cc_two_phase
-
-    cases = [
-        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(12)],  # chain
-        [("z", f"m{i}") for i in range(6)],  # star at max id
-        [("b", "a"), ("b", "c"), ("x", "y"), ("q", "q")],  # islands+self
-    ]
-    rng = random.Random(7)
-    for _ in range(3):
-        n = 18
-        cases.append(
-            [
-                (f"v{rng.randrange(n):02d}", f"v{rng.randrange(n):02d}")
-                for _ in range(22)
-            ]
-        )
-    for pairs in cases:
-        e = _edges(spark, pairs)
-        want = {
-            r["node"]: r["component"]
-            for r in connected_components(e).collect()
-        }
-        got = {
-            r["node"]: r["component"] for r in cc_two_phase(e).collect()
-        }
-        # connected_components keeps self-loop-only nodes; cc_two_phase
-        # drops self loops up front, so compare on the shared universe
-        # after restoring those singletons.
-        for k in set(want) - set(got):
-            assert want[k] == k
-            got[k] = k
-        assert got == want
 
 
 def test_sorted_neighborhood_window_and_normalization(spark):

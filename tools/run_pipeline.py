@@ -8,18 +8,26 @@ os.walk('information_extraction_spark') if '__pycache__' not in r for f in fs]"
   spark-submit --py-files ie_spark.zip tools/run_pipeline.py \\
       --transcripts /data/transcripts --kb /data/kb \\
       --schemas /data/schemas --out /data/graph \\
-      --checkpoint-dir /data/ckpt --run-id nightly-01 [--resume]
+      --checkpoint-dir /data/ckpt --run-id nightly-01
 
-Local smoke (fixtures are generated when --transcripts is omitted):
+A re-run with the same --checkpoint-dir and --run-id over unchanged
+inputs resumes from the staged triples.
+
+Local smoke (fixtures are generated when --transcripts is omitted, into
+a temp dir removed when the run ends):
 
   python tools/run_pipeline.py --out /tmp/graph
+
+A smoke run cannot resume: its inputs are new files every time.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -39,7 +47,27 @@ def main() -> int:
     p.add_argument("--predicate-buckets", type=int, default=16)
     p.add_argument("--master", default=None)
     args = p.parse_args()
+    if args.transcripts:
+        return _run(
+            args, args.transcripts, args.kb, args.schemas, args.alias_dict
+        )
+    from information_extraction_spark.fixtures import write_fixtures
 
+    fix_dir = tempfile.mkdtemp(prefix="ie_fixtures_")
+    try:
+        write_fixtures(fix_dir, n_convs=50, with_golden=False)
+        return _run(
+            args,
+            f"{fix_dir}/transcripts.parquet",
+            f"{fix_dir}/kb_clean.parquet",
+            f"{fix_dir}/schemas.parquet",
+            f"{fix_dir}/alias_dict.parquet",
+        )
+    finally:
+        shutil.rmtree(fix_dir, ignore_errors=True)
+
+
+def _run(args, transcripts_path, kb_path, schemas_path, alias_path) -> int:
     from information_extraction_spark.operators.checkpoint import (
         CheckpointManager,
     )
@@ -54,32 +82,12 @@ def main() -> int:
     from information_extraction_spark.sources import tables
 
     spark = get_spark(app_name="ie-spark-pipeline", master=args.master)
-
-    if args.transcripts:
-        transcripts = tables.read_transcripts(spark, args.transcripts)
-        kb = tables.read_kb(spark, args.kb)
-        schemas = tables.read_schemas(spark, args.schemas)
-        alias_df = (
-            tables.read_alias_dict(spark, args.alias_dict)
-            if args.alias_dict
-            else None
-        )
-    else:
-        # Self-contained smoke path on generated fixtures.
-        import tempfile
-
-        from information_extraction_spark.fixtures import write_fixtures
-
-        fix_dir = tempfile.mkdtemp(prefix="ie_fixtures_")
-        write_fixtures(fix_dir, n_convs=50, with_golden=False)
-        transcripts = tables.read_transcripts(
-            spark, f"{fix_dir}/transcripts.parquet"
-        )
-        kb = tables.read_kb(spark, f"{fix_dir}/kb_clean.parquet")
-        schemas = tables.read_schemas(spark, f"{fix_dir}/schemas.parquet")
-        alias_df = tables.read_alias_dict(
-            spark, f"{fix_dir}/alias_dict.parquet"
-        )
+    transcripts = tables.read_transcripts(spark, transcripts_path)
+    kb = tables.read_kb(spark, kb_path)
+    schemas = tables.read_schemas(spark, schemas_path)
+    alias_df = (
+        tables.read_alias_dict(spark, alias_path) if alias_path else None
+    )
 
     ckpt = None
     if args.checkpoint_dir:

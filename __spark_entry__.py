@@ -35,12 +35,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query (omitted for kernel
-    stages whose span semantics are not SQL-expressible — those are
-    pinned by the pytest parity suite instead). PURE: golden-based
-    oracles are materialized from (name, sf_dir) templates for the
-    driver-gate corpus (sf0.01), so the output is identical whether
-    or not any query has run first."""
+    """DuckDB-runnable ANSI SQL oracle per query. PURE: golden-based
+    oracles are materialized for the driver-gate corpus (sf0.01) from
+    the function each query registered, so the output is identical
+    whether or not any query has run first."""
     from information_extraction_spark.driver_queries import (
         materialize_oracles,
     )

@@ -1,10 +1,14 @@
 """Driver-facing query catalog: one entry per implemented operator
-from SURVEY.md §2, each with a DuckDB oracle (or rows-only for kernel
-stages). Aggregated registry consumed by __spark_entry__.py."""
+from SURVEY.md §2, each with a DuckDB oracle, consumed by
+__spark_entry__.py. Importing the query modules registers every query
+and its oracle in ``_registry``; this module orders the catalog and
+turns the oracles into SQL for a corpus."""
 
 from __future__ import annotations
 
-from information_extraction_spark.driver_queries import (
+# Imported for their registrations; the import order is the catalog
+# order after the changed-first names.
+from information_extraction_spark.driver_queries import (  # noqa: F401
     core,
     core2,
     core3,
@@ -14,22 +18,10 @@ from information_extraction_spark.driver_queries import (
     streamq,
     textdata,
 )
-
-_MODULES = (core, core2, core3, kg, relational, sketches, streamq, textdata)
-
-QUERIES = {}
-ORACLES = {}
-for mod in _MODULES:
-    dup = set(QUERIES) & set(mod.QUERIES)
-    # Disjointness is load-bearing: current_oracle() below resolves
-    # names by module scan while these dicts resolve last-wins; a
-    # duplicate registration would make the local checker and the
-    # driver gate silently validate different SQL. A real raise (not
-    # assert — stripped under python -O) so the guard always holds.
-    if dup:
-        raise ValueError(f"duplicate query names across modules: {dup}")
-    QUERIES.update(mod.QUERIES)
-    ORACLES.update(mod.ORACLES)
+from information_extraction_spark.driver_queries._registry import (
+    ORACLES,
+    QUERIES,
+)
 
 # Queries ADDED or MODIFIED in the current round are listed FIRST in
 # the registry: if the driver's correctness gate checks fewer rows
@@ -116,18 +108,6 @@ _CHANGED_THIS_ROUND = [
     # Directed triad census over the asymmetric edge set: FFL vs
     # cyclic closed triads, middle-role hub cap, closure ppm.
     "kg_motif_census",
-    # Two-sample KS drift gate: exact sup-CDF distance over the
-    # bounded value-domain histogram, cross-multiplied BIGINT CDFs,
-    # squared-ppm 0.05 decision — no sqrt, no float CDF.
-    "a25_ks_drift",
-    # Chi-square independence of lang × source with zero-cell
-    # contributions over the bounded marginal cross join; Cramér's
-    # V² in ppm — exact BIGINT floor-div rescales.
-    "a26_chi2_independence",
-    # Spearman rho over (value, doc_id) total-order ranks; ranks =
-    # bounded-histogram offset + per-value row_number (never a
-    # global row_number); oracle = one global ROW_NUMBER.
-    "a27_spearman",
     # TPC-H Q9 profit rollup: both dims broadcast-prune the fact
     # before the single orderkey shuffle; per-line BIGINT cents.
     "q26_profit_by_nation_year",
@@ -373,10 +353,6 @@ _CHANGED_THIS_ROUND = [
     # segmented scan (hot keys spread over all partitions; -1<+1 tie
     # rule = half-open intervals); oracle = per-type window sweep.
     "w27_interval_concurrency",
-    # Next-fit sequence packing per lang shard (sample packing for
-    # training batches): groupBy(shard).applyInPandas O(1)-state
-    # fold; oracle replays the fold as a recursive CTE.
-    "ta_seq_packing",
     # ViT-style 2x2 tile lattice over REAL decoded BMP pixels (exact
     # per-tile intensity sums); oracle recomputes tiles
     # arithmetically from make_bmp's byte formula.
@@ -385,10 +361,6 @@ _CHANGED_THIS_ROUND = [
     # support (degree-ordered enumeration) + simultaneous prune;
     # oracle chains the same two support+prune CTE rounds.
     "emb_ktruss",
-    # Mergeable HLL rollup: per-language register tables merged
-    # register-wise into the global scope — the bounded-state
-    # pre-aggregate-then-merge contract; merged == direct pinned.
-    "a17_hll_mergeable",
     # Per-brand Pareto skyline via two window aggregates over one
     # brand-partitioned sort (strictly-cheaper range frame + same-
     # price peer max) — never an O(n^2) dominance self-join; oracle
@@ -423,7 +395,6 @@ _CHANGED_THIS_ROUND = [
     # cross-multiply threshold, and the multi-EXISTS blame report
     # (LEFT SEMI + LEFT ANTI against the same late-pair table).
     "q2_min_cost_supplier",
-    "q11_revenue_share",
     "q21_waiting_suppliers",
     # Ontology subproperty closure: 3 path-doubling rounds over the
     # bounded predicate hierarchy, inference applied to the 50-row
@@ -619,7 +590,6 @@ _CHANGED_THIS_ROUND = [
     "a10_pandas_udaf",
     "w10_hypertable_rollup",
     "q7_rollup",
-    "q8_pivot",
     # HITS hubs/authorities — the bipartite-friendly centrality
     # (integer micro-unit scores keep both engines in exact lockstep).
     "kg_hits",
@@ -732,52 +702,33 @@ _CHANGED_THIS_ROUND = [
     "mm_codec_features",
     "mm_features",
 ]
-_missing = [n for n in _CHANGED_THIS_ROUND if n not in QUERIES]
-if _missing:
-    raise ValueError(f"changed-first list names unknown queries: {_missing}")
-QUERIES = {
-    **{k: QUERIES[k] for k in _CHANGED_THIS_ROUND},
-    **QUERIES,
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _CHANGED_THIS_ROUND if k in ORACLES},
-    **ORACLES,
-}
 
 
-def current_oracle(name: str, sf_dir: str | None = None) -> str | None:
-    """Oracle lookup. With ``sf_dir``, golden-based oracles resolve
-    through their PURE template (independent of whether the query has
-    run); without it, fall back to the live per-module dict — the
-    aggregated ORACLES above is a snapshot taken at import, which the
-    flagship queries re-point at the just-written per-sf golden when
-    they run."""
-    if sf_dir is not None:
-        for mod in _MODULES:
-            tmpl = getattr(mod, "ORACLE_TEMPLATES", {}).get(name)
-            if tmpl is not None:
-                return tmpl(sf_dir)
-    for mod in _MODULES:
-        if name in mod.ORACLES:
-            return mod.ORACLES[name]
-    return None
+def _order_changed_first(names: list[str]) -> None:
+    """Move ``names`` to the head of the catalog, in their order. A
+    repeated or unknown name raises before anything moves. Reordered
+    in place: the registry's duplicate-name guard keeps checking the
+    very dict that queries() returns."""
+    repeated = sorted({n for n in names if names.count(n) > 1})
+    if repeated:
+        raise ValueError(f"changed-first list repeats names: {repeated}")
+    missing = [n for n in names if n not in QUERIES]
+    if missing:
+        raise ValueError(f"changed-first list names unknown queries: {missing}")
+    ordered = {**{k: QUERIES[k] for k in names}, **QUERIES}
+    QUERIES.clear()
+    QUERIES.update(ordered)
 
+
+_order_changed_first(_CHANGED_THIS_ROUND)
 
 def materialize_oracles(sf_dir: str) -> dict[str, str]:
-    """PURE (catalog, sf_dir) -> oracle-SQL mapping: the static
-    import-time oracles overlaid with every golden-based template
-    materialized for ``sf_dir``. Returns the identical dict whether
-    or not any query has executed (asserted by
-    tests/test_consolidation_parity.py) — the round-5 fix for the
-    call-order coupling where ``oracle_sql()`` depended on which
-    queries had re-pointed their oracle."""
-    out = dict(ORACLES)
-    for mod in _MODULES:
-        for name, tmpl in getattr(mod, "ORACLE_TEMPLATES", {}).items():
-            if name not in QUERIES:
-                raise ValueError(f"template for unknown query: {name}")
-            out[name] = tmpl(sf_dir)
-    return {
-        **{k: out[k] for k in _CHANGED_THIS_ROUND if k in out},
-        **out,
-    }
+    """The oracle SQL of every query for the corpus at ``sf_dir``, in
+    catalog order: static oracles as registered, golden-based ones
+    from their ``sf_dir -> SQL`` function. A pure function of
+    (catalog, sf_dir): running a query changes nothing here."""
+    out = {}
+    for name in QUERIES:
+        oracle = ORACLES[name]
+        out[name] = oracle(sf_dir) if callable(oracle) else oracle
+    return out

@@ -12,28 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        # Within-module duplicate guard: dict assignment is silently
-        # last-wins, so a re-used name would overwrite an existing
-        # query (and its oracle) without any error — the cross-module
-        # guard in __init__ can't see it. Raise at import time.
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name in module: {name}")
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from information_extraction_spark.driver_queries._registry import _q, _t
 
 
 def _corpus_chars(words: DataFrame) -> set[str]:
@@ -556,7 +535,6 @@ def _ensure_p3dp_golden(spark: SparkSession, sf_dir: str) -> None:
     )
     from information_extraction_spark.kernels.tokenizer import dp_segment
 
-    ORACLES["p3_dp_segment"] = _p3dp_oracle_sql(sf_dir)
     key = f"p3dp::{sf_dir}"
     if _GOLDEN_WRITTEN.get(key):
         return
@@ -592,11 +570,7 @@ def _ensure_p3dp_golden(spark: SparkSession, sf_dir: str) -> None:
     _GOLDEN_WRITTEN[key] = True
 
 
-def _p3dp_default_oracle() -> str:
-    return _p3dp_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("p3_dp_segment", _p3dp_default_oracle())
+@_q("p3_dp_segment", _p3dp_oracle_sql)
 def p3_dp_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-DP dictionary segmentation of unsegmented strings:
     corpus word-frequency dict broadcast to executors, dp_segment in
@@ -2456,11 +2430,6 @@ def mm_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = ids.mapInPandas(build, schema=MEDIA)
     return vad_segments(audio_energy_windows(media, window_frames=25))
-
-
-# Pure oracle template (see kg.ORACLE_TEMPLATES): same SQL the
-# p3_dp_segment runtime re-point installs, derived only from sf_dir.
-ORACLE_TEMPLATES = {"p3_dp_segment": _p3dp_oracle_sql}
 
 
 # --- PNG/JPEG header-level dimensions WITHOUT codec libraries

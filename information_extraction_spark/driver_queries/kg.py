@@ -41,24 +41,7 @@ from information_extraction_spark.sources.from_documents import (
     transcripts_from_documents,
 )
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        # Within-module duplicate guard: dict assignment is silently
-        # last-wins, so a re-used name would overwrite an existing
-        # query (and its oracle) without any error — the cross-module
-        # guard in __init__ can't see it. Raise at import time.
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name in module: {name}")
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from information_extraction_spark.driver_queries._registry import _q
 
 
 _KG_CLASSIFY_ORACLE = """
@@ -131,20 +114,20 @@ def kg_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Paths are PER-SF (keyed by the sf_dir basename) so concurrent runs
 # at different scales (a pytest at sf0.001 alongside the driver gate
-# at sf0.01) never clobber each other's golden; _ensure_golden
-# re-points the registered oracle SQL at the just-written path, and
-# the module-level defaults target sf0.01 — the scale the driver's
-# correctness gate runs at — in case oracle_sql() is snapshotted
-# before the query executes. Same-sf concurrent writers produce
-# byte-identical content (the derivation is deterministic), so the
-# only residual race is a read during parquet commit.
+# at sf0.01) never clobber each other's golden. Each golden-based
+# query registers its oracle as a pure function of sf_dir that names
+# the golden's path; running the query writes the golden there.
+# Same-sf concurrent writers produce byte-identical content (the
+# derivation is deterministic), so the only residual race is a read
+# during parquet commit.
 
 import tempfile as _tempfile
 
 
 def _golden_dir_name() -> str:
-    """Pure path computation — NO filesystem side effects, safe at
-    module import (the default oracle SQL strings embed this path)."""
+    """Pure path computation — NO filesystem side effects, so the
+    oracle SQL functions can embed this path before any golden is
+    written."""
     return os.path.join(
         _tempfile.gettempdir(), f"ie_spark_golden_u{os.getuid()}"
     )
@@ -298,31 +281,22 @@ def _python_golden_rows(spark: SparkSession, sf_dir: str):
     return rows
 
 
-def _oracle_sqls(sf_dir: str) -> tuple[str, str]:
-    triples = (
+def _triples_oracle_sql(sf_dir: str) -> str:
+    return (
         "\nSELECT conv_id, turn_idx, text, predicate, subject, object,\n"
         "       subject_type, object_type\n"
         f"FROM read_parquet('{_golden_path('triples', sf_dir)}/*.parquet')\n"
     )
-    spo = (
+
+
+def _spo_oracle_sql(sf_dir: str) -> str:
+    return (
         "\nSELECT conv_id, turn_idx, spo_json\n"
         f"FROM read_parquet('{_golden_path('spo', sf_dir)}/*.parquet')\n"
     )
-    return triples, spo
 
 
 def _ensure_golden(spark: SparkSession, sf_dir: str) -> None:
-    # Re-point the registered oracles at this sf's golden paths. This
-    # only reaches callers that (re)read the oracle AFTER running the
-    # query — tools/check_oracles.py deliberately does (it fetches
-    # per-name from this live dict post-run); the aggregated
-    # driver_queries.ORACLES snapshot and any harness that snapshots
-    # oracle_sql() up front instead get the module defaults below,
-    # which are computed for /root/testdata/sf0.01 — the exact corpus
-    # the driver's correctness gate runs against.
-    ORACLES["kg_extract_triples"], ORACLES["kg_spo_lists"] = _oracle_sqls(
-        sf_dir
-    )
     if _GOLDEN_WRITTEN.get(sf_dir):
         return
     _ensure_golden_dir()
@@ -354,12 +328,7 @@ def _ensure_golden(spark: SparkSession, sf_dir: str) -> None:
     _GOLDEN_WRITTEN[sf_dir] = True
 
 
-# Defaults target sf0.01 — the scale the driver's correctness gate
-# runs at; _ensure_golden re-points these per actual sf_dir.
-_TRIPLES_ORACLE, _SPO_ORACLE = _oracle_sqls("/root/testdata/sf0.01")
-
-
-@_q("kg_extract_triples", _TRIPLES_ORACLE)
+@_q("kg_extract_triples", _triples_oracle_sql)
 def kg_extract_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full extraction pipeline over transcripts derived from the
     documents table (classify → fan out → tag → decode → assemble)."""
@@ -369,7 +338,7 @@ def kg_extract_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_triples(spark, transcripts, kb, schemas)
 
 
-@_q("kg_spo_lists", _SPO_ORACLE)
+@_q("kg_spo_lists", _spo_oracle_sql)
 def kg_spo_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-turn spo_list JSON rows (the reference's output shape,
     produce_submit_json_file.py:298-313)."""
@@ -521,7 +490,6 @@ def _nn_oracle_sql(sf_dir: str) -> str:
 
 
 def _ensure_nn_golden(spark: SparkSession, sf_dir: str) -> None:
-    ORACLES["kg_nn_extract"] = _nn_oracle_sql(sf_dir)
     key = f"nn::{sf_dir}"
     if _GOLDEN_WRITTEN.get(key):
         return
@@ -534,7 +502,7 @@ def _ensure_nn_golden(spark: SparkSession, sf_dir: str) -> None:
     _GOLDEN_WRITTEN[key] = True
 
 
-@_q("kg_nn_extract", _nn_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_nn_extract", _nn_oracle_sql)
 def kg_nn_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tensor seam end-to-end AND driver-visible: deterministic
     BiLSTM-CRF weights + corpus char vocab are saved to an npz
@@ -647,9 +615,9 @@ def kg_entity_linking_distributed(
 # flagship), so each green row re-proves extraction AND the analytic.
 
 
-def _graph_oracle_sqls(sf_dir: str) -> tuple[str, str, str]:
+def _degree_oracle_sql(sf_dir: str) -> str:
     g = f"read_parquet('{_golden_path('triples', sf_dir)}/*.parquet')"
-    degree = f"""
+    return f"""
 WITH ends AS (
   SELECT subject AS entity, predicate FROM {g}
   UNION ALL
@@ -661,7 +629,11 @@ FROM ends GROUP BY entity
 ORDER BY degree DESC, entity
 LIMIT 20
 """
-    cooccur = f"""
+
+
+def _cooccur_oracle_sql(sf_dir: str) -> str:
+    g = f"read_parquet('{_golden_path('triples', sf_dir)}/*.parquet')"
+    return f"""
 WITH sp AS (SELECT DISTINCT subject, predicate FROM {g})
 SELECT a.predicate AS p1, b.predicate AS p2,
        CAST(count(*) AS BIGINT) AS n_subjects
@@ -669,7 +641,11 @@ FROM sp a JOIN sp b
   ON a.subject = b.subject AND a.predicate < b.predicate
 GROUP BY 1, 2
 """
-    two_hop = f"""
+
+
+def _two_hop_oracle_sql(sf_dir: str) -> str:
+    g = f"read_parquet('{_golden_path('triples', sf_dir)}/*.parquet')"
+    return f"""
 WITH e AS (
   SELECT DISTINCT subject AS src, object AS dst FROM {g}
    WHERE subject <> object
@@ -685,6 +661,10 @@ SELECT dst, CAST(2 AS INT) FROM h2
  WHERE dst NOT IN (SELECT dst FROM h1)
    AND dst <> (SELECT s FROM seed)
 """
+
+
+def _pagerank_oracle_sql(sf_dir: str) -> str:
+    g = f"read_parquet('{_golden_path('triples', sf_dir)}/*.parquet')"
     # PageRank with a FIXED iteration count is exactly expressible as
     # chained CTEs — one per power iteration (r0 → r1 → r2 → r3), each
     # the same "(1-d) + d * Σ in-contributions" aggregation the Spark
@@ -700,7 +680,7 @@ SELECT dst, CAST(2 AS INT) FROM h2
   LEFT JOIN {src} ON {src}.n = e.src
   GROUP BY nd.n
 )"""
-    pagerank = f"""
+    return f"""
 WITH e AS (
   SELECT DISTINCT subject AS src, object AS dst FROM {g}
    WHERE subject <> object
@@ -714,27 +694,9 @@ WITH e AS (
 {step.format(src="r2", dst="r3")}
 SELECT n AS entity, ROUND(r, 6) AS pr FROM r3
 """
-    return degree, cooccur, two_hop, pagerank
 
 
-(
-    _DEGREE_ORACLE,
-    _COOCCUR_ORACLE,
-    _TWO_HOP_ORACLE,
-    _PAGERANK_ORACLE,
-) = _graph_oracle_sqls("/root/testdata/sf0.01")
-
-
-def _repoint_graph_oracles(sf_dir: str) -> None:
-    (
-        ORACLES["kg_degree_topk"],
-        ORACLES["kg_pred_cooccur"],
-        ORACLES["kg_two_hop"],
-        ORACLES["kg_pagerank"],
-    ) = _graph_oracle_sqls(sf_dir)
-
-
-@_q("kg_degree_topk", _DEGREE_ORACLE)
+@_q("kg_degree_topk", _degree_oracle_sql)
 def kg_degree_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 entities by degree (triple-endpoint mentions) with
     distinct-predicate breadth. One shuffle on the entity key with
@@ -744,7 +706,6 @@ def kg_degree_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degree DESC, entity) is a total order, so the 20 rows are
     deterministic."""
     triples = kg_extract_triples(spark, sf_dir)
-    _repoint_graph_oracles(sf_dir)
     ends = triples.select(
         F.col("subject").alias("entity"), "predicate"
     ).unionAll(triples.select(F.col("object").alias("entity"), "predicate"))
@@ -759,7 +720,7 @@ def kg_degree_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("kg_pred_cooccur", _COOCCUR_ORACLE)
+@_q("kg_pred_cooccur", _cooccur_oracle_sql)
 def kg_pred_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate co-occurrence: for each unordered predicate pair,
     how many subjects carry both. collect_set per subject (one
@@ -767,7 +728,6 @@ def kg_pred_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded pair expansion — never a self-join of the triple table on
     subject, which would square the hot-subject rows at scale."""
     triples = kg_extract_triples(spark, sf_dir)
-    _repoint_graph_oracles(sf_dir)
     lists = triples.groupBy("subject").agg(
         F.collect_set("predicate").alias("ps")
     )
@@ -780,7 +740,7 @@ def kg_pred_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("kg_two_hop", _TWO_HOP_ORACLE)
+@_q("kg_two_hop", _two_hop_oracle_sql)
 def kg_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-hop neighborhood of a deterministic seed (min subject) over
     the undirected triple graph: (entity, dist∈{1,2}), distance =
@@ -789,7 +749,6 @@ def kg_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan of the edge table past a broadcast hash map; a 100 TB graph
     pays one scan per hop and never shuffles the edge table."""
     triples = kg_extract_triples(spark, sf_dir)
-    _repoint_graph_oracles(sf_dir)
     # The seed probe, hop 1, and hop 2 all branch off the triple
     # table; localCheckpoint the 2-column endpoint projection so the
     # extraction pipeline executes ONCE, not once per branch (the
@@ -861,9 +820,6 @@ FROM valid GROUP BY subject, predicate, object
 """
 
 
-_NEG_ORACLE = _neg_oracle_sql("/root/testdata/sf0.01")
-
-
 def negative_samples(t: DataFrame, pool_size: int = 16) -> DataFrame:
     """Core of kg_neg_sampling over an already-distinct
     (subject, predicate, object) DataFrame. Kept separate so tests can
@@ -898,14 +854,13 @@ def negative_samples(t: DataFrame, pool_size: int = 16) -> DataFrame:
     )
 
 
-@_q("kg_neg_sampling", _NEG_ORACLE)
+@_q("kg_neg_sampling", _neg_oracle_sql)
 def kg_neg_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic corrupted-object negatives (see block comment).
     The distinct triple projection is localCheckpointed so the live
     extraction pipeline executes once, not once per reuse (candidate
     ranking / expansion / anti-join all branch off it)."""
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_neg_sampling"] = _neg_oracle_sql(sf_dir)
     t = (
         triples.select("subject", "predicate", "object")
         .distinct()
@@ -914,7 +869,7 @@ def kg_neg_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return negative_samples(t, pool_size=16)
 
 
-@_q("kg_pagerank", _PAGERANK_ORACLE)
+@_q("kg_pagerank", _pagerank_oracle_sql)
 def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration (k=3, d=0.85) PageRank over the directed
     entity graph of the materialized triples — the canonical
@@ -930,7 +885,6 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    _repoint_graph_oracles(sf_dir)
     ranks = pagerank(triple_edges(triples), iterations=3, damping=0.85)
     return ranks.select("entity", F.round("rank", 6).alias("pr"))
 
@@ -985,11 +939,7 @@ FROM (SELECT * FROM inc EXCEPT SELECT * FROM base)
 """
 
 
-_SUPPORT_ORACLE = _support_oracle_sql("/root/testdata/sf0.01")
-_MERGE_ORACLE = _merge_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_triple_support", _SUPPORT_ORACLE)
+@_q("kg_triple_support", _support_oracle_sql)
 def kg_triple_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-triple support evidence over the live pipeline's output
     (operators/graph.triple_support): one map-side-combined shuffle on
@@ -999,11 +949,10 @@ def kg_triple_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_triple_support"] = _support_oracle_sql(sf_dir)
     return triple_support(triples)
 
 
-@_q("kg_incremental_merge", _MERGE_ORACLE)
+@_q("kg_incremental_merge", _merge_oracle_sql)
 def kg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Insert-only MERGE of an incoming extraction batch (odd doc ids)
     into an existing base graph (even doc ids): the merged table with
@@ -1016,7 +965,6 @@ def kg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_incremental_merge"] = _merge_oracle_sql(sf_dir)
     spo = (
         triples.select(
             "subject",
@@ -1110,12 +1058,7 @@ FROM ev GROUP BY 1, 2, 3
 """
 
 
-_RESOLVE_ORACLE = _resolve_oracle_sql("/root/testdata/sf0.01")
-_PROFILE_ORACLE = _profile_oracle_sql("/root/testdata/sf0.01")
-_PROVENANCE_ORACLE = _provenance_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_functional_resolve", _RESOLVE_ORACLE)
+@_q("kg_functional_resolve", _resolve_oracle_sql)
 def kg_functional_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-slot conflict resolution over the live pipeline's
     output (operators/graph.resolve_functional): struct-ordered max,
@@ -1125,11 +1068,10 @@ def kg_functional_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_functional_resolve"] = _resolve_oracle_sql(sf_dir)
     return resolve_functional(triples)
 
 
-@_q("kg_pred_profile", _PROFILE_ORACLE)
+@_q("kg_pred_profile", _profile_oracle_sql)
 def kg_pred_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ontology profile per typed predicate
     (operators/graph.predicate_profile)."""
@@ -1138,11 +1080,10 @@ def kg_pred_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_pred_profile"] = _profile_oracle_sql(sf_dir)
     return predicate_profile(triples)
 
 
-@_q("kg_provenance", _PROVENANCE_ORACLE)
+@_q("kg_provenance", _provenance_oracle_sql)
 def kg_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-triple k-bounded provenance pointers
     (operators/graph.triple_provenance, k=5)."""
@@ -1151,7 +1092,6 @@ def kg_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_provenance"] = _provenance_oracle_sql(sf_dir)
     return triple_provenance(triples, k=5)
 
 
@@ -1272,12 +1212,6 @@ FROM ext a JOIN ext b
 """
 
 
-_TEMPORAL_ORACLE = _temporal_oracle_sql("/root/testdata/sf0.01")
-_TEMPORAL_CONFLICT_ORACLE = _temporal_conflict_oracle_sql("/root/testdata/sf0.01")
-_SLOT_CHANGES_ORACLE = _slot_changes_oracle_sql("/root/testdata/sf0.01")
-_CONV_STATS_ORACLE = _conv_stats_oracle_sql("/root/testdata/sf0.01")
-
-
 # --- Partitioned graph sink, consumed ----------------------------------------
 #
 # write_graph's partitioning story made driver-visible end-to-end:
@@ -1331,10 +1265,7 @@ FROM {g} WHERE predicate = '{_GRAPH_SCAN_PRED}'
 """
 
 
-_GRAPH_SCAN_ORACLE = _graph_scan_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_graph_pred_scan", _GRAPH_SCAN_ORACLE)
+@_q("kg_graph_pred_scan", _graph_scan_oracle_sql)
 def kg_graph_pred_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write the partitioned graph table once, then consume it with a
     single-predicate pruned read (sources/tables.read_graph_predicate
@@ -1346,7 +1277,6 @@ def kg_graph_pred_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = write_graph_table(spark, sf_dir)
-    ORACLES["kg_graph_pred_scan"] = _graph_scan_oracle_sql(sf_dir)
     return read_graph_predicate(spark, path, _GRAPH_SCAN_PRED).select(
         "conv_id", "turn_idx", "subject", "predicate", "object"
     )
@@ -1437,10 +1367,7 @@ WHERE ROUND(shared / CAST(db.n + dn.n - shared AS DOUBLE), 4) >= 0.5
 """
 
 
-_INCREMENTAL_ER_ORACLE = _incremental_er_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_incremental_er", _INCREMENTAL_ER_ORACLE)
+@_q("kg_incremental_er", _incremental_er_oracle_sql)
 def kg_incremental_er(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe the odd-doc batch against the persisted even-doc slot
     index (operators/linking.er_probe): batch slots + stop-keys
@@ -1451,7 +1378,6 @@ def kg_incremental_er(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     slots_path, stop_path = write_er_slot_index(spark, sf_dir)
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_incremental_er"] = _incremental_er_oracle_sql(sf_dir)
     new_batch = triples.filter(
         F.regexp_extract("conv_id", r"doc(\d+)", 1).cast("long") % 2 == 1
     )
@@ -1504,10 +1430,7 @@ WHERE ROUND(shared / CAST(d1.n + d2.n - shared AS DOUBLE), 4) >= 0.5
 """
 
 
-_CONV_DEDUP_ORACLE = _conv_dedup_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_conv_dedup", _CONV_DEDUP_ORACLE)
+@_q("kg_conv_dedup", _conv_dedup_oracle_sql)
 def kg_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate conversation pairs by triple-set Jaccard
     (operators/graph.conv_dedup: (s,p,o)-blocked equi-join, stop-
@@ -1515,7 +1438,6 @@ def kg_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.operators.graph import conv_dedup
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_conv_dedup"] = _conv_dedup_oracle_sql(sf_dir)
     return conv_dedup(triples, tau=0.5, max_triple_freq=8)
 
 
@@ -1544,10 +1466,7 @@ FROM ranked WHERE rn = 1
 """
 
 
-_TYPE_INFER_ORACLE = _type_infer_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_type_infer", _TYPE_INFER_ORACLE)
+@_q("kg_type_infer", _type_infer_oracle_sql)
 def kg_type_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant entity type by assertion votes
     (operators/graph.infer_entity_types); load-bearing: 30 of 228
@@ -1557,7 +1476,6 @@ def kg_type_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_type_infer"] = _type_infer_oracle_sql(sf_dir)
     return infer_entity_types(triples)
 
 
@@ -1594,10 +1512,7 @@ WHERE ROUND(shared / CAST(d1.n + d2.n - shared AS DOUBLE), 4) >= 0.5
 """
 
 
-_ER_ORACLE = _er_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_er_candidates", _ER_ORACLE)
+@_q("kg_er_candidates", _er_oracle_sql)
 def kg_er_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-entity candidate pairs by shared (predicate, object)
     slots (operators/linking.er_candidates: blocked equi-join on the
@@ -1608,11 +1523,10 @@ def kg_er_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_er_candidates"] = _er_oracle_sql(sf_dir)
     return er_candidates(triples, tau=0.5, max_slot_freq=1000)
 
 
-@_q("kg_temporal_extent", _TEMPORAL_ORACLE)
+@_q("kg_temporal_extent", _temporal_oracle_sql)
 def kg_temporal_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triple validity windows via the real provenance join back to
     the transcript table (operators/graph.temporal_extent); bounds in
@@ -1626,12 +1540,11 @@ def kg_temporal_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_temporal_extent"] = _temporal_oracle_sql(sf_dir)
     transcripts = transcripts_from_documents(spark, sf_dir)
     return temporal_extent(triples, transcripts, origin=_TS_ORIGIN)
 
 
-@_q("kg_temporal_conflict", _TEMPORAL_CONFLICT_ORACLE)
+@_q("kg_temporal_conflict", _temporal_conflict_oracle_sql)
 def kg_temporal_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simultaneous-contradiction detection over functional slots
     (operators/graph.temporal_conflicts): distinct objects of one
@@ -1648,12 +1561,11 @@ def kg_temporal_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_temporal_conflict"] = _temporal_conflict_oracle_sql(sf_dir)
     transcripts = transcripts_from_documents(spark, sf_dir)
     return temporal_conflicts(triples, transcripts, origin=_TS_ORIGIN)
 
 
-@_q("kg_slot_changes", _SLOT_CHANGES_ORACLE)
+@_q("kg_slot_changes", _slot_changes_oracle_sql)
 def kg_slot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-slot object-version history (operators/graph.
     slot_changes): per (subject, predicate) with >1 distinct object,
@@ -1668,7 +1580,6 @@ def kg_slot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_slot_changes"] = _slot_changes_oracle_sql(sf_dir)
     transcripts = transcripts_from_documents(spark, sf_dir)
     return slot_changes(triples, transcripts, origin=_TS_ORIGIN)
 
@@ -1764,10 +1675,7 @@ FROM {g} GROUP BY 1
 """
 
 
-_ROLE_YIELD_ORACLE = _role_yield_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_role_yield", _ROLE_YIELD_ORACLE)
+@_q("kg_role_yield", _role_yield_oracle_sql)
 def kg_role_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extraction yield by speaker role: which side of the
     conversation the triples actually come from — per role, the
@@ -1784,7 +1692,6 @@ def kg_role_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume never lands on 3 reducers.
     """
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_role_yield"] = _role_yield_oracle_sql(sf_dir)
     role = F.element_at(
         F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")),
         (F.col("turn_idx") % 3) + 1,
@@ -1811,7 +1718,7 @@ def kg_role_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("kg_conv_stats", _CONV_STATS_ORACLE)
+@_q("kg_conv_stats", _conv_stats_oracle_sql)
 def kg_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation extraction yield
     (operators/graph.conversation_stats)."""
@@ -1823,7 +1730,6 @@ def kg_conv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_conv_stats"] = _conv_stats_oracle_sql(sf_dir)
     transcripts = transcripts_from_documents(spark, sf_dir)
     return conversation_stats(transcripts, triples)
 
@@ -1883,10 +1789,7 @@ GROUP BY 1, 2, 3
 """
 
 
-_ER_MERGE_ORACLE = _er_merge_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_er_merge", _ER_MERGE_ORACLE)
+@_q("kg_er_merge", _er_merge_oracle_sql)
 def kg_er_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the ER candidate decisions to the graph
     (operators/linking.apply_er_merge): CC over the tau=0.5 pairs,
@@ -1897,7 +1800,6 @@ def kg_er_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_er_merge"] = _er_merge_oracle_sql(sf_dir)
     return apply_er_merge(triples, tau=0.5, max_slot_freq=1000)
 
 
@@ -1923,10 +1825,7 @@ FROM slots GROUP BY predicate
 """
 
 
-_CARDINALITY_ORACLE = _cardinality_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_cardinality_check", _CARDINALITY_ORACLE)
+@_q("kg_cardinality_check", _cardinality_oracle_sql)
 def kg_cardinality_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Max-cardinality-1 (functional) violation profile per predicate
     (operators/graph.cardinality_profile) — the go/no-go table for
@@ -1936,7 +1835,6 @@ def kg_cardinality_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_cardinality_check"] = _cardinality_oracle_sql(sf_dir)
     return cardinality_profile(triples)
 
 
@@ -1975,10 +1873,7 @@ GROUP BY 1, 2, 3, 4
 """
 
 
-_TYPE_VIOLATIONS_ORACLE = _type_violations_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_type_violations", _TYPE_VIOLATIONS_ORACLE)
+@_q("kg_type_violations", _type_violations_oracle_sql)
 def kg_type_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain/range validation against the induced ontology
     (operators/graph.type_violations): assertions whose declared
@@ -1989,7 +1884,6 @@ def kg_type_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_type_violations"] = _type_violations_oracle_sql(sf_dir)
     return type_violations(triples)
 
 
@@ -2010,10 +1904,7 @@ SELECT subject, predicate, object, rk, degree FROM r WHERE rk <= 4
 """
 
 
-_NEIGHBOR_SAMPLE_ORACLE = _neighbor_sample_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_neighbor_sample", _NEIGHBOR_SAMPLE_ORACLE)
+@_q("kg_neighbor_sample", _neighbor_sample_oracle_sql)
 def kg_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic fixed-fanout (4) neighbor sampling for GNN
     mini-batch prep (operators/graph.neighbor_sample): one exchange
@@ -2024,7 +1915,6 @@ def kg_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_neighbor_sample"] = _neighbor_sample_oracle_sql(sf_dir)
     return neighbor_sample(triples, fanout=4)
 
 
@@ -2060,10 +1950,7 @@ SELECT n AS entity, ROUND(r, 6) AS pr FROM r3
 """
 
 
-_PPR_ORACLE = _ppr_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_pagerank_personalized", _PPR_ORACLE)
+@_q("kg_pagerank_personalized", _ppr_oracle_sql)
 def kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank (random walk with restart) from the 5
     lexicographically-smallest entities: teleport mass lands only on
@@ -2077,7 +1964,6 @@ def kg_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_pagerank_personalized"] = _ppr_oracle_sql(sf_dir)
     edges = triple_edges(triples)
     # The personalization set is bounded by definition — a bounded
     # driver pick of the 5 smallest nodes (matches the oracle's
@@ -2146,10 +2032,7 @@ LEFT JOIN a3 ON a3.n = nd.n
 """
 
 
-_HITS_ORACLE = _hits_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_hits", _HITS_ORACLE)
+@_q("kg_hits", _hits_oracle_sql)
 def kg_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities over the materialized entity graph
     (operators/graph.hits, 3 iterations, sum-normalized per
@@ -2165,7 +2048,6 @@ def kg_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_hits"] = _hits_oracle_sql(sf_dir)
     return hits(triple_edges(triples), iterations=3)
 
 
@@ -2253,10 +2135,7 @@ GROUP BY predicate
 """
 
 
-_TIME_TRAVEL_ORACLE = _time_travel_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("w9_time_travel", _TIME_TRAVEL_ORACLE)
+@_q("w9_time_travel", _time_travel_oracle_sql)
 def w9_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the FIRST snapshot of a two-snapshot stage history via
     read_as_of (operators/checkpoint.py) — values must equal the
@@ -2267,7 +2146,6 @@ def w9_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     first_id = write_time_travel_snapshots(spark, sf_dir)
-    ORACLES["w9_time_travel"] = _time_travel_oracle_sql(sf_dir)
     ckpt_dir, _ = _tt_paths(sf_dir)
     m = CheckpointManager(spark, ckpt_dir, run_id="history", params={})
     return m.read_as_of("pred_counts", first_id)
@@ -2417,10 +2295,7 @@ WHERE NOT EXISTS (SELECT 1 FROM newg n
 """
 
 
-_GRAPH_DIFF_ORACLE = _graph_diff_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_graph_diff", _GRAPH_DIFF_ORACLE)
+@_q("kg_graph_diff", _graph_diff_oracle_sql)
 def kg_graph_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sided snapshot diff (operators/graph.graph_diff) between
     the even-doc and odd-doc graph halves — added AND removed rows,
@@ -2428,7 +2303,6 @@ def kg_graph_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.operators.graph import graph_diff
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_graph_diff"] = _graph_diff_oracle_sql(sf_dir)
     par = F.regexp_extract("conv_id", r"doc(\d+)", 1).cast("long") % 2
     return graph_diff(
         triples.filter(par == 0), triples.filter(par == 1)
@@ -2464,10 +2338,7 @@ SELECT entity, label AS community FROM l3
 """
 
 
-_LPA_ORACLE = _lpa_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_label_propagation", _LPA_ORACLE)
+@_q("kg_label_propagation", _lpa_oracle_sql)
 def kg_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label-propagation communities over the undirected
     entity graph (operators/graph.label_propagation, 3 iterations,
@@ -2483,7 +2354,6 @@ def kg_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_label_propagation"] = _lpa_oracle_sql(sf_dir)
     return label_propagation(triple_edges(triples), iterations=3)
 
 
@@ -2520,10 +2390,7 @@ UNION ALL SELECT n, CAST(3 AS INT) FROM n3
 """
 
 
-_BFS_ORACLE = _bfs_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_bfs_distances", _BFS_ORACLE)
+@_q("kg_bfs_distances", _bfs_oracle_sql)
 def kg_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS hop distances (<= 3) from the 5
     lexicographically-smallest entities over the UNDIRECTED entity
@@ -2540,7 +2407,6 @@ def kg_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_bfs_distances"] = _bfs_oracle_sql(sf_dir)
     edges = triple_edges(triples)
     seeds = [
         r["src"]
@@ -2559,10 +2425,7 @@ def _compaction_oracle_sql(sf_dir: str) -> str:
     return f"SELECT subject, predicate, object FROM {g}"
 
 
-_COMPACTION_ORACLE = _compaction_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("w11_compaction", _COMPACTION_ORACLE)
+@_q("w11_compaction", _compaction_oracle_sql)
 def w11_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction driven end-to-end (operators/
     maintenance.compact_parquet_dir — the Iceberg rewriteDataFiles
@@ -2582,7 +2445,6 @@ def w11_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["w11_compaction"] = _compaction_oracle_sql(sf_dir)
     run = _tempfile.mkdtemp(prefix="ie_compact_")
     try:
         frag = os.path.join(run, "frag")
@@ -2630,7 +2492,7 @@ GROUP BY 1, 2
 """
 
 
-@_q("kg_resource_alloc", _ra_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_resource_alloc", _ra_oracle_sql)
 def kg_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resource-Allocation link prediction over the materialized
     subject→object graph (operators/linking.resource_alloc_pairs):
@@ -2644,7 +2506,6 @@ def kg_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_resource_alloc"] = _ra_oracle_sql(sf_dir)
     return resource_alloc_pairs(triples, max_obj_deg=1000, min_shared=1)
 
 
@@ -2679,7 +2540,7 @@ FROM j GROUP BY 1
 """
 
 
-@_q("a13_extractor_agreement", _agreement_oracle_sql("/root/testdata/sf0.01"))
+@_q("a13_extractor_agreement", _agreement_oracle_sql)
 def a13_extractor_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-extractor agreement audit: the rule-based pipeline vs the
     BiLSTM-CRF NN extractor on the SAME transcript subset (the NN
@@ -2717,7 +2578,6 @@ def a13_extractor_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("in_nn", F.lit(True))
     )
-    ORACLES["a13_extractor_agreement"] = _agreement_oracle_sql(sf_dir)
     j = rules.join(nn, key, "full_outer").select(
         "predicate",
         F.coalesce("in_r", F.lit(False)).alias("in_r"),
@@ -2776,13 +2636,12 @@ FROM agreement
 """
 
 
-@_q("a21_mcnemar", _mcnemar_oracle_sql("/root/testdata/sf0.01"))
+@_q("a21_mcnemar", _mcnemar_oracle_sql)
 def a21_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-predicate McNemar test over a13's agreement cells: is the
     rules-vs-NN disagreement significant at alpha=0.05, in exact
     ppm integers."""
     agree = a13_extractor_agreement(spark, sf_dir)
-    ORACLES["a21_mcnemar"] = _mcnemar_oracle_sql(sf_dir)
     chi2 = F.expr(
         "CAST(greatest(abs(n_rules_only - n_nn_only) - 1, 0)"
         " * greatest(abs(n_rules_only - n_nn_only) - 1, 0)"
@@ -2862,7 +2721,7 @@ FROM raw, k
 """
 
 
-@_q("a22_bh_fdr", _bh_fdr_oracle_sql("/root/testdata/sf0.01"))
+@_q("a22_bh_fdr", _bh_fdr_oracle_sql)
 def a22_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FDR-controlled model-swap gate: BH step-up over the 50
     per-predicate McNemar statistics (see block comment — per-rank
@@ -2871,7 +2730,6 @@ def a22_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     mc = a21_mcnemar(spark, sf_dir).select("predicate", "chi2_ppm")
-    ORACLES["a22_bh_fdr"] = _bh_fdr_oracle_sql(sf_dir)
     crit = spark.createDataFrame(
         _bh_table(), schema="bh_rank long, crit_ppm long"
     )
@@ -2925,7 +2783,7 @@ WHERE r.support >= 2
 """
 
 
-@_q("kg_rule_mining", _rule_mining_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_rule_mining", _rule_mining_oracle_sql)
 def kg_rule_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AMIE-style horn-rule mining over the materialized graph:
     directional implications p_body(x,y) => p_head(x,y) with support
@@ -2941,7 +2799,6 @@ def kg_rule_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined shuffle at predicate cardinality and broadcast
     into the confidence join."""
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_rule_mining"] = _rule_mining_oracle_sql(sf_dir)
     so = triples.select("subject", "object", "predicate").distinct()
     body = so.groupBy("predicate").agg(
         F.count("*").cast("long").alias("n_body")
@@ -3008,7 +2865,7 @@ FROM missing GROUP BY 1, 2, 3
 """
 
 
-@_q("kg_rule_apply", _rule_apply_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_rule_apply", _rule_apply_oracle_sql)
 def kg_rule_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The completion step over kg_rule_mining's rules: wherever a
     rule with confidence >= 0.5 fires (its body edge exists) but the
@@ -3021,7 +2878,6 @@ def kg_rule_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anti-join-after-inference shape every materialized-view /
     completion pipeline runs: propose only what is absent."""
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_rule_apply"] = _rule_apply_oracle_sql(sf_dir)
     so = triples.select("subject", "object", "predicate").distinct()
     body = so.groupBy("predicate").agg(
         F.count("*").cast("long").alias("n_body")
@@ -3094,7 +2950,7 @@ GROUP BY 1, 2
 """
 
 
-@_q("kg_comention", _comention_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_comention", _comention_oracle_sql)
 def kg_comention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity co-mention graph (operators/graph.comention_pairs):
     pairs of distinct subjects asserted in the same conversation with
@@ -3109,7 +2965,6 @@ def kg_comention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_comention"] = _comention_oracle_sql(sf_dir)
     return comention_pairs(triples, max_conv_entities=64)
 
 
@@ -3144,7 +2999,7 @@ FROM u3 GROUP BY 1
 """
 
 
-@_q("kg_kcore", _kcore_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_kcore", _kcore_oracle_sql)
 def kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-round 2-core peel (operators/graph.kcore_peel, 3 rounds)
     over the co-mention entity graph: iteratively drops entities whose
@@ -3159,7 +3014,6 @@ def kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_kcore"] = _kcore_oracle_sql(sf_dir)
     edges = comention_pairs(triples, max_conv_entities=64).select(
         F.col("e1").alias("src"), F.col("e2").alias("dst")
     )
@@ -3206,17 +3060,13 @@ SELECT src AS entity, {f_cols}, {m_cols}, degree FROM agg
 """
 
 
-_SAGE_ORACLE = _sage_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_gcn_agg", _SAGE_ORACLE)
+@_q("kg_gcn_agg", _sage_oracle_sql)
 def kg_gcn_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One GraphSAGE mean-agg layer over the subject->object entity
     graph; exact-BIGINT neighbor means, in-row hashed features."""
     from information_extraction_spark.operators.graph import sage_mean_agg
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_gcn_agg"] = _sage_oracle_sql(sf_dir)
     edges = triples.select(
         F.col("subject").alias("src"), F.col("object").alias("dst")
     ).distinct()
@@ -3269,10 +3119,7 @@ FROM vol v LEFT JOIN cutc c ON v.community = c.community CROSS JOIN mm
 """
 
 
-_CONDUCTANCE_ORACLE = _conductance_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_conductance", _CONDUCTANCE_ORACLE)
+@_q("kg_conductance", _conductance_oracle_sql)
 def kg_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-community conductance of the 3-iteration LPA communities
     (operators/graph.conductance) — exact ppm; low phi marks safe
@@ -3285,7 +3132,6 @@ def kg_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_conductance"] = _conductance_oracle_sql(sf_dir)
     edges = triple_edges(triples)
     return conductance(edges, label_propagation(edges, iterations=3))
 
@@ -3340,10 +3186,7 @@ GROUP BY 1, 2
 """
 
 
-_LANDMARK_ORACLE = _landmark_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_landmark_dist", _LANDMARK_ORACLE)
+@_q("kg_landmark_dist", _landmark_oracle_sql)
 def kg_landmark_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise distance estimates (min over 4 degree-picked landmark
     sketches of d(u,l)+d(l,v), hops <= 3) for the deterministic
@@ -3354,7 +3197,6 @@ def kg_landmark_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_landmark_dist"] = _landmark_oracle_sql(sf_dir)
     sk = landmark_distances(triple_edges(triples), n_landmarks=4, max_hops=3)
     samp = sk.filter(F.substring(F.md5("entity"), 1, 1) == "0")
     a = samp.select(
@@ -3419,7 +3261,7 @@ FROM t
 """
 
 
-@_q("kg_transe_score", _transe_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_transe_score", _transe_oracle_sql)
 def kg_transe_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Translational (TransE, Bordes et al. 2013) triple scoring over
     deterministic feature-hash embeddings: every entity/predicate maps
@@ -3439,7 +3281,6 @@ def kg_transe_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.functions.hashing import h48
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_transe_score"] = _transe_oracle_sql(sf_dir)
     tr = triples.select("subject", "predicate", "object").distinct()
 
     def comp(col, i):
@@ -3532,7 +3373,7 @@ FROM deg d LEFT JOIN pern p USING (entity)
 """
 
 
-@_q("kg_triangles", _triangles_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_triangles", _triangles_oracle_sql)
 def kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-entity triangle count + local clustering coefficient over
     the co-mention graph (operators/graph.triangle_counts): wedges
@@ -3548,7 +3389,6 @@ def kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_triangles"] = _triangles_oracle_sql(sf_dir)
     edges = comention_pairs(triples, max_conv_entities=64).select(
         F.col("e1").alias("src"), F.col("e2").alias("dst")
     )
@@ -3583,7 +3423,7 @@ JOIN ds d2 ON p.s2 = d2.subject
 """
 
 
-@_q("kg_jaccard_neighbors", _jaccard_nb_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_jaccard_neighbors", _jaccard_nb_oracle_sql)
 def kg_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighborhood-Jaccard link prediction over the materialized
     subject→object graph (operators/linking.jaccard_neighbor_pairs):
@@ -3597,7 +3437,6 @@ def kg_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_jaccard_neighbors"] = _jaccard_nb_oracle_sql(sf_dir)
     return jaccard_neighbor_pairs(triples, max_obj_deg=1000, min_shared=1)
 
 
@@ -3622,8 +3461,7 @@ FROM ov JOIN np ON ov.p = np.predicate
 """
 
 
-@_q("kg_pred_implication",
-    _pred_implication_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_pred_implication", _pred_implication_oracle_sql)
 def kg_pred_implication(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate implication/subsumption mining over the materialized
     graph — the ontology-induction step that finds directed predicate
@@ -3640,7 +3478,6 @@ def kg_pred_implication(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — then a |P|²-bounded aggregate; per-predicate totals
     broadcast back. Exact BIGINT ppm."""
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_pred_implication"] = _pred_implication_oracle_sql(sf_dir)
     e = triples.select("subject", "predicate", "object").distinct()
     np_ = e.groupBy("predicate").agg(
         F.count("*").cast("long").alias("n")
@@ -3679,7 +3516,7 @@ GROUP BY 1, 2
 """
 
 
-@_q("kg_metapath_profile", _metapath_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_metapath_profile", _metapath_oracle_sql)
 def kg_metapath_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Meta-path statistics of the materialized graph: the V-shaped
     2-step pattern s1 -p1-> m <-p2- s2 through a shared object — how
@@ -3701,7 +3538,6 @@ def kg_metapath_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose count-distinct runs as the two-phase partial-distinct
     expand — no per-group set collection."""
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_metapath_profile"] = _metapath_oracle_sql(sf_dir)
     e = triples.select("subject", "predicate", "object").distinct()
     a = e.select(
         F.col("subject").alias("s1"),
@@ -3779,13 +3615,9 @@ FROM inferred i LEFT JOIN direct d USING (predicate)
 """
 
 
-_ONTOLOGY_ORACLE = _ontology_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_ontology_closure", _ONTOLOGY_ORACLE)
+@_q("kg_ontology_closure", _ontology_oracle_sql)
 def kg_ontology_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_ontology_closure"] = _ontology_oracle_sql(sf_dir)
     direct = triples.groupBy("predicate").agg(
         F.count("*").cast("long").alias("direct_n")
     )
@@ -3875,13 +3707,9 @@ HAVING sum(CASE WHEN del THEN 1 ELSE 0 END) > 0
 """
 
 
-_FORGET_ORACLE = _forget_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_forget_propagate", _FORGET_ORACLE)
+@_q("kg_forget_propagate", _forget_oracle_sql)
 def kg_forget_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_forget_propagate"] = _forget_oracle_sql(sf_dir)
     # The deletion-request dim, built as an explicit table (the shape
     # real requests arrive in) — broadcast onto the assertion stream.
     requests = (
@@ -4001,13 +3829,9 @@ GROUP BY 1
 """
 
 
-_EVOLVE_ORACLE = _evolve_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("w24_schema_evolve", _EVOLVE_ORACLE)
+@_q("w24_schema_evolve", _evolve_oracle_sql)
 def w24_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     g1, g2 = write_evolved_snapshots(spark, sf_dir)
-    ORACLES["w24_schema_evolve"] = _evolve_oracle_sql(sf_dir)
     merged = spark.read.option("mergeSchema", "true").parquet(g1, g2)
     return merged.groupBy("predicate").agg(
         F.count("*").cast("long").alias("n_rows"),
@@ -4088,15 +3912,11 @@ GROUP BY 1
 """
 
 
-_EMBEVAL_ORACLE = _embeval_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_embedding_eval", _EMBEVAL_ORACLE)
+@_q("kg_embedding_eval", _embeval_oracle_sql)
 def kg_embedding_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.functions.hashing import h48
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_embedding_eval"] = _embeval_oracle_sql(sf_dir)
     tr = triples.select("subject", "predicate", "object").distinct()
 
     def comp(col, i):
@@ -4205,17 +4025,13 @@ SELECT start, h1, h2, h3 FROM s3
 """
 
 
-_WALKS_ORACLE = _walks_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_random_walks", _WALKS_ORACLE)
+@_q("kg_random_walks", _walks_oracle_sql)
 def kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.operators.graph import (
         deterministic_walks,
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_random_walks"] = _walks_oracle_sql(sf_dir)
     edges = triples.select(
         F.col("subject").alias("src"), F.col("object").alias("dst")
     ).distinct()
@@ -4261,17 +4077,13 @@ FROM r a JOIN r b
 """
 
 
-_SN_ORACLE = _sn_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_er_sorted_neighborhood", _SN_ORACLE)
+@_q("kg_er_sorted_neighborhood", _sn_oracle_sql)
 def kg_er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.operators.linking import (
         sorted_neighborhood_pairs,
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_er_sorted_neighborhood"] = _sn_oracle_sql(sf_dir)
     ents = (
         triples.select(F.col("subject").alias("e"))
         .unionByName(triples.select(F.col("object").alias("e")))
@@ -4322,17 +4134,13 @@ FROM truth t LEFT JOIN sn ON sn.x = t.ea AND sn.y = t.eb
 """
 
 
-_ER_AUDIT_ORACLE = _er_audit_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_er_blocking_audit", _ER_AUDIT_ORACLE)
+@_q("kg_er_blocking_audit", _er_audit_oracle_sql)
 def kg_er_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.operators.linking import (
         sorted_neighborhood_pairs,
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_er_blocking_audit"] = _er_audit_oracle_sql(sf_dir)
     ents = (
         triples.select(F.col("subject").alias("e"))
         .unionByName(triples.select(F.col("object").alias("e")))
@@ -4422,13 +4230,9 @@ FROM ta JOIN tb ON ta.subject = tb.subject
 """
 
 
-_STAR_ORACLE = _star_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_star_join", _STAR_ORACLE)
+@_q("kg_star_join", _star_oracle_sql)
 def kg_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_star_join"] = _star_oracle_sql(sf_dir)
     t = triples.select("subject", "predicate", "object").localCheckpoint()
     pa = (
         t.groupBy("predicate")
@@ -4515,13 +4319,9 @@ GROUP BY 1, 2
 """
 
 
-_SKIPGRAM_ORACLE = _skipgram_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_skipgram_pairs", _SKIPGRAM_ORACLE)
+@_q("kg_skipgram_pairs", _skipgram_oracle_sql)
 def kg_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     walks = kg_random_walks(spark, sf_dir)
-    ORACLES["kg_skipgram_pairs"] = _skipgram_oracle_sql(sf_dir)
     path = F.array("start", "h1", "h2", "h3")
     # within-row pair expansion: for each (i, j), |i-j| <= window,
     # i != j, both non-null — a narrow per-row transform, no join.
@@ -4577,17 +4377,13 @@ FROM deg GROUP BY 1
 """
 
 
-_DEGREE_DIST_ORACLE = _degree_dist_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_degree_distribution", _DEGREE_DIST_ORACLE)
+@_q("kg_degree_distribution", _degree_dist_oracle_sql)
 def kg_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.operators.graph import (
         undirected_edges,
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_degree_distribution"] = _degree_dist_oracle_sql(sf_dir)
     edges = triples.select(
         F.col("subject").alias("src"), F.col("object").alias("dst")
     ).distinct()
@@ -4657,10 +4453,7 @@ SELECT n AS entity, dist FROM v3
 """
 
 
-_SSSP_ORACLE = _sssp_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_sssp_weighted", _SSSP_ORACLE)
+@_q("kg_sssp_weighted", _sssp_oracle_sql)
 def kg_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round multi-source Bellman-Ford from the 5 smallest entities
     (see block comment); operators/graph.bellman_ford does the
@@ -4673,7 +4466,6 @@ def kg_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_sssp_weighted"] = _sssp_oracle_sql(sf_dir)
     und = undirected_edges(triple_edges(triples))
     w = (
         1
@@ -4733,10 +4525,7 @@ FROM dsum d LEFT JOIN intra i ON d.community = i.community CROSS JOIN mm
 """
 
 
-_MODULARITY_ORACLE = _modularity_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("kg_modularity", _MODULARITY_ORACLE)
+@_q("kg_modularity", _modularity_oracle_sql)
 def kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community-quality audit: Newman modularity of the 3-iteration
     LPA communities over the undirected entity graph
@@ -4751,7 +4540,6 @@ def kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_modularity"] = _modularity_oracle_sql(sf_dir)
     edges = triple_edges(triples)
     return modularity(edges, label_propagation(edges, iterations=3))
 
@@ -4828,7 +4616,7 @@ FROM fp JOIN ne ON ne.conv_id = fp.conv_id
 """
 
 
-@_q("kg_wl_kernel", _wl_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_wl_kernel", _wl_oracle_sql)
 def kg_wl_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation WL structural fingerprint + dup-group size
     (operators/graph.wl_fingerprints, 2 refinement rounds)."""
@@ -4837,7 +4625,6 @@ def kg_wl_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_wl_kernel"] = _wl_oracle_sql(sf_dir)
     return wl_fingerprints(triples, rounds=2)
 
 
@@ -4891,7 +4678,7 @@ FROM v3
 """
 
 
-@_q("kg_path_counts", _sp_counts_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_path_counts", _sp_counts_oracle_sql)
 def kg_path_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shortest-path counts (dist + sigma) from the 2 top-degree
     sources, hops <= 3 (operators/graph.shortest_path_counts)."""
@@ -4901,7 +4688,6 @@ def kg_path_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_path_counts"] = _sp_counts_oracle_sql(sf_dir)
     return shortest_path_counts(
         triple_edges(triples), n_sources=2, max_hops=3
     )
@@ -4963,7 +4749,7 @@ FROM ranked WHERE rn = 1 AND nc >= 2
 """
 
 
-@_q("kg_truth_discovery", _truth_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_truth_discovery", _truth_oracle_sql)
 def kg_truth_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sums-style truth discovery over the live pipeline's assertion
     edges (see block comment; operators/graph.truth_discovery)."""
@@ -4972,7 +4758,6 @@ def kg_truth_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_truth_discovery"] = _truth_oracle_sql(sf_dir)
     assertions = triples.select(
         F.col("conv_id").alias("source"),
         "subject",
@@ -5057,7 +4842,7 @@ WHERE n <> s GROUP BY n
 """
 
 
-@_q("kg_betweenness", _betweenness_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_betweenness", _betweenness_oracle_sql)
 def kg_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot-sampled approximate betweenness from the 2 top-degree
     pivots, hops <= 3 (operators/graph.betweenness_pivots)."""
@@ -5067,7 +4852,6 @@ def kg_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_betweenness"] = _betweenness_oracle_sql(sf_dir)
     return betweenness_pivots(
         triple_edges(triples), n_sources=2, max_hops=3
     )
@@ -5135,7 +4919,7 @@ FROM k
 """
 
 
-@_q("a23_cohen_kappa", _kappa_oracle_sql("/root/testdata/sf0.01"))
+@_q("a23_cohen_kappa", _kappa_oracle_sql)
 def a23_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-predicate Cohen's kappa between the rule-based and NN
     extractors in exact ppm (see block comment)."""
@@ -5159,7 +4943,6 @@ def a23_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("in_nn", F.lit(True))
         .localCheckpoint()
     )
-    ORACLES["a23_cohen_kappa"] = _kappa_oracle_sql(sf_dir)
     units = F.broadcast(
         rules.select("conv_id", "turn_idx")
         .unionAll(nn.select("conv_id", "turn_idx"))
@@ -5407,7 +5190,7 @@ FROM base
 """
 
 
-@_q("a24_power_analysis", _power_oracle_sql("/root/testdata/sf0.01"))
+@_q("a24_power_analysis", _power_oracle_sql)
 def a24_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-predicate required-sample-size for the McNemar gate at
     alpha=0.05 / power 0.8 (see block comment)."""
@@ -5431,7 +5214,6 @@ def a24_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("in_nn", F.lit(True))
         .localCheckpoint()
     )
-    ORACLES["a24_power_analysis"] = _power_oracle_sql(sf_dir)
     units = F.broadcast(
         rules.select("conv_id", "turn_idx")
         .unionAll(nn.select("conv_id", "turn_idx"))
@@ -5555,7 +5337,7 @@ FROM top, tot, dustall WHERE rank <= 20
 """
 
 
-@_q("kg_ppr_push", _ppr_push_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_ppr_push", _ppr_push_oracle_sql)
 def kg_ppr_push(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous ACL push PPR, 3 rounds, exact-ppb conservation
     certificate (operators/graph.ppr_push)."""
@@ -5565,7 +5347,6 @@ def kg_ppr_push(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_ppr_push"] = _ppr_push_oracle_sql(sf_dir)
     return ppr_push(triple_edges(triples), rounds=3)
 
 
@@ -5618,7 +5399,7 @@ FROM pick
 """
 
 
-@_q("kg_louvain_move", _louvain_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_louvain_move", _louvain_oracle_sql)
 def kg_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One synchronous Louvain move phase from singletons over the
     undirected entity graph (operators/graph.louvain_move): exact
@@ -5630,7 +5411,6 @@ def kg_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_louvain_move"] = _louvain_oracle_sql(sf_dir)
     return louvain_move(triple_edges(triples))
 
 
@@ -5702,7 +5482,7 @@ FROM ffl, cyc, nw
 """
 
 
-@_q("kg_motif_census", _motif_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_motif_census", _motif_oracle_sql)
 def kg_motif_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed triad census (FFL vs cycle) over the asymmetric
     mention-precedence graph (operators/graph.motif_census over
@@ -5713,7 +5493,6 @@ def kg_motif_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_motif_census"] = _motif_oracle_sql(sf_dir)
     return motif_census(
         precedence_edges(triples, max_conv_entities=64), max_mid_deg=256
     )
@@ -5823,7 +5602,7 @@ FROM sig s LEFT JOIN p2 ON p2.c = s.c
 """
 
 
-@_q("kg_louvain_levels", _louvain_levels_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_louvain_levels", _louvain_levels_oracle_sql)
 def kg_louvain_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level Louvain: move phase → pointer-graph CC → aggregated
     graph → level-2 move decision where the positivity guard binds
@@ -5834,92 +5613,7 @@ def kg_louvain_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_louvain_levels"] = _louvain_levels_oracle_sql(sf_dir)
     return louvain_levels(triple_edges(triples))
-
-
-# --- Pure oracle templates (round-5 verdict item: oracle_sql purity) --------
-# name -> callable(sf_dir) building the SAME SQL string the query's
-# runtime re-point installs, with no filesystem or execution
-# dependency. driver_queries.materialize_oracles() composes these so
-# oracle_sql() is a pure function of (catalog, sf_dir) regardless of
-# whether any query has run. The runtime re-points above stay (they
-# serve post-run live lookups at arbitrary sf), but they are no
-# longer the only way to obtain a golden-based oracle.
-ORACLE_TEMPLATES = {
-    "kg_extract_triples": lambda sf: _oracle_sqls(sf)[0],
-    "kg_spo_lists": lambda sf: _oracle_sqls(sf)[1],
-    "kg_degree_topk": lambda sf: _graph_oracle_sqls(sf)[0],
-    "kg_pred_cooccur": lambda sf: _graph_oracle_sqls(sf)[1],
-    "kg_two_hop": lambda sf: _graph_oracle_sqls(sf)[2],
-    "kg_pagerank": lambda sf: _graph_oracle_sqls(sf)[3],
-    "kg_nn_extract": _nn_oracle_sql,
-    "kg_neg_sampling": _neg_oracle_sql,
-    "kg_triple_support": _support_oracle_sql,
-    "kg_incremental_merge": _merge_oracle_sql,
-    "kg_functional_resolve": _resolve_oracle_sql,
-    "kg_pred_profile": _profile_oracle_sql,
-    "kg_provenance": _provenance_oracle_sql,
-    "kg_graph_pred_scan": _graph_scan_oracle_sql,
-    "kg_incremental_er": _incremental_er_oracle_sql,
-    "kg_conv_dedup": _conv_dedup_oracle_sql,
-    "kg_type_infer": _type_infer_oracle_sql,
-    "kg_er_candidates": _er_oracle_sql,
-    "kg_temporal_extent": _temporal_oracle_sql,
-    "kg_temporal_conflict": _temporal_conflict_oracle_sql,
-    "kg_slot_changes": _slot_changes_oracle_sql,
-    "kg_role_yield": _role_yield_oracle_sql,
-    "kg_conv_stats": _conv_stats_oracle_sql,
-    "kg_er_merge": _er_merge_oracle_sql,
-    "kg_cardinality_check": _cardinality_oracle_sql,
-    "kg_type_violations": _type_violations_oracle_sql,
-    "kg_neighbor_sample": _neighbor_sample_oracle_sql,
-    "kg_pagerank_personalized": _ppr_oracle_sql,
-    "kg_hits": _hits_oracle_sql,
-    "w9_time_travel": _time_travel_oracle_sql,
-    "kg_graph_diff": _graph_diff_oracle_sql,
-    "kg_label_propagation": _lpa_oracle_sql,
-    "kg_bfs_distances": _bfs_oracle_sql,
-    "w11_compaction": _compaction_oracle_sql,
-    "kg_resource_alloc": _ra_oracle_sql,
-    "a13_extractor_agreement": _agreement_oracle_sql,
-    "a21_mcnemar": _mcnemar_oracle_sql,
-    "a22_bh_fdr": _bh_fdr_oracle_sql,
-    "kg_rule_mining": _rule_mining_oracle_sql,
-    "kg_rule_apply": _rule_apply_oracle_sql,
-    "kg_comention": _comention_oracle_sql,
-    "kg_kcore": _kcore_oracle_sql,
-    "kg_gcn_agg": _sage_oracle_sql,
-    "kg_conductance": _conductance_oracle_sql,
-    "kg_landmark_dist": _landmark_oracle_sql,
-    "kg_transe_score": _transe_oracle_sql,
-    "kg_triangles": _triangles_oracle_sql,
-    "kg_jaccard_neighbors": _jaccard_nb_oracle_sql,
-    "kg_pred_implication": _pred_implication_oracle_sql,
-    "kg_metapath_profile": _metapath_oracle_sql,
-    "kg_ontology_closure": _ontology_oracle_sql,
-    "kg_forget_propagate": _forget_oracle_sql,
-    "w24_schema_evolve": _evolve_oracle_sql,
-    "kg_embedding_eval": _embeval_oracle_sql,
-    "kg_random_walks": _walks_oracle_sql,
-    "kg_er_sorted_neighborhood": _sn_oracle_sql,
-    "kg_er_blocking_audit": _er_audit_oracle_sql,
-    "kg_star_join": _star_oracle_sql,
-    "kg_skipgram_pairs": _skipgram_oracle_sql,
-    "kg_degree_distribution": _degree_dist_oracle_sql,
-    "kg_sssp_weighted": _sssp_oracle_sql,
-    "kg_modularity": _modularity_oracle_sql,
-    "kg_wl_kernel": _wl_oracle_sql,
-    "kg_path_counts": _sp_counts_oracle_sql,
-    "kg_truth_discovery": _truth_oracle_sql,
-    "kg_betweenness": _betweenness_oracle_sql,
-    "a23_cohen_kappa": _kappa_oracle_sql,
-    "a24_power_analysis": _power_oracle_sql,
-    "kg_ppr_push": _ppr_push_oracle_sql,
-    "kg_louvain_move": _louvain_oracle_sql,
-    "kg_motif_census": _motif_oracle_sql,
-    "kg_louvain_levels": _louvain_levels_oracle_sql,
-}
 
 
 # --- KG-LOUVAIN-FULL: Louvain to convergence with certificate ------------------
@@ -6098,7 +5792,7 @@ ORDER BY lvl""")
     return "".join(parts)
 
 
-@_q("kg_louvain_full", _louvain_full_oracle_sql("/root/testdata/sf0.01"))
+@_q("kg_louvain_full", _louvain_full_oracle_sql)
 def kg_louvain_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Louvain to convergence over the undirected entity graph
     (operators/graph.louvain_converge): guarded-star contraction,
@@ -6110,7 +5804,6 @@ def kg_louvain_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ORACLES["kg_louvain_full"] = _louvain_full_oracle_sql(sf_dir)
     rows, _memb = louvain_converge(
         triple_edges(triples),
         max_levels=_LOUVAIN_FULL_LEVELS,
@@ -6127,6 +5820,3 @@ def kg_louvain_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lvl long, n_moved long, n_communities long, q_before long,"
         " q_after long, q_cert long, n_fallback long",
     )
-
-
-ORACLE_TEMPLATES["kg_louvain_full"] = _louvain_full_oracle_sql

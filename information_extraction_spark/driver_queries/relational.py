@@ -18,28 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        # Within-module duplicate guard: dict assignment is silently
-        # last-wins, so a re-used name would overwrite an existing
-        # query (and its oracle) without any error — the cross-module
-        # guard in __init__ can't see it. Raise at import time.
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name in module: {name}")
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from information_extraction_spark.driver_queries._registry import _q, _t
 
 
 def _events_sec(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,24 +28,12 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        # Within-module duplicate guard: dict assignment is silently
-        # last-wins, so a re-used name would overwrite an existing
-        # query (and its oracle) without any error — the cross-module
-        # guard in __init__ can't see it. Raise at import time.
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name in module: {name}")
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from information_extraction_spark.driver_queries._registry import _q
+from information_extraction_spark.driver_queries.kg import (
+    _ensure_golden,
+    _support_oracle_sql,
+    _triples_oracle_sql,
+)
 
 
 _COUNTER = itertools.count()
@@ -366,23 +354,6 @@ def st_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # out-of-order micro-batches as late.
 
 
-def _kg_mod():
-    from information_extraction_spark.driver_queries import kg
-
-    return kg
-
-
-# Default oracle targets sf0.01 (the driver gate's corpus); the query
-# re-points it at the just-materialized per-sf golden when it runs,
-# exactly like the flagship. _oracle_sqls is pure path computation —
-# no filesystem side effects at import.
-from information_extraction_spark.driver_queries.kg import (  # noqa: E402
-    _oracle_sqls as _kg_oracle_sqls,
-)
-
-_ST_EXTRACT_DEFAULT = _kg_oracle_sqls("/root/testdata/sf0.01")[0]
-
-
 def _stage_drain_transcripts(
     spark: SparkSession,
     sf_dir: str,
@@ -439,15 +410,13 @@ def _stage_drain_transcripts(
         shutil.rmtree(run_dir, ignore_errors=True)
 
 
-@_q("st_extract_triples", _ST_EXTRACT_DEFAULT)
+@_q("st_extract_triples", _triples_oracle_sql)
 def st_extract_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.streaming.ingest import (
         start_streaming_extraction,
     )
 
-    kg = _kg_mod()
-    kg._ensure_golden(spark, sf_dir)
-    ORACLES["st_extract_triples"] = kg._oracle_sqls(sf_dir)[0]
+    _ensure_golden(spark, sf_dir)
 
     def start(stream, kb, schemas, run_dir):
         return start_streaming_extraction(
@@ -562,23 +531,15 @@ def st_windowed_counts_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # micro-batch (the n_convs additivity contract; Kafka keyed by conv_id
 # at scale).
 
-from information_extraction_spark.driver_queries.kg import (  # noqa: E402
-    _support_oracle_sql as _kg_support_oracle_sql,
-)
 
-_ST_SUPPORT_DEFAULT = _kg_support_oracle_sql("/root/testdata/sf0.01")
-
-
-@_q("st_support_merge", _ST_SUPPORT_DEFAULT)
+@_q("st_support_merge", _support_oracle_sql)
 def st_support_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.streaming.ingest import (
         latest_support_state,
         start_streaming_support_merge,
     )
 
-    kg = _kg_mod()
-    kg._ensure_golden(spark, sf_dir)
-    ORACLES["st_support_merge"] = _kg_support_oracle_sql(sf_dir)
+    _ensure_golden(spark, sf_dir)
 
     def start(stream, kb, schemas, run_dir):
         return start_streaming_support_merge(
@@ -1182,19 +1143,3 @@ def st_mg_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
-
-
-# Pure oracle templates (see kg.ORACLE_TEMPLATES): the two streaming
-# queries whose oracles are golden-based re-points of kg oracles.
-def _st_support_template(sf_dir: str) -> str:
-    from information_extraction_spark.driver_queries.kg import (
-        _support_oracle_sql,
-    )
-
-    return _support_oracle_sql(sf_dir)
-
-
-ORACLE_TEMPLATES = {
-    "st_extract_triples": lambda sf: _kg_oracle_sqls(sf)[0],
-    "st_support_merge": _st_support_template,
-}

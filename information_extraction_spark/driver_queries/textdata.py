@@ -20,24 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        # Within-module duplicate guard: dict assignment is silently
-        # last-wins, so a re-used name would overwrite an existing
-        # query (and its oracle) without any error — the cross-module
-        # guard in __init__ can't see it. Raise at import time.
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name in module: {name}")
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from information_extraction_spark.driver_queries._registry import _q
 
 
 def _spread(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:

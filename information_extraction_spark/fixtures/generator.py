@@ -32,10 +32,7 @@ from datetime import datetime, timedelta, timezone
 
 import pandas as pd
 
-from information_extraction_spark.kernels.extraction import (
-    KnowledgeBase,
-    reference_extract,
-)
+from information_extraction_spark.kernels.extraction import reference_extract
 
 SEED = 42
 
@@ -348,16 +345,22 @@ def compute_golden(
     Runs the pure-Python parity oracle (kernels.reference_extract) over
     the clean KB — this IS what the reference pipeline would emit with
     a perfect model, including cross-pair cartesian products and the
-    len>=2 / dedup rules.
+    len>=2 / dedup rules. The KB is passed as a plain
+    ``{predicate: [(subject, object)]}`` dict, so the golden runs the
+    direct classifier and shares no code with the KnowledgeBase kernel
+    it checks; entries are deduped in first-seen order, as the
+    kernel's KB is.
     """
     kb = world.kb_clean if kb is None else kb
-    kbase = KnowledgeBase(kb.itertuples(index=False, name=None))
+    kb_by_predicate: dict[str, list[tuple[str, str]]] = {}
+    for p, s, o in dict.fromkeys(kb.itertuples(index=False, name=None)):
+        kb_by_predicate.setdefault(p, []).append((s, o))
     rows = []
     for row in transcripts.itertuples():
         if not row.text:
             continue
         for s, p, o, st, ot in reference_extract(
-            row.text, kbase, world.schema_types
+            row.text, kb_by_predicate, world.schema_types
         ):
             rows.append(
                 {

@@ -257,8 +257,8 @@ class KnowledgeBase:
     entries, but O(|entities|) per sentence instead of O(|KB|): one
     lowercase-substring pass finds which entities occur, then pair
     membership is a set lookup. This is what the Arrow-batched Spark
-    kernels and the golden generator use; tests assert parity with the
-    direct implementation.
+    kernels use; tests assert parity with the direct implementation,
+    which the golden generator and :func:`reference_extract` run.
     """
 
     def __init__(self, entries: Iterable[tuple[str, str, str]]):
@@ -307,27 +307,6 @@ class KnowledgeBase:
             self._fallback_cache[key] = hit
         return hit
 
-    def entities_present(self, text: str) -> set[str]:
-        """Lowercased entities occurring (case-insensitively) in text."""
-        low = text.lower()
-        return {el for _, el in self._entities_lower if el in low}
-
-    def classify(
-        self, text: str, threshold: float = 0.5, fallback_k: int = 10
-    ) -> tuple[list[str], list[float]]:
-        """Same contract as :func:`classify_predicates` via the entity
-        prefilter."""
-        present = self.entities_present(text)
-        fired = [
-            predicate
-            for predicate in self.predicates
-            if any(
-                s in present and o in present
-                for s, o in self._pair_keys[predicate]
-            )
-        ]
-        return self._select(text, fired, threshold, fallback_k)
-
     def _select(
         self, text: str, fired: list[str], threshold: float, fallback_k: int
     ) -> tuple[list[str], list[float]]:
@@ -353,9 +332,6 @@ class KnowledgeBase:
         kept = [kv for kv in scored if kv[1] > threshold]
         kept = kept or scored[:fallback_k]
         return [p for p, _ in kept], [s for _, s in kept]
-
-    def pairs_for(self, predicate: str) -> list[tuple[str, str]]:
-        return self.by_predicate.get(predicate, [])
 
     def _presence_and_fired(self, texts):
         """Batch entity-presence matrix (Arrow's C++ substring kernel
@@ -623,19 +599,12 @@ def reference_extract(
     Returns sorted (subject, predicate, object, subject_type,
     object_type) tuples, set-deduped.
     """
-    if isinstance(kb_by_predicate, KnowledgeBase):
-        kb = kb_by_predicate
-        predicates, _ = kb.classify(text, threshold=threshold, fallback_k=fallback_k)
-        get_pairs = kb.pairs_for
-    else:
-        predicates, _ = classify_predicates(
-            text, kb_by_predicate, threshold=threshold, fallback_k=fallback_k
-        )
-        get_pairs = lambda p: kb_by_predicate.get(p, [])  # noqa: E731
+    predicates, _ = classify_predicates(
+        text, kb_by_predicate, threshold=threshold, fallback_k=fallback_k
+    )
     triples: set[tuple[str, str, str, str, str]] = set()
     for predicate in predicates:
-        pairs = get_pairs(predicate)
-        tags = bieso_tags(text, pairs)
+        tags = bieso_tags(text, kb_by_predicate.get(predicate, []))
         subjects, objects = decode_bieso(tags, text)
         subjects, objects = assemble_entities(subjects, objects)
         if not subjects or not objects:

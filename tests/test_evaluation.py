@@ -233,7 +233,12 @@ def test_calc_pr_matches_oracle_on_random_inputs(spark, pred, gold, alias, loc):
         rows = [(k, a) for k, al in d.items() for a in sorted(al)]
         return _rows_df(spark, rows, _DICT_SCHEMA)
 
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    # Compared as ids, not counts: the session is shared, and Spark's
+    # ContextCleaner may release an earlier test's RDD during the call.
+    before = persisted_ids()
     got = calc_pr(
         _rows_df(spark, pred, _TRIPLE_SCHEMA),
         _rows_df(spark, gold, _TRIPLE_SCHEMA),
@@ -247,7 +252,7 @@ def test_calc_pr_matches_oracle_on_random_inputs(spark, pred, gold, alias, loc):
     assert (got["precision"], got["recall"], got["f1"]) == oracle_calc_pr(
         pred, gold, alias, loc
     )
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+    assert persisted_ids() - before == set()
 
 
 @pytest.fixture(scope="module")

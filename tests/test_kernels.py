@@ -130,6 +130,14 @@ def test_classifier_threshold_and_fallback():
     assert preds3 == preds3b
 
 
+def _by_predicate(entries):
+    """The dict KB of the direct classifier: {predicate: [(s, o)]}."""
+    by_pred: dict[str, list[tuple[str, str]]] = {}
+    for p, s, o in entries:
+        by_pred.setdefault(p, []).append((s, o))
+    return by_pred
+
+
 def test_knowledgebase_parity_with_direct_classifier():
     entries = [
         ("主演", "端脑", "朱元冰"),
@@ -139,27 +147,23 @@ def test_knowledgebase_parity_with_direct_classifier():
         ("出版社", "碑", "上海人民出版社"),
     ]
     kbase = KnowledgeBase(entries)
-    by_pred: dict[str, list[tuple[str, str]]] = {}
-    for p, s, o in entries:
-        by_pred.setdefault(p, []).append((s, o))
+    by_pred = _by_predicate(entries)
     texts = (DUANNAO_TEXT, BEI_TEXT, "no match at all", "")
-    for text in texts:
-        assert kbase.classify(text) == classify_predicates(text, by_pred)
-    # Every threshold regime, per row and batched: below and inside the
-    # pseudo-scores' range, the default, and at or above the fired
-    # score (only the top-k fallback remains).
+    # Every threshold regime: below and inside the pseudo-scores'
+    # range, the default, and at or above the fired score (only the
+    # top-k fallback remains); the default top-k and a short one.
     for threshold in (-1.0, 0.0, 0.3, 0.5, 0.99, 1.0, 1.5):
-        preds, scores = kbase.classify_batch(
-            texts, threshold=threshold, fallback_k=2
-        )
-        for i, text in enumerate(texts):
-            expect = classify_predicates(
-                text, by_pred, threshold=threshold, fallback_k=2
+        for fallback_k in (2, 10):
+            preds, scores = kbase.classify_batch(
+                texts, threshold=threshold, fallback_k=fallback_k
             )
-            assert kbase.classify(
-                text, threshold=threshold, fallback_k=2
-            ) == expect
-            assert (preds[i], scores[i]) == expect, (threshold, i)
+            for i, text in enumerate(texts):
+                expect = classify_predicates(
+                    text, by_pred, threshold=threshold, fallback_k=fallback_k
+                )
+                assert (preds[i], scores[i]) == expect, (
+                    threshold, fallback_k, i
+                )
 
 
 def test_reference_extract_end_to_end():
@@ -169,23 +173,36 @@ def test_reference_extract_end_to_end():
         ("改编自", "端脑", "端脑"),
         ("作者", "碑", "维克多·谢阁兰"),
     ]
-    kbase = KnowledgeBase(entries)
     schema_types = {
         "主演": ("影视作品", "人物"),
         "改编自": ("影视作品", "作品"),
         "作者": ("图书作品", "人物"),
     }
-    triples = reference_extract(DUANNAO_TEXT, kbase, schema_types)
+    triples = reference_extract(
+        DUANNAO_TEXT, _by_predicate(entries), schema_types
+    )
     assert ("端脑", "主演", "朱元冰", "影视作品", "人物") in triples
     assert ("端脑", "主演", "蒋依依", "影视作品", "人物") in triples
     assert ("端脑", "改编自", "端脑", "影视作品", "作品") in triples
     # 碑 is a 1-char subject → its work unit yields no triples.
     assert not [t for t in triples if t[1] == "作者"]
+    # The kernel's fused pipeline (cleaned units, then the cartesian
+    # product) emits exactly the dict-KB oracle's triples.
+    (units,) = KnowledgeBase(entries).extract_batch(
+        [DUANNAO_TEXT], min_entity_len=2
+    )
+    assert sorted(
+        (s, p, o, *schema_types[p])
+        for p, subs, objs in units
+        for s in subs
+        for o in objs
+    ) == triples
 
 
 def test_classify_batch_parity_with_loop():
-    """Vectorized Arrow-compute classification must equal the per-row
-    path element-wise, including fallback rows and empty strings."""
+    """Vectorized Arrow-compute classification must equal the direct
+    per-row classifier element-wise, including fallback rows, empty
+    strings and a duplicate row."""
     entries = [
         ("主演", "端脑", "朱元冰"),
         ("主演", "端脑", "蒋依依"),
@@ -204,8 +221,9 @@ def test_classify_batch_parity_with_loop():
         "AB with CD EF uppercase",
         DUANNAO_TEXT,  # duplicate row
     ]
+    by_pred = _by_predicate(entries)
     bp, bs = kbase.classify_batch(texts)
     for i, t in enumerate(texts):
-        lp, ls = kbase.classify(t)
+        lp, ls = classify_predicates(t, by_pred)
         assert bp[i] == lp, f"row {i}"
         assert bs[i] == ls, f"row {i}"

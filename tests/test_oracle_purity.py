@@ -1,63 +1,80 @@
-"""oracle_sql() purity (round-5 verdict item): the driver-facing
-oracle mapping must be a pure function of (catalog, sf_dir) —
-identical whether or not any query has executed — and every
-golden-based oracle must resolve through an ORACLE_TEMPLATES entry
-rather than only via the runtime re-point side effect."""
+"""The oracle registry: each catalog query registers its oracle once,
+as static SQL or as a pure function of sf_dir; ``oracle_sql()`` and
+``materialize_oracles`` are pure functions of (catalog, sf_dir),
+identical whether or not any query has executed."""
 
 from __future__ import annotations
 
+import pytest
+
 from information_extraction_spark import driver_queries as dq
+from information_extraction_spark.driver_queries import _registry
+
+SF_GATE = "/root/testdata/sf0.01"
+SF_SMALL = "/root/testdata/sf0.001"
+MODULES = (
+    "core", "core2", "core3", "kg", "relational", "sketches", "streamq",
+    "textdata",
+)
 
 
-def test_every_golden_oracle_has_a_pure_template():
-    golden = {n for n, s in dq.ORACLES.items() if "ie_spark_golden" in s}
-    templated = set()
-    for m in dq._MODULES:
-        templated |= set(getattr(m, "ORACLE_TEMPLATES", {}))
-    assert golden == templated
-    # templates must be registered for known queries only
-    assert templated <= set(dq.QUERIES)
-
-
-def test_materialize_oracles_is_sf_derived_and_default_consistent():
-    """At the driver-gate sf (0.01) the pure templates reproduce the
-    import-time snapshot byte-for-byte; at another sf every
-    golden-based oracle re-derives (different golden path) while the
-    static oracles are unchanged."""
-    at_001 = dq.materialize_oracles("/root/testdata/sf0.01")
-    assert at_001 == {
-        **{k: dq.ORACLES[k] for k in dq._CHANGED_THIS_ROUND
-           if k in dq.ORACLES},
-        **dq.ORACLES,
-    }
-    other = dq.materialize_oracles("/root/testdata/sf0.001")
-    golden = {n for n, s in dq.ORACLES.items() if "ie_spark_golden" in s}
+def test_golden_oracles_follow_sf():
+    """Every golden-based oracle is registered as a function of sf_dir
+    (a static string could name only one corpus's golden): it differs
+    between two corpora and names its own; static oracles do not
+    change."""
+    at_gate = dq.materialize_oracles(SF_GATE)
+    other = dq.materialize_oracles(SF_SMALL)
+    assert list(at_gate) == list(other) == list(dq.QUERIES)
+    golden = {n for n, s in at_gate.items() if "ie_spark_golden" in s}
+    assert golden == {n for n, o in _registry.ORACLES.items() if callable(o)}
     for n in golden:
-        assert other[n] != at_001[n], n
-        assert "sf0.001" in other[n], n
-    for n in set(at_001) - golden:
-        assert other[n] == at_001[n], n
+        assert other[n] != at_gate[n], n
+        assert "sf0.001" in other[n] and "sf0.01" in at_gate[n], n
+    for n in set(at_gate) - golden:
+        assert other[n] == at_gate[n], n
 
 
 def test_oracle_sql_is_call_order_independent(spark):
-    """Running a golden-re-pointing query at a NON-default sf must
-    not change what oracle_sql()/materialize_oracles return — the
-    exact coupling the round-4 verdict flagged (ORACLES[name]
-    mutated inside query bodies at call time)."""
+    """Running a golden-based query at a non-gate sf changes neither
+    oracle_sql() nor materialize_oracles."""
     import __spark_entry__ as e
 
     before = e.oracle_sql()
-    pure_before = dq.materialize_oracles("/root/testdata/sf0.001")
-    # kg_triple_support re-points ORACLES['kg_triple_support'] at the
-    # sf0.001 golden as a side effect of running.
-    dq.QUERIES["kg_triple_support"](spark, "/root/testdata/sf0.001").count()
-    assert dq.current_oracle("kg_triple_support") != before[
-        "kg_triple_support"
-    ]  # the live dict DID move (post-run lookup still works) ...
-    assert e.oracle_sql() == before  # ... but the driver API did not
-    assert dq.materialize_oracles("/root/testdata/sf0.001") == pure_before
-    # and the pure template equals what the runtime re-point installed
-    assert (
-        dq.current_oracle("kg_triple_support", "/root/testdata/sf0.001")
-        == dq.current_oracle("kg_triple_support")
-    )
+    pure_before = dq.materialize_oracles(SF_SMALL)
+    dq.QUERIES["kg_triple_support"](spark, SF_SMALL).count()
+    assert e.oracle_sql() == before
+    assert dq.materialize_oracles(SF_SMALL) == pure_before
+
+
+def test_duplicate_query_name_raises():
+    """Every module registers through the one ``_q``; a second
+    registration of a taken name raises, whichever module registered
+    it first, and leaves the registered query and oracle in place."""
+    import importlib
+
+    for module in MODULES:
+        mod = importlib.import_module(
+            f"information_extraction_spark.driver_queries.{module}"
+        )
+        assert mod._q is _registry._q, module
+    owners = {fn.__module__.rsplit(".", 1)[1]: n for n, fn in dq.QUERIES.items()}
+    assert set(owners) == set(MODULES)
+    for owner, name in sorted(owners.items()):
+        fn, oracle = dq.QUERIES[name], _registry.ORACLES[name]
+        with pytest.raises(ValueError, match=name):
+            _registry._q(name, "SELECT 1")(lambda spark, sf_dir: None)
+        assert dq.QUERIES[name] is fn, owner
+        assert _registry.ORACLES[name] is oracle, owner
+
+
+def test_changed_first_list_rejects_repeats_and_unknown_names():
+    order = list(dq.QUERIES)
+    first, second = order[0], order[1]
+    with pytest.raises(ValueError, match="repeats"):
+        dq._order_changed_first([second, first, second])
+    with pytest.raises(ValueError, match="unknown"):
+        dq._order_changed_first([second, "no_such_query"])
+    assert list(dq.QUERIES) == order
+    assert len(set(dq._CHANGED_THIS_ROUND)) == len(dq._CHANGED_THIS_ROUND)
+    assert order[: len(dq._CHANGED_THIS_ROUND)] == dq._CHANGED_THIS_ROUND

@@ -67,11 +67,12 @@ def main() -> int:
 
     from information_extraction_spark.driver_queries import (
         QUERIES,
-        current_oracle,
+        materialize_oracles,
     )
     from information_extraction_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[8]")
+    oracles = materialize_oracles(sf_dir)
+    spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
     # Fail FAST on oracle-scale blowups instead of eating the host:
     # an unbounded DuckDB run of a quadratic-ish oracle (dd_dup_
@@ -129,12 +130,10 @@ def main() -> int:
             record(name, False, -1, t0, "spark-error")
             failures += 1
             continue
-        # Resolve golden-based oracles through the PURE (name, sf_dir)
-        # template — call-order independent since round 5. The query
-        # still runs first because executing the oracle needs the
-        # golden parquet the Spark query materializes.
-        oracle = current_oracle(name, sf_dir)
-        if oracle is not None and "ie_spark_golden" in oracle:
+        # The query runs first: a golden-based oracle reads the golden
+        # parquet that the Spark query materializes for this sf_dir.
+        oracle = oracles[name]
+        if "ie_spark_golden" in oracle:
             import re as _re
 
             missing = [
@@ -151,13 +150,6 @@ def main() -> int:
                 record(name, False, len(got), t0, "golden-absent")
                 failures += 1
                 continue
-        if oracle is None:
-            print(
-                f"ok   {name}: rows-only ({len(got)} rows)"
-                f" [{time.time() - t0:.1f}s]"
-            )
-            record(name, True, len(got), t0, "rows-only")
-            continue
         try:
             exp = con.execute(oracle).fetchdf()
         except Exception as e:

@@ -21,6 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from information_extraction_spark.driver_queries._registry import _q
+from information_extraction_spark.operators.checkpoint import (
+    cut,
+    iterate,
+    releases_unread_cuts,
+)
 
 
 def _spread(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
@@ -2832,9 +2837,11 @@ WITH wc AS (
     return "".join(parts)
 
 
+@releases_unread_cuts
 def _bpe_train_state(spark: SparkSession, sf_dir: str):
     """Shared BPE training loop: returns (final symbol-state DF,
-    merge list) — p18 reports the merges, p19 the encoded words."""
+    merge list) — p18 reports the merges, p19 the encoded words. The
+    symbol state is cut per round on the round driver."""
     d = _docs(spark, sf_dir)
     wc = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -2842,15 +2849,9 @@ def _bpe_train_state(spark: SparkSession, sf_dir: str):
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
-    state = wc.select(
-        "word",
-        "cnt",
-        F.concat(
-            F.lit(" "), F.concat_ws(" ", F.split("word", "")), F.lit(" ")
-        ).alias("s"),
-    ).localCheckpoint()
     merges = []
-    for i in range(_BPE_ROUNDS):
+
+    def step(state: DataFrame, i: int) -> DataFrame:
         syms = state.select(
             "cnt", F.split(F.trim(F.col("s")), " ").alias("a")
         )
@@ -2882,13 +2883,15 @@ def _bpe_train_state(spark: SparkSession, sf_dir: str):
             f" ' {best['l']} {best['r']} ', ' {best['l']}{best['r']} '),"
             f" ' {best['l']} {best['r']} ', ' {best['l']}{best['r']} ')"
         )
-        # localCheckpoint per round: the merge is data-dependent, so
-        # cut lineage exactly as the other fixed-iteration loops do.
-        state = state.withColumn("s", new_s).localCheckpoint()
-    return state, merges
+        return cut(state.withColumn("s", new_s))
+
+    s0 = F.concat(F.lit(" "), F.concat_ws(" ", F.split("word", "")), F.lit(" "))
+    state = cut(wc.select("word", "cnt", s0.alias("s")))
+    return iterate(state, step, _BPE_ROUNDS), merges
 
 
 @_q("p18_bpe_train", _bpe_oracle_sql())
+@releases_unread_cuts
 def p18_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, merges = _bpe_train_state(spark, sf_dir)
     return spark.createDataFrame(
@@ -3686,13 +3689,16 @@ def emb_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle chains the same two support+prune steps as CTEs over the
 # identical kNN edge base. Load-bearing at the gate scale: 1308
 # kNN-closure edges -> 178 after round 1 -> the surviving core after
-# round 2, support recomputed each round on the shrunk graph.
+# round 2, support recomputed each round on the shrunk graph. Every
+# CTE read more than once is MATERIALIZED: DuckDB otherwise inlines
+# it per reference, replaying the k-means + kNN chain under each of
+# the triangle self-joins (out of memory at sf0.001 on a 15 GB host).
 
 _KTRUSS_ORACLE = f"""
 WITH knn AS ({_KNN_GRAPH_ORACLE}),
-e0 AS (
+e0 AS MATERIALIZED (
   SELECT DISTINCT least(src, nb) AS s, greatest(src, nb) AS d FROM knn
-), t1 AS (
+), t1 AS MATERIALIZED (
   SELECT x.s AS a, x.d AS b, y.d AS c
   FROM e0 x JOIN e0 y ON y.s = x.d JOIN e0 z ON z.s = x.s AND z.d = y.d
 ), s1 AS (
@@ -3701,9 +3707,9 @@ e0 AS (
     UNION ALL SELECT b, c FROM t1
     UNION ALL SELECT a, c FROM t1)
   GROUP BY 1, 2
-), e1 AS (
+), e1 AS MATERIALIZED (
   SELECT e0.s, e0.d FROM e0 JOIN s1 USING (s, d) WHERE s1.sup >= 2
-), t2 AS (
+), t2 AS MATERIALIZED (
   SELECT x.s AS a, x.d AS b, y.d AS c
   FROM e1 x JOIN e1 y ON y.s = x.d JOIN e1 z ON z.s = x.s AND z.d = y.d
 ), s2 AS (
@@ -4381,8 +4387,8 @@ def ta_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # form: the pool keeps a per-point running min-distance column;
 # each of the k steps is (a) one TakeOrdered(1) argmax — the farthest
 # point — and (b) one NARROW pass folding the new center into the
-# running min (center ships as a 64-literal array; lineage cut per
-# step). No pairwise matrix, no driver-side pool.
+# running min (center ships as a 64-literal array; cut per step on
+# the round driver). No pairwise matrix, no driver-side pool.
 #
 # Determinism contract: squared-L2 distances round to 6dp before any
 # comparison, argmax ties break on vec_id asc, the seed is the
@@ -4448,22 +4454,24 @@ def _sq_l2_to(center: list) -> "F.Column":
 
 
 @_q("emb_coreset", _coreset_oracle_sql())
+@releases_unread_cuts
 def emb_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed farthest-point traversal (see block comment): k
     TakeOrdered(1) argmaxes, each followed by a narrow running-min
-    fold of the new center."""
+    fold of the new center, cut on the round driver."""
     e = _emb(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     first = e.orderBy("vec_id").limit(1).collect()[0]
     sel = [(0, int(first["vec_id"]), None)]
-    st = e.withColumn("md", _sq_l2_to(first["v"])).localCheckpoint()
-    for i in range(1, _CORESET_K):
+
+    def step(st: DataFrame, i: int) -> DataFrame:
         top = st.orderBy(F.desc("md"), "vec_id").limit(1).collect()[0]
-        sel.append((i, int(top["vec_id"]), float(top["md"])))
-        st = st.withColumn(
-            "md", F.least("md", _sq_l2_to(top["v"]))
-        ).localCheckpoint()
+        sel.append((i + 1, int(top["vec_id"]), float(top["md"])))
+        return cut(st.withColumn("md", F.least("md", _sq_l2_to(top["v"]))))
+
+    st0 = cut(e.withColumn("md", _sq_l2_to(first["v"])))
+    iterate(st0, step, _CORESET_K - 1)
     return spark.createDataFrame(sel, "step long, vec_id long, d6 double")
 
 
@@ -4658,8 +4666,8 @@ def ta_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 # transform over the split array — no window, no shuffle) plus a
 # distinct on the pair key; the vertex set is the VOCABULARY, so the
 # 3 power iterations run over a vocab-bounded table no matter how
-# many documents feed it (the operators/graph.pagerank loop:
-# localCheckpointed edge table, node-sized rank vector per round).
+# many documents feed it (the operators/graph.pagerank loop: cut
+# edge table, node-sized rank vector per round).
 # Both engines round ranks to 6dp only at the end (the kg_pagerank
 # float contract).
 
@@ -5627,13 +5635,12 @@ def emb_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     k = _NN_DESCENT_K
-    e = (
+    e = cut(  # scored twice (init + refine) — read once
         _spread(spark, _emb(spark, sf_dir), "vec_id")
         .select("vec_id", "embedding")
         .withColumn(
             "nrm", F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
         )
-        .localCheckpoint()  # scored twice (init + refine) — read once
     )
 
     def _score(keys: DataFrame) -> DataFrame:
@@ -5682,12 +5689,11 @@ def emb_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ikeys = _same_bucket("bkt1").union(_same_bucket("bkt2")).distinct()
     w = Window.partitionBy("src").orderBy(F.col("cos4").desc(), F.col("nb"))
-    g0 = (
+    g0 = cut(  # init graph feeds und, keys AND the flag
         _score(ikeys)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("src", "nb", "cos4")
-        .localCheckpoint()  # init graph feeds und, keys AND the flag
     )
     und = (
         g0.select(F.col("src").alias("u"), F.col("nb").alias("x"))
@@ -6089,6 +6095,8 @@ def ta_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # neighbors at 7% cost on these near-isotropic synthetic embeddings,
 # the honest trade the audit exists to expose (real clustered
 # embeddings navigate far better; beam width/steps are the knobs).
+# The oracle MATERIALIZEs every CTE it reads more than once (DuckDB
+# otherwise replays the NN-Descent chain per reference).
 # Scale:
 # the per-step expansion is an equi-join of a ≤B-row frontier
 # against the closure (frontier broadcasts), scoring joins the
@@ -6106,7 +6114,7 @@ def _graph_search_oracle() -> str:
         steps.append(f"""
 , nb{t} AS (
   SELECT DISTINCT u.x AS vec_id FROM f{p} JOIN und u ON u.u = f{p}.vec_id
-), seen{t} AS (
+), seen{t} AS MATERIALIZED (
   SELECT vec_id FROM seen{p} UNION SELECT vec_id FROM nb{t}
 ), f{t} AS (
   SELECT vec_id FROM (
@@ -6116,9 +6124,9 @@ def _graph_search_oracle() -> str:
   WHERE rn <= {_BEAM_B}
 )""")
     return f"""
-WITH knn AS (
+WITH knn AS MATERIALIZED (
   SELECT src, nb FROM ({_NN_DESCENT_ORACLE})
-), und AS (
+), und AS MATERIALIZED (
   SELECT src AS u, nb AS x FROM knn UNION SELECT nb, src FROM knn
 ), qv AS (
   SELECT embedding AS q FROM embeddings
@@ -6127,12 +6135,12 @@ WITH knn AS (
   SELECT e.vec_id, CAST(unnest(e.embedding) AS DOUBLE) AS xe,
          CAST(unnest(qv.q) AS DOUBLE) AS xq
   FROM embeddings e CROSS JOIN qv
-), scores AS (
+), scores AS MATERIALIZED (
   SELECT vec_id,
          round(sum(xe * xq)
                / (sqrt(sum(xe * xe)) * sqrt(sum(xq * xq))), 4) AS cos4
   FROM su GROUP BY vec_id
-), f0 AS (SELECT CAST(0 AS BIGINT) AS vec_id),
+), f0 AS MATERIALIZED (SELECT CAST(0 AS BIGINT) AS vec_id),
 seen0 AS (SELECT vec_id FROM f0){"".join(steps)}
 , ans AS (
   SELECT s.vec_id, sc.cos4, row_number() OVER (
@@ -6152,51 +6160,51 @@ FROM ans a CROSS JOIN ns WHERE a.rn <= 5
 
 
 @_q("ann_graph_search", _graph_search_oracle())
+@releases_unread_cuts
 def ann_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic beam search over the NN-Descent graph (see
-    block comment)."""
+    block comment); the seen set and the beam are cut per step on the
+    round driver."""
     knn = emb_nn_descent(spark, sf_dir).select("src", "nb")
-    und = (
+    und = cut(
         knn.select(F.col("src").alias("u"), F.col("nb").alias("x"))
         .union(knn.select(F.col("nb").alias("u"), F.col("src").alias("x")))
         .distinct()
-        .localCheckpoint()
     )
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
     qid = e.agg(F.max("vec_id")).collect()[0][0]  # bounded scalar
     qrow = e.filter(F.col("vec_id") == qid).collect()
     qvec = F.array(*[F.lit(float(x)) for x in qrow[0]["embedding"]])
-    scores = e.select(
-        "vec_id",
-        F.round(
-            _dot(F.col("embedding"), qvec)
-            / (
-                F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-                * F.sqrt(_dot(qvec, qvec))
-            ),
-            4,
-        ).alias("cos4"),
-    ).localCheckpoint()  # joined by every step + the final audit
-    spark_f = e.sparkSession.createDataFrame(
-        [(0,)], "vec_id long"
+    cos4 = F.round(
+        _dot(F.col("embedding"), qvec)
+        / (
+            F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+            * F.sqrt(_dot(qvec, qvec))
+        ),
+        4,
     )
-    seen = spark_f
-    frontier = spark_f
-    for _ in range(_BEAM_STEPS):
+    # joined by every step + the final audit
+    scores = cut(e.select("vec_id", cos4.alias("cos4")))
+
+    def step(state: tuple, _: int) -> tuple:
+        seen, frontier = state
         nbrs = (
             F.broadcast(frontier)
             .join(und, frontier.vec_id == und.u)
             .select(F.col("x").alias("vec_id"))
             .distinct()
         )
-        seen = seen.union(nbrs).distinct().localCheckpoint()
-        frontier = (
+        seen = cut(seen.union(nbrs).distinct())
+        frontier = cut(
             seen.join(scores, "vec_id")
             .orderBy(F.col("cos4").desc(), "vec_id")
             .limit(_BEAM_B)
             .select("vec_id")
-            .localCheckpoint()
         )
+        return seen, frontier
+
+    entry = spark.createDataFrame([(0,)], "vec_id long")
+    seen, _ = iterate((entry, entry), step, _BEAM_STEPS)
     ns = F.broadcast(seen.agg(F.count("*").cast("long").alias("n_seen")))
     from pyspark.sql import Window
 

@@ -55,15 +55,3 @@ def salted_count(
     salted = with_salt(df, buckets)
     partial = salted.groupBy(*keys, "_salt").agg(F.count("*").alias("_c"))
     return partial.groupBy(*keys).agg(F.sum("_c").alias("count"))
-
-
-def repartition_by_conversation(
-    df: DataFrame, num_partitions: int | None = None
-) -> DataFrame:
-    """Range-repartition on (conv_id, turn_idx) — keeps conversations
-    clustered and sorted-ish for downstream per-conversation windows
-    while bounding any single hot conversation to contiguous ranges."""
-    cols = [F.col("conv_id"), F.col("turn_idx")]
-    if num_partitions:
-        return df.repartitionByRange(num_partitions, *cols)
-    return df.repartitionByRange(*cols)

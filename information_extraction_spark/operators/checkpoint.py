@@ -30,21 +30,140 @@ uniqueness, emulated at the filesystem level).
 Scale: the manifest is a handful of rows per stage; the data
 checkpoint is the same Parquet the next stage would shuffle-read
 anyway, so resume costs nothing extra beyond the write.
+
+Lineage cuts are the in-memory counterpart for iterative operators:
+``cut`` (a ``localCheckpoint``), the round driver ``iterate``, and the
+decorator ``releases_unread_cuts``. A cut stays persisted until
+released, and this module is the one place that releases cuts.
 """
 
 from __future__ import annotations
 
 import copy
+import functools
 import hashlib
 import json
 import os
+import threading
 import uuid
-from typing import Any
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 COMPLETION_PARTITION = -1  # sentinel row marking a finished stage
+
+
+_calls = threading.local()
+
+
+def _stack() -> list[dict[int, DataFrame]]:
+    """Per thread, the cuts (RDD id -> cut) each open decorated call
+    made, innermost call last."""
+    return _calls.__dict__.setdefault("stack", [])
+
+
+def _frames(obj: Any) -> list[DataFrame]:
+    """The DataFrames in a result or loop state (tuples, lists)."""
+    if isinstance(obj, DataFrame):
+        return [obj]
+    if isinstance(obj, (tuple, list)):
+        return [df for x in obj for df in _frames(x)]
+    return []
+
+
+def _seq(scala_seq) -> Iterator:
+    it = scala_seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _read_ids(obj: Any) -> set[int]:
+    """RDD ids of the ``LogicalRDD`` leaves of every DataFrame plan in
+    ``obj``, subqueries included: the cuts those DataFrames read. A cut
+    is itself one such leaf."""
+    ids = set()
+    for df in _frames(obj):
+        plan = df._jdf.queryExecution().analyzed()
+        plans = [plan, *_seq(plan.subqueriesAll())]
+        for leaf in (lf for p in plans for lf in _seq(p.collectLeaves())):
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                ids.add(leaf.rdd().id())
+    return ids
+
+
+def cut(df: DataFrame) -> DataFrame:
+    """``df`` materialized now with its lineage truncated (an eager
+    ``localCheckpoint``), owned by the innermost open
+    ``releases_unread_cuts`` call, if any."""
+    c, stack = df.localCheckpoint(), _stack()
+    if stack:
+        stack[-1][c._jdf.logicalPlan().rdd().id()] = c
+    return c
+
+
+def release(df: DataFrame) -> None:
+    """Drop the blocks a cut keeps persisted (``DataFrame.unpersist``
+    does not reach them); a plan still reading it then fails with
+    "checkpoint block not found"."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
+
+
+def releases_unread_cuts(fn: Callable) -> Callable:
+    """On return, release every cut made during the call (by ``cut``,
+    in ``fn`` or its callees) that the result's plan does not read, and
+    hand the rest to the enclosing decorated call; on an exception,
+    release them all."""
+
+    @functools.wraps(fn)
+    def call(*args, **kwargs):
+        stack, made = _stack(), {}
+        stack.append(made)
+        try:
+            result = fn(*args, **kwargs)
+        except BaseException:
+            for c in made.values():
+                release(c)
+            raise
+        finally:
+            stack.pop()
+        read = _read_ids(result)
+        for rid, c in made.items():
+            if rid not in read:
+                release(c)
+            elif stack:
+                stack[-1][rid] = c
+        return result
+
+    return call
+
+
+def iterate(state: Any, step: Callable[[Any, int], Any], rounds: int) -> Any:
+    """The round driver: ``state = step(state, i)`` for i in
+    0..rounds-1, ending early when a step returns None (the state it
+    was given stays). Runs inside a ``releases_unread_cuts`` call.
+
+    ``state`` is a DataFrame or a tuple of DataFrames and plain values,
+    and holds everything a later round reads; a step cuts what it
+    carries forward. After each step the loop releases the cuts it
+    made — the replaced state's and the step's own — that the current
+    state does not read. Cuts made before the loop (an edge table) are
+    the enclosing call's, except the initial state's own.
+    """
+    made = _stack()[-1]
+    live = {r for r, c in made.items() if any(c is df for df in _frames(state))}
+    for i in range(rounds):
+        before = set(made)
+        new = step(state, i)
+        live |= made.keys() - before
+        state = state if new is None else new
+        read = _read_ids(state)
+        for rid in live - read:
+            release(made.pop(rid))
+        live &= read
+        if new is None:
+            return state
+    return state
 
 
 def params_hash(params: dict[str, Any]) -> str:
@@ -74,9 +193,7 @@ def input_identity(df: DataFrame) -> str | None:
     parts = [
         plan.canonicalized().treeString(True, False, 2**31 - 1, False, False)
     ]
-    leaves = plan.collectLeaves().iterator()
-    while leaves.hasNext():
-        leaf = leaves.next()
+    for leaf in _seq(plan.collectLeaves()):
         kind = leaf.getClass().getSimpleName()
         if kind == "LocalRelation":
             parts.append(str(leaf.semanticHash()))

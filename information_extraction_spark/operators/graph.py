@@ -3,23 +3,25 @@
 The reference stops at emitting (subj, pred, obj) triples; the first
 thing a KG consumer computes over the resulting graph is importance —
 PageRank over the entity graph. This module implements the standard
-synchronous power-iteration PageRank as a DataFrame loop, the same
-lineage-cut-per-iteration shape as the connected-components merge in
-operators/linking.py.
+synchronous power-iteration PageRank as a DataFrame loop, and the
+other iterative graph operators in the same shape.
 
 Scale shape (the part that must survive 100 TB):
 
 - The edge table is the big side. It is materialized ONCE
-  (``localCheckpoint``) with its out-degree already attached, then
+  (``checkpoint.cut``) with its out-degree already attached, then
   only *scanned* each iteration — never recomputed, never re-shuffled
   by the loop itself.
 - The rank vector is node-sized (orders of magnitude smaller than the
   edges). Each iteration shuffles: (a) ranks onto the edge table's
   src key for the contribution join, (b) contributions onto dst for
   the sum. Both shuffles move node/contribution-sized data.
-- Lineage is cut per iteration (``localCheckpoint``), exactly like
-  the connected-components star contraction — without it the plan
-  doubles per iteration and iteration k replays all k-1 predecessors.
+- Every loop here runs on the round driver ``checkpoint.iterate``:
+  each round's state is cut (without it the plan doubles per
+  iteration and iteration k replays all k-1 predecessors), and the
+  round it replaces is released once the new one is materialized.
+  The operators are decorated ``checkpoint.releases_unread_cuts``, so
+  a call leaves persisted only the cuts its result reads.
 - Iteration count is FIXED (a hyperparameter), not convergence-tested
   per element, so the loop runs a deterministic number of jobs and
   its result is exactly expressible as k chained self-joins — which
@@ -42,6 +44,12 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from information_extraction_spark.operators.checkpoint import (
+    cut,
+    iterate,
+    releases_unread_cuts,
+)
 
 
 def triple_edges(triples: DataFrame) -> DataFrame:
@@ -636,6 +644,7 @@ def graph_diff(base: DataFrame, new: DataFrame) -> DataFrame:
     return added.unionByName(removed)
 
 
+@releases_unread_cuts
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
@@ -654,20 +663,17 @@ def pagerank(
     rank_{i+1}(v) = (1-d)·1[v∈S] + d·Σ — the random-walk-with-
     restart relevance of every entity to the seed set.
 
-    The edge table (with out-degree attached) is localCheckpointed
-    once and reused by every iteration; the per-iteration
-    localCheckpoint on the rank vector cuts lineage so iteration k
-    costs O(1) jobs, not O(k) (the CC loop's pattern,
-    operators/linking.py:100-111).
+    The edge table (with out-degree attached) is cut once and reused
+    by every iteration; the rank vector is cut per iteration on the
+    round driver, so iteration k costs O(1) jobs, not O(k).
     """
     deg = edges.groupBy("src").agg(F.count("*").cast("double").alias("_d"))
     # One materialization of the big side; every iteration scans this.
-    edges_deg = edges.join(deg, "src").localCheckpoint()
-    nodes = (
+    edges_deg = cut(edges.join(deg, "src"))
+    nodes = cut(
         edges.select(F.col("src").alias("n"))
         .unionAll(edges.select(F.col("dst").alias("n")))
         .distinct()
-        .localCheckpoint()
     )
     if seeds is None:
         base = F.lit(1.0 - damping)
@@ -676,8 +682,8 @@ def pagerank(
         seed_ind = F.col("n").isin(list(seeds)).cast("double")
         base = F.lit(1.0 - damping) * seed_ind
         init = seed_ind
-    ranks = nodes.withColumn("r", init)
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         contrib = (
             edges_deg.join(ranks, edges_deg.src == ranks.n)
             .select(
@@ -687,16 +693,21 @@ def pagerank(
             .groupBy("n")
             .agg(F.sum("_c").alias("_c"))
         )
-        ranks = nodes.join(contrib, "n", "left").select(
-            "n",
-            (
-                base
-                + F.lit(damping) * F.coalesce(F.col("_c"), F.lit(0.0))
-            ).alias("r"),
-        ).localCheckpoint()
+        return cut(
+            nodes.join(contrib, "n", "left").select(
+                "n",
+                (
+                    base
+                    + F.lit(damping) * F.coalesce(F.col("_c"), F.lit(0.0))
+                ).alias("r"),
+            )
+        )
+
+    ranks = iterate(nodes.withColumn("r", init), step, iterations)
     return ranks.select(F.col("n").alias("entity"), F.col("r").alias("rank"))
 
 
+@releases_unread_cuts
 def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg 1999) over directed (src, dst)
     edges: hub and authority scores, sum-normalized per half-step.
@@ -722,48 +733,48 @@ def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     half-step; what shuffles is the node-sized score vector (join
     onto the edge key, then a map-side-combined sum). The normalizer
     is a 1-row aggregate broadcast back — never a window over a
-    single partition. Lineage cut per iteration, as in pagerank().
+    single partition. Both scores are cut per half-step on the round
+    driver, as in pagerank().
     Long-sum headroom: Σ contributions ≤ 1e6·|E| before the first
     normalize and ≈1e6·indeg after, so the BIGINT path holds past
     1e12 edges.
     """
-    e = edges.select("src", "dst").distinct().localCheckpoint()
-    nodes = (
+    e = cut(edges.select("src", "dst").distinct())
+    nodes = cut(
         e.select(F.col("src").alias("n"))
         .unionAll(e.select(F.col("dst").alias("n")))
         .distinct()
-        .localCheckpoint()
     )
 
-    def _normalize(raw: DataFrame) -> DataFrame:
-        # raw: (n, r) with r an exact BIGINT sum of micro-unit scores.
+    def half_step(scores: DataFrame, src: str, dst: str) -> DataFrame:
+        # The other side's scores, summed over the ``src`` endpoint of
+        # each edge into its ``dst`` endpoint as an exact BIGINT sum of
+        # micro-unit scores, then normalized.
+        raw = (
+            e.join(scores.withColumnRenamed("n", src), src)
+            .groupBy(F.col(dst).alias("n"))
+            .agg(F.sum("s").cast("long").alias("r"))
+        )
         tot = raw.agg(F.sum("r").cast("long").alias("_tot"))
-        return raw.crossJoin(F.broadcast(tot)).select(
-            "n",
-            F.round(
-                F.col("r").cast("double")
-                * F.lit(1000000.0)
-                / F.col("_tot").cast("double")
+        return cut(
+            raw.crossJoin(F.broadcast(tot)).select(
+                "n",
+                F.round(
+                    F.col("r").cast("double")
+                    * F.lit(1000000.0)
+                    / F.col("_tot").cast("double")
+                )
+                .cast("long")
+                .alias("s"),
             )
-            .cast("long")
-            .alias("s"),
         )
 
-    hub = nodes.select("n", F.lit(1000000).cast("long").alias("s"))
-    auth = None
-    for _ in range(iterations):
-        a_raw = (
-            e.join(hub.withColumnRenamed("n", "src"), "src")
-            .groupBy(F.col("dst").alias("n"))
-            .agg(F.sum("s").cast("long").alias("r"))
-        )
-        auth = _normalize(a_raw).localCheckpoint()
-        h_raw = (
-            e.join(auth.withColumnRenamed("n", "dst"), "dst")
-            .groupBy(F.col("src").alias("n"))
-            .agg(F.sum("s").cast("long").alias("r"))
-        )
-        hub = _normalize(h_raw).localCheckpoint()
+    def step(state: tuple, _: int) -> tuple:
+        auth = half_step(state[0], "src", "dst")
+        return half_step(auth, "dst", "src"), auth
+
+    hub0 = nodes.select("n", F.lit(1000000).cast("long").alias("s"))
+    hub, auth = iterate((hub0, None), step, iterations)
     return (
         nodes.join(hub.withColumnRenamed("s", "_h"), "n", "left")
         .join(auth.withColumnRenamed("s", "_a"), "n", "left")
@@ -782,8 +793,8 @@ def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
 def undirected_edges(edges: DataFrame) -> DataFrame:
     """Distinct UNDIRECTED edge set from directed (src, dst) edges:
     both orientations, deduped. One map-side-combined distinct; the
-    result is localCheckpointed by the iterative consumers (LPA, BFS)
-    so the union+distinct runs once, not per iteration."""
+    iterative consumers (LPA, BFS) cut the result so the union+distinct
+    runs once, not per iteration."""
     return (
         edges.select("src", "dst")
         .unionAll(
@@ -795,6 +806,7 @@ def undirected_edges(edges: DataFrame) -> DataFrame:
     )
 
 
+@releases_unread_cuts
 def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Fixed-iteration SYNCHRONOUS label propagation (Raghavan et al.
     2007) over the undirected entity graph — the cheap community
@@ -807,21 +819,19 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     all nodes update simultaneously. Returns (entity, community) after
     ``iterations`` rounds.
 
-    Scale shape: the undirected edge table materializes once
-    (localCheckpoint) and is scanned per iteration; what shuffles each
-    round is the node-sized label vector — join onto the edge src key,
-    ONE map-side-combined (entity, label) count, then a struct-min
-    argmax per entity (never a whole-partition window). Lineage cut
-    per iteration (the pagerank loop's pattern). Synchronous LPA can
+    Scale shape: the undirected edge table materializes once (a cut)
+    and is scanned per iteration; what shuffles each round is the
+    node-sized label vector — join onto the edge src key, ONE
+    map-side-combined (entity, label) count, then a struct-min argmax
+    per entity (never a whole-partition window). The labels are cut
+    per iteration on the round driver. Synchronous LPA can
     oscillate on bipartite graphs — a FIXED iteration count is the
     point: the output is a deterministic function of the graph, which
     is what a parity-checked pipeline stage needs.
     """
-    u = undirected_edges(edges).localCheckpoint()
-    labels = u.select(F.col("src").alias("entity")).distinct().select(
-        "entity", F.col("entity").alias("label")
-    )
-    for _ in range(iterations):
+    u = cut(undirected_edges(edges))
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         counts = (
             u.join(
                 labels.select(
@@ -834,7 +844,7 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
         )
         # argmax by (cnt DESC, label ASC) == struct-min of
         # (-cnt, label): one partial-aggregated shuffle, no window.
-        labels = (
+        return cut(
             counts.groupBy("entity")
             .agg(
                 F.min(
@@ -845,11 +855,58 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
                 ).alias("m")
             )
             .select("entity", F.col("m.l").alias("label"))
-            .localCheckpoint()
         )
+
+    own = u.select(F.col("src").alias("entity")).distinct()
+    labels = iterate(own.withColumn("label", F.col("entity")), step, iterations)
     return labels.select("entity", F.col("label").alias("community"))
 
 
+def _frontier_bfs(
+    u: DataFrame, seeds: list[tuple[str, str]], max_hops: int
+) -> DataFrame:
+    """Keyed multi-source BFS over the undirected edge table ``u``: the
+    (entity, sp_src) seeds of one sp_src start one search at dist 0.
+    Returns (entity, sp_src, dist INT, sigma BIGINT) within
+    ``max_hops``; sigma counts shortest paths from the search's seeds
+    (Brandes 2001's forward pass: 1 at a seed; a node first reached at
+    hop h sums it over its hop-(h-1) neighbors).
+
+    Scale shape: per hop the frontier — the cut state's rows at dist
+    h-1 — joins the edge table on src, the sigma sum is one
+    map-side-combined shuffle on (entity, sp_src), and a LeftAnti on
+    that key drops settled rows (both sides unbounded, nothing
+    broadcasts by assumption); the state is cut on the round driver.
+    """
+    key = ["entity", "sp_src"]
+    visited = u.sparkSession.createDataFrame(
+        [(v, k, 0, 1) for v, k in seeds],
+        "entity string, sp_src string, dist int, sigma long",
+    )
+
+    def step(visited: DataFrame, i: int) -> DataFrame:
+        frontier = visited.filter(F.col("dist") == i)
+        new = (
+            u.join(frontier.withColumnRenamed("entity", "src"), "src")
+            .groupBy(F.col("dst").alias("entity"), "sp_src")
+            .agg(F.sum("sigma").cast("long").alias("sigma"))
+            .join(visited.select(key), key, "left_anti")
+        )
+        return cut(visited.unionByName(new.withColumn("dist", F.lit(i + 1))))
+
+    return iterate(visited, step, max_hops)
+
+
+def _top_degree(u: DataFrame, n: int) -> list[str]:
+    """The ``n`` highest-degree nodes of the undirected edge table,
+    ties to the smaller name: a bounded n-row collect."""
+    deg = u.groupBy("src").agg(F.count("*").alias("d"))
+    return [
+        r["src"] for r in deg.orderBy(F.desc("d"), "src").limit(n).collect()
+    ]
+
+
+@releases_unread_cuts
 def bfs_distances(
     edges: DataFrame, seeds: list[str], max_hops: int = 3
 ) -> DataFrame:
@@ -857,35 +914,15 @@ def bfs_distances(
     distance (0..max_hops) from the seed set; nodes beyond max_hops
     are absent. Returns (entity, dist).
 
-    Scale shape: per hop, the frontier (what changed last round — not
-    the full visited set) joins the localCheckpointed edge table on
-    src, and one LeftAnti against the visited table drops re-reached
-    nodes. Both sides of the anti-join are unbounded at warehouse
-    scale, so nothing broadcasts by assumption; the frontier join IS
-    the distributed expansion. Lineage cut per hop.
+    Scale shape: ``_frontier_bfs`` with every seed in one search.
     """
-    u = undirected_edges(edges).localCheckpoint()
-    spark = edges.sparkSession
-    visited = spark.createDataFrame(
-        [(s, 0) for s in seeds], "entity string, dist int"
-    ).localCheckpoint()
-    frontier = visited.select("entity")
-    for hop in range(1, max_hops + 1):
-        reached = (
-            u.join(
-                frontier.select(F.col("entity").alias("src")), "src"
-            )
-            .select(F.col("dst").alias("entity"))
-            .distinct()
-        )
-        new = reached.join(visited, "entity", "left_anti").select(
-            "entity", F.lit(hop).cast("int").alias("dist")
-        )
-        visited = visited.unionAll(new).localCheckpoint()
-        frontier = new.select("entity")
-    return visited
+    u = cut(undirected_edges(edges))
+    return _frontier_bfs(u, [(s, "") for s in seeds], max_hops).select(
+        "entity", "dist"
+    )
 
 
+@releases_unread_cuts
 def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     """Fixed-round k-core peel over the undirected entity graph: each
     round drops every node whose CURRENT degree is below ``k`` (and
@@ -902,20 +939,20 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     plus two semi-joins filtering the edge table on its already-keyed
     endpoints — no windows, no broadcast-by-assumption (the surviving
     node set is unbounded at warehouse scale; Catalyst/AQE may still
-    choose broadcast when a round's survivor table is small). Lineage
-    cut per round.
+    choose broadcast when a round's survivor table is small), cut per
+    round on the round driver.
     """
-    u = undirected_edges(edges).localCheckpoint()
-    for _ in range(rounds):
+
+    def step(u: DataFrame, _: int) -> DataFrame:
         deg = u.groupBy("src").agg(F.count("*").cast("long").alias("d"))
         keep = deg.filter(F.col("d") >= k).select("src")
-        u = (
-            u.join(keep, "src", "left_semi")
-            .join(
+        return cut(
+            u.join(keep, "src", "left_semi").join(
                 keep.select(F.col("src").alias("dst")), "dst", "left_semi"
             )
-            .localCheckpoint()
         )
+
+    u = iterate(cut(undirected_edges(edges)), step, rounds)
     return (
         u.groupBy(F.col("src").alias("entity"))
         .agg(F.count("*").cast("long").alias("degree"))
@@ -1021,6 +1058,7 @@ def enumerate_triangles(edges: DataFrame, deg: DataFrame | None = None) -> DataF
     )
 
 
+@releases_unread_cuts
 def ktruss_edges(edges: DataFrame, k: int = 4, rounds: int = 2) -> DataFrame:
     """Fixed-round k-truss pruning over canonical (src < dst)
     undirected edges: each round computes per-edge triangle SUPPORT
@@ -1039,9 +1077,9 @@ def ktruss_edges(edges: DataFrame, k: int = 4, rounds: int = 2) -> DataFrame:
     enumerate_triangles), a 3-way unionAll to edge incidences, ONE
     map-side-combined count on the canonical edge key, and an inner
     join back to the shrinking edge set (zero-support edges drop via
-    the join itself). Lineage cut per round."""
-    cur = edges.select("src", "dst").localCheckpoint()
-    for _ in range(rounds):
+    the join itself), cut per round on the round driver."""
+
+    def step(cur: DataFrame, _: int) -> DataFrame:
         tri = enumerate_triangles(cur)
         inc = (
             tri.select(
@@ -1064,13 +1102,13 @@ def ktruss_edges(edges: DataFrame, k: int = 4, rounds: int = 2) -> DataFrame:
         sup = inc.groupBy("src", "dst").agg(
             F.count("*").cast("long").alias("support")
         )
-        cur = (
+        return cut(
             cur.select("src", "dst")
             .join(sup, ["src", "dst"])
             .filter(F.col("support") >= k - 2)
-            .localCheckpoint()
         )
-    return cur
+
+    return iterate(cut(edges.select("src", "dst")), step, rounds)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -1179,7 +1217,7 @@ def deterministic_walks(edges: DataFrame, steps: int = 3) -> DataFrame:
     neighbors carries NULL through the remaining hops (unreachable
     on an undirected closure, kept for filtered edge sets).
     """
-    und = undirected_edges(edges).localCheckpoint()
+    und = cut(undirected_edges(edges))
     walks = edges.select(F.col("src").alias("start")).distinct()
     from information_extraction_spark.functions.hashing import h48
 
@@ -1205,6 +1243,7 @@ def deterministic_walks(edges: DataFrame, steps: int = 3) -> DataFrame:
     return walks
 
 
+@releases_unread_cuts
 def bellman_ford(
     weighted_edges: DataFrame, seeds: list[str], rounds: int = 3
 ) -> DataFrame:
@@ -1221,27 +1260,26 @@ def bellman_ford(
     nodes (a longer-hop path can be CHEAPER), so the whole dist
     vector joins the edge table each round — one equi-join on src +
     one map-side-combined min per round, both unbounded (nothing
-    broadcasts by assumption); lineage cut per round. BFS's
-    frontier-only join is the unweighted special case."""
+    broadcasts by assumption); dist is cut per round on the round
+    driver. BFS's frontier-only join is the unweighted special case."""
     spark = weighted_edges.sparkSession
-    e = weighted_edges.select("src", "dst", "w").localCheckpoint()
-    dist = spark.createDataFrame(
-        [(s, 0) for s in seeds], "entity string, dist long"
-    ).localCheckpoint()
-    for _ in range(rounds):
+    e = cut(weighted_edges.select("src", "dst", "w"))
+
+    def step(dist: DataFrame, _: int) -> DataFrame:
         cand = e.join(
             dist.select(F.col("entity").alias("src"), "dist"), "src"
         ).select(
             F.col("dst").alias("entity"),
             (F.col("dist") + F.col("w")).alias("dist"),
         )
-        dist = (
+        return cut(
             dist.unionByName(cand)
             .groupBy("entity")
             .agg(F.min("dist").cast("long").alias("dist"))
-            .localCheckpoint()
         )
-    return dist
+
+    dist0 = spark.createDataFrame([(s, 0) for s in seeds], "entity string, dist long")
+    return iterate(dist0, step, rounds)
 
 
 def modularity(edges: DataFrame, communities: DataFrame) -> DataFrame:
@@ -1468,6 +1506,7 @@ def conductance(edges: DataFrame, communities: DataFrame) -> DataFrame:
     )
 
 
+@releases_unread_cuts
 def landmark_distances(
     edges: DataFrame, n_landmarks: int = 4, max_hops: int = 3
 ) -> DataFrame:
@@ -1481,35 +1520,14 @@ def landmark_distances(
     when a shortest path passes a landmark. At 10^12 edges this is k
     BFS passes, not an all-pairs computation.
 
-    Scale shape: all k BFS run in ONE multi-source pass with the
-    frontier keyed (entity, landmark) — per hop, only what changed
-    joins the localCheckpointed edge table, and a LeftAnti on the
-    (entity, landmark) key drops re-reached rows (both sides
-    unbounded, nothing broadcasts by assumption). The landmark pick
-    is a bounded k-row collect. Returns (entity, lm, dist)."""
-    u = undirected_edges(edges).localCheckpoint()
-    deg = u.groupBy("src").agg(F.count("*").alias("d"))
-    lms = [
-        r["src"]
-        for r in deg.orderBy(F.desc("d"), "src").limit(n_landmarks).collect()
-    ]
-    spark = edges.sparkSession
-    visited = spark.createDataFrame(
-        [(lm, lm, 0) for lm in lms], "entity string, lm string, dist int"
-    ).localCheckpoint()
-    frontier = visited.select("entity", "lm")
-    for hop in range(1, max_hops + 1):
-        reached = (
-            u.join(frontier.withColumnRenamed("entity", "src"), "src")
-            .select(F.col("dst").alias("entity"), "lm")
-            .distinct()
-        )
-        new = reached.join(visited, ["entity", "lm"], "left_anti").select(
-            "entity", "lm", F.lit(hop).cast("int").alias("dist")
-        )
-        visited = visited.unionAll(new).localCheckpoint()
-        frontier = new.select("entity", "lm")
-    return visited
+    Scale shape: all k BFS run in ONE ``_frontier_bfs`` pass keyed by
+    landmark. The landmark pick is a bounded k-row collect. Returns
+    (entity, lm, dist)."""
+    u = cut(undirected_edges(edges))
+    lms = _top_degree(u, n_landmarks)
+    return _frontier_bfs(u, [(lm, lm) for lm in lms], max_hops).select(
+        "entity", F.col("sp_src").alias("lm"), "dist"
+    )
 
 
 def wl_fingerprints(triples: DataFrame, rounds: int = 2) -> DataFrame:
@@ -1621,6 +1639,7 @@ def wl_fingerprints(triples: DataFrame, rounds: int = 2) -> DataFrame:
     )
 
 
+@releases_unread_cuts
 def shortest_path_counts(
     edges: DataFrame, n_sources: int = 2, max_hops: int = 3
 ) -> DataFrame:
@@ -1633,54 +1652,21 @@ def shortest_path_counts(
     canonicalization-merge signal kg_landmark_dist's distances alone
     can't give).
 
-    sigma recurrence: sigma(source) = 1; a node first reached at hop
-    h has sigma = SUM of sigma over its hop-(h-1) neighbors (every
-    shortest path extends a shortest path to a predecessor). Exact
+    sigma is the Brandes recurrence ``_frontier_bfs`` carries: exact
     BIGINT — no sampling, no floats.
 
-    Scale shape: the landmark_distances multi-source pattern — all
-    sources run in ONE pass keyed (entity, src); per hop the frontier
-    joins the localCheckpointed edge table, the sigma sum is one
-    map-side-combined shuffle on (entity, src), and a LeftAnti on the
-    same key drops already-settled nodes (nothing broadcasts; hot
-    frontier nodes reduce map-side in the sum). max_hops bounds the
-    loop like every fixed-iteration operator here.
+    Scale shape: all sources run in ONE ``_frontier_bfs`` pass keyed
+    by source. max_hops bounds the loop like every fixed-iteration
+    operator here.
     """
-    u = undirected_edges(edges).localCheckpoint()
-    deg = u.groupBy("src").agg(F.count("*").alias("d"))
-    srcs = [
-        r["src"]
-        for r in deg.orderBy(F.desc("d"), "src").limit(n_sources).collect()
-    ]
-    spark = edges.sparkSession
-    visited = spark.createDataFrame(
-        [(s, s, 0, 1) for s in srcs],
-        "entity string, sp_src string, dist int, sigma long",
-    ).localCheckpoint()
-    frontier = visited.select("entity", "sp_src", "sigma")
-    for hop in range(1, max_hops + 1):
-        sums = (
-            u.join(frontier.withColumnRenamed("entity", "src"), "src")
-            .groupBy(F.col("dst").alias("entity"), "sp_src")
-            .agg(F.sum("sigma").cast("long").alias("sigma"))
-        )
-        new = sums.join(
-            visited.select("entity", "sp_src"),
-            ["entity", "sp_src"],
-            "left_anti",
-        ).select(
-            "entity", "sp_src", F.lit(hop).cast("int").alias("dist"), "sigma"
-        )
-        visited = visited.unionByName(new).localCheckpoint()
-        frontier = new.select("entity", "sp_src", "sigma")
-    return visited.select(
-        "entity",
-        "sp_src",
-        F.col("dist").cast("long").alias("dist"),
-        "sigma",
+    u = cut(undirected_edges(edges))
+    srcs = _top_degree(u, n_sources)
+    return _frontier_bfs(u, [(s, s) for s in srcs], max_hops).select(
+        "entity", "sp_src", F.col("dist").cast("long").alias("dist"), "sigma"
     )
 
 
+@releases_unread_cuts
 def truth_discovery(
     assertions: DataFrame, rounds: int = 1
 ) -> DataFrame:
@@ -1711,14 +1697,14 @@ def truth_discovery(
 
     One (rounds=1) full belief->trust->belief sweep costs 3 keyed
     shuffles over the edge table + 2 scalar maxes; the edge table is
-    localCheckpointed once and every half-step is a map-side-combined
-    aggregate on either the claim key or the source key. Output: the
+    cut once; every half-step is a map-side-combined aggregate on the
+    claim or the source key, cut on the round driver. Output: the
     CONFLICT slots only — (subject, predicate) with >= 2 distinct
     claimed objects — with the winning object (belief DESC, object
     ASC), its belief_ppm, and the slot's candidate count.
     """
     claim_key = ["subject", "predicate", "object"]
-    e = assertions.select("source", *claim_key).distinct().localCheckpoint()
+    e = cut(assertions.select("source", *claim_key).distinct())
 
     def _norm(df: DataFrame, col: str) -> DataFrame:
         mx = F.broadcast(df.agg(F.max(col).alias("_mx")))
@@ -1727,31 +1713,28 @@ def truth_discovery(
             F.expr(f"({col} * 1000000L) div _mx").cast("long").alias(col),
         )
 
-    trust = (
-        e.select("source")
-        .distinct()
-        .withColumn("t", F.lit(1_000_000).cast("long"))
-    )
-    belief = None
-    for _ in range(rounds):
-        belief = _norm(
+    def beliefs(trust: DataFrame) -> DataFrame:
+        return _norm(
             e.join(trust, "source")
             .groupBy(*claim_key)
             .agg(F.sum("t").cast("long").alias("b")),
             "b",
-        ).localCheckpoint()
-        trust = _norm(
-            e.join(belief, claim_key)
-            .groupBy("source")
-            .agg(F.sum("b").cast("long").alias("t")),
-            "t",
-        ).localCheckpoint()
-    belief = _norm(
-        e.join(trust, "source")
-        .groupBy(*claim_key)
-        .agg(F.sum("t").cast("long").alias("b")),
-        "b",
-    )
+        )
+
+    def step(trust: DataFrame, _: int) -> DataFrame:
+        belief = cut(beliefs(trust))
+        return cut(
+            _norm(
+                e.join(belief, claim_key)
+                .groupBy("source")
+                .agg(F.sum("b").cast("long").alias("t")),
+                "t",
+            )
+        )
+
+    t0 = F.lit(1_000_000).cast("long").alias("t")
+    trust = iterate(e.select("source").distinct().select("*", t0), step, rounds)
+    belief = beliefs(trust)
     from pyspark.sql import Window
 
     w = Window.partitionBy("subject", "predicate")
@@ -1772,6 +1755,7 @@ def truth_discovery(
     )
 
 
+@releases_unread_cuts
 def betweenness_pivots(
     edges: DataFrame, n_sources: int = 2, max_hops: int = 3
 ) -> DataFrame:
@@ -1790,30 +1774,25 @@ def betweenness_pivots(
     with per-term rounding. Output: per non-pivot reached entity, the
     summed pair-dependency bc_ppm and how many pivots reached it.
 
-    Scale shape: the levels of the visited table are disjoint slices
-    of one localCheckpointed DataFrame; each backward level is ONE
-    equi-join of level d against level d+1 through the edge table
-    keyed (dst, sp_src) plus one map-side-combined sum on
-    (entity, sp_src) — max_hops bounded, no windows, nothing
-    collects but the pivot pick.
+    Scale shape: one cut edge table feeds both passes; the levels are
+    disjoint slices of the forward BFS's cut state; each backward
+    level is ONE equi-join of level d against level d+1 through the
+    edge table keyed (dst, sp_src) plus one map-side-combined sum on
+    (entity, sp_src), cut on the round driver — max_hops bounded, no
+    windows, nothing collects but the pivot pick.
     """
-    u = undirected_edges(edges).localCheckpoint()
-    visited = shortest_path_counts(
-        edges, n_sources=n_sources, max_hops=max_hops
-    ).localCheckpoint()
+    u = cut(undirected_edges(edges))
+    srcs = _top_degree(u, n_sources)
+    visited = _frontier_bfs(u, [(s, s) for s in srcs], max_hops)
 
     def _level(d: int) -> DataFrame:
         return visited.filter(F.col("dist") == d).select(
             "entity", "sp_src", "sigma"
         )
 
-    # Deepest level: no successors inside the hop bound -> delta 0.
-    deltas = _level(max_hops).withColumn(
-        "delta", F.lit(0).cast("long")
-    )
-    out = [deltas]
-    for d in range(max_hops - 1, -1, -1):
-        lvl = _level(d)
+    def step(state: tuple, i: int) -> tuple:
+        deltas, acc = state
+        lvl = _level(max_hops - 1 - i)
         contrib = (
             lvl.join(u, lvl.entity == u.src)
             .join(
@@ -1835,9 +1814,8 @@ def betweenness_pivots(
                 .alias("delta")
             )
         )
-        deltas = (
-            lvl.join(contrib, ["entity", "sp_src"], "left")
-            .select(
+        deltas = cut(
+            lvl.join(contrib, ["entity", "sp_src"], "left").select(
                 "entity",
                 "sp_src",
                 "sigma",
@@ -1845,12 +1823,12 @@ def betweenness_pivots(
                 .cast("long")
                 .alias("delta"),
             )
-            .localCheckpoint()
         )
-        out.append(deltas)
-    acc = out[0]
-    for df in out[1:]:
-        acc = acc.unionByName(df)
+        return deltas, acc.unionByName(deltas)
+
+    # Deepest level: no successors inside the hop bound -> delta 0.
+    deepest = _level(max_hops).withColumn("delta", F.lit(0).cast("long"))
+    _, acc = iterate((deepest, deepest), step, max_hops)
     return (
         acc.filter(F.col("entity") != F.col("sp_src"))
         .groupBy("entity")
@@ -1861,6 +1839,7 @@ def betweenness_pivots(
     )
 
 
+@releases_unread_cuts
 def ppr_push(
     edges: DataFrame,
     rounds: int = 3,
@@ -1887,20 +1866,16 @@ def ppr_push(
 
     Scale shape: per round ONE edge join restricted to the pusher
     frontier + one map-side-combined node-key aggregate; the mass
-    vector is node-sized; lineage cut per round. Returns the top-20
-    by settled mass plus the three global audit columns.
+    vector is node-sized, cut per round on the round driver. Returns
+    the top-20 by settled mass plus the three global audit columns.
     """
     spark = edges.sparkSession
-    u = undirected_edges(edges).localCheckpoint()
+    u = cut(undirected_edges(edges))
     deg = u.groupBy("src").agg(F.count("*").cast("long").alias("deg"))
-    seed = (
-        deg.orderBy(F.desc("deg"), "src").limit(1).collect()[0]["src"]
-    )
-    st = spark.createDataFrame(
-        [(seed, 0, 1_000_000_000)], "node string, p long, r long"
-    ).localCheckpoint()
-    dust = 0
-    for _ in range(rounds):
+    (seed,) = _top_degree(u, 1)
+
+    def step(state: tuple, _: int) -> tuple:
+        st, dust = state
         push = st.filter(F.col("r") > thresh_ppb).join(
             deg, st.node == deg.src
         )
@@ -1934,8 +1909,7 @@ def ppr_push(
             .agg(F.coalesce(F.sum("_d"), F.lit(0)).alias("d"))
             .collect()[0]["d"]
         )
-        dust += int(round_dust)
-        st = (
+        st = cut(
             keep.select("node", "p", "r")
             .unionByName(settled)
             .unionByName(gains)
@@ -1944,8 +1918,11 @@ def ppr_push(
                 F.sum("p").cast("long").alias("p"),
                 F.sum("r").cast("long").alias("r"),
             )
-            .localCheckpoint()
         )
+        return st, dust + int(round_dust)
+
+    st0 = spark.createDataFrame([(seed, 0, 10**9)], "node string, p long, r long")
+    st, dust = iterate((st0, 0), step, rounds)
     tot = st.agg(
         F.sum("p").cast("long").alias("settled"),
         F.sum("r").cast("long").alias("resid"),
@@ -1978,19 +1955,17 @@ def ppr_push(
 
 def _louvain_canon(edges: DataFrame):
     """Shared canonical-edge derivation for the Louvain family:
-    self-loops dropped, undirected (a < b) dedup, localCheckpointed
+    self-loops dropped, undirected (a < b) dedup, cut
     ONCE (multiple consumers — without the cut each reference re-runs
     the distinct; measured 42 exchanges vs 2 on the move phase), and
     the bounded scalar m. Factored so louvain_levels does not pay the
     dominant distinct/materialize twice."""
     e = edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
-    canon = (
+    canon = cut(
         e.select(
             F.least("src", "dst").alias("a"),
             F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint()
+        ).distinct()
     )
     return canon, canon.count()
 
@@ -2019,7 +1994,7 @@ def louvain_move(edges: DataFrame) -> DataFrame:
     rounds (where Σ_tot grows past single degrees) rely on, kept
     here so the move rule is stated once, correctly.
 
-    Scale shape: the canonical edge set is localCheckpointed ONCE
+    Scale shape: the canonical edge set is cut ONCE
     (three downstream consumers — without the cut each reference
     re-runs the distinct, measured 42 exchanges vs 2 after); degree
     joins are co-keyed on the edge endpoints, gain is edge-wise
@@ -2032,42 +2007,34 @@ def louvain_move(edges: DataFrame) -> DataFrame:
 
 
 def _louvain_move_from_canon(canon: DataFrame, m: int) -> DataFrame:
-    u = canon.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        canon.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    u = canon.select(F.col("a").alias("c"), F.col("b").alias("d")).unionAll(
+        canon.select(F.col("b").alias("c"), F.col("a").alias("d"))
     )
-    deg = (
-        u.groupBy("src")
-        .agg(F.count("*").cast("long").alias("d"))
-        .localCheckpoint()
-    )
-    di = deg.select(F.col("src").alias("i"), F.col("d").alias("d_i"))
-    dj = deg.select(F.col("src").alias("j"), F.col("d").alias("d_j"))
-    cand = (
-        u.select(F.col("src").alias("i"), F.col("dst").alias("j"))
-        .join(di, "i")
-        .join(dj, "j")
-        .select(
-            "i",
-            "j",
-            (F.lit(2 * m) - F.col("d_i") * F.col("d_j"))
-            .cast("long")
-            .alias("gain"),
-        )
-    )
-    # argmax gain, tie -> smallest neighbor: min over (-gain, j).
-    best = cand.groupBy("i").agg(
-        F.min(F.struct((-F.col("gain")).alias("ng"), F.col("j"))).alias("m")
-    )
+    deg = cut(u.groupBy("c").agg(F.count("*").cast("long").alias("sigma")))
+    best = _best_merge(u.withColumn("w", F.lit(1).cast("long")), deg, m)
+    moved = F.col("bg") > 0
     return best.select(
-        F.col("i").alias("entity"),
-        F.when(-F.col("m.ng") > 0, F.col("m.j"))
-        .otherwise(F.col("i"))
-        .alias("community"),
-        (-F.col("m.ng")).cast("long").alias("best_gain"),
-        F.when(-F.col("m.ng") > 0, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("moved"),
+        F.col("c").alias("entity"),
+        F.when(moved, F.col("d")).otherwise(F.col("c")).alias("community"),
+        F.col("bg").alias("best_gain"),
+        moved.cast("long").alias("moved"),
+    )
+
+
+def _best_merge(undw: DataFrame, sig: DataFrame, m: int) -> DataFrame:
+    """Per community c of the weighted undirected graph ``undw``
+    (c, d, w): the neighbor d whose merge has the largest exact BIGINT
+    gain bg = 2m·W_cd − σ_c·σ_d (``sig``: c, sigma), ties to the
+    smallest d — one min(struct) aggregate on c. Returns (c, d, bg)."""
+    sc = sig.select("c", F.col("sigma").alias("sig_c"))
+    sd = sig.select(F.col("c").alias("d"), F.col("sigma").alias("sig_d"))
+    gain = F.lit(2 * m) * F.col("w") - F.col("sig_c") * F.col("sig_d")
+    return (
+        undw.join(sc, "c")
+        .join(sd, "d")
+        .groupBy("c")
+        .agg(F.min(F.struct((-gain.cast("long")).alias("ng"), "d")).alias("b"))
+        .select("c", "b.d", (-F.col("b.ng")).cast("long").alias("bg"))
     )
 
 
@@ -2092,14 +2059,14 @@ def motif_census(edges: DataFrame, max_mid_deg: int = 256) -> DataFrame:
     applied by the oracle); FFL/cycle closures are LEFT joins against
     the distinct edge set on the endpoint pair, folded as flags into
     one global aggregate; the asymmetric edge count rides in via a
-    broadcast 1-row cross join. The asym table is localCheckpointed
-    once for its three consumers.
+    broadcast 1-row cross join. The asym table is cut once for its
+    three consumers.
     Returns one row: n_edges_asym, n_wedges, n_ffl, n_cycle,
     closure_ppm = (n_ffl + n_cycle)·10⁶ div n_wedges.
     """
     e = edges.filter(F.col("src") != F.col("dst")).select("src", "dst").distinct()
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    asym = e.join(rev, ["src", "dst"], "left_anti").localCheckpoint()
+    asym = cut(e.join(rev, ["src", "dst"], "left_anti"))
     deg = (
         asym.select(F.col("src").alias("n"))
         .unionAll(asym.select(F.col("dst").alias("n")))
@@ -2245,13 +2212,11 @@ def louvain_levels(edges: DataFrame) -> DataFrame:
         .unionAll(canon.select(F.col("b").alias("entity")))
         .distinct()
     )
-    lab = (
-        nodes.join(cc, "entity", "left")
-        .select(
+    lab = cut(
+        nodes.join(cc, "entity", "left").select(
             "entity",
             F.coalesce("community", F.col("entity")).alias("community"),
         )
-        .localCheckpoint()
     )
     la = lab.select(F.col("entity").alias("a"), F.col("community").alias("ca"))
     lb = lab.select(F.col("entity").alias("b"), F.col("community").alias("cb"))
@@ -2273,62 +2238,21 @@ def louvain_levels(edges: DataFrame) -> DataFrame:
     undw = inter.unionAll(
         inter.select(F.col("d").alias("c"), F.col("c").alias("d"), "w")
     )
-    extdeg = undw.groupBy("c").agg(F.sum("w").cast("long").alias("ext"))
     members = lab.groupBy(F.col("community").alias("c")).agg(
         F.count("*").cast("long").alias("n_members")
     )
-    sig = (
-        members.join(extdeg, "c", "left")
-        .join(intra, "c", "left")
-        .select(
-            "c",
-            "n_members",
-            (
-                F.coalesce("ext", F.lit(0))
-                + 2 * F.coalesce("iw", F.lit(0))
-            )
-            .cast("long")
-            .alias("sigma"),
-            F.coalesce("iw", F.lit(0)).cast("long").alias("intra_edges"),
-        )
-        .localCheckpoint()
+    sig = cut(
+        _sigma(members, undw, intra).withColumnRenamed("iw", "intra_edges")
     )
-    sc = sig.select(F.col("c"), F.col("sigma").alias("sig_c"))
-    sd = sig.select(F.col("c").alias("d"), F.col("sigma").alias("sig_d"))
-    g2 = (
-        undw.join(sc, "c")
-        .join(sd, "d")
-        .select(
-            "c",
-            "d",
-            (F.lit(2 * m) * F.col("w") - F.col("sig_c") * F.col("sig_d"))
-            .cast("long")
-            .alias("gain"),
-        )
-    )
-    p2 = g2.groupBy("c").agg(
-        F.min(F.struct((-F.col("gain")).alias("ng"), F.col("d"))).alias("m2")
-    )
-    return (
-        sig.join(p2, "c", "left")
-        .select(
-            F.col("c").alias("community"),
-            "n_members",
-            "sigma",
-            "intra_edges",
-            F.when(
-                F.coalesce(-F.col("m2.ng"), F.lit(0)) > 0, F.col("m2.d")
-            )
-            .otherwise(F.col("c"))
-            .alias("target"),
-            F.coalesce(-F.col("m2.ng"), F.lit(0))
-            .cast("long")
-            .alias("best_gain"),
-            F.when(F.coalesce(-F.col("m2.ng"), F.lit(0)) > 0, F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("moved"),
-        )
+    bg = F.coalesce("bg", F.lit(0))
+    return sig.join(_best_merge(undw, sig, m), "c", "left").select(
+        F.col("c").alias("community"),
+        "n_members",
+        "sigma",
+        "intra_edges",
+        F.when(bg > 0, F.col("d")).otherwise(F.col("c")).alias("target"),
+        bg.cast("long").alias("best_gain"),
+        (bg > 0).cast("long").alias("moved"),
     )
 
 
@@ -2369,25 +2293,22 @@ def _stats_cut(df: DataFrame, path: str) -> DataFrame:
     return df.sparkSession.read.parquet(path)
 
 
+def _sigma(comm: DataFrame, undw: DataFrame, intra: DataFrame) -> DataFrame:
+    """``comm``'s rows (keyed c) with sigma = Σ_d W_cd + 2·iw_c and the
+    intra-community edge weight iw (``intra``: c, iw; 0 when absent)."""
+    ext = undw.groupBy("c").agg(F.sum("w").cast("long").alias("ext"))
+    iw = F.coalesce("iw", F.lit(0))
+    return comm.join(ext, "c", "left").join(intra, "c", "left").select(
+        *comm.columns,
+        (F.coalesce("ext", F.lit(0)) + 2 * iw).cast("long").alias("sigma"),
+        iw.cast("long").alias("iw"),
+    )
+
+
 def _louvain_state_stats(comm, undw, intra, m: int):
     """(sigma, iw) per community + the exact-BIGINT scaled modularity
     Q·4m² = 4m·Σiw_c − Σσ_c² in ONE bounded aggregate (q, n_comms)."""
-    ext = undw.groupBy("c").agg(F.sum("w").cast("long").alias("ext"))
-    sig = (
-        comm.join(ext, "c", "left")
-        .join(intra, "c", "left")
-        .select(
-            "c",
-            (
-                F.coalesce("ext", F.lit(0))
-                + 2 * F.coalesce("iw", F.lit(0))
-            )
-            .cast("long")
-            .alias("sigma"),
-            F.coalesce("iw", F.lit(0)).cast("long").alias("iw"),
-        )
-        .localCheckpoint()
-    )
+    sig = cut(_sigma(comm, undw, intra))
     row = sig.agg(
         (
             F.lit(4 * m) * F.coalesce(F.sum("iw"), F.lit(0))
@@ -2400,6 +2321,7 @@ def _louvain_state_stats(comm, undw, intra, m: int):
     return sig, int(row.q), int(row.n_comms)
 
 
+@releases_unread_cuts
 def louvain_converge(
     edges: DataFrame, max_levels: int = 8,
     track_membership: bool = True,
@@ -2446,8 +2368,9 @@ def louvain_converge(
     bounds the unrolled oracle, not the algorithm (observed: 7
     levels at sf0.001, 6 at sf0.01).
 
-    Scale shape: state (undw/intra/comm/sigma) is community-sized
-    and localCheckpointed per level; gains are one co-keyed join
+    Scale shape: state is community-sized — undw/intra/comm spill to
+    parquet per level (``_stats_cut``), sigma and the membership are
+    cut on the round driver; gains are one co-keyed join
     per endpoint + one min(struct) aggregate; star stats are two
     membership joins; per level the driver collects THREE bounded
     rows (merge stats, move count, q/n_comms) — loop control, each
@@ -2499,40 +2422,18 @@ def _louvain_levels(
         "c", F.lit(0).cast("long").alias("iw")
     )
     membership = (
-        comm.select(
-            F.col("c").alias("entity"), F.col("c").alias("community")
-        ).localCheckpoint()
+        cut(comm.select(F.col("c").alias("entity"), F.col("c").alias("community")))
         if track_membership
         else None
     )
-    sig, q, _n0 = _louvain_state_stats(comm, undw, intra, m)
+    sig, q, n_comms = _louvain_state_stats(comm, undw, intra, m)
     rows = []
-    for lvl in range(1, max_levels + 1):
-        sc = sig.select(F.col("c"), F.col("sigma").alias("sig_c"))
-        sd = sig.select(F.col("c").alias("d"), F.col("sigma").alias("sig_d"))
-        gain = (
-            undw.join(sc, "c")
-            .join(sd, "d")
-            .select(
-                "c",
-                "d",
-                (F.lit(2 * m) * F.col("w") - F.col("sig_c") * F.col("sig_d"))
-                .cast("long")
-                .alias("gain"),
-            )
-        )
-        # argmax positive gain, tie -> smallest d: min(struct(-g, d))
-        ptr = (
-            gain.groupBy("c")
-            .agg(F.min(F.struct((-F.col("gain")).alias("ng"), "d")).alias("b"))
-            .select(
-                "c",
-                F.col("b.d").alias("d"),
-                (-F.col("b.ng")).cast("long").alias("bg"),
-            )
-            .filter(F.col("bg") > 0)
-            .localCheckpoint()
-        )
+
+    def level(state: tuple, i: int) -> tuple | None:
+        undw, intra, comm, sig, membership, q, n_comms = state
+        lvl = i + 1
+        # argmax positive gain, tie -> smallest d
+        ptr = cut(_best_merge(undw, sig, m).filter(F.col("bg") > 0))
         # Mutual-best pairs would make BOTH endpoints centers (each is
         # pointed-to), leaving no satellite and stalling the level
         # even while positive gains exist — demote the LARGER member
@@ -2554,10 +2455,10 @@ def _louvain_levels(
             .distinct()
             .join(demoted, "c", "left_anti")
         )
-        sat = (
-            ptr.join(ctr, "c", "left_anti")
-            .join(ctr.select(F.col("c").alias("d")), "d", "left_semi")
-            .localCheckpoint()
+        sat = cut(
+            ptr.join(ctr, "c", "left_anti").join(
+                ctr.select(F.col("c").alias("d")), "d", "left_semi"
+            )
         )
         memb = sat.select(F.col("d").alias("grp"), F.col("c").alias("node")).unionAll(
             sat.select("d").distinct().select(
@@ -2581,9 +2482,8 @@ def _louvain_levels(
             .groupBy("grp")
             .agg(F.sum("w").cast("long").alias("w_in"))
         )
-        gdec = (
-            gsig.join(gwin, "grp", "left")
-            .select(
+        gdec = cut(
+            gsig.join(gwin, "grp", "left").select(
                 "grp",
                 (
                     F.lit(4 * m) * F.coalesce("w_in", F.lit(0))
@@ -2592,7 +2492,6 @@ def _louvain_levels(
                 .cast("long")
                 .alias("dq_full"),
             )
-            .localCheckpoint()
         )
         # fallback pair per rejected star: best-gain satellite, tie min c
         gbp = (
@@ -2626,7 +2525,7 @@ def _louvain_levels(
             )
             .collect()[0]
         )
-        moves = (
+        moves = cut(
             sat.join(gdec.filter(F.col("dq_full") > 0), sat.d == F.col("grp"))
             .select(F.col("c").alias("node"), F.col("d").alias("nc"))
             .unionAll(
@@ -2634,7 +2533,6 @@ def _louvain_levels(
                     gdec.filter(F.col("dq_full") <= 0), "grp"
                 ).select(F.col("c").alias("node"), F.col("grp").alias("nc"))
             )
-            .localCheckpoint()
         )
         n_moved = moves.count()
         if n_moved == 0:
@@ -2642,22 +2540,21 @@ def _louvain_levels(
                 dict(
                     lvl=lvl,
                     n_moved=0,
-                    n_communities=_n_last if rows else _n0,
+                    n_communities=n_comms,
                     q_before=q,
                     q_after=q,
                     q_cert=1,
                     n_fallback=0,
                 )
             )
-            break
-        lab = (
+            return None
+        lab = cut(
             comm.join(moves.withColumnRenamed("node", "c"), "c", "left")
             .select("c", F.coalesce("nc", F.col("c")).alias("nc"))
-            .localCheckpoint()
         )
         la = lab.select(F.col("c"), F.col("nc").alias("na"))
         lb = lab.select(F.col("c").alias("d"), F.col("nc").alias("nb"))
-        # Level-crossing state is PARQUET-spilled, not localCheckpointed:
+        # Level-crossing state is PARQUET-spilled, not cut in memory:
         # the checkpoint leaf inherits the optimizer's ESTIMATED stats,
         # and in this join-heavy loop those estimates compound level
         # over level until Catalyst's sizeInBytes BigInt reaches 10^7+
@@ -2694,28 +2591,30 @@ def _louvain_levels(
             f"{scratch}/comm{lvl % 2 + 1}",
         )
         if track_membership:
-            membership = (
+            membership = cut(
                 membership.join(
                     lab.withColumnRenamed("c", "community"), "community"
-                )
-                .select("entity", F.col("nc").alias("community"))
-                .localCheckpoint()
+                ).select("entity", F.col("nc").alias("community"))
             )
-        intra, undw = new_intra, new_undw
-        sig, q_after, n_comms = _louvain_state_stats(comm, undw, intra, m)
+        sig, q_after, n_after = _louvain_state_stats(
+            comm, new_undw, new_intra, m
+        )
         rows.append(
             dict(
                 lvl=lvl,
                 n_moved=int(n_moved),
-                n_communities=n_comms,
+                n_communities=n_after,
                 q_before=q,
                 q_after=q_after,
                 q_cert=int(q_after == q + int(stats.dq) and q_after >= q),
                 n_fallback=int(stats.n_fallback),
             )
         )
-        _n_last = n_comms
-        q = q_after
-    # membership/summary are eagerly materialized (localCheckpoint /
-    # collected dicts), so the caller may drop the parquet scratch.
-    return rows, membership
+        return new_undw, new_intra, comm, sig, membership, q_after, n_after
+
+    state = iterate(
+        (undw, intra, comm, sig, membership, q, n_comms), level, max_levels
+    )
+    # membership is cut in memory and the summary rows are collected
+    # dicts, so the caller may drop the parquet scratch.
+    return rows, state[4]

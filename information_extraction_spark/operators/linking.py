@@ -13,7 +13,8 @@ broadcast join on both endpoints.
 Scale: the alias dim is broadcast (no shuffle on the skewed fact
 side); a graph past the driver threshold runs star contraction, which
 shuffles only the edge table (tiny vs the fact table), shrinks it
-every round and cuts lineage with localCheckpoint per round. If the
+every round and cuts it per round on the round driver
+(operators/checkpoint.iterate). If the
 alias dim ever outgrows broadcast range, functions.skew.salted_join
 is the drop-in replacement for the two endpoint joins.
 """
@@ -23,6 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from information_extraction_spark.operators.checkpoint import (
+    cut,
+    iterate,
+    releases_unread_cuts,
+)
 from information_extraction_spark.operators.evaluation import normalize_entity
 
 
@@ -35,12 +41,6 @@ def alias_edges(alias_df: DataFrame) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates()
     )
-
-
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Release the RDD a ``localCheckpoint()`` DataFrame keeps
-    persisted (``DataFrame.unpersist`` does not reach it)."""
-    df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def connected_components(
@@ -108,6 +108,7 @@ def _union_find(spark: SparkSession, edge_rows: list) -> DataFrame:
 _MAX_STAR_ROUNDS = 100
 
 
+@releases_unread_cuts
 def _star_contraction(edges: DataFrame) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SoCC'14):
@@ -123,84 +124,75 @@ def _star_contraction(edges: DataFrame) -> DataFrame:
       and itself to that minimum — flattens the remaining 2-paths.
 
     Runs until the edge set stops changing; raises if it has not
-    after ``_MAX_STAR_ROUNDS``. Each round's edge set is a
-    localCheckpoint that releases its predecessor, and the edge and
-    node checkpoints go once the labels are materialized, so the
-    returned labels are the only RDD the call leaves persisted.
+    after ``_MAX_STAR_ROUNDS``. Each round's edge set is cut on the
+    round driver, which releases its predecessor, and the returned
+    labels are the only cut the call leaves persisted.
     """
-    nodes = (
+    nodes = cut(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     # Canonical (big, small) edges; self loops carry no link.
-    e = (
+    e = cut(
         edges.filter(F.col("src") != F.col("dst"))
         .select(
             F.greatest("src", "dst").alias("a"),
             F.least("src", "dst").alias("b"),
         )
         .distinct()
-        .localCheckpoint()
     )
-    try:
-        for _ in range(_MAX_STAR_ROUNDS):
-            # large-star over the symmetric view: m(u) = min(N(u) ∪
-            # {u}); emit (v, m) for v > u. Output stays canonical (big,
-            # small) because v > u >= m.
-            sym = e.unionByName(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            m = sym.groupBy("a").agg(
-                F.least(F.min("b"), F.first("a")).alias("m")
-            )
-            ls = (
-                sym.join(m, "a")
-                .filter(F.col("b") > F.col("a"))
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-            )
-            # small-star over the downward-directed view: per larger
-            # endpoint a, m = min of its smaller neighbors; emit every
-            # smaller neighbor AND a itself re-linked to m.
-            sm = ls.groupBy("a").agg(F.min("b").alias("m"))
-            ss = (
-                ls.join(sm, "a")
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .unionByName(sm.select(F.col("a"), F.col("m").alias("b")))
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-                .localCheckpoint()
-            )
-            changed = ss.subtract(e).unionByName(e.subtract(ss)).count()
-            _unpersist_checkpoint(e)
-            e = ss
-            if changed == 0:
-                break
-        else:
+
+    def contract(e: DataFrame, i: int) -> DataFrame | None:
+        # large-star over the symmetric view: m(u) = min(N(u) ∪ {u});
+        # emit (v, m) for v > u. Output stays canonical (big, small)
+        # because v > u >= m.
+        sym = e.unionByName(
+            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        )
+        m = sym.groupBy("a").agg(
+            F.least(F.min("b"), F.first("a")).alias("m")
+        )
+        ls = (
+            sym.join(m, "a")
+            .filter(F.col("b") > F.col("a"))
+            .select(F.col("b").alias("a"), F.col("m").alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+        )
+        # small-star over the downward-directed view: per larger
+        # endpoint a, m = min of its smaller neighbors; emit every
+        # smaller neighbor AND a itself re-linked to m.
+        sm = ls.groupBy("a").agg(F.min("b").alias("m"))
+        ss = cut(
+            ls.join(sm, "a")
+            .select(F.col("b").alias("a"), F.col("m").alias("b"))
+            .unionByName(sm.select(F.col("a"), F.col("m").alias("b")))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+        )
+        if ss.subtract(e).unionByName(e.subtract(ss)).count() == 0:
+            return None
+        if i == _MAX_STAR_ROUNDS - 1:
             raise RuntimeError(
                 "connected_components: edge set still changing after "
                 f"{_MAX_STAR_ROUNDS} star-contraction rounds"
             )
-        # The settled edge set is a star forest: every non-root node
-        # links directly to its component minimum; roots and
-        # self-loop-only nodes label themselves.
-        roots = e.groupBy(F.col("a").alias("node")).agg(
-            F.min("b").alias("component")
+        return ss
+
+    e = iterate(e, contract, _MAX_STAR_ROUNDS)
+    # The settled edge set is a star forest: every non-root node links
+    # directly to its component minimum; roots and self-loop-only nodes
+    # label themselves.
+    roots = e.groupBy(F.col("a").alias("node")).agg(
+        F.min("b").alias("component")
+    )
+    return cut(
+        nodes.join(roots, "node", "left").select(
+            "node",
+            F.coalesce("component", "node").alias("component"),
         )
-        return (
-            nodes.join(roots, "node", "left")
-            .select(
-                "node",
-                F.coalesce("component", "node").alias("component"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        _unpersist_checkpoint(e)
-        _unpersist_checkpoint(nodes)
+    )
 
 
 def canonical_mapping(

@@ -222,7 +222,9 @@ def _rows_df(spark, rows, schema):
     loc={"h3": {"h2"}},
 )
 @settings(max_examples=30, deadline=None)
-def test_calc_pr_matches_oracle_on_random_inputs(spark, pred, gold, alias, loc):
+def test_calc_pr_matches_oracle_on_random_inputs(
+    spark, persisted_ids, pred, gold, alias, loc
+):
     """calc_pr equals the oracle's counts and scores on random small
     inputs, and leaves no RDD persisted behind it. The examples pin
     empty pred, empty gold, and one input that has every rule at once."""
@@ -233,11 +235,6 @@ def test_calc_pr_matches_oracle_on_random_inputs(spark, pred, gold, alias, loc):
         rows = [(k, a) for k, al in d.items() for a in sorted(al)]
         return _rows_df(spark, rows, _DICT_SCHEMA)
 
-    def persisted_ids():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-
-    # Compared as ids, not counts: the session is shared, and Spark's
-    # ContextCleaner may release an earlier test's RDD during the call.
     before = persisted_ids()
     got = calc_pr(
         _rows_df(spark, pred, _TRIPLE_SCHEMA),

@@ -830,6 +830,130 @@ def test_bfs_distances_multi_source_undirected(spark):
     assert got == {"s": 0, "d": 0, "a": 1, "c": 1, "b": 2}
 
 
+def _random_edges(seed, n_nodes=10, n_edges=14):
+    """Seeded random directed pairs over ``n_nodes`` names; repeats and
+    reverse duplicates kept, self loops dropped."""
+    import random
+
+    rng = random.Random(seed)
+    names = [f"n{i:02d}" for i in range(n_nodes)]
+    out = []
+    while len(out) < n_edges:
+        a, b = rng.choice(names), rng.choice(names)
+        if a != b:
+            out.append((a, b))
+    return out
+
+
+_BFS_GRAPHS = {
+    "chain": [(f"c{i}", f"c{i + 1}") for i in range(6)],
+    "star": [("hub", f"s{i}") for i in range(5)] + [("s0", "s1")],
+    **{f"random{s}": _random_edges(s) for s in (1, 2, 3)},
+}
+
+
+def _py_adjacency(pairs):
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    return adj
+
+
+def _py_bfs(adj, sources, max_hops):
+    """Plain queue BFS: hop distance from the nearest source."""
+    from collections import deque
+
+    dist = {s: 0 for s in sources}
+    q = deque(sources)
+    while q:
+        v = q.popleft()
+        if dist[v] == max_hops:
+            continue
+        for w in sorted(adj.get(v, ())):
+            if w not in dist:
+                dist[w] = dist[v] + 1
+                q.append(w)
+    return dist
+
+
+def _py_top_degree(adj, n):
+    return sorted(adj, key=lambda v: (-len(adj[v]), v))[:n]
+
+
+def _py_shortest_path_counts(adj, src, max_hops):
+    """(dist, sigma) per node reached from ``src``, sigma counted by
+    enumerating every path of at most ``max_hops`` edges and keeping
+    the ones as short as the node's BFS distance."""
+    dist = _py_bfs(adj, [src], max_hops)
+    sigma = {}
+
+    def walk(path):
+        v = path[-1]
+        if len(path) - 1 == dist[v]:
+            sigma[v] = sigma.get(v, 0) + 1
+        if len(path) - 1 < max_hops:
+            for w in adj.get(v, ()):
+                if w not in path:
+                    walk(path + [w])
+
+    walk([src])
+    return {v: (d, sigma[v]) for v, d in dist.items()}
+
+
+@pytest.mark.parametrize("name", sorted(_BFS_GRAPHS))
+def test_frontier_bfs_family_matches_python_oracle(spark, name):
+    """bfs_distances, landmark_distances (the landmark pick and the
+    distances) and shortest_path_counts (dist and sigma) against a
+    pure-Python queue BFS and explicit shortest-path enumeration, with
+    the output schemas pinned."""
+    from information_extraction_spark.operators.graph import (
+        bfs_distances,
+        landmark_distances,
+        shortest_path_counts,
+    )
+
+    pairs = _BFS_GRAPHS[name]
+    adj = _py_adjacency(pairs)
+    df = spark.createDataFrame(pairs, "src string, dst string")
+    seeds = sorted(adj)[:2]
+    for hops in (1, 3):
+        got = bfs_distances(df, seeds, max_hops=hops)
+        assert got.dtypes == [("entity", "string"), ("dist", "int")]
+        assert {r.entity: r.dist for r in got.collect()} == _py_bfs(
+            adj, seeds, hops
+        )
+
+    lm = landmark_distances(df, n_landmarks=3, max_hops=2)
+    assert lm.dtypes == [
+        ("entity", "string"), ("lm", "string"), ("dist", "int")
+    ]
+    rows = lm.collect()
+    want = {
+        (v, l): d
+        for l in _py_top_degree(adj, 3)
+        for v, d in _py_bfs(adj, [l], 2).items()
+    }
+    assert len(rows) == len(want)
+    assert {(r.entity, r.lm): r.dist for r in rows} == want
+
+    spc = shortest_path_counts(df, n_sources=2, max_hops=3)
+    assert spc.dtypes == [
+        ("entity", "string"),
+        ("sp_src", "string"),
+        ("dist", "bigint"),
+        ("sigma", "bigint"),
+    ]
+    rows = spc.collect()
+    want = {
+        (v, s): ds
+        for s in _py_top_degree(adj, 2)
+        for v, ds in _py_shortest_path_counts(adj, s, 3).items()
+    }
+    assert len(rows) == len(want)
+    assert {(r.entity, r.sp_src): (r.dist, r.sigma) for r in rows} == want
+
+
 # --- k-core peel + co-mention + TransE scoring (session-9 ops) ------------
 
 

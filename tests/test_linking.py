@@ -158,17 +158,20 @@ def test_cc_matches_bfs_oracle(spark, pairs, driver_threshold):
     assert got == _bfs_components(pairs)
 
 
-def test_distributed_cc_keeps_only_result_persisted(spark):
+def test_distributed_cc_keeps_only_result_persisted(
+    spark, persisted_ids, plan_rdd_ids
+):
     """Star contraction checkpoints its edge set every round; each
     superseded round and the edge and node checkpoints are released,
-    so at most the returned labels stay persisted."""
+    so exactly the checkpoint the returned labels read stays
+    persisted."""
     pairs = _chain(41)
     e = _edges(spark, pairs)
-    persisted = spark.sparkContext._jsc.getPersistentRDDs
-    before = persisted().size()
+    before = persisted_ids()
     dist = connected_components(e, driver_threshold=0)
     got = {r["node"]: r["component"] for r in dist.collect()}
-    assert persisted().size() - before <= 1
+    assert persisted_ids() - before == plan_rdd_ids(dist) - before
+    assert len(plan_rdd_ids(dist) - before) == 1
     assert got == _bfs_components(pairs)
 
 

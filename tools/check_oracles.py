@@ -76,21 +76,21 @@ def main() -> int:
     con = duckdb.connect()
     # Fail FAST on oracle-scale blowups instead of eating the host:
     # an unbounded DuckDB run of a quadratic-ish oracle (dd_dup_
-    # clusters' recursive closure, emb_ktruss's nested within-cluster
-    # kNN) reached 104 GB RSS at sf0.1 before being killed. A capped
-    # run turns that into a prompt duckdb-error FAIL, which is the
-    # honest outcome for "the ORACLE formulation does not scale to
+    # clusters' recursive closure) can grow past the host's memory. A
+    # capped run turns that into a prompt duckdb-error FAIL, which is
+    # the honest outcome for "the ORACLE formulation does not scale to
     # this sf" (the engine side is unaffected).
     con.execute(
         "SET memory_limit = '"
         + os.environ.get("ORACLE_DUCKDB_MEM", "48GB")
         + "'"
     )
-    # Bounded spill: emb_ktruss's oracle legitimately peaks over
-    # 24 GB at sf0.01 (passes in ~105 s uncapped), so the cap is
-    # 48 GB with a size-bounded temp dir — big enough for every
+    # Bounded spill: a size-bounded temp dir — big enough for every
     # in-scale oracle, small enough that a quadratic blowup still
-    # dies in minutes, not after filling the disk.
+    # dies in minutes, not after filling the disk. Oracles that read
+    # a CTE several times mark it AS MATERIALIZED so DuckDB does not
+    # replay it per reference (emb_ktruss and ann_graph_search run in
+    # seconds at sf0.1 under a 5 GB cap that way).
     con.execute("SET temp_directory = '/tmp/duckdb_oracle_spill'")
     con.execute(
         "SET max_temp_directory_size = '"

@@ -30,6 +30,173 @@ from information_extraction_spark.driver_queries._registry import (
 # stale green row from a prior round is not evidence for code that
 # changed since (VERDICT r03 #1). Update this list each round.
 _CHANGED_THIS_ROUND = [
+    # MODIFIED: every exact ratio goes through functions/exact's
+    # exact_muldiv (a26 no longer overflows past ~10^8 docs), and
+    # one-shot lineage cuts go through checkpoint.cut under
+    # releases_unread_cuts.
+    "a16_sampled_groupby",
+    "kg_er_blocking_audit",
+    "kg_star_join",
+    "p7_vocab_build",
+    "p8_index_pad",
+    # NULL n_chars dropped from the CDF identically on both engines;
+    # d_ppm and the squared threshold come from exact_muldiv.
+    "a25_ks_drift",
+    # MODIFIED (round-5 advice): NULL lang/source strata coalesced to
+    # the '(none)' sentinel so their observed cells count.
+    "a26_chi2_independence",
+    # rev4*10^6 overflowed BIGINT at sf0.1: share_ppm comes from
+    # exact_muldiv (the oracle keeps its own quotient/remainder form)
+    # and the threshold is in div form; a type holding all the
+    # revenue reads 10^6 on both engines.
+    "q11_revenue_share",
+    # Hamilton largest-remainder budget apportionment across language
+    # strata: pure-BIGINT quotas, remainder ranking over the bounded
+    # stratum table, Σseats == budget certificate; R=2 at gate scale.
+    "ta_seat_alloc",
+    # Interpolated Kneser-Ney bigram smoothing: continuation counts,
+    # d=3/4 cleared to exact-BIGINT ppm, one floor-div per term;
+    # bounded top-40 TakeOrdered output.
+    "ta_kn_smoothing",
+    # Directed triad census over the asymmetric edge set: FFL vs
+    # cyclic closed triads, middle-role hub cap, closure ppm.
+    "kg_motif_census",
+    # ACL push PPR: frontier-proportional rounds, integer ppb with
+    # dust accounting — settled+residual+dust == 10^9 exactly.
+    "kg_ppr_push",
+    # Binary-quantization retrieval: two-word sign-bit packing,
+    # Hamming coarse top-32, exact rerank, brute-force audit.
+    "emb_binary_quantize",
+    # McNemar power analysis: required annotation pairs per
+    # predicate at alpha=.05/power .8; Acklam z literals, one
+    # identically-grouped double expression, -1 zero-effect sentinel.
+    "a24_power_analysis",
+    # SentencePiece unigram-EM trainer: integer micro-nat Viterbi
+    # E-steps, add-one char coverage M-step; oracle = the whole
+    # trainer as ~40 chained MATERIALIZED CTEs.
+    "p20_unigram_em",
+    # Turn-level code-switching profile: integer-exact langid per
+    # turn + lag-window switch counting per conversation.
+    "ta_code_switch",
+    # Aggregate IVM under a signed-multiplicity CDC delta with
+    # zero-weight group elimination; consistency-vs-recompute flag
+    # is the value-checked result.
+    "w31_ivm_retract",
+    # Reciprocal rank fusion of the BM25 and cosine rankers:
+    # integer-exact 10^6 div (60+rank) over the union candidate
+    # list; full-outer join of two bounded top-20 lists.
+    "ta_rrf_fusion",
+    # Cohen's kappa per predicate: chance-corrected agreement over
+    # a13's cells with an arithmetic n00 (closed annotated-unit
+    # universe; no unit-cross-join); exact BIGINT ppm.
+    "a23_cohen_kappa",
+    # DSIR importance weights: hashed-bigram target/raw likelihood
+    # ratio in quantized micro-nats, 256-row broadcast term table,
+    # deterministic positive-weight selection.
+    "ta_dsir",
+    # Pivot-sampled Brandes betweenness: backward delta accumulation
+    # over the forward (dist, sigma) pass, per-term integer division
+    # by sigma_w, 2 pivots / 3 hops; bridges rank highest.
+    "kg_betweenness",
+    # Sums-style truth discovery: belief->trust->belief mutual
+    # reinforcement in exact BIGINT ppm over the assertion edges;
+    # flips 80/485 conflict-slot winners vs the raw support vote.
+    "kg_truth_discovery",
+    # K-anonymity audit over the (lang, source, length-decile)
+    # quasi-identifier: one bounded-key shuffle + broadcast total;
+    # k=5 flag and exact share_ppm per equivalence class.
+    "ta_k_anonymity",
+    # Flesch reading ease in exact milli-units: vowel-group
+    # syllables, 12-word-turn sentences, BIGINT multiply-before-
+    # divide; narrow zero-shuffle map.
+    "ta_readability",
+    # BH step-up FDR over the 50 per-predicate McNemar tests:
+    # p_i <= i*alpha/m restated as chi2_i >= shared ppm critical
+    # literals (Acklam inverse-normal, functions/stats.py).
+    "a22_bh_fdr",
+    # McNemar paired significance over a13's agreement cells:
+    # continuity-corrected chi2 in exact ppm vs the 3.841459
+    # critical value — the model-swap gate.
+    "a21_mcnemar",
+    # Community conductance: exact-ppm cut quality of the LPA
+    # communities (cut / min(vol, 2m-vol)); cut edges charge both
+    # sides via in-row explode, never a second join.
+    "kg_conductance",
+    # Poisson-bootstrap CI (Chamandy et al.): deterministic
+    # Poisson(1) weights per (row, replicate) from the portable md5
+    # uniform vs Python-computed integer thresholds; R=40 replicate
+    # means in one narrow pass, order-statistic CI, all BIGINT ppm.
+    "a20_bootstrap_ci",
+    # Simplified silhouette over the k-means clusters: all-k
+    # distances in one narrow in-row pass over literal centroids,
+    # integer s_ppm, per-cluster integer-div means.
+    "emb_silhouette",
+    # Heaps-law vocabulary growth: each word counts at its FIRST doc
+    # (min(doc_id) shuffle), running sums over the 10-row decile
+    # table; cumulative distinct without rescanning.
+    "ta_heaps_law",
+    # Exact ROC AUC via Mann-Whitney midranks over the bounded
+    # score-cent histogram (never row-level ranks); all-BIGINT
+    # auc_ppm; pairwise-with-ties brute-force parity in pytest.
+    "a18_auc_exact",
+    # Calibration reliability bins: 10 equal-width probability bins,
+    # exact ppm confidence/accuracy/gap per bin (the ECE weights);
+    # one map-side-combined shuffle to <=10 rows.
+    "a19_calibration",
+    # Dynamic-partition-overwrite backfill: latest day restated in
+    # place (drops + restatements), other days' files byte-untouched
+    # (pinned by file inventory); oracle recomputes the final state.
+    "w29_backfill_overwrite",
+    # Peak interval concurrency per event_type via the GLOBAL-order
+    # segmented scan (hot keys spread over all partitions; -1<+1 tie
+    # rule = half-open intervals); oracle = per-type window sweep.
+    "w27_interval_concurrency",
+    # Deequ-style data-quality constraint suite: one conditional
+    # aggregate per single-table check, LEFT ANTI FK legs (dim
+    # broadcast; big-big side collapsed to DISTINCT keys first),
+    # exact integer pass_ppm.
+    "w26_dq_audit",
+    # Sorted-neighborhood ER blocking (Hernández & Stolfo): two-phase
+    # range-shuffle global rank + w-window EQUI-join on rank+d —
+    # catches typo pairs that hash blocking separates.
+    "kg_er_sorted_neighborhood",
+    "q21_waiting_suppliers",
+    # Key-skew profile: heavy hitters via TakeOrdered + max/mean
+    # imbalance ppm over the collapsed per-key count table.
+    "w23_skew_profile",
+    # Schema-evolution read: mergeSchema union over two snapshot
+    # generations (g2 added n_convs), NULL-tolerant aggregates.
+    "w24_schema_evolve",
+    "ta_repetition",
+    "w17_markov",
+    "emb_quantize",
+    "kg_jaccard_neighbors",
+    "dd_containment",
+    "w18_dist_ranks",
+    "kg_pred_implication",
+    "q20_revenue_concentration",
+    "ta_novelty",
+    "kg_triangles",
+    "w16_retention",
+    "kg_rule_mining",
+    # Rule APPLICATION: propose head edges where a >=0.5-confidence
+    # body fires and the head is absent (LeftAnti on the edge key).
+    "kg_rule_apply",
+    # Cross-extractor agreement audit (rule-based vs NN detections,
+    # FULL OUTER on the provenance key; integer-ppm Jaccard).
+    "a13_extractor_agreement",
+    # Post-clustering distance outlier gate (integer-exact 1.08x-mean
+    # rule over the x10^4-quantized distances).
+    "emb_outliers",
+    "ta_pmi_collocations",
+    "w11_compaction",
+    # Per-doc TF-IDF keywords and BM25 query-conditioned ranking —
+    # the retrieval/curation pair (broadcast df table, micro-unit
+    # contribution sums).
+    "ta_tfidf_topk",
+    "ta_bm25",
+    "kg_incremental_merge",
+    "kg_neg_sampling",
     # MODIFIED: connected_components' distributed leg is star
     # contraction run to a settled edge set (was a capped label-
     # propagation loop); kg_cc_largestar, which ran the same code, is
@@ -55,21 +222,9 @@ _CHANGED_THIS_ROUND = [
     # NEW: PNG IHDR / JPEG SOFn header-level dimensions without
     # codec libraries (stub narrowed to compressed audio/video).
     "mm_png_jpeg_dims",
-    # MODIFIED (round-5 advice): NULL n_chars dropped from the CDF
-    # identically on both engines; chained quotient/remainder ppm
-    # rescale for BIGINT headroom.
-    "a25_ks_drift",
-    # MODIFIED (round-5 advice): NULL lang/source strata coalesced to
-    # the '(none)' sentinel so their observed cells count.
-    "a26_chi2_independence",
     # MODIFIED (round-5 advice): NULL n_chars filtered identically in
     # engine and oracle before ranking.
     "a27_spearman",
-    # MODIFIED (round-5 sf0.1 sweep finding): rev4*10^6 overflowed
-    # BIGINT at sf0.1 — chained quotient/remainder ppm + div-form
-    # threshold on both engines; the whole-quotient term (share of a
-    # type holding all the revenue) restored on both engines.
-    "q11_revenue_share",
     # --- ROUND 4 ---
     # MODIFIED this round (NULL-lang audit): scope/shard keys
     # coalesce NULL lang to a '(none)' sentinel on both engines.
@@ -80,10 +235,6 @@ _CHANGED_THIS_ROUND = [
     # MODIFIED this round: NULL-text docs now excluded identically on
     # both engines (the fold crashed on int(NaN) before).
     "ta_seq_packing",
-    # Hamilton largest-remainder budget apportionment across language
-    # strata: pure-BIGINT quotas, remainder ranking over the bounded
-    # stratum table, Σseats == budget certificate; R=2 at gate scale.
-    "ta_seat_alloc",
     # Two-level Louvain: pointer-graph CC communities, aggregated
     # graph, level-2 argmax where strict positivity finally binds
     # (3 of 5 supernodes move, 2 stay on negative gains).
@@ -93,10 +244,6 @@ _CHANGED_THIS_ROUND = [
     # staggered file mtimes; oracle replays the 4 merges as CTEs and
     # audits counter <= exact <= counter + Sigma-t.
     "st_mg_topk",
-    # Interpolated Kneser-Ney bigram smoothing: continuation counts,
-    # d=3/4 cleared to exact-BIGINT ppm, one floor-div per term;
-    # bounded top-40 TakeOrdered output.
-    "ta_kn_smoothing",
     # VAD segmentation over the audio energy windows: per-media mean
     # gate as a cross-multiplication + gaps-and-islands rollup, all
     # keyed on media_id; oracle nests the generator-formula energies.
@@ -105,32 +252,12 @@ _CHANGED_THIS_ROUND = [
     # scaled gains 2m·w_ij − deg_i·deg_j, strict-positivity move,
     # smallest-neighbor ties; oracle decorrelates the struct-argmax.
     "kg_louvain_move",
-    # Directed triad census over the asymmetric edge set: FFL vs
-    # cyclic closed triads, middle-role hub cap, closure ppm.
-    "kg_motif_census",
     # TPC-H Q9 profit rollup: both dims broadcast-prune the fact
     # before the single orderkey shuffle; per-line BIGINT cents.
     "q26_profit_by_nation_year",
-    # ACL push PPR: frontier-proportional rounds, integer ppb with
-    # dust accounting — settled+residual+dust == 10^9 exactly.
-    "kg_ppr_push",
-    # Binary-quantization retrieval: two-word sign-bit packing,
-    # Hamming coarse top-32, exact rerank, brute-force audit.
-    "emb_binary_quantize",
-    # McNemar power analysis: required annotation pairs per
-    # predicate at alpha=.05/power .8; Acklam z literals, one
-    # identically-grouped double expression, -1 zero-effect sentinel.
-    "a24_power_analysis",
     # ANALYZE-style per-column stats: single-column pruned scans,
     # KMV ndv sketch next to the exact audit, 4-row dim output.
     "w33_analyze_stats",
-    # SentencePiece unigram-EM trainer: integer micro-nat Viterbi
-    # E-steps, add-one char coverage M-step; oracle = the whole
-    # trainer as ~40 chained MATERIALIZED CTEs.
-    "p20_unigram_em",
-    # Turn-level code-switching profile: integer-exact langid per
-    # turn + lag-window switch counting per conversation.
-    "ta_code_switch",
     # Orphan-file GC: uncommitted crashed-writer snapshot dirs swept
     # per stage; committed data, claims and legacy dirs survive.
     "w32_orphan_files",
@@ -138,48 +265,20 @@ _CHANGED_THIS_ROUND = [
     # hash boundaries, in-row chunking, chunk-hash dedup rollup
     # (236 duplicated chunk keys at the gate scale).
     "dd_cdc_chunks",
-    # Aggregate IVM under a signed-multiplicity CDC delta with
-    # zero-weight group elimination; consistency-vs-recompute flag
-    # is the value-checked result.
-    "w31_ivm_retract",
     # Beam search over the NN-Descent graph: fixed entry, 3 steps,
     # beam 4; self-auditing true_rank + n_seen (34/500 touched).
     "ann_graph_search",
-    # Reciprocal rank fusion of the BM25 and cosine rankers:
-    # integer-exact 10^6 div (60+rank) over the union candidate
-    # list; full-outer join of two bounded top-20 lists.
-    "ta_rrf_fusion",
     # Nearest-neighbor 4x4 image resize: byte-exact decode+resample
     # proven against the generator formula at mapped coordinates.
     "mm_resize",
-    # Cohen's kappa per predicate: chance-corrected agreement over
-    # a13's cells with an arithmetic n00 (closed annotated-unit
-    # universe; no unit-cross-join); exact BIGINT ppm.
-    "a23_cohen_kappa",
     # Gopher filter rule battery: published thresholds as integer
     # cross-multiplications, per-rule flags + keep decision; zero
     # shuffles (in-row higher-order aggregates only).
     "ta_gopher_rules",
-    # DSIR importance weights: hashed-bigram target/raw likelihood
-    # ratio in quantized micro-nats, 256-row broadcast term table,
-    # deterministic positive-weight selection.
-    "ta_dsir",
     # NN-Descent kNN-graph refinement: two-hash-bucketing init +
     # one general-neighbor local-join round; 479/2000 edges are
     # refinement discoveries (single-blocking init is a no-op).
     "emb_nn_descent",
-    # Pivot-sampled Brandes betweenness: backward delta accumulation
-    # over the forward (dist, sigma) pass, per-term integer division
-    # by sigma_w, 2 pivots / 3 hops; bridges rank highest.
-    "kg_betweenness",
-    # Sums-style truth discovery: belief->trust->belief mutual
-    # reinforcement in exact BIGINT ppm over the assertion edges;
-    # flips 80/485 conflict-slot winners vs the raw support vote.
-    "kg_truth_discovery",
-    # K-anonymity audit over the (lang, source, length-decile)
-    # quasi-identifier: one bounded-key shuffle + broadcast total;
-    # k=5 flag and exact share_ppm per equivalence class.
-    "ta_k_anonymity",
     # Brandes forward pass: exact shortest-path counts (dist+sigma)
     # from the 2 top-degree sources in one multi-source keyed BFS;
     # per-hop chained-CTE oracle with the sum-over-predecessors
@@ -193,10 +292,6 @@ _CHANGED_THIS_ROUND = [
     # Arbitrary GROUPING SETS (marginals without grand total — the
     # non-rollup/non-cube shape) via one Expand + one shuffle.
     "q27_grouping_sets",
-    # Flesch reading ease in exact milli-units: vowel-group
-    # syllables, 12-word-turn sentences, BIGINT multiply-before-
-    # divide; narrow zero-shuffle map.
-    "ta_readability",
     # WL structural fingerprints of per-conversation extraction
     # graphs: 2 refinement rounds, name-free labels, portable-h48
     # sorted-multiset hashing — the structure-keyed dedup signal.
@@ -206,10 +301,6 @@ _CHANGED_THIS_ROUND = [
     # BIGINT distances, deterministic min-label border rule; oracle
     # is the exhaustive all-pairs search + recursive-CTE closure.
     "emb_dbscan",
-    # BH step-up FDR over the 50 per-predicate McNemar tests:
-    # p_i <= i*alpha/m restated as chi2_i >= shared ppm critical
-    # literals (Acklam inverse-normal, functions/stats.py).
-    "a22_bh_fdr",
     # Functional-slot simultaneous contradictions: distinct objects
     # of one (s,p) whose temporal_extent validity windows overlap —
     # slot-co-keyed self-join, pair fan-out bounded by slot version
@@ -232,14 +323,6 @@ _CHANGED_THIS_ROUND = [
     # value-checked RESULT — empirically pinned lag-2 watermark and
     # post-partial-aggregation drop semantics vs an analytic oracle.
     "st_late_audit",
-    # McNemar paired significance over a13's agreement cells:
-    # continuity-corrected chi2 in exact ppm vs the 3.841459
-    # critical value — the model-swap gate.
-    "a21_mcnemar",
-    # Community conductance: exact-ppm cut quality of the LPA
-    # communities (cut / min(vol, 2m-vol)); cut edges charge both
-    # sides via in-row explode, never a second join.
-    "kg_conductance",
     # GraphSAGE mean-aggregation layer: in-row hashed features (the
     # learned-embedding seam), undirected closure + ONE map-side-
     # combined node shuffle; exact BIGINT neighbor means.
@@ -253,11 +336,6 @@ _CHANGED_THIS_ROUND = [
     # id claims kept (monotonic ids after GC); survivors read via
     # read_as_of against a pure-documents oracle.
     "w30_snapshot_expire",
-    # Poisson-bootstrap CI (Chamandy et al.): deterministic
-    # Poisson(1) weights per (row, replicate) from the portable md5
-    # uniform vs Python-computed integer thresholds; R=40 replicate
-    # means in one narrow pass, order-statistic CI, all BIGINT ppm.
-    "a20_bootstrap_ci",
     # SimHash Hamming-radius SEARCH (Manku pigeonhole block index):
     # k+1 equi-joined 6-bit blocks over a 24-bit shingle simhash,
     # salted block self-join, first-block-wins dedup, in-row
@@ -299,22 +377,6 @@ _CHANGED_THIS_ROUND = [
     # broadcast model, quantize-then-integer-sum micro-nat scores,
     # OOV drop + prior-only empty docs.
     "ta_nb_classify",
-    # Simplified silhouette over the k-means clusters: all-k
-    # distances in one narrow in-row pass over literal centroids,
-    # integer s_ppm, per-cluster integer-div means.
-    "emb_silhouette",
-    # Heaps-law vocabulary growth: each word counts at its FIRST doc
-    # (min(doc_id) shuffle), running sums over the 10-row decile
-    # table; cumulative distinct without rescanning.
-    "ta_heaps_law",
-    # Exact ROC AUC via Mann-Whitney midranks over the bounded
-    # score-cent histogram (never row-level ranks); all-BIGINT
-    # auc_ppm; pairwise-with-ties brute-force parity in pytest.
-    "a18_auc_exact",
-    # Calibration reliability bins: 10 equal-width probability bins,
-    # exact ppm confidence/accuracy/gap per bin (the ECE weights);
-    # one map-side-combined shuffle to <=10 rows.
-    "a19_calibration",
     # TPC-H Q7 shape: disjunctive nation-pair trade volume; nation
     # dims filtered to the pair BEFORE the fact joins, OR evaluated
     # post-join, never as a join condition.
@@ -331,10 +393,6 @@ _CHANGED_THIS_ROUND = [
     # min-plus relaxation re-offers known nodes (cheaper longer
     # paths); portable h48 edge weights; chained-CTE oracle.
     "kg_sssp_weighted",
-    # Dynamic-partition-overwrite backfill: latest day restated in
-    # place (drops + restatements), other days' files byte-untouched
-    # (pinned by file inventory); oracle recomputes the final state.
-    "w29_backfill_overwrite",
     # Greedy k-center coreset: distributed farthest-point traversal
     # (k TakeOrdered argmaxes + narrow running-min folds, no pairwise
     # matrix); oracle = chained argmax/fold CTEs, 6dp distances.
@@ -349,10 +407,6 @@ _CHANGED_THIS_ROUND = [
     # Add-one bigram LM perplexity: in-row bigram expansion, two
     # count shuffles, history-marginal denominator; 4dp floats.
     "ta_bigram_lm",
-    # Peak interval concurrency per event_type via the GLOBAL-order
-    # segmented scan (hot keys spread over all partitions; -1<+1 tie
-    # rule = half-open intervals); oracle = per-type window sweep.
-    "w27_interval_concurrency",
     # ViT-style 2x2 tile lattice over REAL decoded BMP pixels (exact
     # per-tile intensity sums); oracle recomputes tiles
     # arithmetically from make_bmp's byte formula.
@@ -371,20 +425,11 @@ _CHANGED_THIS_ROUND = [
     # band ±1) blocking, Ukkonen-banded 3-arg levenshtein behind the
     # pushdown barrier.
     "dd_edit_distance",
-    # Deequ-style data-quality constraint suite: one conditional
-    # aggregate per single-table check, LEFT ANTI FK legs (dim
-    # broadcast; big-big side collapsed to DISTINCT keys first),
-    # exact integer pass_ppm.
-    "w26_dq_audit",
     # Deterministic DeepWalk walk corpus: md5-argmin successor per
     # step over the undirected edge closure (the graph is bipartite,
     # so directed walks die after one hop — measured); k bounded
     # join+struct-min rounds, frontier one row per start.
     "kg_random_walks",
-    # Sorted-neighborhood ER blocking (Hernández & Stolfo): two-phase
-    # range-shuffle global rank + w-window EQUI-join on rank+d —
-    # catches typo pairs that hash blocking separates.
-    "kg_er_sorted_neighborhood",
     # BPE encode (apply side of p18): trained merges applied in rank
     # order to the vocabulary — narrow map, driver-bounded merge
     # table; p18 refactored onto the shared training loop.
@@ -395,14 +440,10 @@ _CHANGED_THIS_ROUND = [
     # cross-multiply threshold, and the multi-EXISTS blame report
     # (LEFT SEMI + LEFT ANTI against the same late-pair table).
     "q2_min_cost_supplier",
-    "q21_waiting_suppliers",
     # Ontology subproperty closure: 3 path-doubling rounds over the
     # bounded predicate hierarchy, inference applied to the 50-row
     # per-predicate aggregate (never the raw assertion table).
     "kg_ontology_closure",
-    # Key-skew profile: heavy hitters via TakeOrdered + max/mean
-    # imbalance ppm over the collapsed per-key count table.
-    "w23_skew_profile",
     # Cross-document repeated spans (exact substring dedup): one
     # shuffle on the gram hash, big-big join back, per-doc island
     # merge over surviving positions only.
@@ -410,9 +451,6 @@ _CHANGED_THIS_ROUND = [
     # Right-to-be-forgotten cascade: broadcast deletion dim, one
     # conditional-sum shuffle on (s,p,o), delete-vs-retain audit.
     "kg_forget_propagate",
-    # Schema-evolution read: mergeSchema union over two snapshot
-    # generations (g2 added n_convs), NULL-tolerant aggregates.
-    "w24_schema_evolve",
     # Salted two-phase hot-key aggregation, driver-visible: (key,
     # salt) partials + composite-key distinct; oracle is the plain
     # GROUP BY.
@@ -440,24 +478,18 @@ _CHANGED_THIS_ROUND = [
     # random-projection JL sketch (md5-parity sign matrix, zero
     # shuffles, exact micro-unit output), and the first-order Markov
     # event-transition matrix (one lead() window shuffle).
-    "ta_repetition",
     "emb_rproj",
-    "w17_markov",
     # CUBE grouping sets (one Expand + one shuffle, all four sets),
     # int8 symmetric embedding quantization (within-row pure-BIGINT
     # half-away codes, zero shuffles), and neighborhood-Jaccard link
     # prediction (object-blocked pairs, degrees over the SAME
     # hub-capped universe, union via d1+d2-shared).
     "q12_cube",
-    "emb_quantize",
-    "kg_jaccard_neighbors",
     # PPJoin-style prefix-filtered shingle containment (sub-document
     # dup detection; lossless rarest-prefix blocking vs an all-pairs
     # oracle), percent_rank/cume_dist distribution ranks as exact
     # BIGINT ppm, and the stream-static broadcast enrich join
     # (per-user batch profile joined to the purchase stream).
-    "dd_containment",
-    "w18_dist_ranks",
     "st_enrich",
     # Exact mergeable bitmap distinct counting (63-bit words, bit_or
     # merge + bit_count), Z-order Morton tiles (pure-arithmetic bit
@@ -471,7 +503,6 @@ _CHANGED_THIS_ROUND = [
     # pair-key self-join; the reverse variant is structurally empty
     # on this schema and documented as such), the TPC-H Q16 distinct-
     # aggregate shape, and the integer-exact daily drift monitor.
-    "kg_pred_implication",
     "q16_supplier_variety",
     "w21_drift_monitor",
     # Co-object meta-path (p1, p2) profile (the chain variant is
@@ -488,16 +519,12 @@ _CHANGED_THIS_ROUND = [
     # cut), and ingest-order n-gram novelty scoring (min-doc-per-gram
     # shuffle, the Lee et al. 2022 signal pointed inward).
     "w22_scd2_history",
-    "q20_revenue_concentration",
-    "ta_novelty",
     # Degree-ordered triangle counting + local clustering coefficient
     # over the co-mention graph, and fixed-round power-iteration PCA
     # projections over the embedding table.
-    "kg_triangles",
     "emb_pca_power",
     # Daily cohort retention matrix (one user-keyed shuffle) and the
     # TPC-H Q4 EXISTS/semi-join shape (late-shipped orders).
-    "w16_retention",
     "q4_order_priority",
     # Entity co-mention graph (capped conv_id self-join), fixed-round
     # 2-core peel over it, and TransE hash-embedding triple scoring
@@ -518,16 +545,9 @@ _CHANGED_THIS_ROUND = [
     # horn-rule mining over the graph (bounded (s,o)-keyed expansion,
     # integer-ppm confidence).
     "ta_weighted_sample",
-    "kg_rule_mining",
-    # Rule APPLICATION: propose head edges where a >=0.5-confidence
-    # body fires and the head is absent (LeftAnti on the edge key).
-    "kg_rule_apply",
     # CDC log compaction to current state — upserts + tombstone
     # DELETEs, latest-op-wins via one struct-max shuffle.
     "w15_cdc_apply",
-    # Cross-extractor agreement audit (rule-based vs NN detections,
-    # FULL OUTER on the provenance key; integer-ppm Jaccard).
-    "a13_extractor_agreement",
     # Ordered 3-step funnel analysis (chained conditional mins on the
     # reused user_id exchange; ordering, not presence).
     "w14_funnel",
@@ -536,9 +556,6 @@ _CHANGED_THIS_ROUND = [
     # and the TPC-H Q19 OR-of-ANDs derived-pushdown shape.
     "st_cms_merge",
     "q19_disjunctive_filter",
-    # Post-clustering distance outlier gate (integer-exact 1.08x-mean
-    # rule over the x10^4-quantized distances).
-    "emb_outliers",
     # ANN index QA: recall@k of the LSH bucket vs the brute-force
     # truth (composition of two already-cataloged shapes), and the
     # TPC-H Q15 arg-max-with-ties supplier report.
@@ -548,7 +565,6 @@ _CHANGED_THIS_ROUND = [
     # ln()) and Resource-Allocation link prediction over the
     # materialized graph (object-blocked pairs, hub-degree cap,
     # integer-ppm score).
-    "ta_pmi_collocations",
     "kg_resource_alloc",
     # Distributed sketches (driver_queries/sketches.py): Count-Min
     # frequency table (bounded d*w state, min-recovery load-bearing at
@@ -583,7 +599,6 @@ _CHANGED_THIS_ROUND = [
     # Arrow-batched), and small-file compaction driven end-to-end.
     "q9_json_props",
     "p16_chunk_udtf",
-    "w11_compaction",
     # ntile distribution bucketing (deterministic total order) and the
     # pandas GROUPED_AGG UDAF seam (numpy median per bounded group).
     "w12_ntile_deciles",
@@ -593,11 +608,6 @@ _CHANGED_THIS_ROUND = [
     # HITS hubs/authorities — the bipartite-friendly centrality
     # (integer micro-unit scores keep both engines in exact lockstep).
     "kg_hits",
-    # Per-doc TF-IDF keywords and BM25 query-conditioned ranking —
-    # the retrieval/curation pair (broadcast df table, micro-unit
-    # contribution sums).
-    "ta_tfidf_topk",
-    "ta_bm25",
     # Streaming ingest-time exact dedup (dropDuplicatesWithinWatermark;
     # re-crawl staged so every duplicate pair crosses a micro-batch).
     "st_dedup",
@@ -669,7 +679,6 @@ _CHANGED_THIS_ROUND = [
     # graph; plus train/eval 8-gram decontamination and unigram-LM
     # perplexity scoring on the curation side.
     "kg_triple_support",
-    "kg_incremental_merge",
     "ta_contamination",
     "ta_perplexity",
     # Streaming incremental KG build: per-micro-batch support MERGE
@@ -681,7 +690,6 @@ _CHANGED_THIS_ROUND = [
     "ta_split",
     "ta_domain_mix",
     "ta_redact",
-    "kg_neg_sampling",
     # Incremental batch-vs-index dedup added this round; the shared
     # band/first-band-wins helpers were refactored under the other
     # LSH queries at the same time.

@@ -13,6 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from information_extraction_spark.driver_queries._registry import _q, _t
+from information_extraction_spark.operators.checkpoint import (
+    cut,
+    releases_unread_cuts,
+)
 
 
 def _corpus_chars(words: DataFrame) -> set[str]:
@@ -2240,6 +2244,7 @@ FROM piecesb GROUP BY word, cnt
 
 
 @_q("p20_unigram_em", _p20_oracle_sql())
+@releases_unread_cuts
 def p20_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One unigram-LM EM round over the corpus vocabulary; output =
     every word's post-EM Viterbi segmentation (see block comment)."""
@@ -2252,12 +2257,11 @@ def p20_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    wc = (
+    wc = cut(  # E0, M and E1 all read it
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("cnt"))
-        .localCheckpoint()  # E0, M and E1 all read it
     )
     max_len = wc.agg(F.max(F.length("word"))).collect()[0][0]
     if max_len > _P20_MAXLEN:

@@ -35,6 +35,7 @@ from information_extraction_spark.operators.checkpoint import (
     cut,
     releases_unread_cuts,
 )
+from information_extraction_spark.functions.exact import exact_muldiv
 from information_extraction_spark.operators.linking import canonical_mapping
 from information_extraction_spark.plans.pipeline import extract_triples
 from information_extraction_spark.sources.from_documents import (
@@ -842,17 +843,14 @@ def negative_samples(t: DataFrame, pool_size: int = 16) -> DataFrame:
 
 
 @_q("kg_neg_sampling", _neg_oracle_sql)
+@releases_unread_cuts
 def kg_neg_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic corrupted-object negatives (see block comment).
-    The distinct triple projection is localCheckpointed so the live
+    The distinct triple projection is cut (checkpoint.cut) so the live
     extraction pipeline executes once, not once per reuse (candidate
     ranking / expansion / anti-join all branch off it)."""
     triples = kg_extract_triples(spark, sf_dir)
-    t = (
-        triples.select("subject", "predicate", "object")
-        .distinct()
-        .localCheckpoint()
-    )
+    t = cut(triples.select("subject", "predicate", "object").distinct())
     return negative_samples(t, pool_size=16)
 
 
@@ -940,19 +938,20 @@ def kg_triple_support(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q("kg_incremental_merge", _merge_oracle_sql)
+@releases_unread_cuts
 def kg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Insert-only MERGE of an incoming extraction batch (odd doc ids)
     into an existing base graph (even doc ids): the merged table with
     each row's origin ('base' row already present / 'new' inserted by
-    the batch). The parity projection is localCheckpointed so the live
-    pipeline executes once, not once per branch (base / incoming both
+    the batch). The parity projection is cut (checkpoint.cut) so the
+    live pipeline executes once, not once per branch (base / incoming both
     read it)."""
     from information_extraction_spark.operators.graph import (
         merge_new_triples,
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    spo = (
+    spo = cut(
         triples.select(
             "subject",
             "predicate",
@@ -962,7 +961,6 @@ def kg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 % 2
             ).alias("par"),
         )
-        .localCheckpoint()
     )
     key = ["subject", "predicate", "object"]
     base = spo.filter(F.col("par") == 0).select(*key).distinct()
@@ -2413,6 +2411,7 @@ def _compaction_oracle_sql(sf_dir: str) -> str:
 
 
 @_q("w11_compaction", _compaction_oracle_sql)
+@releases_unread_cuts
 def w11_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction driven end-to-end (operators/
     maintenance.compact_parquet_dir — the Iceberg rewriteDataFiles
@@ -2450,7 +2449,7 @@ def w11_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             target_bytes=max(1, src_bytes // 4),
             sort_cols=("predicate", "subject"),
         )
-        out = spark.read.parquet(dst).localCheckpoint()
+        out = cut(spark.read.parquet(dst))
     finally:
         shutil.rmtree(run, ignore_errors=True)
     return out
@@ -2580,9 +2579,8 @@ def a13_extractor_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("in_nn") & ~F.col("in_r"), 1).otherwise(0))
         .cast("long")
         .alias("n_nn_only"),
-        F.expr(
-            "CAST(sum(CASE WHEN in_r AND in_nn THEN 1 ELSE 0 END)"
-            " * 1000000 div count(*) AS BIGINT)"
+        exact_muldiv(
+            "sum(CASE WHEN in_r AND in_nn THEN 1 ELSE 0 END)", "count(*)", 1_000_000
         ).alias("jaccard_ppm"),
     )
 
@@ -2629,10 +2627,9 @@ def a21_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules-vs-NN disagreement significant at alpha=0.05, in exact
     ppm integers."""
     agree = a13_extractor_agreement(spark, sf_dir)
-    chi2 = F.expr(
-        "CAST(greatest(abs(n_rules_only - n_nn_only) - 1, 0)"
-        " * greatest(abs(n_rules_only - n_nn_only) - 1, 0)"
-        " * 1000000 div greatest(n_rules_only + n_nn_only, 1) AS BIGINT)"
+    dev = "greatest(abs(n_rules_only - n_nn_only) - 1, 0)"
+    chi2 = exact_muldiv(
+        [dev, dev], "greatest(n_rules_only + n_nn_only, 1)", 1_000_000
     )
     return agree.select(
         "predicate",
@@ -2809,9 +2806,7 @@ def kg_rule_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_head",
         "support",
         "n_body",
-        F.expr("CAST(support * 1000000 div n_body AS BIGINT)").alias(
-            "confidence_ppm"
-        ),
+        exact_muldiv("support", "n_body", 1_000_000).alias("confidence_ppm"),
     )
 
 
@@ -2886,7 +2881,7 @@ def kg_rule_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "c_ppm",
-            F.expr("CAST(support * 1000000 div n_body AS BIGINT)"),
+            exact_muldiv("support", "n_body", 1_000_000),
         )
         .filter(F.col("c_ppm") >= 500000)
         .select("p_body", "p_head", "c_ppm")
@@ -3483,7 +3478,7 @@ def kg_pred_implication(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p",
         "q",
         "n_overlap",
-        F.expr("(n_overlap * 1000000) div n").alias("imp_ppm"),
+        exact_muldiv("n_overlap", "n", 1_000_000).alias("imp_ppm"),
     )
 
 
@@ -3759,6 +3754,7 @@ def _evolve_paths(sf_dir: str) -> tuple[str, str]:
     )
 
 
+@releases_unread_cuts
 def write_evolved_snapshots(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize the two generations write-once behind a meta
     sidecar committed after BOTH writes: g1 = even-parity support
@@ -3774,10 +3770,12 @@ def write_evolved_snapshots(spark: SparkSession, sf_dir: str) -> tuple[str, str]
     if os.path.exists(meta):
         return g1, g2
     triples = kg_extract_triples(spark, sf_dir)
-    spo = triples.withColumn(
-        "par",
-        F.regexp_extract("conv_id", r"doc(\d+)", 1).cast("long") % 2,
-    ).localCheckpoint()
+    spo = cut(
+        triples.withColumn(
+            "par",
+            F.regexp_extract("conv_id", r"doc(\d+)", 1).cast("long") % 2,
+        )
+    )
     sup_even = triple_support(spo.filter(F.col("par") == 0))
     sup_odd = triple_support(spo.filter(F.col("par") == 1))
     sup_even.select("subject", "predicate", "object", "support").write.mode(
@@ -4122,17 +4120,17 @@ FROM truth t LEFT JOIN sn ON sn.x = t.ea AND sn.y = t.eb
 
 
 @_q("kg_er_blocking_audit", _er_audit_oracle_sql)
+@releases_unread_cuts
 def kg_er_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from information_extraction_spark.operators.linking import (
         sorted_neighborhood_pairs,
     )
 
     triples = kg_extract_triples(spark, sf_dir)
-    ents = (
+    ents = cut(  # feeds both the truth join and the window
         triples.select(F.col("subject").alias("e"))
         .unionByName(triples.select(F.col("object").alias("e")))
         .distinct()
-        .localCheckpoint()  # feeds both the truth join and the window
     )
     # truth: lossless length-band blocking (band width 3 >= max lev).
     d = ents.withColumn("ln", F.length("e"))
@@ -4218,9 +4216,10 @@ FROM ta JOIN tb ON ta.subject = tb.subject
 
 
 @_q("kg_star_join", _star_oracle_sql)
+@releases_unread_cuts
 def kg_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples = kg_extract_triples(spark, sf_dir)
-    t = triples.select("subject", "predicate", "object").localCheckpoint()
+    t = cut(triples.select("subject", "predicate", "object"))
     pa = (
         t.groupBy("predicate")
         .agg(F.count("*").alias("n"))
@@ -4907,11 +4906,12 @@ FROM k
 
 
 @_q("a23_cohen_kappa", _kappa_oracle_sql)
+@releases_unread_cuts
 def a23_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-predicate Cohen's kappa between the rule-based and NN
     extractors in exact ppm (see block comment)."""
     key = ["conv_id", "turn_idx", "predicate"]
-    rules = (
+    rules = cut(  # feeds the unit universe AND the join
         kg_extract_triples(spark, sf_dir)
         .filter(
             F.regexp_extract("conv_id", r"^doc(\d+)\.", 1).cast("long")
@@ -4921,14 +4921,12 @@ def a23_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(*key)
         .distinct()
         .withColumn("in_r", F.lit(True))
-        .localCheckpoint()  # feeds the unit universe AND the join
     )
-    nn = (
+    nn = cut(
         kg_nn_extract(spark, sf_dir)
         .select(*key)
         .distinct()
         .withColumn("in_nn", F.lit(True))
-        .localCheckpoint()
     )
     units = F.broadcast(
         rules.select("conv_id", "turn_idx")
@@ -4973,9 +4971,8 @@ def a23_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n10",
         "n01",
         F.col("n00").cast("long").alias("n00"),
-        F.expr(
-            "CAST(((n11 + n00) * nu - pe_num) * 1000000"
-            " div greatest(nu * nu - pe_num, 1L) AS BIGINT)"
+        exact_muldiv(
+            "(n11 + n00) * nu - pe_num", "greatest(nu * nu - pe_num, 1L)", 1_000_000
         ).alias("kappa_ppm"),
     )
 
@@ -5178,11 +5175,12 @@ FROM base
 
 
 @_q("a24_power_analysis", _power_oracle_sql)
+@releases_unread_cuts
 def a24_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-predicate required-sample-size for the McNemar gate at
     alpha=0.05 / power 0.8 (see block comment)."""
     key = ["conv_id", "turn_idx", "predicate"]
-    rules = (
+    rules = cut(
         kg_extract_triples(spark, sf_dir)
         .filter(
             F.regexp_extract("conv_id", r"^doc(\d+)\.", 1).cast("long")
@@ -5192,14 +5190,12 @@ def a24_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(*key)
         .distinct()
         .withColumn("in_r", F.lit(True))
-        .localCheckpoint()
     )
-    nn = (
+    nn = cut(
         kg_nn_extract(spark, sf_dir)
         .select(*key)
         .distinct()
         .withColumn("in_nn", F.lit(True))
-        .localCheckpoint()
     )
     units = F.broadcast(
         rules.select("conv_id", "turn_idx")
@@ -5233,12 +5229,8 @@ def a24_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b",
         "c",
         F.col("nu").alias("n_pairs"),
-        F.expr("CAST((b + c) * 1000000 div nu AS BIGINT)").alias(
-            "psi_ppm"
-        ),
-        F.expr("CAST((b - c) * 1000000 div nu AS BIGINT)").alias(
-            "delta_ppm"
-        ),
+        exact_muldiv("b + c", "nu", 1_000_000).alias("psi_ppm"),
+        exact_muldiv("b - c", "nu", 1_000_000).alias("delta_ppm"),
         F.expr(
             f"CASE WHEN b = c THEN CAST(-1 AS BIGINT)"
             f" ELSE CAST({req} AS BIGINT) END"

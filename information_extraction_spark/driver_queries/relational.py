@@ -19,6 +19,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from information_extraction_spark.driver_queries._registry import _q, _t
+from information_extraction_spark.functions.exact import exact_muldiv
+from information_extraction_spark.operators.checkpoint import (
+    cut,
+    releases_unread_cuts,
+)
 
 
 def _events_sec(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1096,9 +1101,7 @@ def w16_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("day_offset").cast("long").alias("day_offset"),
         "n_active",
         "n_cohort",
-        F.expr("CAST(n_active * 1000000 div n_cohort AS BIGINT)").alias(
-            "retention_ppm"
-        ),
+        exact_muldiv("n_active", "n_cohort", 1_000_000).alias("retention_ppm"),
     )
 
 
@@ -1415,7 +1418,7 @@ def w17_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         "src",
         "dst",
         "n_trans",
-        F.expr("(n_trans * 1000000) div src_total").alias("p_ppm"),
+        exact_muldiv("n_trans", "src_total", 1_000_000).alias("p_ppm"),
     )
 
 
@@ -1504,19 +1507,17 @@ def w18_dist_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("event_type").orderBy("v2", "event_id")
     wn = Window.partitionBy("event_type")
-    # row_number() is INT — widen BEFORE the *10^6 (ANSI overflow at
-    # rn > 2147 otherwise; surfaced at sf0.1).
-    r = e.withColumn(
-        "rn", F.row_number().over(w).cast("long")
-    ).withColumn("n", F.count("*").over(wn).cast("long"))
+    r = e.withColumn("rn", F.row_number().over(w)).withColumn(
+        "n", F.count("*").over(wn)
+    )
     return r.select(
         "event_id",
         "event_type",
         "v2",
-        F.expr(
-            "CAST(((rn - 1) * 1000000) div greatest(n - 1, 1) AS BIGINT)"
-        ).alias("pct_rank_ppm"),
-        F.expr("CAST((rn * 1000000) div n AS BIGINT)").alias("cume_ppm"),
+        exact_muldiv("rn - 1", "greatest(n - 1, 1)", 1_000_000).alias(
+            "pct_rank_ppm"
+        ),
+        exact_muldiv("rn", "n", 1_000_000).alias("cume_ppm"),
     )
 
 
@@ -1824,9 +1825,7 @@ def q20_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").cast("long").alias("all_customers"),
         F.sum("rev2").cast("long").alias("top_rev2"),
         F.max("total2").cast("long").alias("total_rev2"),
-        F.expr(
-            "CAST((sum(rev2) * 1000000) div max(total2) AS BIGINT)"
-        ).alias("share_ppm"),
+        exact_muldiv("sum(rev2)", "max(total2)", 1_000_000).alias("share_ppm"),
     )
 
 
@@ -1961,16 +1960,7 @@ def q11_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "p_type",
             "rev4",
-            # chained quotient/remainder ppm — rev4*10^6 overflowed
-            # at sf0.1 (found by the round-5 full sf0.1 sweep; ANSI
-            # Spark threw where non-ANSI would have wrapped silently);
-            # the whole-quotient term is 1 when one type holds it all
-            F.expr(
-                "(rev4 div total4) * 1000000"
-                " + ((rev4 % total4) * 1000 div total4) * 1000"
-                " + (((rev4 % total4) * 1000 % total4) * 1000"
-                "    div total4)"
-            ).alias("share_ppm"),
+            exact_muldiv("rev4", "total4", 1_000_000).alias("share_ppm"),
         )
     )
 
@@ -2022,6 +2012,7 @@ GROUP BY 1
 
 
 @_q("q21_waiting_suppliers", _Q21_ORACLE)
+@releases_unread_cuts
 def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -2041,9 +2032,9 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey",
         (F.col("ship_s") - F.col("order_s")).alias("lag_s"),
     )
-    # One pass computes both derived pair tables; localCheckpoint cuts
+    # One pass computes both derived pair tables; a cut truncates
     # the shared lineage so the big join executes once, not thrice.
-    pairs_all = (
+    pairs_all = cut(
         lo.select(
             "l_orderkey",
             "l_suppkey",
@@ -2051,7 +2042,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_orderkey", "l_suppkey")
         .agg(F.max("is_late").alias("is_late"))
-        .localCheckpoint()
     )
     late = pairs_all.filter(F.col("is_late"))
     l2 = late.select(
@@ -2142,8 +2132,8 @@ def w23_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank",
         "user_id",
         "n_events",
-        F.expr("(n_events * 1000000) div total").alias("share_ppm"),
-        F.expr("(max_n * n_keys * 1000000) div total").alias("skew_ppm"),
+        exact_muldiv("n_events", "total", 1_000_000).alias("share_ppm"),
+        exact_muldiv(["max_n", "n_keys"], "total", 1_000_000).alias("skew_ppm"),
     )
 
 
@@ -2285,18 +2275,16 @@ def w26_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = _t(spark, sf_dir, "lineitem")
     events = _t(spark, sf_dir, "events")
 
+    pass_ppm = exact_muldiv(
+        "n_evaluated - n_failed", "n_evaluated", 1_000_000
+    ).alias("pass_ppm")
+
     def _check(name: str, n_eval, n_fail) -> DataFrame:
         return n_eval.crossJoin(n_fail).select(
             F.lit(name).alias("check_name"),
             F.col("n_evaluated"),
             F.col("n_failed"),
-            (
-                (F.col("n_evaluated") - F.col("n_failed"))
-                * F.lit(1000000)
-                / F.col("n_evaluated")
-            )
-            .cast("long")
-            .alias("pass_ppm"),
+            pass_ppm,
         )
 
     def _agg_check(name: str, df: DataFrame, fail_cond) -> DataFrame:
@@ -2310,13 +2298,7 @@ def w26_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(name).alias("check_name"),
             "n_evaluated",
             "n_failed",
-            (
-                (F.col("n_evaluated") - F.col("n_failed"))
-                * F.lit(1000000)
-                / F.col("n_evaluated")
-            )
-            .cast("long")
-            .alias("pass_ppm"),
+            pass_ppm,
         )
 
     # Uniqueness: partial-distinct aggregate, one row out.
@@ -2330,13 +2312,7 @@ def w26_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("orders.o_orderkey unique").alias("check_name"),
         "n_evaluated",
         "n_failed",
-        (
-            (F.col("n_evaluated") - F.col("n_failed"))
-            * F.lit(1000000)
-            / F.col("n_evaluated")
-        )
-        .cast("long")
-        .alias("pass_ppm"),
+        pass_ppm,
     )
     # FK orders→customer: the dim broadcasts; orphans = LEFT ANTI.
     o_total = orders.agg(F.count("*").cast("long").alias("n_evaluated"))
@@ -2723,6 +2699,7 @@ def _backfill_overwrite_run(
 
 
 @_q("w29_backfill_overwrite", _W29_ORACLE)
+@releases_unread_cuts
 def w29_backfill_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Restate the latest day's partition in place (see block
     comment), then aggregate the readback per day — replaced rows
@@ -2735,14 +2712,13 @@ def w29_backfill_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         table = os.path.join(run, "events_by_day")
         _backfill_overwrite_run(spark, sf_dir, table)
-        out = (
+        out = cut(
             spark.read.parquet(table)
             .groupBy(F.col("day_id").cast("long").alias("day_id"))
             .agg(
                 F.count("*").cast("long").alias("n"),
                 F.sum("cents").cast("long").alias("sum_cents"),
             )
-            .localCheckpoint()
         )
     finally:
         shutil.rmtree(run, ignore_errors=True)
@@ -3090,6 +3066,7 @@ WHERE v.n_new <> 0
 
 
 @_q("w31_ivm_retract", _IVM_ORACLE)
+@releases_unread_cuts
 def w31_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate IVM under a signed-multiplicity delta, with the
     recompute-consistency audit in the result (see block comment)."""
@@ -3098,7 +3075,7 @@ def w31_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    e = e.localCheckpoint()  # base, inserts, retracts, truth branch
+    e = cut(e)  # base, inserts, retracts, truth branch
     base = e.filter(F.col("event_id") % 4 != 3)
     vold = base.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),

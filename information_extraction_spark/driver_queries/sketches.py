@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from information_extraction_spark.driver_queries._registry import _q, _t
+from information_extraction_spark.functions.exact import exact_muldiv
 
 
 # Portable 48-bit string hash — shared with the streaming CMS merge
@@ -491,13 +492,9 @@ def a16_sampled_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_n",
         "sample_n",
         (F.col("sample_n") * 10).cast("long").alias("est_n"),
-        (
-            F.abs(F.col("sample_n") * 10 - F.col("exact_n"))
-            * F.lit(1000000)
-            / F.col("exact_n")
-        )
-        .cast("long")
-        .alias("err_ppm"),
+        exact_muldiv(
+            F.abs(F.col("sample_n") * 10 - F.col("exact_n")), "exact_n", 1_000_000
+        ).alias("err_ppm"),
     )
 
 
@@ -711,9 +708,8 @@ def a18_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "n_pos",
         "n_neg",
-        F.expr(
-            "CAST(((two_rank_sum - n_pos * (n_pos + 1)) * 1000000)"
-            " div (2 * n_pos * n_neg) AS BIGINT)"
+        exact_muldiv(
+            "two_rank_sum - n_pos * (n_pos + 1)", [2, "n_pos", "n_neg"], 1_000_000
         ).alias("auc_ppm"),
     )
 
@@ -755,9 +751,7 @@ def a19_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     cents = F.round(F.col("value") * 100).cast("long")
     binned = e.select(
-        F.least(
-            F.expr("CAST(round(value * 100) AS BIGINT) div 5000"), F.lit(9)
-        ).cast("long").alias("bin"),
+        F.least(exact_muldiv(cents, 5000, 1), F.lit(9)).alias("bin"),
         cents.alias("cents"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
     )
@@ -766,8 +760,8 @@ def a19_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pos").cast("long").alias("n_pos"),
         F.sum("cents").cast("long").alias("sum_cents"),
     )
-    conf = F.expr("CAST((sum_cents * 20) div n AS BIGINT)")
-    acc = F.expr("CAST((n_pos * 1000000) div n AS BIGINT)")
+    conf = exact_muldiv("sum_cents", "n", 20)
+    acc = exact_muldiv("n_pos", "n", 1_000_000)
     return agg.select(
         "bin",
         "n",
@@ -894,9 +888,9 @@ def a20_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "lang",
-            F.expr(
-                "CAST((s_wt * 1000000) div greatest(s_w, 1) AS BIGINT)"
-            ).alias("mean_ppm"),
+            exact_muldiv("s_wt", "greatest(s_w, 1)", 1_000_000).alias(
+                "mean_ppm"
+            ),
         )
     )
     ci = rm.groupBy("lang").agg(
@@ -907,9 +901,7 @@ def a20_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("ms", _A20_R - 1).alias("hi_ppm"),
     )
     pt = tok.groupBy("lang").agg(
-        F.expr(
-            "CAST((sum(tok) * 1000000) div count(*) AS BIGINT)"
-        ).alias("mean_ppm")
+        exact_muldiv("sum(tok)", "count(*)", 1_000_000).alias("mean_ppm")
     )
     return pt.join(F.broadcast(ci), "lang").select(
         "lang", "mean_ppm", "lo_ppm", "hi_ppm"
@@ -1133,29 +1125,17 @@ def a25_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_a",
         "n_b",
         F.col("m.dnum").alias("d_num"),
-        # chained quotient/remainder ppm (see oracle): exact while
-        # n_a*n_b <= 2^63/1000 (~9.2e15, ~10^8 docs per side) — the
-        # same bound the cross-multiplied CDF compare already needs.
-        F.expr(
-            "(d_num div (n_a * n_b)) * 1000000"
-            " + ((d_num % (n_a * n_b)) * 1000 div (n_a * n_b)) * 1000"
-            " + (((d_num % (n_a * n_b)) * 1000 % (n_a * n_b)) * 1000"
-            "    div (n_a * n_b))"
-        ).alias("d_ppm"),
-        F.expr(
-            "((1844164 * (n_a + n_b)) div (n_a * n_b)) * 1000000"
-            " + (((1844164 * (n_a + n_b)) % (n_a * n_b)) * 1000"
-            "    div (n_a * n_b)) * 1000"
-            " + ((((1844164 * (n_a + n_b)) % (n_a * n_b)) * 1000"
-            "     % (n_a * n_b)) * 1000 div (n_a * n_b))"
-        ).alias("thr_ppm2"),
+        exact_muldiv("m.dnum", ["n_a", "n_b"], 1_000_000).alias("d_ppm"),
+        exact_muldiv("n_a + n_b", ["n_a", "n_b"], 1844164 * 1_000_000).alias(
+            "thr_ppm2"
+        ),
         (-F.col("m.neg")).cast("long").alias("ks_at"),
     )
     return best.select(
         "n_a",
         "n_b",
         "d_num",
-        F.col("d_ppm").cast("long").alias("d_ppm"),
+        "d_ppm",
         "ks_at",
         F.expr(
             "CAST(CASE WHEN d_ppm * d_ppm > thr_ppm2"
@@ -1172,17 +1152,13 @@ def a25_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # filters, not a global mix). Zero cells CONTRIBUTE (expected > 0
 # there), so the cell universe is the cross join of the two bounded
 # marginal dims with observed counts left-joined in — never an
-# input-sized cross product. Arithmetic is exact-BIGINT with the
-# floor-div rescale num·1000 div (rs·cs) BEFORE the second multiply;
-# the double floor-div loses < 1 milli-unit per cell identically in
-# both engines. Headroom bound (honest): num = |o·n − rs·cs| can
-# reach ~n², so num·1000 (and the num·quotient product) stays < 2^63
-# only while n_docs ≲ 9.6e7 (~10^8 docs). Beyond that, both engines
-# would need 128-bit intermediates (DuckDB HUGEINT / Spark
-# DECIMAL(38,0)) — a documented migration, not a silent wrap: Spark
-# (non-ANSI) wraps while DuckDB errors, so exceeding the bound is a
-# loud cross-engine divergence by construction. Cramér's V is emitted
-# SQUARED in ppm (v²·10⁶) — the no-cross-engine-sqrt rule.
+# input-sized cross product. Each cell's term is floored twice,
+# num·(num·1000 div (rs·cs)) div n with num = |o·n − rs·cs|, losing
+# < 1 milli-unit per cell identically in both engines. num is formed
+# as DECIMAL(38,0) and both divisions go through exact_muldiv: both
+# dividends stay under 1000·n², so a cell is exact up to ~10^15 docs.
+# Cramér's V is emitted SQUARED in ppm (v²·10⁶) — the
+# no-cross-engine-sqrt rule.
 
 _A26_ORACLE = """
 WITH obs AS (
@@ -1218,6 +1194,17 @@ FROM contrib
 """
 
 
+def a26_chi2_cell_milli(cells: DataFrame) -> DataFrame:
+    """The chi² term of each (o, rs, cs, n) cell in milli-units, with
+    its n: num·(num·1000 div (rs·cs)) div n, num = |o·n − rs·cs|."""
+    num = F.abs(
+        F.col("o").cast("decimal(38,0)") * F.col("n")
+        - F.col("rs").cast("decimal(38,0)") * F.col("cs")
+    )
+    inner = exact_muldiv(num, ["rs", "cs"], 1000)
+    return cells.select(exact_muldiv([num, inner], "n", 1).alias("c_milli"), "n")
+
+
 @_q("a26_chi2_independence", _A26_ORACLE)
 def a26_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -1243,17 +1230,7 @@ def a26_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lang", "rs", "cs", F.coalesce("o", F.lit(0)).alias("o"))
         .crossJoin(F.broadcast(n))
     )
-    contrib = cells.select(
-        F.abs(F.col("o") * F.col("n") - F.col("rs") * F.col("cs")).alias(
-            "num"
-        ),
-        "rs",
-        "cs",
-        "n",
-    ).select(
-        F.expr("(num * ((num * 1000) div (rs * cs))) div n").alias("c_milli"),
-        "n",
-    )
+    contrib = a26_chi2_cell_milli(cells)
     nl = rl.agg(F.count("*").cast("long").alias("n_langs"))
     ns = cs.agg(F.count("*").cast("long").alias("n_sources"))
     return (
@@ -1271,9 +1248,8 @@ def a26_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("dof"),
             "chi2_milli",
-            F.expr(
-                "chi2_milli * 1000000 div (1000 * n_docs"
-                " * least(n_langs - 1, n_sources - 1))"
+            exact_muldiv(
+                "chi2_milli", ["n_docs", "least(n_langs - 1, n_sources - 1)"], 1000
             ).alias("cramers_v2_ppm"),
         )
     )

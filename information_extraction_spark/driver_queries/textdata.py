@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from information_extraction_spark.driver_queries._registry import _q
+from information_extraction_spark.functions.exact import exact_muldiv
 from information_extraction_spark.operators.checkpoint import (
     cut,
     iterate,
@@ -2350,6 +2351,7 @@ FROM ranked WHERE rk <= 5
 
 
 @_q("ta_tfidf_topk", _TFIDF_ORACLE)
+@releases_unread_cuts
 def ta_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 TF-IDF terms per document (idf = ln(N/df), raw tf).
 
@@ -2365,7 +2367,7 @@ def ta_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = w.groupBy("doc_id", "word").agg(
         F.count("*").cast("long").alias("tf")
     )
-    tf = tf.localCheckpoint()  # df + scoring both branch off tf
+    tf = cut(tf)  # df + scoring both branch off tf
     df_ = tf.groupBy("word").agg(F.count("*").cast("long").alias("df"))
     n = tf.agg(
         F.countDistinct("doc_id").cast("long").alias("n_docs")
@@ -2438,6 +2440,7 @@ _BM25_ORACLE = _bm25_oracle_sql()
 
 
 @_q("ta_bm25", _BM25_ORACLE)
+@releases_unread_cuts
 def ta_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 (k1=1.2, b=0.75, Lucene +1 idf) top-20 documents for a
     deterministic query: the corpus's 3 most frequent non-stopword
@@ -2455,7 +2458,7 @@ def ta_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _spread(spark, _docs(spark, sf_dir), "doc_id").select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     )
-    w = w.localCheckpoint()  # doc lengths, query pick, tf all branch
+    w = cut(w)  # doc lengths, query pick, tf all branch
     dl = w.groupBy("doc_id").agg(F.count("*").cast("long").alias("dl"))
     stats = dl.agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -2596,10 +2599,9 @@ def ta_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_x",
             "n_y",
             "n_bigrams",
-            F.expr(
-                "CAST((n_xy * n_bigrams * 1000000) div (n_x * n_y)"
-                " AS BIGINT)"
-            ).alias("pmi_ratio_ppm"),
+            exact_muldiv(["n_xy", "n_bigrams"], ["n_x", "n_y"], 1_000_000).alias(
+                "pmi_ratio_ppm"
+            ),
         )
     )
 
@@ -2664,9 +2666,7 @@ def emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.col("sum_q") / F.lit(10000.0) / F.col("n"), 4
             ).alias("mean_dist2"),
-            F.expr(
-                "CAST(dq * n * 1000000 div sum_q AS BIGINT)"
-            ).alias("ratio_ppm"),
+            exact_muldiv(["dq", "n"], "sum_q", 1_000_000).alias("ratio_ppm"),
         )
     )
 
@@ -3231,11 +3231,9 @@ def ta_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_tokens",
-            F.expr("(dup * 1000000) div n_tokens").alias("dup_token_ppm"),
+            exact_muldiv("dup", "n_tokens", 1_000_000).alias("dup_token_ppm"),
             "top_bigram",
-            F.expr("(max_c * 1000000) div n_bigrams").alias(
-                "top_bigram_ppm"
-            ),
+            exact_muldiv("max_c", "n_bigrams", 1_000_000).alias("top_bigram_ppm"),
         )
     )
 
@@ -3330,8 +3328,9 @@ def emb_rproj(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantization (q_i = round(x_i * 127 / max|x|), scale kept
 # alongside) — 4x smaller vectors for the ANN candidate tier, the
 # same layout faiss/ScaNN storage uses. Entirely within-row: one
-# narrow map, ZERO shuffles; the posexplode widens after the
-# arithmetic (the emb_rproj shape).
+# narrow map, ZERO shuffles; the posexplode widens before the
+# per-component rounding so that it runs in generated code (Spark
+# interprets a transform lambda).
 #
 # Integer discipline end-to-end: components quantize to micro-units
 # (xi6), the per-vector max rides array_max, and the int8 code is the
@@ -3376,25 +3375,24 @@ def emb_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = e.withColumn(
         "m6", F.array_max(F.transform("xi6", lambda v: F.abs(v)))
     ).filter(F.col("m6") > 0)
-    # Pure-BIGINT half-away rounding; `div` on the non-negative
-    # numerator matches DuckDB's floor `//` exactly (a double `/`
-    # then cast would mis-truncate exact integer quotients). The
-    # greatest(m6, 1) guard is for ANSI mode only: Catalyst folds
-    # this transform into the SAME codegen stage as the m6 > 0
-    # filter (as a shared subexpression evaluated before the
-    # predicate), so the expression must be total even though m6 = 0
-    # rows never survive; for surviving rows greatest is identity.
-    q = m.withColumn(
-        "qs",
-        F.expr(
-            "transform(xi6, v -> (CASE WHEN v >= 0 THEN 1 ELSE -1 END)"
-            " * ((abs(v) * 254 + m6) div (2 * greatest(m6, 1L))))"
-        ),
-    )
-    return q.select(
-        "vec_id", F.posexplode("qs").alias("dim_i", "q"), "m6"
-    ).select(
-        "vec_id", "dim_i", F.col("q").cast("long").alias("q"), "m6"
+    # Exact half-away rounding on the non-negative numerator (a
+    # double `/` then cast would mis-truncate exact integer
+    # quotients). The greatest(m6, 1) guard is for ANSI mode only:
+    # Catalyst may evaluate the rounding in the SAME codegen stage as
+    # the m6 > 0 filter, so the expression must be total even though
+    # m6 = 0 rows never survive; for surviving rows greatest is
+    # identity.
+    x = m.select("vec_id", F.posexplode("xi6").alias("dim_i", "v"), "m6")
+    return x.select(
+        "vec_id",
+        "dim_i",
+        (
+            F.when(F.col("v") >= 0, 1).otherwise(-1)
+            * exact_muldiv(
+                F.abs("v") * 254 + F.col("m6"), [2, F.greatest("m6", F.lit(1))], 1
+            )
+        ).alias("q"),
+        "m6",
     )
 
 
@@ -3479,7 +3477,7 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         sh.join(dfreq, "s")
         .withColumn("rn", F.row_number().over(w))
         .join(sz, "doc_id")
-        .filter(F.col("rn") <= F.expr("(n * 2) div 5") + 1)
+        .filter(F.col("rn") <= exact_muldiv("n", 5, 2) + 1)
         .select(F.col("doc_id").alias("da"), "s")
     )
     cand = (
@@ -3522,7 +3520,7 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "na",
         "nb",
         "i",
-        F.expr("(i * 1000000) div na").alias("cont_ppm"),
+        exact_muldiv("i", "na", 1_000_000).alias("cont_ppm"),
     )
 
 
@@ -3874,7 +3872,7 @@ def ta_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_grams",
         "n_novel",
-        F.expr("(n_novel * 1000000) div n_grams").alias("novelty_ppm"),
+        exact_muldiv("n_novel", "n_grams", 1_000_000).alias("novelty_ppm"),
     )
 
 
@@ -4566,9 +4564,7 @@ def emb_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = ab.select(
         "cid",
         F.when(F.greatest("a4", "b4") == 0, F.lit(0).cast("long"))
-        .otherwise(
-            F.expr("CAST(((b4 - a4) * 1000000) div greatest(a4, b4) AS BIGINT)")
-        )
+        .otherwise(exact_muldiv("b4 - a4", "greatest(a4, b4)", 1_000_000))
         .alias("s_ppm"),
     )
     return s.groupBy("cid").agg(
@@ -4634,10 +4630,10 @@ def ta_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("word") != "")
     firsts = tok.groupBy("word").agg(F.min("doc_id").alias("first_doc"))
     vocab_by_dec = firsts.groupBy(
-        F.expr(f"CAST((first_doc * 10) div {n_docs} AS BIGINT)").alias("decile")
+        exact_muldiv("first_doc", n_docs, 10).alias("decile")
     ).agg(F.count("*").cast("long").alias("new_words"))
     toks_by_dec = tok.groupBy(
-        F.expr(f"CAST((doc_id * 10) div {n_docs} AS BIGINT)").alias("decile")
+        exact_muldiv("doc_id", n_docs, 10).alias("decile")
     ).agg(
         F.count("*").cast("long").alias("n_tokens"),
         F.countDistinct("doc_id").cast("long").alias("n_docs"),
@@ -5312,11 +5308,9 @@ def ta_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_syllables",
         (
             F.lit(206835)
-            - F.expr("(1015 * n_words) div n_sentences")
-            - F.expr("(84600 * n_syllables) div n_words")
-        )
-        .cast("long")
-        .alias("flesch_milli"),
+            - exact_muldiv("n_words", "n_sentences", 1015)
+            - exact_muldiv("n_syllables", "n_words", 84600)
+        ).alias("flesch_milli"),
     )
 
 
@@ -5544,9 +5538,7 @@ def ta_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .cast("long")
             .alias("anonymous_at_5"),
-            F.expr("(class_size * 1000000) div _total")
-            .cast("long")
-            .alias("share_ppm"),
+            exact_muldiv("class_size", "_total", 1_000_000).alias("share_ppm"),
         )
     )
 
@@ -5785,6 +5777,7 @@ FROM t d LEFT JOIN dsum s USING (doc_id)
 
 
 @_q("ta_dsir", _DSIR_ORACLE)
+@releases_unread_cuts
 def ta_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR hashed-bigram importance weights + deterministic
     selection (see block comment)."""
@@ -5804,7 +5797,7 @@ def ta_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg = d.select(
         "doc_id", F.explode(feats).alias("s")
     ).select("doc_id", (_h48w(F.col("s")) % B).alias("f"))
-    bg = bg.localCheckpoint()  # counted three ways below
+    bg = cut(bg)  # counted three ways below
     rawc = bg.groupBy("f").agg(F.count("*").cast("long").alias("cr"))
     tgtc = (
         bg.filter(F.col("doc_id") % 10 == 0)
@@ -6461,10 +6454,9 @@ def ta_code_switch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flagged.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"),
         F.sum("sw").cast("long").alias("n_switches"),
-        F.expr(
-            "CAST(sum(sw) * 1000000 div greatest(count(*) - 1, 1L)"
-            " AS BIGINT)"
-        ).alias("switch_ppm"),
+        exact_muldiv("sum(sw)", "greatest(count(*) - 1, 1L)", 1_000_000).alias(
+            "switch_ppm"
+        ),
         F.countDistinct("lang").cast("long").alias("n_langs"),
     )
 
@@ -6550,6 +6542,7 @@ FROM ans a WHERE a.rn <= {_BQ_K}
 
 
 @_q("emb_binary_quantize", _BQ_ORACLE)
+@releases_unread_cuts
 def emb_binary_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-bit binary quantization retrieval with exact rerank and
     brute-force audit (see block comment)."""
@@ -6568,9 +6561,8 @@ def emb_binary_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" AS BIGINT)"
         )
 
-    pk = e.select(
-        "vec_id", pack(0).alias("w0"), pack(32).alias("w1")
-    ).localCheckpoint()  # packed index scanned twice (query + coarse)
+    # The packed index is scanned twice (query + coarse).
+    pk = cut(e.select("vec_id", pack(0).alias("w0"), pack(32).alias("w1")))
     qid = pk.agg(F.max("vec_id")).collect()[0][0]  # bounded scalar
     qrow = pk.filter(F.col("vec_id") == qid).collect()[0]
     qw0, qw1 = int(qrow["w0"]), int(qrow["w1"])
@@ -6615,7 +6607,7 @@ def emb_binary_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long"),
         )
     )
-    allsc = e.select("vec_id", cos(e).alias("cos4")).localCheckpoint()
+    allsc = cut(e.select("vec_id", cos(e).alias("cos4")))
     a = ans.select(
         F.col("vec_id").alias("a_id"),
         F.col("cos4").alias("a_cos4"),
@@ -6730,10 +6722,11 @@ def ta_kn_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c1",
             "n1p_fwd",
             "n1p_bwd",
-            F.expr(
-                "CAST(greatest(4 * c12 - 3, 0) * 1000000 div (4 * c1)"
-                " + 3 * n1p_fwd * n1p_bwd * 1000000"
-                "   div (4 * c1 * n_types) AS BIGINT)"
+            (
+                exact_muldiv("greatest(4 * c12 - 3, 0)", [4, "c1"], 1_000_000)
+                + exact_muldiv(
+                    ["n1p_fwd", "n1p_bwd"], [4, "c1", "n_types"], 3_000_000
+                )
             ).alias("p_kn_ppm"),
         )
         .orderBy(F.col("c12").desc(), "prev", "cur")
@@ -6799,25 +6792,25 @@ FROM alloc
 
 
 @_q("ta_seat_alloc", _SEAT_ALLOC_ORACLE)
+@releases_unread_cuts
 def ta_seat_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     # The stratum table is bounded (language cardinality) but feeds
     # FOUR consumers (t, the leftover aggregate, the main plan, and
-    # the conservation window) — localCheckpoint it once so the
+    # the conservation window) — cut it once so the
     # "one rollup + broadcast total" shape in the block comment is
     # literally true, not 4 rescans of documents.
-    h = (
+    h = cut(
         _docs(spark, sf_dir)
         .groupBy("lang")
         .agg(F.count("*").cast("long").alias("n_docs"))
-        .localCheckpoint()
     )
     t = h.agg(F.sum("n_docs").cast("long").alias("n"))
     q = h.crossJoin(F.broadcast(t)).select(
         "lang",
         "n_docs",
-        F.expr(f"{_SEAT_BUDGET} * n_docs div n").alias("base"),
+        exact_muldiv("n_docs", "n", _SEAT_BUDGET).alias("base"),
         (F.lit(_SEAT_BUDGET) * F.col("n_docs") % F.col("n")).alias("rem"),
     )
     r = q.agg(

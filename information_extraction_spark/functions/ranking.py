@@ -9,7 +9,7 @@ two-phase shape here is the distributed equivalent:
 
 1. range-partition by the order column (partition p holds keys ≤
    partition p+1's keys) and pin the partitioning with a
-   localCheckpoint — range boundaries come from sampling, so the
+   ``checkpoint.cut`` — range boundaries come from sampling, so the
    counts job and the final job MUST see the same physical layout
    (at real scale this materialization is the staging write of the
    vocab table);
@@ -31,7 +31,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from information_extraction_spark.operators.checkpoint import (
+    cut,
+    releases_unread_cuts,
+)
 
+
+@releases_unread_cuts
 def stable_rank(
     df: DataFrame,
     order_col: str,
@@ -50,9 +56,7 @@ def stable_rank(
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    parts = df.repartitionByRange(
-        num_partitions, F.col(order_col)
-    ).localCheckpoint()
+    parts = cut(df.repartitionByRange(num_partitions, F.col(order_col)))
     with_pid = parts.withColumn("_pid", F.spark_partition_id())
     counts = {
         r["_pid"]: r["cnt"]
@@ -88,6 +92,7 @@ def stable_rank(
     )
 
 
+@releases_unread_cuts
 def segmented_running_sum(
     df: DataFrame,
     key_col: str,
@@ -110,7 +115,7 @@ def segmented_running_sum(
     and one narrow sorted mapInPandas pass emits the running value —
     a vectorized cumsum per Arrow batch, no per-row Python. ONE range
     shuffle end to end, same contract as stable_rank (the
-    localCheckpoint pins the sampled range boundaries between the
+    cut pins the sampled range boundaries between the
     totals job and the scan job).
 
     The (order_cols) tuple must be a total order (include a unique
@@ -119,9 +124,9 @@ def segmented_running_sum(
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    parts = df.repartitionByRange(
-        num_partitions, *[F.col(c) for c in order_cols]
-    ).localCheckpoint()
+    parts = cut(
+        df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols])
+    )
     with_pid = parts.withColumn("_pid", F.spark_partition_id())
     totals = (
         with_pid.groupBy("_pid", key_col)

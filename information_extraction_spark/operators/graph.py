@@ -45,6 +45,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from information_extraction_spark.functions.exact import exact_muldiv
 from information_extraction_spark.operators.checkpoint import (
     cut,
     iterate,
@@ -1157,13 +1158,11 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
             ),
             F.when(
                 F.col("degree") >= 2,
-                F.expr(
-                    "CAST(2 * 1000000 * coalesce(triangles, 0)"
-                    " div (degree * (degree - 1)) AS BIGINT)"
+                exact_muldiv(
+                    "coalesce(triangles, 0)", ["degree", "degree - 1"], 2_000_000
                 ),
             )
             .otherwise(F.lit(0))
-            .cast("long")
             .alias("lcc_ppm"),
         )
     )
@@ -1499,9 +1498,8 @@ def conductance(edges: DataFrame, communities: DataFrame) -> DataFrame:
     )
     return out.select(
         "*",
-        F.expr(
-            f"CAST((cut_edges * 1000000) div "
-            f"greatest(least(volume, {2 * m} - volume), 1) AS BIGINT)"
+        exact_muldiv(
+            "cut_edges", f"greatest(least(volume, {2 * m} - volume), 1)", 1_000_000
         ).alias("conductance_ppm"),
     )
 
@@ -1689,11 +1687,9 @@ def truth_discovery(
     SUM trust(src) over claimers; trust_raw(s) = SUM belief(c) over
     claims; each half-step renormalizes x -> x * 10^6 div max(x)
     (max = a broadcast 1-row aggregate, never an unpartitioned
-    window). Per-term integer division keeps every sum
-    order-independent. Headroom: belief_raw*10^6 <= n_claimers *
-    10^18 ppm^2... in practice claimers-per-fact is bounded (<= convs
-    re-asserting one fact); at larger corpora drop the scale constant
-    to 10^3 before the multiply — noted, not needed at any tested sf.
+    window) through exact_muldiv, whose DECIMAL(38,0) product holds
+    any BIGINT sum times 10^6. Per-term integer division keeps every
+    sum order-independent.
 
     One (rounds=1) full belief->trust->belief sweep costs 3 keyed
     shuffles over the edge table + 2 scalar maxes; the edge table is
@@ -1710,7 +1706,7 @@ def truth_discovery(
         mx = F.broadcast(df.agg(F.max(col).alias("_mx")))
         return df.crossJoin(mx).select(
             *[c for c in df.columns if c != col],
-            F.expr(f"({col} * 1000000L) div _mx").cast("long").alias(col),
+            exact_muldiv(col, "_mx", 1_000_000).alias(col),
         )
 
     def beliefs(trust: DataFrame) -> DataFrame:
@@ -1807,9 +1803,7 @@ def betweenness_pivots(
             )
             .groupBy("entity", "sp_src")
             .agg(
-                F.sum(
-                    F.expr("(sigma * (1000000L + _wdelta)) div _wsig")
-                )
+                F.sum(exact_muldiv(["sigma", "1000000L + _wdelta"], "_wsig", 1))
                 .cast("long")
                 .alias("delta")
             )
@@ -1880,17 +1874,16 @@ def ppr_push(
             deg, st.node == deg.src
         )
         keep = st.filter(F.col("r") <= thresh_ppb)
+        a = exact_muldiv("r", 100, alpha_pct)
         settled = push.select(
             "node",
-            (F.col("p") + F.expr(f"(r * {alpha_pct}) div 100")).alias("p"),
+            (F.col("p") + a).alias("p"),
             F.lit(0).cast("long").alias("r"),
         )
         gains = (
             push.select(
                 F.col("node").alias("_pu"),
-                F.expr(
-                    f"(r - (r * {alpha_pct}) div 100) div deg"
-                ).alias("_share"),
+                exact_muldiv(F.col("r") - a, "deg", 1).alias("_share"),
             )
             .join(u, F.col("_pu") == u.src)
             .select(
@@ -1900,12 +1893,7 @@ def ppr_push(
             )
         )
         round_dust = (
-            push.select(
-                F.expr(
-                    f"(r - (r * {alpha_pct}) div 100)"
-                    f" % deg"
-                ).alias("_d")
-            )
+            push.select(((F.col("r") - a) % F.col("deg")).alias("_d"))
             .agg(F.coalesce(F.sum("_d"), F.lit(0)).alias("d"))
             .collect()[0]["d"]
         )
@@ -2113,11 +2101,12 @@ def motif_census(edges: DataFrame, max_mid_deg: int = 256) -> DataFrame:
             "n_wedges",
             "n_ffl",
             "n_cycle",
-            F.expr(
-                "CAST(CASE WHEN n_wedges > 0"
-                " THEN (n_ffl + n_cycle) * 1000000 div n_wedges"
-                " ELSE 0 END AS BIGINT)"
-            ).alias("closure_ppm"),
+            F.when(
+                F.col("n_wedges") > 0,
+                exact_muldiv("n_ffl + n_cycle", "n_wedges", 1_000_000),
+            )
+            .otherwise(0)
+            .alias("closure_ppm"),
         )
     )
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from information_extraction_spark.functions.exact import exact_muldiv
 from information_extraction_spark.operators.checkpoint import (
     cut,
     iterate,
@@ -577,10 +578,9 @@ def jaccard_neighbor_pairs(
             "s1",
             "s2",
             "n_shared",
-            F.expr(
-                "CAST((n_shared * 1000000)"
-                " div (_d1 + _d2 - n_shared) AS BIGINT)"
-            ).alias("jaccard_ppm"),
+            exact_muldiv("n_shared", "_d1 + _d2 - n_shared", 1_000_000).alias(
+                "jaccard_ppm"
+            ),
         )
     )
 

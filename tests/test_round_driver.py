@@ -113,6 +113,22 @@ def _star_contraction(spark, tmp_path):
     return connected_components(_edges(spark), driver_threshold=0)
 
 
+def _stable_rank(spark, tmp_path):
+    from information_extraction_spark.functions.ranking import stable_rank
+
+    return stable_rank(_edges(spark).select("src").distinct(), "src")
+
+
+def _segmented_running_sum(spark, tmp_path):
+    from information_extraction_spark.functions.ranking import (
+        segmented_running_sum,
+    )
+
+    rows = [(f"k{i % 3}", i, i * 7 % 5) for i in range(30)]
+    df = spark.createDataFrame(rows, "k string, t long, v long")
+    return segmented_running_sum(df, "k", ["t"], "v")
+
+
 def _query(name, write):
     def run(spark, tmp_path):
         from information_extraction_spark.driver_queries import textdata
@@ -141,6 +157,9 @@ _CALLS = {
     "ann_graph_search": _query("ann_graph_search", _write_embeddings),
     "p18_bpe_train": _query("p18_bpe_train", _write_documents),
     "p19_bpe_encode": _query("p19_bpe_encode", _write_documents),
+    "stable_rank": _stable_rank,
+    "segmented_running_sum": _segmented_running_sum,
+    "ta_seat_alloc": _query("ta_seat_alloc", _write_documents),
 }
 
 

@@ -366,6 +366,37 @@ def test_chi2_perfect_dependence_and_independence(spark, tmp_path):
     assert r2.chi2_milli == 0 and r2.cramers_v2_ppm == 0
 
 
+def test_chi2_cell_term_exact_past_1e9_docs(spark):
+    """a26's per-cell term num·(num·1000 div (rs·cs)) div n, num =
+    |o·n − rs·cs|, at 2·10⁹ docs with skewed marginals (num·1000 is
+    past 2⁶³) and at 10¹² docs (o·n is past 2⁶³) equals the same
+    double floor computed with Fractions."""
+    from fractions import Fraction
+
+    from information_extraction_spark.driver_queries.sketches import (
+        a26_chi2_cell_milli,
+    )
+
+    rows = [  # (o, rs, cs, n)
+        (1_900_000_000, 1_950_000_000, 1_920_000_000, 2_000_000_000),
+        (10_000_000, 1_950_000_000, 80_000_000, 2_000_000_000),
+        (0, 50_000_000, 1_920_000_000, 2_000_000_000),
+        (3, 7, 11, 2_000_000_000),
+        (600 * 10**9, 700 * 10**9, 800 * 10**9, 10**12),
+    ]
+
+    def floor(q: Fraction) -> int:
+        return q.numerator // q.denominator
+
+    def term(o, rs, cs, n):
+        num = abs(o * n - rs * cs)
+        return floor(Fraction(num * floor(Fraction(num * 1000, rs * cs)), n))
+
+    cells = spark.createDataFrame(rows, "o long, rs long, cs long, n long")
+    got = [r.c_milli for r in a26_chi2_cell_milli(cells).collect()]
+    assert got == [term(*r) for r in rows]
+
+
 def test_spearman_perfect_and_inverse(spark, tmp_path):
     """Monotone-increasing word counts with n_chars give rho = 1
     (sum_d2 = 0); reversing the word counts gives rho = -1."""

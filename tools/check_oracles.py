@@ -80,11 +80,12 @@ def main() -> int:
     # capped run turns that into a prompt duckdb-error FAIL, which is
     # the honest outcome for "the ORACLE formulation does not scale to
     # this sf" (the engine side is unaffected).
-    con.execute(
-        "SET memory_limit = '"
-        + os.environ.get("ORACLE_DUCKDB_MEM", "48GB")
-        + "'"
-    )
+    # By default DuckDB gets the physical memory that the Spark
+    # driver's heap cannot claim; ORACLE_DUCKDB_MEM overrides it.
+    heap = spark._jsc.sc().getConf().getSizeAsBytes("spark.driver.memory", "1g")
+    free = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") - heap
+    mem = os.environ.get("ORACLE_DUCKDB_MEM", f"{max(free, 1 << 30)}B")
+    con.execute(f"SET memory_limit = '{mem}'")
     # Bounded spill: a size-bounded temp dir — big enough for every
     # in-scale oracle, small enough that a quadratic blowup still
     # dies in minutes, not after filling the disk. Oracles that read

@@ -40,6 +40,11 @@ import urllib.request
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from information_extraction_spark.operators.checkpoint import (  # noqa: E402
+    cut,
+    releases_unread_cuts,
+)
+
 
 def _rest(base: str, path: str):
     with urllib.request.urlopen(base + path, timeout=10) as r:
@@ -177,6 +182,7 @@ def flagship_leg(spark, base: str, corpus_dir: str, sf_dir: str) -> dict:
     }
 
 
+@releases_unread_cuts
 def join_mechanism_leg(spark, base: str) -> dict:
     """Synthetic zipf sort-merge join: 10M fact rows, hot key = 30%,
     10k dim rows; broadcast disabled so the join MUST shuffle."""
@@ -184,7 +190,7 @@ def join_mechanism_leg(spark, base: str) -> dict:
 
     from information_extraction_spark.functions.skew import salted_join
 
-    fact = (
+    fact = cut(
         spark.range(10_000_000)
         .select(
             F.when(F.col("id") % 10 < 3, F.lit(7))
@@ -193,15 +199,12 @@ def join_mechanism_leg(spark, base: str) -> dict:
             .alias("k"),
             (F.col("id") % 97).alias("v"),
         )
-        .localCheckpoint()
     )
-    dim = (
-        spark.range(10_000)
-        .select(
+    dim = cut(
+        spark.range(10_000).select(
             F.col("id").alias("k"),
             (F.col("id") % 13).alias("w"),
         )
-        .localCheckpoint()
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set(

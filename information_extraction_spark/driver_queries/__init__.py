@@ -30,6 +30,16 @@ from information_extraction_spark.driver_queries._registry import (
 # stale green row from a prior round is not evidence for code that
 # changed since (VERDICT r03 #1). Update this list each round.
 _CHANGED_THIS_ROUND = [
+    # MODIFIED: component labels come from linking.relabel (held on
+    # the driver, broadcast per key) and connected components keep the
+    # key's own type — no zero-padded ids; kg_entity_linking_distributed
+    # runs star contraction directly.
+    "kg_entity_linking",
+    "kg_entity_linking_distributed",
+    "kg_er_merge",
+    "dd_dup_clusters",
+    "dd_semdedup_keep",
+    "emb_dbscan",
     # MODIFIED: every exact ratio goes through functions/exact's
     # exact_muldiv (a26 no longer overflows past ~10^8 docs), and
     # one-shot lineage cuts go through checkpoint.cut under
@@ -197,11 +207,6 @@ _CHANGED_THIS_ROUND = [
     "ta_bm25",
     "kg_incremental_merge",
     "kg_neg_sampling",
-    # MODIFIED: connected_components' distributed leg is star
-    # contraction run to a settled edge set (was a capped label-
-    # propagation loop); kg_cc_largestar, which ran the same code, is
-    # gone.
-    "kg_entity_linking_distributed",
     # MODIFIED: extract_triples runs one path — the fused kernel, for
     # every threshold and with or without a checkpointer — and the
     # kernel's predicate selection is shared with classify_batch
@@ -296,11 +301,6 @@ _CHANGED_THIS_ROUND = [
     # graphs: 2 refinement rounds, name-free labels, portable-h48
     # sorted-multiset hashing — the structure-keyed dedup signal.
     "kg_wl_kernel",
-    # Grid-blocked DBSCAN over the 2-D embedding projection:
-    # 3x3 neighbor-cell equi-join neighborhoods, exact quantized
-    # BIGINT distances, deterministic min-label border rule; oracle
-    # is the exhaustive all-pairs search + recursive-CTE closure.
-    "emb_dbscan",
     # Functional-slot simultaneous contradictions: distinct objects
     # of one (s,p) whose temporal_extent validity windows overlap —
     # slot-co-keyed self-join, pair fan-out bounded by slot version
@@ -615,7 +615,6 @@ _CHANGED_THIS_ROUND = [
     # SHACL-style cardinality and domain/range validation against the
     # induced ontology, and fixed-iteration Lloyd k-means over the
     # embedding table — added this round.
-    "kg_er_merge",
     "kg_cardinality_check",
     "kg_type_violations",
     "emb_kmeans",
@@ -654,8 +653,6 @@ _CHANGED_THIS_ROUND = [
     "ann_ivf_pq",
     # Personalized PageRank (random walk with restart to a seed set).
     "kg_pagerank_personalized",
-    # SemDeDup keep-one: CC over the kmeans-blocked cosine pairs.
-    "dd_semdedup_keep",
     # Consolidation layer above triple support, added this round:
     # functional-slot conflict resolution (struct-max argmax),
     # per-typed-predicate ontology profile, and k-bounded per-triple
@@ -705,7 +702,6 @@ _CHANGED_THIS_ROUND = [
     "dd_minhash_lsh_b4",
     "mm_frames",
     "dd_minhash_lsh",
-    "dd_dup_clusters",
     "ann_ivf_probe",
     "mm_codec_features",
     "mm_features",

@@ -593,11 +593,16 @@ def kg_entity_linking_distributed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Same alias graph and recursive-CTE oracle as kg_entity_linking,
-    but with ``driver_threshold=0`` so execution demonstrably runs the
-    DISTRIBUTED star contraction (operators/linking._star_contraction —
-    alternating large-star/small-star rounds over a shrinking edge set
-    on the round driver) — the path a 100 TB alias graph
-    takes, previously pytest-only (VERDICT r02 #2)."""
+    but labeled by the DISTRIBUTED star contraction
+    (operators/linking._star_contraction — alternating
+    large-star/small-star rounds over a shrinking edge set on the round
+    driver), called directly: the leg a graph past
+    ``linking.CC_DRIVER_EDGES`` takes. The result reads the labels
+    cut."""
+    from information_extraction_spark.operators.linking import (
+        _star_contraction,
+        alias_edges,
+    )
     from information_extraction_spark.sources.from_documents import (
         alias_chain_pairs,
         vocabulary,
@@ -605,9 +610,8 @@ def kg_entity_linking_distributed(
 
     pairs = alias_chain_pairs(vocabulary(spark, sf_dir))
     alias_df = spark.createDataFrame(pairs, "canonical string, alias string")
-    return canonical_mapping(alias_df, driver_threshold=0).orderBy(
-        "surface"
-    )
+    labels = _star_contraction(alias_edges(alias_df))
+    return labels.toDF("surface", "canonical_id").orderBy("surface")
 
 
 # --- Graph analytics over the MATERIALIZED triples -----------------------

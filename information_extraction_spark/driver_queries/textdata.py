@@ -352,8 +352,8 @@ def dd_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # never collide directly), one canonical representative kept per
 # cluster (min doc_id — the curation "keep-first" rule). Composes the
 # oracle-checked dd_minhash_lsh pair generation with
-# operators/linking.connected_components; doc ids ride zero-padded so
-# the CC's lexicographic min label IS the numeric min.
+# operators/linking.relabel, which labels each doc with its cluster's
+# minimum doc_id (the oracle pads ids into strings for its own CTE).
 
 _DUP_CLUSTERS_ORACLE = """
 WITH RECURSIVE sh AS (
@@ -393,9 +393,7 @@ LEFT JOIN comp ON lpad(CAST(d.doc_id AS VARCHAR), 10, '0') = comp.node
 
 @_q("dd_dup_clusters", _DUP_CLUSTERS_ORACLE)
 def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from information_extraction_spark.operators.linking import (
-        connected_components,
-    )
+    from information_extraction_spark.operators.linking import relabel
 
     # Clustering does NOT need the materialized all-pairs collision
     # list (O(k²) edges for a k-doc bucket — a 2.5k-doc near-dup
@@ -405,11 +403,12 @@ def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # yields identical components with edges LINEAR in bucket size.
     # The oracle still closes over the all-pairs graph — equality of
     # the two formulations is exactly what the value check proves.
-    pad = lambda c: F.lpad(F.col(c).cast("string"), 10, "0")  # noqa: E731
     # The band rows feed both the hub aggregate and the join; cache
-    # for the duration of the CC call (which materializes its labels
-    # — driver collect or localCheckpoint — before returning, so no
-    # lineage to `bands` survives the unpersist).
+    # for the duration of the relabel call (which holds its labels on
+    # the driver before returning, so no lineage to `bands` survives
+    # the unpersist). The label table is one row per doc in a near-dup
+    # EDGE — a small fraction of the corpus — and relabel broadcasts
+    # it, so the corpus never shuffles.
     bands = _lsh_bands(spark, sf_dir).cache()
     try:
         hubs = bands.groupBy("band", "key").agg(
@@ -418,29 +417,15 @@ def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges = (
             bands.join(hubs, ["band", "key"])
             .filter(F.col("doc_id") != F.col("hub"))
-            .select(pad("hub").alias("src"), pad("doc_id").alias("dst"))
+            .select(F.col("hub").alias("src"), F.col("doc_id").alias("dst"))
             .dropDuplicates()
         )
-        comps = connected_components(edges)
+        out = relabel(
+            _docs(spark, sf_dir).select("doc_id"), edges, cluster_id="doc_id"
+        )
     finally:
         bands.unpersist()
-    docs = _docs(spark, sf_dir).select("doc_id", pad("doc_id").alias("_n"))
-    # The label table is one row per doc that appears in a near-dup
-    # EDGE — a small fraction of the corpus (and it arrives as an
-    # ExistingRDD with no stats, so AQE can't discover that on its
-    # own). Broadcast it explicitly: the doc→cluster mapping becomes a
-    # stream-side BroadcastHashJoin and the corpus never shuffles. If
-    # a corpus were majority-duplicates the hint would be the thing to
-    # drop, not the join shape.
-    out = (
-        docs.join(F.broadcast(comps), docs._n == comps.node, "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", "_n").cast("long").alias("cluster_id"),
-        )
-        .withColumn("keep", F.col("doc_id") == F.col("cluster_id"))
-    )
-    return out
+    return out.withColumn("keep", F.col("doc_id") == F.col("cluster_id"))
 
 
 # --- SimHash (16-bit) ---------------------------------------------------------
@@ -2234,9 +2219,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of dd_dup_clusters for dd_embedding_cosine_kmeans): near-dup pairs
 # → connected components → every vector labeled with its cluster's
 # minimum member and a keep flag (keep exactly the representative;
-# singletons keep themselves). vec_ids ride the CC as zero-padded
-# strings so the component minimum is the NUMERIC minimum
-# (dd_dup_clusters' trick).
+# singletons keep themselves).
 
 _SEMDEDUP_ORACLE = f"""
 WITH RECURSIVE prs AS (
@@ -2268,38 +2251,19 @@ LEFT JOIN comp c ON c.node = lpad(CAST(e.vec_id AS VARCHAR), 10, '0')
 @_q("dd_semdedup_keep", _SEMDEDUP_ORACLE)
 def dd_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup keep-one: connected components over the k-means-
-    blocked cosine pairs, every vector labeled (cluster, keep). The
-    CC label table is bounded by vectors-in-pairs — broadcast onto
-    the full table exactly like dd_dup_clusters' mapping join."""
-    from information_extraction_spark.operators.linking import (
-        connected_components,
-    )
+    blocked cosine pairs, every vector labeled (cluster, keep) by
+    ``relabel``, which broadcasts the vectors-in-pairs label table
+    onto the full table."""
+    from information_extraction_spark.operators.linking import relabel
 
     pairs = dd_embedding_cosine_kmeans(spark, sf_dir)
-    pad = lambda c: F.format_string("%010d", F.col(c))  # noqa: E731
-    comps = connected_components(
-        pairs.select(pad("va").alias("src"), pad("vb").alias("dst"))
+    out = relabel(
+        _emb(spark, sf_dir).select("vec_id"),
+        pairs.select(F.col("va").alias("src"), F.col("vb").alias("dst")),
+        cluster="vec_id",
     )
-    mapping = F.broadcast(
-        comps.select(
-            F.col("node").cast("bigint").alias("vec_id"),
-            F.col("component").cast("bigint").alias("_cl"),
-        )
-    )
-    e = _emb(spark, sf_dir).select("vec_id")
-    return (
-        e.join(mapping, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("_cl", F.col("vec_id")).cast("bigint").alias(
-                "cluster"
-            ),
-            (
-                F.coalesce("_cl", F.col("vec_id")) == F.col("vec_id")
-            )
-            .cast("int")
-            .alias("keep"),
-        )
+    return out.withColumn(
+        "keep", (F.col("cluster") == F.col("vec_id")).cast("int")
     )
 
 

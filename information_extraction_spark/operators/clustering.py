@@ -637,9 +637,8 @@ def dbscan_grid(
     - Degree count and border assignment are map-side-combined
       shuffles on the point key; the core-core component step reuses
       connected_components (size-dispatched driver union-find vs
-      star contraction) on edges already restricted to core points.
-    - vec_ids serialize as zero-padded strings for CC (lexicographic
-      = numeric order, so the component label IS the min vec_id).
+      star contraction) on edges already restricted to core points;
+      it labels vec_ids by their numeric minimum.
     """
     eps2 = eps_q * eps_q
     off = 1_000_000_000  # shift keeps cell division on positive ints
@@ -689,9 +688,6 @@ def dbscan_grid(
         F.col("a_id").alias("vec_id")
     )
 
-    def pad(col: str):
-        return F.lpad(F.col(col).cast("string"), 8, "0")
-
     from information_extraction_spark.operators.linking import (
         connected_components,
     )
@@ -701,24 +697,26 @@ def dbscan_grid(
             core.withColumnRenamed("vec_id", "a_id"), "a_id", "left_semi"
         )
         .join(core.withColumnRenamed("vec_id", "b_id"), "b_id", "left_semi")
-        .select(pad("a_id").alias("src"), pad("b_id").alias("dst"))
+        .select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     )
     # Self-loops keep isolated cores (all neighbors border) as their
     # own singleton clusters instead of dropping out of the CC input.
-    loops = core.select(pad("vec_id").alias("src"), pad("vec_id").alias("dst"))
+    loops = core.select(
+        F.col("vec_id").alias("src"), F.col("vec_id").alias("dst")
+    )
     comps = connected_components(cc_edges.unionByName(loops))
     core_rows = comps.select(
-        F.col("node").cast("long").alias("vec_id"),
-        F.col("component").cast("long").alias("cluster_id"),
+        F.col("node").alias("vec_id"),
+        F.col("component").alias("cluster_id"),
         F.lit(1).cast("long").alias("is_core"),
     )
     border_rows = (
         pairs.join(
             core.withColumnRenamed("vec_id", "a_id"), "a_id", "left_anti"
         )
-        .join(comps, pad("b_id") == F.col("node"))
+        .join(comps, F.col("b_id") == F.col("node"))
         .groupBy("a_id")
-        .agg(F.min(F.col("component").cast("long")).alias("cluster_id"))
+        .agg(F.min("component").alias("cluster_id"))
         .select(
             F.col("a_id").alias("vec_id"),
             "cluster_id",

@@ -1,28 +1,29 @@
-"""Entity linking & canonicalization (north rule: "entity linking and
-canonicalization with a salted broadcast/hash-join alias dictionary
-plus connected-components merge").
+"""Entity linking & canonicalization: connected components over the
+alias dictionary, joined back onto the triples by broadcast.
 
 The reference's alias dictionary is only consulted at evaluation time
 (calc_pr.py:141-161); our engine promotes it to a first-class linking
 stage: alias rows form an undirected surface-form graph, connected
-components assign every surface form a canonical id (the
-lexicographically smallest member of its component — covering chains
-a→b→c the flat dict cannot), and triples are canonicalized through a
-broadcast join on both endpoints.
+components assign every surface form a canonical id (the smallest
+member of its component — covering chains a→b→c the flat dict
+cannot), and triples are canonicalized through a broadcast join on
+both endpoints.
 
-Scale: the alias dim is broadcast (no shuffle on the skewed fact
-side); a graph past the driver threshold runs star contraction, which
-shuffles only the edge table (tiny vs the fact table), shrinks it
-every round and cuts it per round on the round driver
-(operators/checkpoint.iterate). If the
-alias dim ever outgrows broadcast range, functions.skew.salted_join
-is the drop-in replacement for the two endpoint joins.
+``relabel`` is the one way a table gets component labels. The
+mapping lives on the driver: union-find rows as they are, or the
+collected star-contraction labels (a graph past ``CC_DRIVER_EDGES``),
+whose round cuts are all released before it returns. Each key then
+joins the broadcast mapping, so the fact side never shuffles and no
+checkpoint outlives the call. A mapping too large for the driver
+would need star contraction plus a shuffle join; no caller has one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from information_extraction_spark.functions.exact import exact_muldiv
 from information_extraction_spark.operators.checkpoint import (
@@ -32,36 +33,38 @@ from information_extraction_spark.operators.checkpoint import (
 )
 from information_extraction_spark.operators.evaluation import normalize_entity
 
+# Graphs with at most this many edges run union-find on the driver;
+# larger ones run star contraction.
+CC_DRIVER_EDGES = 100_000
+
 
 def alias_edges(alias_df: DataFrame) -> DataFrame:
     """Undirected edges from (canonical, alias) rows, lowercased."""
-    return (
-        alias_df.select(
-            F.lower("canonical").alias("src"), F.lower("alias").alias("dst")
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates()
-    )
+    return alias_df.select(
+        F.lower("canonical").alias("src"), F.lower("alias").alias("dst")
+    ).filter(F.col("src") != F.col("dst"))
 
 
-def connected_components(
-    edges: DataFrame, driver_threshold: int = 100_000
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components: every node labeled with the minimum node
-    id in its component. Returns (node, component) for every non-NULL
-    endpoint, self-loop-only nodes included; rows with a NULL
-    endpoint are dropped, and no edges give no rows.
+    id in its component. Returns (node, component), typed like the
+    edges' ``src`` (string, bigint, ...), for every non-NULL endpoint,
+    self-loop-only nodes included; rows with a NULL endpoint are
+    dropped, and no edges give no rows.
 
-    Two legs, picked by input size. An edge list at or under
-    ``driver_threshold`` (the alias dictionary is a broadcast-scale
-    dim by definition) runs union-find on the driver: the distributed
-    leg costs ~2 Spark jobs per round, pure latency for a graph that
-    fits in one list. Larger graphs run star contraction
-    (``_star_contraction``). Both legs produce identical labels
+    Two legs, picked by input size. An edge list of at most
+    ``CC_DRIVER_EDGES`` runs union-find on the driver and comes back
+    as a local DataFrame over driver-held rows: the distributed leg
+    costs ~2 Spark jobs per round, pure latency for a graph that fits
+    in one list. Larger graphs run star contraction
+    (``_star_contraction``) and come back as its labels cut. Callers
+    that join the labels without broadcasting them (louvain, dbscan)
+    take either; ``relabel`` and ``canonical_mapping`` hold the labels
+    on the driver whatever the leg. Both legs produce identical labels
     (tested against a BFS oracle).
     """
     # NULL endpoints link nothing; dropping them up front also keeps
-    # union-find from ordering None against strings.
+    # union-find from ordering None against keys.
     edges = edges.filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     )
@@ -70,20 +73,20 @@ def connected_components(
     # (possibly expensive) edges plan twice, and on nondeterministic
     # lineage the second evaluation could exceed what the count
     # promised — unbounding the collect. The cost of this shape is
-    # holding ≤ threshold+1 short tuples (a few MB) briefly on the
-    # driver even when the graph turns out large; that is cheaper and
-    # safer than re-evaluating the plan.
-    probe = edges.select("src", "dst").limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
-        return _union_find(edges.sparkSession, probe)
+    # holding ≤ CC_DRIVER_EDGES+1 short tuples (a few MB) briefly on
+    # the driver even when the graph turns out large; that is cheaper
+    # and safer than re-evaluating the plan.
+    probe = edges.select("src", "dst").limit(CC_DRIVER_EDGES + 1).collect()
+    if len(probe) <= CC_DRIVER_EDGES:
+        return _union_find(edges, probe)
     return _star_contraction(edges)
 
 
-def _union_find(spark: SparkSession, edge_rows: list) -> DataFrame:
+def _union_find(edges: DataFrame, edge_rows: list) -> DataFrame:
     """Driver leg: union-find over the collected (src, dst) rows."""
-    parent: dict[str, str] = {}
+    parent: dict = {}
 
-    def find(x: str) -> str:
+    def find(x):
         root = x
         while parent.get(root, root) != root:
             root = parent[root]
@@ -97,9 +100,16 @@ def _union_find(spark: SparkSession, edge_rows: list) -> DataFrame:
         a, b = find(r["src"]), find(r["dst"])
         if a != b:
             parent[max(a, b)] = min(a, b)
-    nodes = {n for r in edge_rows for n in (r["src"], r["dst"])}
-    rows = [(n, find(n)) for n in sorted(nodes)]
-    return spark.createDataFrame(rows, "node string, component string")
+    nodes = sorted({n for r in edge_rows for n in (r["src"], r["dst"])})
+    key = to_arrow_type(edges.schema["src"].dataType)
+    return edges.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "node": pa.array(nodes, key),
+                "component": pa.array([find(n) for n in nodes], key),
+            }
+        )
+    )
 
 
 # Kiveris et al. bound star contraction by O(log² n) rounds and observe
@@ -127,7 +137,8 @@ def _star_contraction(edges: DataFrame) -> DataFrame:
     Runs until the edge set stops changing; raises if it has not
     after ``_MAX_STAR_ROUNDS``. Each round's edge set is cut on the
     round driver, which releases its predecessor, and the returned
-    labels are the only cut the call leaves persisted.
+    labels are the only cut the call leaves persisted. ``edges`` must
+    have no NULL endpoint.
     """
     nodes = cut(
         edges.select(F.col("src").alias("node"))
@@ -196,18 +207,46 @@ def _star_contraction(edges: DataFrame) -> DataFrame:
     )
 
 
-def canonical_mapping(
-    alias_df: DataFrame, driver_threshold: int = 100_000
+@releases_unread_cuts
+def _driver_mapping(edges: DataFrame) -> DataFrame:
+    """``connected_components`` held on the driver: the union-find
+    leg's local DataFrame as it is, the star-contraction labels
+    collected into one. Either way the call leaves no cut persisted."""
+    labels = connected_components(edges)
+    if labels.isLocal():
+        return labels
+    return labels.sparkSession.createDataFrame(labels.toArrow())
+
+
+def relabel(
+    df: DataFrame, edges: DataFrame, **out_cols: str | Column
 ) -> DataFrame:
+    """``df`` plus one column per keyword ``out=key``: the component
+    minimum of ``key`` (a column name or expression) in the graph of
+    ``edges`` (src, dst), or the key itself when the graph does not
+    hold it. A column of ``df`` named ``out`` is replaced in place.
+
+    The labels are computed once, held on the driver and broadcast to
+    one left join per key, so ``df`` never shuffles. The mapping must
+    therefore fit on the driver; every caller broadcasts it anyway.
+    """
+    labels = _driver_mapping(edges)
+    for out, key in out_cols.items():
+        k, lab = f"_{out}_key", f"_{out}_label"
+        df = (
+            df.withColumn(k, F.col(key) if isinstance(key, str) else key)
+            .join(F.broadcast(labels.toDF(k, lab)), k, "left")
+            .withColumn(out, F.coalesce(lab, k))
+            .drop(k, lab)
+        )
+    return df
+
+
+def canonical_mapping(alias_df: DataFrame) -> DataFrame:
     """(surface, canonical_id): every surface form in the alias graph
-    mapped to its component's minimum member. ``driver_threshold=0``
-    forces the distributed star contraction (the shape a 100 TB alias
-    graph runs)."""
-    comps = connected_components(
-        alias_edges(alias_df), driver_threshold=driver_threshold
-    )
-    return comps.select(
-        F.col("node").alias("surface"), F.col("component").alias("canonical_id")
+    mapped to its component's minimum member, held on the driver."""
+    return _driver_mapping(alias_edges(alias_df)).toDF(
+        "surface", "canonical_id"
     )
 
 
@@ -402,34 +441,16 @@ def apply_er_merge(
     Scale shape: the component label table is bounded by the entities
     appearing in an above-threshold candidate pair — a vanishing
     fraction of the entity universe (duplicates that also share ≥ tau
-    of their slots), NOT entity-sized — so it broadcasts onto the
-    fact table exactly like dd_dup_clusters' doc→cluster mapping;
-    unmatched subjects canonicalize to themselves via coalesce with
-    no second pass. The re-aggregation is one map-side-combined
-    shuffle on the rewritten (s, p, o) key. The CC runs over pair
-    edges (bounded as above) with the usual driver/star-contraction
-    dispatch.
+    of their slots), NOT entity-sized — so ``relabel`` broadcasts it
+    onto the fact table; unmatched subjects canonicalize to
+    themselves with no second pass. The re-aggregation is one
+    map-side-combined shuffle on the rewritten (s, p, o) key.
     """
     pairs = er_candidates(triples, tau=tau, max_slot_freq=max_slot_freq)
-    comps = connected_components(
-        pairs.select(F.col("s1").alias("src"), F.col("s2").alias("dst"))
-    )
-    mapping = F.broadcast(
-        comps.select(
-            F.col("node").alias("_raw"), F.col("component").alias("_canon")
-        )
-    )
-    rewritten = (
-        triples.withColumn("_raw", F.col("subject"))
-        .drop("subject")
-        .join(mapping, "_raw", "left")
-        .select(
-            F.coalesce("_canon", "_raw").alias("subject"),
-            "predicate",
-            "object",
-            "conv_id",
-            F.col("_raw").alias("_surface"),
-        )
+    rewritten = relabel(
+        triples.withColumnRenamed("subject", "_surface"),
+        pairs.select(F.col("s1").alias("src"), F.col("s2").alias("dst")),
+        subject="_surface",
     )
     return rewritten.groupBy("subject", "predicate", "object").agg(
         F.count("*").cast("long").alias("support"),
@@ -441,36 +462,15 @@ def apply_er_merge(
 def canonicalize_triples(
     triples: DataFrame, alias_df: DataFrame
 ) -> DataFrame:
-    """Attach canonical subject/object ids via broadcast joins on the
-    normalized surface forms. Surfaces outside the alias graph are
-    their own canonical id (coalesce to self)."""
-    mapping = canonical_mapping(alias_df)
-    s_map = F.broadcast(
-        mapping.select(
-            F.col("surface").alias("_s_key"),
-            F.col("canonical_id").alias("subject_canonical"),
-        )
+    """Attach canonical subject/object ids: ``relabel`` on the
+    normalized surface forms over the alias graph. Surfaces outside
+    the alias graph are their own canonical id."""
+    return relabel(
+        triples,
+        alias_edges(alias_df),
+        subject_canonical=normalize_entity(F.col("subject")),
+        object_canonical=normalize_entity(F.col("object")),
     )
-    o_map = F.broadcast(
-        mapping.select(
-            F.col("surface").alias("_o_key"),
-            F.col("canonical_id").alias("object_canonical"),
-        )
-    )
-    out = (
-        triples.withColumn("_s_key", normalize_entity(F.col("subject")))
-        .withColumn("_o_key", normalize_entity(F.col("object")))
-        .join(s_map, "_s_key", "left")
-        .join(o_map, "_o_key", "left")
-        .withColumn(
-            "subject_canonical", F.coalesce("subject_canonical", F.col("_s_key"))
-        )
-        .withColumn(
-            "object_canonical", F.coalesce("object_canonical", F.col("_o_key"))
-        )
-        .drop("_s_key", "_o_key")
-    )
-    return out
 
 
 def resource_alloc_pairs(

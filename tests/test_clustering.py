@@ -628,21 +628,39 @@ def test_silhouette_matches_sequential_reference(spark, tmp_path):
                for s in ss)
 
 
+# vec_id offsets every dbscan case runs at: ids as written, and ids
+# shifted past 10^8 (and 2^31), where a fixed-width rendering of the id
+# would truncate.
+_DBSCAN_ID_OFFSETS = (0, 3_000_000_000)
+
+
 def _run_dbscan(spark, pts_q, eps_q, min_pts):
     """pts_q: list of (vec_id, qx, qy) in quantized units; embeds them
-    back at scale 10^4 so dbscan_grid re-quantizes to exactly pts_q."""
+    back at scale 10^4 so dbscan_grid re-quantizes to exactly pts_q.
+    Runs once per offset in _DBSCAN_ID_OFFSETS, shifts the labels back,
+    and requires every offset to give the same labels."""
     from information_extraction_spark.operators.clustering import (
         dbscan_grid,
     )
 
-    df = spark.createDataFrame(
-        [(i, [x / 10000.0, y / 10000.0]) for i, x, y in pts_q],
-        "vec_id long, embedding array<float>",
-    )
-    return {
-        r["vec_id"]: (r["cluster_id"], r["is_core"])
-        for r in dbscan_grid(df, eps_q=eps_q, min_pts=min_pts).collect()
-    }
+    runs = []
+    for off in _DBSCAN_ID_OFFSETS:
+        df = spark.createDataFrame(
+            [(i + off, [x / 10000.0, y / 10000.0]) for i, x, y in pts_q],
+            "vec_id long, embedding array<float>",
+        )
+        rows = dbscan_grid(df, eps_q=eps_q, min_pts=min_pts).collect()
+        runs.append(
+            {
+                r["vec_id"] - off: (
+                    r["cluster_id"] - off if r["cluster_id"] >= 0 else -1,
+                    r["is_core"],
+                )
+                for r in rows
+            }
+        )
+    assert all(run == runs[0] for run in runs), runs
+    return runs[0]
 
 
 def test_dbscan_core_border_noise_semantics(spark):

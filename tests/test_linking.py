@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from information_extraction_spark.functions.skew import salted_count, salted_join
+from information_extraction_spark.operators import linking
 from information_extraction_spark.operators.linking import (
     canonical_mapping,
     canonicalize_triples,
@@ -17,10 +18,24 @@ from information_extraction_spark.operators.linking import (
 )
 
 
-def _edges(spark, pairs):
-    return spark.createDataFrame(
-        pd.DataFrame(pairs, columns=["src", "dst"]), "src string, dst string"
-    )
+def _edges(spark, pairs, key="string"):
+    return spark.createDataFrame(pairs, f"src {key}, dst {key}")
+
+
+@pytest.fixture
+def star_leg(monkeypatch):
+    """Every graph with an edge runs star contraction; returns the list
+    the star-contraction calls are appended to."""
+    calls = []
+    star = linking._star_contraction
+
+    def counted(edges):
+        calls.append(edges)
+        return star(edges)
+
+    monkeypatch.setattr(linking, "CC_DRIVER_EDGES", 0)
+    monkeypatch.setattr(linking, "_star_contraction", counted)
+    return calls
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -125,35 +140,49 @@ def _random_graph(seed, n=18, m=22):
     ]
 
 
+def _bigint(pairs):
+    """``pairs`` over BIGINT keys in the nodes' order, spaced so that
+    decimal-string order differs from numeric order (999999937 sorts
+    after 1999999874 as text) and most keys pass 2^31."""
+    nodes = sorted({n for p in pairs for n in p if n is not None})
+    key = {n: (i + 1) * 999_999_937 for i, n in enumerate(nodes)}
+    return [tuple(key.get(n) for n in p) for p in pairs]
+
+
+_CC_GRAPHS = {
+    "chain41": _chain(41),
+    "star": [("z", f"m{i}") for i in range(6)],  # rooted at the max id
+    "islands": [("b", "a"), ("b", "c"), ("x", "y"), ("m", "m2"),
+                ("c", "d"), ("q", "b")],
+    "self_loops": [("q", "q"), ("r", "r"), ("r", "s"), ("a", "b")],
+    "nulls": [("a", None), (None, "b"), (None, None), ("c", "d"),
+              ("d", "e")],
+    "empty": [],
+    "random7": _random_graph(7),
+    "random8": _random_graph(8),
+    "random9": _random_graph(9),
+}
+
+
+@pytest.mark.parametrize("leg", ["driver", "distributed"])
 @pytest.mark.parametrize(
-    "driver_threshold", [100_000, 0], ids=["driver", "distributed"]
-)
-@pytest.mark.parametrize(
-    "pairs",
-    [
-        _chain(41),
-        [("z", f"m{i}") for i in range(6)],  # star rooted at the max id
-        [("b", "a"), ("b", "c"), ("x", "y"), ("m", "m2"), ("c", "d"),
-         ("q", "b")],  # islands
-        [("q", "q"), ("r", "r"), ("r", "s"), ("a", "b")],  # self loops
-        [("a", None), (None, "b"), (None, None), ("c", "d"),
-         ("d", "e")],  # NULL endpoints
-        [],
-        _random_graph(7),
-        _random_graph(8),
-        _random_graph(9),
+    "pairs,key",
+    [pytest.param(p, "string", id=name) for name, p in _CC_GRAPHS.items()]
+    + [
+        pytest.param(_bigint(p), "bigint", id=f"{name}_bigint")
+        for name, p in _CC_GRAPHS.items()
     ],
-    ids=["chain41", "star", "islands", "self_loops", "nulls", "empty",
-         "random7", "random8", "random9"],
 )
-def test_cc_matches_bfs_oracle(spark, pairs, driver_threshold):
-    """Both legs (driver union-find, and star contraction forced by
-    driver_threshold=0) label every node with the minimum node it
-    reaches, checked against a BFS oracle that shares no formula with
-    either."""
-    comps = connected_components(
-        _edges(spark, pairs), driver_threshold=driver_threshold
-    )
+def test_cc_matches_bfs_oracle(spark, monkeypatch, pairs, key, leg):
+    """Both legs (driver union-find, and star contraction forced by a
+    zero driver bound) label every node with the minimum node it
+    reaches, in the edges' own key type, checked against a BFS oracle
+    that shares no formula with either."""
+    if leg == "distributed":
+        monkeypatch.setattr(linking, "CC_DRIVER_EDGES", 0)
+    comps = connected_components(_edges(spark, pairs, key))
+    assert comps.schema["node"].dataType == comps.schema["component"].dataType
+    assert comps.schema["node"].dataType.simpleString() == key
     got = {r["node"]: r["component"] for r in comps.collect()}
     assert got == _bfs_components(pairs)
 
@@ -168,11 +197,118 @@ def test_distributed_cc_keeps_only_result_persisted(
     pairs = _chain(41)
     e = _edges(spark, pairs)
     before = persisted_ids()
-    dist = connected_components(e, driver_threshold=0)
+    dist = linking._star_contraction(e)
     got = {r["node"]: r["component"] for r in dist.collect()}
     assert persisted_ids() - before == plan_rdd_ids(dist) - before
     assert len(plan_rdd_ids(dist) - before) == 1
     assert got == _bfs_components(pairs)
+
+
+def _canonicalize(spark, tmp_path):
+    alias_df = spark.createDataFrame(
+        [("Alpha", "beta"), ("beta", "Gamma"), ("x", "y")],
+        "canonical string, alias string",
+    )
+    triples = spark.createDataFrame(
+        [("gamma", "p", "Y"), ("beta", "q", "other"), ("z", "p", "alpha")],
+        "subject string, predicate string, object string",
+    )
+    return lambda: canonicalize_triples(triples, alias_df)
+
+
+def _er_merge(spark, tmp_path):
+    rows = [
+        ("c", 0, "a", "p", "o1"), ("c", 1, "a", "p", "o2"),
+        ("c", 2, "b", "p", "o1"), ("c", 3, "b", "p", "o2"),
+        ("c", 4, "b", "q", "o3"), ("c", 5, "b", "q", "o4"),
+        ("c", 6, "cc", "q", "o3"), ("c", 7, "cc", "q", "o4"),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, subject string, predicate string,"
+        " object string",
+    )
+    return lambda: linking.apply_er_merge(df, tau=0.5)
+
+
+def _catalog_query(name, table, pdf):
+    def make(spark, tmp_path):
+        from information_extraction_spark.driver_queries import textdata
+
+        spark.createDataFrame(pdf).write.parquet(
+            str(tmp_path / f"{table}.parquet")
+        )
+        return lambda: getattr(textdata, name)(spark, str(tmp_path))
+
+    return make
+
+
+_FOX, _LOREM = "the quick brown fox", "lorem ipsum dolor sit"
+_DOCS = pd.DataFrame(
+    {
+        "doc_id": range(7),
+        "text": [_FOX, _LOREM, _FOX, _LOREM, _FOX, "unrelated words 5",
+                 "unrelated words 6"],
+        "lang": "en",
+        "source": "t",
+        "n_chars": 20,
+    }
+)
+_rng = random.Random(7)
+_EMBEDDINGS = pd.DataFrame(
+    {
+        "vec_id": range(24),
+        "embedding": [
+            [_rng.uniform(-1, 1) for _ in range(4)] for _ in range(24)
+        ],
+        "label": [i % 3 for i in range(24)],
+    }
+)
+
+_RELABEL_CALLS = {
+    "canonicalize_triples": _canonicalize,
+    "apply_er_merge": _er_merge,
+    "dd_dup_clusters": _catalog_query("dd_dup_clusters", "documents", _DOCS),
+    "dd_semdedup_keep": _catalog_query(
+        "dd_semdedup_keep", "embeddings", _EMBEDDINGS
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_RELABEL_CALLS))
+def test_relabel_callers_star_leg_matches_driver_and_leaves_no_cut(
+    spark, tmp_path, persisted_ids, request, name
+):
+    """Each relabel caller gives the same rows on both CC legs, and on
+    the star-contraction leg leaves no checkpoint persisted: its
+    labels are held on the driver and every round cut is released."""
+    run = _RELABEL_CALLS[name](spark, tmp_path)
+    driver = sorted(map(tuple, run().collect()))
+    calls = request.getfixturevalue("star_leg")
+    before = persisted_ids()
+    star = sorted(map(tuple, run().collect()))
+    assert calls, "the star-contraction leg did not run"
+    assert persisted_ids() - before == set()
+    assert star == driver
+
+
+def test_relabel_keeps_key_type_and_unlinked_keys(spark):
+    """Labels keep the key's type; a key outside the graph (or NULL)
+    labels itself."""
+    big = 3_000_000_000
+    df = spark.createDataFrame(
+        [(big + 9,), (big + 10,), (big + 1,), (7,), (None,)], "k bigint"
+    )
+    edges = _edges(
+        spark, [(big + 10, big + 9), (big + 9, big + 100)], "bigint"
+    )
+    out = linking.relabel(df, edges, c="k")
+    assert out.schema["c"].dataType.simpleString() == "bigint"
+    assert sorted(map(tuple, out.collect()), key=str) == sorted(
+        [(big + 9, big + 9), (big + 10, big + 9), (big + 1, big + 1),
+         (7, 7), (None, None)],
+        key=str,
+    )
 
 
 # --- er_candidates ----------------------------------------------------------

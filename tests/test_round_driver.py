@@ -107,10 +107,10 @@ def _louvain(spark, tmp_path):
 
 def _star_contraction(spark, tmp_path):
     from information_extraction_spark.operators.linking import (
-        connected_components,
+        _star_contraction,
     )
 
-    return connected_components(_edges(spark), driver_threshold=0)
+    return _star_contraction(_edges(spark))
 
 
 def _stable_rank(spark, tmp_path):

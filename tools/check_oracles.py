@@ -7,8 +7,9 @@ Usage: python tools/check_oracles.py [sf_dir] [name_filter...]
                                      [--sweep-out=FILE]
 
 --sweep-out writes a durable per-query JSON artifact (pass, rows,
-seconds, check mode, git head) — commit it as SWEEP_r{N}.json each
-session so the full-catalog claim is auditable without a rerun.
+seconds = spark_s + oracle_s, check mode, git head) — commit it as
+SWEEP_r{N}.json each session so the full-catalog claim is auditable
+without a rerun.
 
 --skip excludes queries whose name contains the substring — for
 oracle-scale limitations (e.g. dd_dup_clusters' all-pairs recursive
@@ -24,6 +25,7 @@ import sys
 
 import duckdb
 import pandas as pd
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -109,14 +111,28 @@ def main() -> int:
     failures = 0
     sweep: dict[str, dict] = {}
 
-    def record(name, ok, rows, t0, mode):
+    def record(name, ok, rows, t0, t1, mode):
+        """``t0``/``t1``: when the Spark query started and ended; the
+        oracle side (DuckDB and the comparison) runs from ``t1`` on."""
+        spark_s, oracle_s = round(t1 - t0, 2), round(time.time() - t1, 2)
         sweep[name] = {
             "pass": bool(ok),
             "rows": int(rows),
-            "seconds": round(time.time() - t0, 2),
+            "seconds": round(spark_s + oracle_s, 2),
+            "spark_s": spark_s,
+            "oracle_s": oracle_s,
             "mode": mode,
         }
 
+    # One untimed job before the loop: it starts the (Arrow) Python
+    # workers and runs a shuffle and a join, so the first query's time
+    # carries less session warm-up.
+    @F.pandas_udf("long")
+    def inc(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    warm = spark.range(1000).withColumn("k", F.col("id") % 7)
+    warm.join(warm.groupBy("k").count(), "k").select(inc("id")).toPandas()
     for name, fn in sorted(QUERIES.items()):
         if filters and not any(f in name for f in filters):
             continue
@@ -126,9 +142,10 @@ def main() -> int:
         t0 = time.time()
         try:
             got = fn(spark, sf_dir).toPandas()
+            t1 = time.time()
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
-            record(name, False, -1, t0, "spark-error")
+            record(name, False, -1, t0, time.time(), "spark-error")
             failures += 1
             continue
         # The query runs first: a golden-based oracle reads the golden
@@ -148,14 +165,14 @@ def main() -> int:
                     f"{missing[0]} — run the Spark query first (it "
                     f"materializes the golden for this sf_dir)"
                 )
-                record(name, False, len(got), t0, "golden-absent")
+                record(name, False, len(got), t0, t1, "golden-absent")
                 failures += 1
                 continue
         try:
             exp = con.execute(oracle).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {str(e).splitlines()[0]}")
-            record(name, False, len(got), t0, "duckdb-error")
+            record(name, False, len(got), t0, t1, "duckdb-error")
             failures += 1
             continue
         problems = []
@@ -174,14 +191,14 @@ def main() -> int:
                 problems.append(f"values differ, e.g. {diff}")
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}")
-            record(name, False, len(got), t0, "value-mismatch")
+            record(name, False, len(got), t0, t1, "value-mismatch")
             failures += 1
         else:
             print(
                 f"ok   {name}: {len(got)} rows match oracle"
                 f" [{time.time() - t0:.1f}s]"
             )
-            record(name, True, len(got), t0, "value-checked")
+            record(name, True, len(got), t0, t1, "value-checked")
     print(f"\n{failures} failures")
     if sweep_out:
         # Durable full-sweep artifact (round-5 verdict #1): the repo
